@@ -7,7 +7,8 @@
 - ``oracle_sql()``: matching DuckDB SQL per query (column aliases match
   exactly; float aggregates rounded identically on both sides).
 
-Implementations live in accelerator_spark/queries.py.
+Implementations live in accelerator_spark/queries*.py, each registered
+by one ``gate(fn, oracle)`` line (accelerator_spark.queries.gate).
 """
 
 from __future__ import annotations
@@ -119,19 +120,19 @@ _GRADED_FIRST = [
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, the
-    representative graded subset first (see _GRADED_FIRST)."""
+    """Every registered gate: the graded subset first (see
+    _GRADED_FIRST), then the rest sorted by name, so the order never
+    depends on which query module registered first."""
     missing = [n for n in _GRADED_FIRST if n not in _q.QUERIES]
     if missing:
         raise KeyError(
             f"_GRADED_FIRST names not in the query registry (renamed or "
             f"removed without updating the graded prefix?): {missing}")
-    out = {n: _q.QUERIES[n] for n in _GRADED_FIRST}
-    out.update(_q.QUERIES)
-    return out
+    rest = sorted(set(_q.QUERIES) - set(_GRADED_FIRST))
+    return {n: _q.QUERIES[n] for n in _GRADED_FIRST + rest}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL per query; keys without an entry get the
-    driver's weaker rows-only check."""
-    return dict(_q.ORACLES)
+    """DuckDB-runnable ANSI SQL per query, in queries() order (gate()
+    registers every query with its oracle)."""
+    return {n: _q.ORACLES[n] for n in queries()}

@@ -66,35 +66,23 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def word_shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (JVM-side).
+def _word_shingles_expr(text_col: str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of the column named ``text_col``.
 
     Tokenization is whitespace-split of the RAW text (case- and
     punctuation-sensitive) — deliberately, because every recorded
     DuckDB oracle replays exactly this form. Case-insensitive shingling
-    is the caller's one-liner: pass ``norm_text(col)`` (the form
-    simhash/fingerprint use) instead of the raw column.
+    is the caller's job: shingle a ``norm_text`` column (the form
+    simhash/fingerprint use) instead of the raw one.
 
-    Built from n shifted-array copies zipped together (arrays_zip pads
-    the short tails with NULL, concat_ws drops them — so docs shorter
-    than n still yield one partial shingle, like the reference loop
-    would). 2x faster than the per-index slice formulation."""
-    toks = F.split(F.trim(text_col), r"\s+")
-    length = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    shifted = [F.slice(toks, i + 1, length).alias(f"t{i}") for i in range(n)]
-    z = F.arrays_zip(*shifted)
-    return F.array_distinct(
-        F.transform(z, lambda s: F.concat_ws(" ", *[s[f"t{i}"] for i in range(n)]))
-    )
-
-
-def _word_shingles_expr(text_col: str, n: int = 3) -> Column:
-    """``word_shingles`` for callers that hold a column NAME: the same
-    shifted-zip tree parsed JVM-side in ONE Py4J call (~16 ms vs
-    ~55 ms of per-node Column chatter — driver economy, guide §5;
-    verified value-identical incl. NULL/blank text at n=3/5/8). SQL
-    arrays_zip names its fields by position, hence ``s['i']``; the
-    values are the Column form's exactly."""
+    Built from n shifted-array copies zipped together: arrays_zip pads
+    the short tails with NULL and concat_ws drops them, so a doc
+    shorter than n still yields ONE padded partial shingle, like the
+    reference loop would (and blank text yields ``['']``). 2x faster
+    than a per-index slice formulation, and parsed JVM-side in ONE
+    Py4J call (~16 ms vs ~55 ms of per-node Column chatter — driver
+    economy, guide §5). SQL arrays_zip names its fields by position,
+    hence ``s['i']``."""
     toks = f"split(trim(`{text_col}`), '\\\\s+')"
     ln = f"greatest(size({toks}) - {n - 1}, 1)"
     zipped = ("arrays_zip("
@@ -167,7 +155,7 @@ def _lsh_band_rows(sig: DataFrame, id_col: str,
     """(id, band int, key string) exploded LSH band rows of a minhash
     signature frame — factored out of ``minhash_lsh_candidates`` so
     the incremental text pipeline derives IDENTICAL band keys for its
-    persisted state rows (the ``_hamming_band_keys`` no-drift
+    persisted state rows (the ``_hamming_band_array_expr`` no-drift
     discipline: a key-scheme drift between the batch and the
     accumulated state would silently void recall)."""
     r = num_hashes // bands
@@ -284,40 +272,20 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return agg.select(id_col, out.alias("simhash"))
 
 
-def _hamming_band_keys(fp: Column, bits: int, max_hamming: int) -> list:
-    """The ``max_hamming + 1`` pigeonhole band-key Columns of a signed
-    fingerprint Column — factored out of ``fp_near_pairs`` so the
-    incremental path (``near_dedup_incremental``) derives IDENTICAL
-    keys for its persisted state rows; a key-scheme drift between the
-    batch and the accumulated state would silently void recall. Bits
-    distribute EVENLY over the bands (ceil-width slicing left the last
-    band empty when (n_bands-1)*width >= bits — an all-constant block
-    key putting the whole corpus in one bucket)."""
-    n_bands = max_hamming + 1
-    base_w, extra = divmod(bits, n_bands)
-    band_keys, off = [], 0
-    for i in range(n_bands):
-        w = base_w + (1 if i < extra else 0)
-        # w == 64 (bits=64, max_hamming=0): (1<<64)-1 does not fit a
-        # long and F.lit throws at plan build — an all-ones mask is -1
-        # in two's complement (review r5)
-        mask = -1 if w >= 64 else (1 << w) - 1
-        band_keys.append(
-            F.concat(F.lit(f"B{i}_"),
-                     F.shiftright(fp, off)
-                     .bitwiseAND(F.lit(mask)).cast("string")))
-        off += w
-    return band_keys
-
-
 def _hamming_band_array_expr(fp_col: str, bits: int,
                              max_hamming: int) -> Column:
-    """``array(*_hamming_band_keys(...))`` for callers that hold the
-    fingerprint column NAME: the identical band-key array parsed
+    """The ``max_hamming + 1`` pigeonhole band keys of the signed
+    fingerprint column named ``fp_col``, as one array — shared by
+    ``fp_near_pairs`` and the incremental/streaming paths so the
+    persisted state rows carry IDENTICAL keys (a key-scheme drift
+    between the batch and the accumulated state would silently void
+    recall). Bits distribute EVENLY over the bands (ceil-width slicing
+    left the last band empty when (n_bands-1)*width >= bits — an
+    all-constant block key putting the whole corpus in one bucket).
+    A band of width >= 64 (bits=64, max_hamming=0) masks with -1: the
+    all-ones mask (1<<64)-1 does not fit a long (review r5). Parsed
     JVM-side in ONE Py4J call (driver economy, guide §5 — this array
-    is rebuilt by every fp gate and every incremental/streaming
-    micro-batch). Width/mask logic mirrors _hamming_band_keys exactly;
-    verified value-identical across bits 16/64 × max_hamming 0/3."""
+    is rebuilt by every fp gate and every micro-batch)."""
     n_bands = max_hamming + 1
     base_w, extra = divmod(bits, n_bands)
     fp = f"CAST(`{fp_col}` AS BIGINT)"
@@ -678,7 +646,7 @@ def decontaminate(train: DataFrame, heldout: DataFrame,
     tg = train.select(
         F.col(id_col), F.explode(_word_shingles_expr(text_col, n)).alias("g")
     )
-    # word_shingles('') is [''] — an EMPTY held-out doc would otherwise
+    # _word_shingles_expr('') is [''] — an EMPTY held-out doc would otherwise
     # put the empty gram in the index and "contaminate" every empty
     # train doc (review r5, found by the decontaminate property test)
     hg = heldout.select(
@@ -922,7 +890,7 @@ def _candidate_gram_sets(pairs: DataFrame, df: DataFrame,
     the pairs' doc ids before any shingle work (VERDICT r11 — at
     100 TB with a sparse candidate set this bounds the verify stage's
     scan by candidate docs; the LeftSemi shape is plan-asserted in
-    tests). ``word_shingles`` is already array_distinct per doc, so
+    tests). ``_word_shingles_expr`` is already array_distinct per doc, so
     the array IS the distinct gram set the DuckDB oracles declare
     (SELECT DISTINCT grams) — no explode, no grams-level distinct
     exchange (r13, guide §2.3/§2.4: the per-(pair,gram) roll-up
@@ -955,7 +923,7 @@ def jaccard_verify(pairs: DataFrame, df: DataFrame,
     merely collided in one band. Returns (doc_a, doc_b, jaccard) for
     pairs at or above ``threshold``.
 
-    Shingles are ``word_shingles`` (distinct word n-grams, the same
+    Shingles are ``_word_shingles_expr`` (distinct word n-grams, the same
     form the MinHash signatures hashed — so the verified similarity
     measures exactly what the candidates estimated). Scale shape: the
     corpus is first SEMI-JOINED to the pairs' doc ids, so only
@@ -1052,7 +1020,7 @@ def fp_band_rows(df: DataFrame, fp_col: str = "fp",
                  bits: int = 64, max_hamming: int = 3) -> DataFrame:
     """The (blk, fp, id) band-row form of a fingerprinted frame — the
     unit the incremental near-dedup state store accumulates
-    (max_hamming + 1 rows per doc, keys from ``_hamming_band_keys``
+    (max_hamming + 1 rows per doc, keys from ``_hamming_band_array_expr``
     so they always match what fp_near_pairs blocks on). Exposed so
     sinks can append ONLY a batch's kept band rows (a delta) instead
     of rewriting the whole accumulated state."""
@@ -1120,7 +1088,7 @@ def near_dedup_incremental(new_batch: DataFrame,
     The accumulated state is the exploded band-row store
     ``(blk string, fp long, id_col)`` — ``max_hamming + 1`` rows per
     KEPT document, the same pigeonhole band keys ``fp_near_pairs``
-    blocks on (``_hamming_band_keys`` — shared code, so batch and
+    blocks on (``_hamming_band_array_expr`` — shared code, so batch and
     state keys can never drift). Persist it between batches (Dataset
     chain / parquet, ideally bucketed on ``blk``); pass ``None`` for
     the first batch.
@@ -1201,7 +1169,7 @@ def text_band_rows(df: DataFrame, text_col: str = "text",
     state keys can never drift. Documents with NULL text produce no
     shingles, hence NO band rows — they pass through ``kept``
     untouched (the exact_dedup NULL discipline) and never enter the
-    state. (Whitespace-only text is NOT null: per word_shingles it
+    state. (Whitespace-only text is NOT null: per _word_shingles_expr it
     yields one empty partial shingle, so blank docs near-dup each
     other — the batch pipeline's semantics, unchanged.)"""
     if num_hashes % bands != 0:

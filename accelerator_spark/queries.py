@@ -1,9 +1,11 @@
 """Query/operator inventory — the graded surface.
 
 Each entry pairs a Spark implementation (DataFrame/SQL API, Catalyst-
-optimized) with an ANSI-SQL oracle DuckDB runs on the same parquet. Names
+optimized) with an ANSI-SQL oracle DuckDB runs on the same parquet, and
+is registered by one ``gate(fn, oracle)`` line after the oracle. Names
 map to SURVEY.md §2 rows or north-star extensions (dedup / similarity /
-text analysis / multimodal).
+text analysis / multimodal). Import the registry through this module:
+its bottom imports queries2..6.py, whose gates register the same way.
 
 Determinism rules (the driver hash-compares values):
 - every computed column is aliased identically on both sides;
@@ -19,10 +21,31 @@ scan→(broadcast)join→partial-agg shuffle plan with AQE skew handling.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+
+# The registry: gate name -> Spark implementation, and gate name ->
+# DuckDB oracle SQL. Filled only through gate(); the driver contract
+# (__spark_entry__.queries / oracle_sql) fixes the order callers see.
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: dict[str, str] = {}
+
+
+def gate(fn: Callable[[SparkSession, str], DataFrame], oracle: str) -> None:
+    """Register ``fn`` under its own name with the DuckDB ``oracle``
+    SQL that must reproduce its result. Called once per gate, right
+    after the oracle constant (most oracles are defined after their
+    function, so a decorator could not see them). A name registered
+    twice raises: the second would silently replace the first."""
+    name = fn.__name__
+    if name in QUERIES:
+        raise ValueError(f"gate {name!r} is already registered")
+    QUERIES[name] = fn
+    ORACLES[name] = oracle
 
 
 _TUNED: set[int] = set()
@@ -85,20 +108,26 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # explicit schema — a fixed driver latency no cluster size amortizes
 # (guide §5: the driver should do almost no data work; a production
 # catalog serves the schema without touching footers). Metadata only:
-# every byte of table DATA is still read from parquet at execution;
-# the first read of each path still infers. Precondition: a path's
-# schema must not change within a process — holds for the static
-# testdata tables and the per-test mkdtemp fixtures _t ever sees.
-_TABLE_SCHEMAS: dict = {}  # path -> pyspark StructType
+# every byte of table DATA is still read from parquet at execution.
+# Each entry carries the path's os.stat (mtime_ns, size) stamp: a path
+# rewritten since it was cached re-infers instead of reading its new
+# columns as NULL under the old schema, and a path os.stat cannot see
+# (a remote URI) always infers.
+_TABLE_SCHEMAS: dict = {}  # path -> ((st_mtime_ns, st_size), StructType)
 
 
 def _read_table(spark: SparkSession, path: str) -> DataFrame:
-    sch = _TABLE_SCHEMAS.get(path)
-    if sch is None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _TABLE_SCHEMAS.get(path)
+    if hit is None or hit[0] != stamp:
         df = spark.read.parquet(path)
-        _TABLE_SCHEMAS[path] = df.schema
+        _TABLE_SCHEMAS[path] = (stamp, df.schema)
         return df
-    return spark.read.schema(sch).parquet(path)
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -189,6 +218,7 @@ WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """
+gate(q1_pricing_summary, ORACLE_Q1)
 
 
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,6 +253,7 @@ GROUP BY l_orderkey, o_orderdate
 ORDER BY revenue DESC, l_orderkey ASC
 LIMIT 10
 """
+gate(q3_shipping_priority, ORACLE_Q3)
 
 
 def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,6 +293,7 @@ WHERE c_nationkey = s_nationkey AND r_name = 'ASIA'
 GROUP BY n_name
 ORDER BY revenue DESC, n_name
 """
+gate(q5_nation_revenue, ORACLE_Q5)
 
 
 def top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,6 +317,7 @@ FROM (
   FROM orders
 ) WHERE rn <= 3
 """
+gate(top3_orders_per_customer, ORACLE_TOP3)
 
 
 def customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,6 +332,7 @@ ORACLE_SEMI = """
 SELECT c_custkey, c_name FROM customer
 WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 """
+gate(customers_with_orders, ORACLE_SEMI)
 
 
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -313,6 +347,7 @@ ORACLE_ANTI = """
 SELECT c_custkey, c_name, c_mktsegment FROM customer
 WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 """
+gate(customers_without_orders, ORACLE_ANTI)
 
 
 def distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,6 +356,7 @@ def distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DISTINCT = "SELECT DISTINCT c_mktsegment FROM customer"
+gate(distinct_segments, ORACLE_DISTINCT)
 
 
 def top100_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -339,6 +375,7 @@ ORACLE_TOP100 = """
 SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS price
 FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100
 """
+gate(top100_orders, ORACLE_TOP100)
 
 
 def monthly_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -364,6 +401,7 @@ SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
        round(max(o_totalprice), 2) AS max_price
 FROM orders GROUP BY 1 ORDER BY 1
 """
+gate(monthly_order_stats, ORACLE_MONTHLY)
 
 
 def orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,6 +419,7 @@ SELECT o_orderstatus, o_orderpriority, count(*) AS n,
        round(sum(o_totalprice), 2) AS total
 FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """
+gate(orders_rollup, ORACLE_ROLLUP)
 
 
 def brand_part_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -407,6 +446,7 @@ SELECT p_brand, count(*) AS n_items,
 FROM lineitem JOIN part ON l_partkey = p_partkey
 GROUP BY p_brand ORDER BY p_brand
 """
+gate(brand_part_stats, ORACLE_BRAND)
 
 
 def range_filter_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,6 +465,7 @@ SELECT l_orderkey, l_linenumber, l_shipdate FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
 """
+gate(range_filter_projection, ORACLE_RANGE)
 
 
 def merge_customer_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,6 +483,7 @@ ORACLE_MERGE = """
 SELECT c_custkey, c_name, c_nationkey, n_name AS nation_name
 FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
 """
+gate(merge_customer_nation, ORACLE_MERGE)
 
 
 def q4_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -473,6 +515,7 @@ WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
                 AND l_shipdate >= TIMESTAMP '1996-09-01 00:00:00')
 GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
+gate(q4_priority_check, ORACLE_Q4)
 
 
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -499,6 +542,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
 """
+gate(q6_forecast_revenue, ORACLE_Q6)
 
 
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -535,6 +579,7 @@ GROUP BY c_custkey, c_name, n_name
 ORDER BY revenue DESC, c_custkey ASC
 LIMIT 20
 """
+gate(q10_returned_items, ORACLE_Q10)
 
 
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -565,6 +610,7 @@ FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
 """
+gate(q14_promo_revenue, ORACLE_Q14)
 
 
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -595,6 +641,7 @@ FROM (SELECT l_orderkey, sum(l_quantity) AS total_qty
 JOIN orders   ON b.l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 """
+gate(q18_large_orders, ORACLE_Q18)
 
 
 def sort_nulls_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -618,6 +665,7 @@ FROM customer
 ORDER BY bal ASC NULLS FIRST, c_custkey ASC
 LIMIT 50
 """
+gate(sort_nulls_semantics, ORACLE_SORT_NULLS)
 
 
 def hashpart_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -644,6 +692,7 @@ SELECT count(*) AS lines,
          coalesce(o_orderpriority, '<N>'))), 1, 15)) AS BIGINT)) AS checksum_xor
 FROM orders
 """
+gate(hashpart_invariance, ORACLE_HASHPART)
 
 
 # =====================================================================
@@ -693,6 +742,7 @@ SELECT t_bool, count(*) AS n, round(sum(t_qty), 2) AS sum_qty,
        min(t_date) AS min_date, max(t_key) AS max_key
 FROM t GROUP BY t_bool ORDER BY t_bool
 """
+gate(typed_from_strings, ORACLE_TYPED)
 
 
 def dataset_type_operator(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -745,6 +795,7 @@ SELECT count(*) AS n_good, round(sum(s_qty), 2) AS sum_qty,
        round(sum(s_disc), 2) AS sum_disc, max(s_key) AS max_key
 FROM typed
 """
+gate(dataset_type_operator, ORACLE_DSTYPE)
 
 
 def dataset_type_menu2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -824,6 +875,7 @@ SELECT sum(CASE WHEN t_hex = o_orderkey THEN 1 ELSE 0 END) AS hex_roundtrips,
 FROM typed
 ) _bigint_cast
 """
+gate(dataset_type_menu2, ORACLE_MENU2)
 
 
 def ivf_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -864,6 +916,7 @@ SELECT centroid_id, count(*) AS n, round(avg(centroid_cos), 4) AS avg_cos
 FROM best WHERE rn = 1
 GROUP BY centroid_id ORDER BY centroid_id
 """
+gate(ivf_centroid_assign, ORACLE_IVF)
 
 
 # =====================================================================
@@ -891,6 +944,7 @@ SELECT strftime(date_trunc('hour', CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:%M:%S') 
        event_type, count(*) AS n, round(sum(value), 2) AS sum_value
 FROM events GROUP BY 1, 2 ORDER BY 1, 2
 """
+gate(events_hourly, ORACLE_HOURLY)
 
 
 def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -928,6 +982,7 @@ SELECT event_type, count(*) AS n,
 FROM events GROUP BY event_type ORDER BY event_type
 ) _bigint_cast
 """
+gate(events_json_props, ORACLE_JSON_PROPS)
 
 
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -972,6 +1027,7 @@ ORACLE_SESSIONIZE = _SESSIONIZE_SQL.format(
     interval="INTERVAL 30 MINUTE",
     fmt_open="strftime(", fmt_close=", '%Y-%m-%d %H:%M:%S')",
 )
+gate(sessionize_events, ORACLE_SESSIONIZE)
 
 
 def asof_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,6 +1063,7 @@ FROM (SELECT * FROM e WHERE event_type = 'click') c
 ASOF JOIN (SELECT * FROM e WHERE event_type = 'purchase') p
   ON c.user_id = p.user_id AND p.ts <= c.ts
 """
+gate(asof_click_purchase, ORACLE_ASOF)
 
 
 # =====================================================================
@@ -1040,6 +1097,7 @@ SELECT count(*) AS lines,
            coalesce(CAST(l_shipdate   AS VARCHAR), '<N>'))), 1, 15)) AS BIGINT)) AS checksum_xor
 FROM lineitem
 """
+gate(checksum_lineitem, ORACLE_CHECKSUM)
 
 
 # =====================================================================
@@ -1092,6 +1150,7 @@ SELECT doc_id, term, tfidf, rank FROM (
   FROM scored WHERE doc_id < 50
 ) WHERE rank <= 3
 """
+gate(tfidf_top_terms, ORACLE_TFIDF)
 
 
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1112,6 +1171,7 @@ SELECT doc_id,
        length(text) AS n_chars_measured
 FROM documents
 """
+gate(token_counts, ORACLE_TOKENS)
 
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1147,6 +1207,7 @@ SELECT doc_id, n_tokens,
        round((n_chars - n_tokens + 1) / CAST(n_tokens AS DOUBLE), 4) AS avg_token_len
 FROM d
 """
+gate(text_quality, ORACLE_QUALITY)
 
 
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,6 +1238,7 @@ WITH p AS (
 SELECT lang, predicted, count(*) AS n FROM p
 GROUP BY lang, predicted ORDER BY lang, predicted
 """
+gate(lang_id, ORACLE_LANG)
 
 
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1191,6 +1253,7 @@ ORACLE_FP = """
 SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
 FROM documents
 """
+gate(doc_fingerprints, ORACLE_FP)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1215,6 +1278,7 @@ FROM (SELECT doc_id,
       FROM documents)
 GROUP BY fp
 """
+gate(dedup_exact, ORACLE_DEDUP_EXACT)
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1332,6 +1396,7 @@ JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
 WHERE common / CAST(sa.sz + sb.sz - common AS DOUBLE) >= 0.35
 """
+gate(ngram_jaccard_pairs, ORACLE_JACCARD)
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1386,6 +1451,7 @@ SELECT DISTINCT p.doc_a AS doc_a, p.doc_b AS doc_b FROM (
 
 
 ORACLE_MINHASH = _minhash_oracle()
+gate(minhash_lsh_pairs, ORACLE_MINHASH)
 
 
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1441,6 +1507,7 @@ SELECT doc_id, {total} AS simhash FROM v
 
 
 ORACLE_SIMHASH = _simhash_oracle()
+gate(simhash_fingerprints, ORACLE_SIMHASH)
 
 
 def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1468,6 +1535,7 @@ FROM sh a JOIN sh b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
 ORDER BY doc_a, doc_b
 """
+gate(simhash_near_dup_pairs, ORACLE_SIMHASH_PAIRS)
 
 
 def simhash_near_dup_pairs64(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1497,6 +1565,7 @@ FROM sh a JOIN sh b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 ORDER BY doc_a, doc_b
 """
+gate(simhash_near_dup_pairs64, ORACLE_SIMHASH_PAIRS64)
 
 
 
@@ -1523,6 +1592,7 @@ WHERE a.vec_id < b.vec_id
             (sqrt(list_dot_product(a.embedding, a.embedding)) *
              sqrt(list_dot_product(b.embedding, b.embedding))), 4) >= 0.35
 """
+gate(embedding_near_pairs, ORACLE_EMB_PAIRS)
 
 
 # =====================================================================
@@ -1572,6 +1642,7 @@ SELECT q_id, c_id, cosine, rank FROM (
   FROM scored
 ) WHERE rank <= 5
 """
+gate(cosine_topk, ORACLE_COSINE)
 
 
 def ivf_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1630,6 +1701,7 @@ SELECT q_id, c_id, cosine, rank FROM (
   FROM scored
 ) WHERE rank <= 5
 """
+gate(ivf_topk_search, ORACLE_IVF_TOPK)
 
 
 def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1654,6 +1726,7 @@ SELECT label, count(*) AS n,
        min(len(embedding)) AS dim
 FROM embeddings GROUP BY label ORDER BY label
 """
+gate(embedding_stats, ORACLE_EMB_STATS)
 
 
 # =====================================================================
@@ -1680,6 +1753,7 @@ SELECT doc_id,
        upper(substring(hex(encode(text)), 1, 8)) AS magic
 FROM documents
 """
+gate(multimodal_meta, ORACLE_MULTIMODAL)
 
 
 def frame_sample_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1704,6 +1778,7 @@ SELECT doc_id AS media_id, n_chars % 300 + 1 AS n_frames,
        unnest(generate_series(0, greatest(n_chars % 300, 0), 30)) AS frame_idx
 FROM documents
 """
+gate(frame_sample_media, ORACLE_FRAME_SAMPLE)
 
 
 def media_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1752,6 +1827,7 @@ SELECT media_id, mime, n_bytes,
        CAST(('0x' || substr(d, 13, 4)) AS INT) % 4096 AS height
 FROM h
 """
+gate(media_decode_features, ORACLE_DECODE)
 
 
 def _doc_media_df(spark: SparkSession, sf_dir: str, build_payload) -> DataFrame:
@@ -1844,6 +1920,7 @@ SELECT media_id, width, height,
        )) AS BIGINT) AS pixel_sum
 FROM dims
 """
+gate(png_decode_stats, ORACLE_PNG_DECODE)
 
 
 def _doc_jpeg_payload(text: str):
@@ -1912,6 +1989,7 @@ SELECT media_id, 8 * bw AS width, 8 * bh AS height,
        )) AS BIGINT) AS pixel_sum
 FROM dims
 """
+gate(jpeg_decode_stats, ORACLE_JPEG_DECODE)
 
 
 def jpeg_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1961,6 +2039,7 @@ SELECT media_id,
             )) AS BIGINT) AS pixel_sum
 FROM dims
 """
+gate(jpeg_resize_stats, ORACLE_JPEG_RESIZE)
 
 
 def video_probe_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2016,6 +2095,7 @@ SELECT media_id,
        2 AS n_tracks
 FROM h
 """
+gate(video_probe_report, ORACLE_VIDEO_PROBE)
 
 
 def fmp4_probe_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2082,6 +2162,7 @@ SELECT media_id,
          AS n_fragments
 FROM h
 """
+gate(fmp4_probe_report, ORACLE_FMP4_PROBE)
 
 
 def webm_probe_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2143,6 +2224,7 @@ SELECT media_id,
        2 AS n_tracks
 FROM h
 """
+gate(webm_probe_report, ORACLE_WEBM_PROBE)
 
 
 def mp3_probe_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2204,6 +2286,7 @@ SELECT media_id,
        CAST(10 + tag AS BIGINT) AS id3v2_size
 FROM p
 """
+gate(mp3_probe_report, ORACLE_MP3_PROBE)
 
 
 def audio_probe_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2263,6 +2346,7 @@ SELECT media_id,
                  ELSE b3 * 100000 + b4 END AS BIGINT) AS n_samples
 FROM p
 """
+gate(audio_probe_report, ORACLE_AUDIO_PROBE)
 
 
 def image_probe_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2346,6 +2430,7 @@ SELECT media_id,
          AS orientation
 FROM p
 """
+gate(image_probe_report, ORACLE_IMAGE_PROBE)
 
 
 def id3_tags_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2536,6 +2621,7 @@ SELECT doc_id,
 FROM p, range(3) t(i)
 WHERE t.i < k
 """
+gate(warc_pipeline_report, ORACLE_WARC_PIPELINE)
 
 
 def charset_decode_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2619,6 +2705,7 @@ SELECT doc_id,
        (mode <> 5) AS is_valid
 FROM p
 """
+gate(charset_decode_report, ORACLE_CHARSET_DECODE)
 
 
 def pdf_extract_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2681,6 +2768,7 @@ SELECT media_id,
 FROM pages
 GROUP BY media_id
 """
+gate(pdf_extract_report, ORACLE_PDF_EXTRACT)
 
 
 def document_extract_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2743,6 +2831,7 @@ SELECT media_id,
 FROM units
 GROUP BY media_id, kind, d1
 """
+gate(document_extract_report, ORACLE_DOCUMENT_EXTRACT)
 
 
 def unicode_normalize_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2804,6 +2893,7 @@ SELECT doc_id,
        (mode <> 3) AS changed
 FROM p
 """
+gate(unicode_normalize_report, ORACLE_UNICODE_NORMALIZE)
 
 
 def main_content_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2870,6 +2960,7 @@ SELECT doc_id,
 FROM paras
 GROUP BY doc_id, k
 """
+gate(main_content_report, ORACLE_MAIN_CONTENT)
 
 
 def robots_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2940,6 +3031,7 @@ SELECT doc_id,
        mode NOT IN (1, 3) AS allowed
 FROM p
 """
+gate(robots_filter_report, ORACLE_ROBOTS_FILTER)
 
 
 def sitemap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3024,6 +3116,7 @@ SELECT doc_id,
             THEN CAST('0.' || (v % 10) AS DOUBLE) END AS priority
 FROM e
 """
+gate(sitemap_report, ORACLE_SITEMAP)
 
 
 def xlsx_cells_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3092,6 +3185,7 @@ UNION ALL
 SELECT media_id, 'M', 1, 'A', 'meta-' || substr(d1, 1, 6), 's'
 FROM p
 """
+gate(xlsx_cells_report, ORACLE_XLSX_CELLS)
 
 
 def sentence_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3146,6 +3240,7 @@ SELECT doc_id,
 FROM p, range(3) t(i)
 WHERE t.i < k
 """
+gate(sentence_split_report, ORACLE_SENTENCE_SPLIT)
 
 
 ORACLE_MOJIBAKE = """
@@ -3163,6 +3258,7 @@ SELECT doc_id,
        CAST(mode AS INT) AS mojibake_passes
 FROM p
 """
+gate(mojibake_repair_report, ORACLE_MOJIBAKE)
 
 
 ORACLE_HTML_EXTRACT = """
@@ -3198,6 +3294,7 @@ SELECT doc_id,
          AS link_density_r4
 FROM t
 """
+gate(html_extract_report, ORACLE_HTML_EXTRACT)
 
 
 ORACLE_ID3_TAGS = """
@@ -3213,6 +3310,7 @@ SELECT media_id,
        3 AS n_text_frames
 FROM h
 """
+gate(id3_tags_report, ORACLE_ID3_TAGS)
 
 
 def png_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3286,6 +3384,7 @@ SELECT media_id, n_frames, sample_rate, 1 AS n_channels,
        )) AS BIGINT) AS sample_sum
 FROM dims
 """
+gate(wav_decode_stats, ORACLE_WAV_DECODE)
 
 
 def gif_frames_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3366,6 +3465,7 @@ SELECT media_id, fr.f AS frame_idx, width, height,
        )) AS BIGINT) AS rgb_sum
 FROM dims CROSS JOIN (VALUES (0), (1)) fr(f)
 """
+gate(gif_frames_report, ORACLE_GIF_FRAMES)
 
 
 ORACLE_PNG_RESIZE = """
@@ -3396,6 +3496,7 @@ SELECT media_id, width, height,
        )) AS BIGINT) AS pixel_sum
 FROM rs
 """
+gate(png_resize_stats, ORACLE_PNG_RESIZE)
 
 
 # =====================================================================
@@ -3430,6 +3531,7 @@ SELECT o_orderstatus,
        count(*) FILTER (o_orderpriority = '5-LOW')           AS p5
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
+gate(pivot_status_priority, ORACLE_PIVOT)
 
 
 def cube_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3446,6 +3548,7 @@ SELECT l_returnflag, l_linestatus, count(*) AS n,
        round(sum(l_quantity), 2) AS sum_qty
 FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
 """
+gate(cube_lineitem, ORACLE_CUBE)
 
 
 def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3466,6 +3569,7 @@ SELECT o_orderstatus, o_orderpriority,
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 """
+gate(grouping_sets_orders, ORACLE_GROUPING_SETS)
 
 
 def running_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3495,6 +3599,7 @@ SELECT month, round(t, 2) AS monthly_total,
        round(sum(t) OVER (ORDER BY month ROWS UNBOUNDED PRECEDING), 2) AS running_total
 FROM m ORDER BY month
 """
+gate(running_monthly_revenue, ORACLE_RUNNING)
 
 
 def month_over_month(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3520,6 +3625,7 @@ WITH m AS (
 SELECT month, n, n - lag(n, 1) OVER (ORDER BY month) AS delta
 FROM m ORDER BY month
 """
+gate(month_over_month, ORACLE_MOM)
 
 
 def ntile_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3589,6 +3695,7 @@ FROM (SELECT o_totalprice,
       FROM orders)
 GROUP BY q ORDER BY q
 """
+gate(ntile_price_quartiles, ORACLE_NTILE)
 
 
 def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3607,6 +3714,7 @@ SELECT o_orderstatus,
        round(percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice), 2) AS p90
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
+gate(price_percentiles, ORACLE_PERCENTILES)
 
 
 def segment_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3624,6 +3732,7 @@ SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1995
 EXCEPT
 SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
 """
+gate(segment_set_ops, ORACLE_SETOPS)
 
 
 def union_chain_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3643,6 +3752,7 @@ ORACLE_UNION_CHAIN = """
 SELECT o_orderstatus, count(*) AS n, round(sum(o_totalprice), 2) AS total
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
+gate(union_chain_parts, ORACLE_UNION_CHAIN)
 
 
 def big_spender_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3666,6 +3776,7 @@ JOIN (SELECT o_custkey, max(o_totalprice) AS mx FROM orders GROUP BY o_custkey) 
   ON c_custkey = m.o_custkey
 WHERE mx > 400000
 """
+gate(big_spender_customers, ORACLE_BIG_SPENDER)
 
 
 # =====================================================================
@@ -3686,6 +3797,7 @@ SELECT doc_id,
        len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS n_bpe
 FROM documents
 """
+gate(bpe_token_counts, ORACLE_BPE)
 
 
 def quality_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3729,6 +3841,7 @@ WITH feat AS (
 SELECT reason, count(*) AS n, round(avg(n_tokens), 2) AS avg_tokens
 FROM reasons GROUP BY reason ORDER BY reason
 """
+gate(quality_filter_report, ORACLE_QUALITY_REPORT)
 
 
 def predicted_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3770,6 +3883,7 @@ FROM best GROUP BY 1, 2 ORDER BY 1, 2
 
 
 ORACLE_PRED_LANGS = _predicted_langs_oracle()
+gate(predicted_langs, ORACLE_PRED_LANGS)
 
 
 def rolling_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3800,6 +3914,7 @@ SELECT doc_id,
          w -> CAST(('0x' || substring(md5(w), 1, 15)) AS BIGINT))) AS fp
 FROM wins
 """
+gate(rolling_fingerprints, ORACLE_ROLLING_FP)
 
 
 def hash_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3819,6 +3934,7 @@ SELECT doc_id, lang, n_chars FROM documents
 WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
       % 10000 < 1000
 """
+gate(hash_sample_documents, ORACLE_HASH_SAMPLE)
 
 
 def per_source_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3844,6 +3960,7 @@ SELECT source, doc_id, lang FROM (
   FROM documents
 ) WHERE rn <= 20
 """
+gate(per_source_sample, ORACLE_PER_SOURCE)
 
 
 def dataset_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3882,6 +3999,7 @@ SELECT CASE WHEN bucket < 8000 THEN 'train'
 FROM b GROUP BY 1 ORDER BY 1
 ) _bigint_cast
 """
+gate(dataset_split_counts, ORACLE_SPLIT)
 
 
 _SQL_MULTI_SUPPLIER = """
@@ -3906,6 +4024,9 @@ def sql_multi_supplier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sqlapi import sql
 
     return sql(spark, sf_dir, _SQL_MULTI_SUPPLIER)
+
+
+gate(sql_multi_supplier_orders, _SQL_MULTI_SUPPLIER)
 
 
 def udaf_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3934,6 +4055,7 @@ SELECT c_mktsegment,
        count(*) AS n_cust
 FROM customer GROUP BY 1 ORDER BY 1
 """
+gate(udaf_median_price, ORACLE_UDAF_MEDIAN)
 
 
 def salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3967,6 +4089,7 @@ SELECT o_orderpriority,
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY 1 ORDER BY 1
 """
+gate(salted_join_agg, ORACLE_SALTED_JOIN)
 
 
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4000,6 +4123,7 @@ cc AS (
 )
 SELECT node AS doc_id, min(component) AS component_id FROM cc GROUP BY node
 """
+gate(dedup_components, ORACLE_COMPONENTS)
 
 
 def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4027,6 +4151,7 @@ SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts,
        count(*) AS n, TRUE AS approx_within_5pct
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
+gate(approx_distinct_parts, ORACLE_APPROX_DISTINCT)
 
 
 # =====================================================================
@@ -4083,6 +4208,7 @@ JOIN supplier ON l_suppkey = s_suppkey
 JOIN nation   ON s_nationkey = n_nationkey
 WHERE rk = 1 AND p_brand = 'Brand#1'
 """
+gate(q2_cheapest_supplier, ORACLE_Q2)
 
 
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4137,6 +4263,7 @@ WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
     OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
 GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 """
+gate(q7_volume_shipping, ORACLE_Q7)
 
 
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4196,6 +4323,7 @@ WHERE r_name = 'ASIA' AND p_type = 'PROMO'
                       AND TIMESTAMP '1997-12-31 00:00:00'
 GROUP BY 1 ORDER BY 1
 """
+gate(q8_market_share, ORACLE_Q8)
 
 
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4238,6 +4366,7 @@ JOIN nation   ON s_nationkey = n_nationkey
 WHERE p_type = 'ECONOMY'
 GROUP BY 1, 2 ORDER BY 1, 2 DESC
 """
+gate(q9_product_profit, ORACLE_Q9)
 
 
 def q12_ship_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4274,6 +4403,7 @@ FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 WHERE datediff('day', o_orderdate, l_shipdate) > 90
 GROUP BY 1 ORDER BY 1
 """
+gate(q12_ship_delay, ORACLE_Q12)
 
 
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4302,6 +4432,7 @@ FROM (SELECT c_custkey, count(o_orderkey) AS c_count
       GROUP BY c_custkey)
 GROUP BY c_count ORDER BY custdist DESC, c_count DESC
 """
+gate(q13_order_count_distribution, ORACLE_Q13)
 
 
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4339,6 +4470,7 @@ FROM rev JOIN supplier ON supplier_no = s_suppkey
 WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
 ORDER BY s_suppkey
 """
+gate(q15_top_supplier, ORACLE_Q15)
 
 
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4365,6 +4497,7 @@ FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE p_brand <> 'Brand#5' AND p_size IN (1, 2, 3, 4, 5)
 GROUP BY 1, 2, 3 ORDER BY 4 DESC, 1, 2, 3
 """
+gate(q16_supplier_part_counts, ORACLE_Q16)
 
 
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4395,6 +4528,7 @@ WHERE p_brand = 'Brand#2'
   AND l_quantity < (SELECT round(0.2 * avg(l2.l_quantity), 6)
                     FROM lineitem l2 WHERE l2.l_partkey = lineitem.l_partkey)
 """
+gate(q17_small_quantity_revenue, ORACLE_Q17)
 
 
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4429,6 +4563,7 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
    OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
        AND l_quantity BETWEEN 20 AND 30)
 """
+gate(q19_disjunctive_revenue, ORACLE_Q19)
 
 
 def q11_nation_stock_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4472,6 +4607,7 @@ FROM per_part
 WHERE value > (SELECT round(avg(value) * 2, 2) FROM per_part)
 ORDER BY 2 DESC, 1
 """
+gate(q11_nation_stock_value, ORACLE_Q11)
 
 
 def q21_lonely_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4538,6 +4674,7 @@ JOIN supplier ON late_supp = s_suppkey
 WHERE n_supp > 1 AND n_late = 1
 GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 20
 """
+gate(q21_lonely_late_supplier, ORACLE_Q21)
 
 
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4578,6 +4715,7 @@ WHERE c_acctbal > (SELECT round(avg(c_acctbal), 2)
                   AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
 GROUP BY 1 ORDER BY 1
 """
+gate(q22_dormant_customers, ORACLE_Q22)
 
 
 def q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4630,6 +4768,7 @@ JOIN nation   ON s_nationkey = n_nationkey
 WHERE qty > 0.25 * part_total
 GROUP BY 1, 2, 3 ORDER BY 1
 """
+gate(q20_dominant_supplier, ORACLE_Q20)
 
 
 def decontaminate_train_set(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4747,6 +4886,7 @@ FROM (SELECT doc_id, source FROM grams WHERE b >= 500) train
 LEFT JOIN bad USING (doc_id)
 GROUP BY 1 ORDER BY 1
 """
+gate(decontaminate_train_set, ORACLE_DECONTAMINATE)
 
 
 def cross_doc_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4804,6 +4944,7 @@ SELECT source,
          AS mostly_dup_docs
 FROM per_doc GROUP BY 1 ORDER BY 1
 """
+gate(cross_doc_duplication, ORACLE_CROSS_DOC_DUP)
 
 
 def _stream_events(spark: SparkSession, sf_dir: str,
@@ -4877,6 +5018,7 @@ SELECT strftime(date_trunc('hour', CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:%M:%S') 
        event_type, count(*) AS n, round(sum(value), 2) AS sum_value
 FROM events GROUP BY 1, 2 ORDER BY 1, 2
 """
+gate(streaming_hourly_counts, ORACLE_STREAM_HOURLY)
 
 
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4956,6 +5098,7 @@ SELECT (SELECT count(DISTINCT user_id) FROM ev) AS n_users,
        round((SELECT count(*) FROM s3) * 1.0 / (SELECT count(*) FROM s1), 4)
          AS funnel_rate
 """
+gate(funnel_conversion, ORACLE_FUNNEL)
 
 
 def semantic_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5040,6 +5183,7 @@ SELECT centroid_id, count(*) AS n_before,
 FROM assigned LEFT JOIN dropped USING (vec_id)
 GROUP BY 1 ORDER BY 1
 """
+gate(semantic_dedup_report, ORACLE_SEMANTIC_DEDUP)
 
 
 def semantic_dedup_report_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5115,6 +5259,7 @@ SELECT centroid_id,
          AS BIGINT)) AS kept_checksum
 FROM kept GROUP BY 1 ORDER BY 1
 """
+gate(semantic_dedup_report_capped, ORACLE_SEMANTIC_DEDUP_CAPPED)
 
 
 def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5139,7 +5284,7 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     # NON-distinct 2-gram stream: repetition is exactly what the
-    # array_distinct inside word_shingles would erase, so shingle inline
+    # array_distinct inside _word_shingles_expr would erase, so shingle inline
     toks = F.split(F.trim(F.col("text")), r"\s+")
     _n = F.size(toks)
     ln = F.greatest(_n - 1, F.lit(1))
@@ -5217,6 +5362,7 @@ SELECT doc_id, sum(cnt) AS n_2grams, max(cnt) AS top2_cnt,
 FROM per_dg GROUP BY 1 ORDER BY 1
 ) _bigint_cast
 """
+gate(repetition_signals, ORACLE_REPETITION)
 
 
 def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5278,6 +5424,7 @@ FROM placed
 GROUP BY 1, 2 ORDER BY 1, 2
 ) _bigint_cast
 """
+gate(sequence_packing, ORACLE_SEQUENCE_PACKING)
 
 
 # =====================================================================
@@ -5375,6 +5522,7 @@ SELECT source, count(*) AS n_docs,
          + len(regexp_extract_all(red, '{_PII_IP}'))) AS BIGINT) AS residual_matches
 FROM redacted GROUP BY source ORDER BY source
 """
+gate(pii_redaction_report, ORACLE_PII)
 
 
 def line_cleaning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5446,6 +5594,7 @@ SELECT source, count(*) AS n_docs,
 FROM f GROUP BY source ORDER BY source
 ) _bigint_cast
 """
+gate(line_cleaning_report, ORACLE_LINE_CLEANING)
 
 
 def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5496,6 +5645,7 @@ SELECT d.source, count(*) AS n_docs,
 FROM scored s JOIN documents d USING (doc_id)
 GROUP BY d.source ORDER BY d.source
 """
+gate(unigram_logprob_quality, ORACLE_UNIGRAM_LP)
 
 
 def jsonl_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5547,6 +5697,7 @@ SELECT count(*) AS docs,
 FROM documents
 ) _bigint_cast
 """
+gate(jsonl_roundtrip_checksum, ORACLE_JSONL_RT)
 
 
 def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5583,6 +5734,7 @@ SELECT user_id, event_id AS last_event_id, event_type,
        strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts
 FROM r WHERE rn = 1
 """
+gate(latest_event_per_user, ORACLE_LATEST)
 
 
 def range_join_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5624,6 +5776,7 @@ SELECT band, count(*) AS n, round(sum(value), 2) AS sum_value
 FROM events e JOIN bands b ON e.value >= b.lo AND e.value < b.hi
 GROUP BY band ORDER BY band
 """
+gate(range_join_value_buckets, ORACLE_RANGE_JOIN)
 
 
 # =====================================================================
@@ -5670,6 +5823,7 @@ SELECT strftime(date_trunc('week', f.first_day), '%Y-%m-%d') AS cohort_week,
 FROM active a JOIN firsts f USING (user_id)
 GROUP BY 1, 2 ORDER BY 1, 2
 """
+gate(cohort_retention, ORACLE_COHORT)
 
 
 def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5696,6 +5850,7 @@ SELECT CAST(least(floor(value / 50), 9) AS INT) AS bucket,
        round(avg(value), 2) AS avg_value
 FROM events GROUP BY 1 ORDER BY 1
 """
+gate(events_value_histogram, ORACLE_VALUE_HIST)
 
 
 def anomaly_zscore_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5745,6 +5900,7 @@ SELECT event_type, count(*) AS n,
 FROM flagged GROUP BY event_type ORDER BY event_type
 ) _bigint_cast
 """
+gate(anomaly_zscore_events, ORACLE_ZSCORE)
 
 
 def partitioned_pruning_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5783,6 +5939,7 @@ FROM orders
 WHERE date_part('year', o_orderdate) = 1996
 GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
+gate(partitioned_pruning_revenue, ORACLE_PART_PRUNE)
 
 
 def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5861,6 +6018,7 @@ SELECT count(*) AS nations,
 FROM nation
 ) _bigint_cast
 """
+gate(overlay_roundtrip_checksum, ORACLE_OVERLAY_RT)
 
 
 ORACLE_ORC_RT = """
@@ -5882,6 +6040,7 @@ SELECT count(*) AS docs,
 FROM documents
 ) _bigint_cast
 """
+gate(orc_roundtrip_checksum, ORACLE_ORC_RT)
 
 
 def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5937,6 +6096,7 @@ SELECT lang, count(*) AS n_docs,
 FROM s GROUP BY lang ORDER BY lang
 ) _bigint_cast
 """
+gate(quality_classifier_score, ORACLE_QUALITY_CLF)
 
 
 def domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5998,6 +6158,7 @@ SELECT q.source, q.n_docs, q.quota, coalesce(k.kept, 0) AS kept
 FROM q LEFT JOIN k USING (source)
 ORDER BY q.source
 """
+gate(domain_mixture_sample, ORACLE_MIXTURE)
 
 
 def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6074,6 +6235,7 @@ SELECT count(*) AS n_sessions, sum(n_events) AS n_events,
 FROM per
 ) _bigint_cast
 """
+gate(streaming_session_counts, ORACLE_STREAM_SESSIONS)
 
 
 def gapfill_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6143,6 +6305,7 @@ SELECT strftime(day, '%Y-%m') AS month, count(*) AS n_days,
 FROM filled GROUP BY 1 ORDER BY 1
 ) _bigint_cast
 """
+gate(gapfill_daily_revenue, ORACLE_GAPFILL)
 
 
 def unpivot_flag_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6177,6 +6340,7 @@ FROM (UNPIVOT wide ON sum_qty, sum_price, avg_disc
       INTO NAME metric VALUE value)
 ORDER BY l_returnflag, metric
 """
+gate(unpivot_flag_metrics, ORACLE_UNPIVOT)
 
 
 def window_suite_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6214,6 +6378,7 @@ SELECT o_custkey, o_orderkey, days_since_prev, days_to_next,
        value_pct_rank, order_seq
 FROM t WHERE order_seq <= 3
 """
+gate(window_suite_orders, ORACLE_WINDOW_SUITE)
 
 
 def agg_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6256,6 +6421,7 @@ SELECT c_mktsegment, count(*) AS n,
 FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
 ) _bigint_cast
 """
+gate(agg_function_breadth, ORACLE_AGG_BREADTH)
 
 
 def fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6322,6 +6488,7 @@ SELECT block, sum(n_pairs) AS n_pairs, min(min_key) AS min_key
 FROM pairs GROUP BY block ORDER BY block
 ) _bigint_cast
 """
+gate(fuzzy_part_name_pairs, ORACLE_FUZZY)
 
 
 def cdc_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6385,6 +6552,7 @@ SELECT o_orderstatus, count(*) AS n, round(sum(p), 2) AS sum_price,
        max(o_orderkey) AS max_key
 FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
+gate(cdc_merge_orders, ORACLE_CDC_MERGE)
 
 
 def scd2_event_type_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6467,6 +6635,7 @@ SELECT event_type, count(*) AS n_intervals, sum(n_events) AS n_events,
 FROM iv2 GROUP BY event_type ORDER BY event_type
 ) _bigint_cast
 """
+gate(scd2_event_type_intervals, ORACLE_SCD2)
 
 
 def vector_arithmetic_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6516,6 +6685,7 @@ SELECT label, count(*) AS n,
        round(avg(meandim), 4) AS avg_mean_dim
 FROM d GROUP BY label ORDER BY label
 """
+gate(vector_arithmetic_suite, ORACLE_VECTOR_SUITE)
 
 
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6578,6 +6748,7 @@ SELECT source, count(*) AS n_chunks,
 FROM chunks GROUP BY source ORDER BY source
 ) _bigint_cast
 """
+gate(chunk_documents, ORACLE_CHUNKS)
 
 
 def datetime_function_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6635,6 +6806,7 @@ SELECT y, q, count(*) AS n,
 FROM d GROUP BY y, q ORDER BY y, q
 ) _bigint_cast
 """
+gate(datetime_function_sweep, ORACLE_DATETIME_SWEEP)
 
 
 def string_function_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6700,6 +6872,7 @@ SELECT p_type, count(*) AS n,
 FROM d GROUP BY p_type ORDER BY p_type
 ) _bigint_cast
 """
+gate(string_function_sweep, ORACLE_STRING_SWEEP)
 
 
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6785,336 +6958,9 @@ SELECT q.q_id, coalesce(h.n_hits, 0) AS n_hits,
 FROM q LEFT JOIN hits h USING (q_id)
 ORDER BY q.q_id
 """
+gate(ann_recall_report, ORACLE_ANN_RECALL)
 
 
-# =====================================================================
-# Registry
-# =====================================================================
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_nation_revenue": q5_nation_revenue,
-    "q4_priority_check": q4_priority_check,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q10_returned_items": q10_returned_items,
-    "q14_promo_revenue": q14_promo_revenue,
-    "q18_large_orders": q18_large_orders,
-    "q2_cheapest_supplier": q2_cheapest_supplier,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q8_market_share": q8_market_share,
-    "q9_product_profit": q9_product_profit,
-    "q12_ship_delay": q12_ship_delay,
-    "q13_order_count_distribution": q13_order_count_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q16_supplier_part_counts": q16_supplier_part_counts,
-    "q17_small_quantity_revenue": q17_small_quantity_revenue,
-    "q19_disjunctive_revenue": q19_disjunctive_revenue,
-    "q11_nation_stock_value": q11_nation_stock_value,
-    "q21_lonely_late_supplier": q21_lonely_late_supplier,
-    "q22_dormant_customers": q22_dormant_customers,
-    "q20_dominant_supplier": q20_dominant_supplier,
-    "top3_orders_per_customer": top3_orders_per_customer,
-    "customers_with_orders": customers_with_orders,
-    "customers_without_orders": customers_without_orders,
-    "distinct_segments": distinct_segments,
-    "top100_orders": top100_orders,
-    "monthly_order_stats": monthly_order_stats,
-    "orders_rollup": orders_rollup,
-    "brand_part_stats": brand_part_stats,
-    "range_filter_projection": range_filter_projection,
-    "merge_customer_nation": merge_customer_nation,
-    "sort_nulls_semantics": sort_nulls_semantics,
-    "hashpart_invariance": hashpart_invariance,
-    "typed_from_strings": typed_from_strings,
-    "dataset_type_operator": dataset_type_operator,
-    "dataset_type_menu2": dataset_type_menu2,
-    "ivf_centroid_assign": ivf_centroid_assign,
-    "events_hourly": events_hourly,
-    "events_json_props": events_json_props,
-    "sessionize_events": sessionize_events,
-    "asof_click_purchase": asof_click_purchase,
-    "checksum_lineitem": checksum_lineitem,
-    "token_counts": token_counts,
-    "tfidf_top_terms": tfidf_top_terms,
-    "text_quality": text_quality,
-    "lang_id": lang_id,
-    "doc_fingerprints": doc_fingerprints,
-    "dedup_exact": dedup_exact,
-    "ngram_jaccard_pairs": ngram_jaccard_pairs,
-    "minhash_lsh_pairs": minhash_lsh_pairs,
-    "dedup_components": dedup_components,
-    "salted_join_agg": salted_join_agg,
-    "udaf_median_price": udaf_median_price,
-    "sql_multi_supplier_orders": sql_multi_supplier_orders,
-    "hash_sample_documents": hash_sample_documents,
-    "dataset_split_counts": dataset_split_counts,
-    "per_source_sample": per_source_sample,
-    "simhash_fingerprints": simhash_fingerprints,
-    "simhash_near_dup_pairs": simhash_near_dup_pairs,
-    "simhash_near_dup_pairs64": simhash_near_dup_pairs64,
-    "embedding_near_pairs": embedding_near_pairs,
-    "cosine_topk": cosine_topk,
-    "ivf_topk_search": ivf_topk_search,
-    "embedding_stats": embedding_stats,
-    "multimodal_meta": multimodal_meta,
-    "frame_sample_media": frame_sample_media,
-    "media_decode_features": media_decode_features,
-    "png_decode_stats": png_decode_stats,
-    "jpeg_decode_stats": jpeg_decode_stats,
-    "jpeg_resize_stats": jpeg_resize_stats,
-    "video_probe_report": video_probe_report,
-    "fmp4_probe_report": fmp4_probe_report,
-    "webm_probe_report": webm_probe_report,
-    "mp3_probe_report": mp3_probe_report,
-    "audio_probe_report": audio_probe_report,
-    "image_probe_report": image_probe_report,
-    "id3_tags_report": id3_tags_report,
-    "html_extract_report": html_extract_report,
-    "mojibake_repair_report": mojibake_repair_report,
-    "unicode_normalize_report": unicode_normalize_report,
-    "sentence_split_report": sentence_split_report,
-    "main_content_report": main_content_report,
-    "robots_filter_report": robots_filter_report,
-    "sitemap_report": sitemap_report,
-    "warc_pipeline_report": warc_pipeline_report,
-    "charset_decode_report": charset_decode_report,
-    "pdf_extract_report": pdf_extract_report,
-    "document_extract_report": document_extract_report,
-    "xlsx_cells_report": xlsx_cells_report,
-    "png_resize_stats": png_resize_stats,
-    "wav_decode_stats": wav_decode_stats,
-    "gif_frames_report": gif_frames_report,
-    "pivot_status_priority": pivot_status_priority,
-    "cube_lineitem": cube_lineitem,
-    "grouping_sets_orders": grouping_sets_orders,
-    "running_monthly_revenue": running_monthly_revenue,
-    "month_over_month": month_over_month,
-    "ntile_price_quartiles": ntile_price_quartiles,
-    "price_percentiles": price_percentiles,
-    "segment_set_ops": segment_set_ops,
-    "union_chain_parts": union_chain_parts,
-    "big_spender_customers": big_spender_customers,
-    "bpe_token_counts": bpe_token_counts,
-    "quality_filter_report": quality_filter_report,
-    "predicted_langs": predicted_langs,
-    "rolling_fingerprints": rolling_fingerprints,
-    "approx_distinct_parts": approx_distinct_parts,
-    "decontaminate_train_set": decontaminate_train_set,
-    "cross_doc_duplication": cross_doc_duplication,
-    "sequence_packing": sequence_packing,
-    "repetition_signals": repetition_signals,
-    "semantic_dedup_report": semantic_dedup_report,
-    "semantic_dedup_report_capped": semantic_dedup_report_capped,
-    "funnel_conversion": funnel_conversion,
-    "streaming_hourly_counts": streaming_hourly_counts,
-    "pii_redaction_report": pii_redaction_report,
-    "line_cleaning_report": line_cleaning_report,
-    "unigram_logprob_quality": unigram_logprob_quality,
-    "jsonl_roundtrip_checksum": jsonl_roundtrip_checksum,
-    "latest_event_per_user": latest_event_per_user,
-    "range_join_value_buckets": range_join_value_buckets,
-    "cohort_retention": cohort_retention,
-    "events_value_histogram": events_value_histogram,
-    "anomaly_zscore_events": anomaly_zscore_events,
-    "partitioned_pruning_revenue": partitioned_pruning_revenue,
-    "orc_roundtrip_checksum": orc_roundtrip_checksum,
-    "overlay_roundtrip_checksum": overlay_roundtrip_checksum,
-    "quality_classifier_score": quality_classifier_score,
-    "domain_mixture_sample": domain_mixture_sample,
-    "streaming_session_counts": streaming_session_counts,
-    "gapfill_daily_revenue": gapfill_daily_revenue,
-    "unpivot_flag_metrics": unpivot_flag_metrics,
-    "window_suite_orders": window_suite_orders,
-    "agg_function_breadth": agg_function_breadth,
-    "fuzzy_part_name_pairs": fuzzy_part_name_pairs,
-    "cdc_merge_orders": cdc_merge_orders,
-    "scd2_event_type_intervals": scd2_event_type_intervals,
-    "vector_arithmetic_suite": vector_arithmetic_suite,
-    "chunk_documents": chunk_documents,
-    "datetime_function_sweep": datetime_function_sweep,
-    "string_function_sweep": string_function_sweep,
-    "ann_recall_report": ann_recall_report,
-}
-
-ORACLES: dict[str, str] = {
-    "q1_pricing_summary": ORACLE_Q1,
-    "q3_shipping_priority": ORACLE_Q3,
-    "q5_nation_revenue": ORACLE_Q5,
-    "q4_priority_check": ORACLE_Q4,
-    "q6_forecast_revenue": ORACLE_Q6,
-    "q10_returned_items": ORACLE_Q10,
-    "q14_promo_revenue": ORACLE_Q14,
-    "q18_large_orders": ORACLE_Q18,
-    "q2_cheapest_supplier": ORACLE_Q2,
-    "q7_volume_shipping": ORACLE_Q7,
-    "q8_market_share": ORACLE_Q8,
-    "q9_product_profit": ORACLE_Q9,
-    "q12_ship_delay": ORACLE_Q12,
-    "q13_order_count_distribution": ORACLE_Q13,
-    "q15_top_supplier": ORACLE_Q15,
-    "q16_supplier_part_counts": ORACLE_Q16,
-    "q17_small_quantity_revenue": ORACLE_Q17,
-    "q19_disjunctive_revenue": ORACLE_Q19,
-    "q11_nation_stock_value": ORACLE_Q11,
-    "q21_lonely_late_supplier": ORACLE_Q21,
-    "q22_dormant_customers": ORACLE_Q22,
-    "q20_dominant_supplier": ORACLE_Q20,
-    "top3_orders_per_customer": ORACLE_TOP3,
-    "customers_with_orders": ORACLE_SEMI,
-    "customers_without_orders": ORACLE_ANTI,
-    "distinct_segments": ORACLE_DISTINCT,
-    "top100_orders": ORACLE_TOP100,
-    "monthly_order_stats": ORACLE_MONTHLY,
-    "orders_rollup": ORACLE_ROLLUP,
-    "brand_part_stats": ORACLE_BRAND,
-    "range_filter_projection": ORACLE_RANGE,
-    "merge_customer_nation": ORACLE_MERGE,
-    "sort_nulls_semantics": ORACLE_SORT_NULLS,
-    "hashpart_invariance": ORACLE_HASHPART,
-    "typed_from_strings": ORACLE_TYPED,
-    "dataset_type_operator": ORACLE_DSTYPE,
-    "dataset_type_menu2": ORACLE_MENU2,
-    "ivf_centroid_assign": ORACLE_IVF,
-    "events_hourly": ORACLE_HOURLY,
-    "events_json_props": ORACLE_JSON_PROPS,
-    "sessionize_events": ORACLE_SESSIONIZE,
-    "asof_click_purchase": ORACLE_ASOF,
-    "checksum_lineitem": ORACLE_CHECKSUM,
-    "token_counts": ORACLE_TOKENS,
-    "tfidf_top_terms": ORACLE_TFIDF,
-    "text_quality": ORACLE_QUALITY,
-    "lang_id": ORACLE_LANG,
-    "doc_fingerprints": ORACLE_FP,
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "ngram_jaccard_pairs": ORACLE_JACCARD,
-    "minhash_lsh_pairs": ORACLE_MINHASH,
-    "dedup_components": ORACLE_COMPONENTS,
-    "salted_join_agg": ORACLE_SALTED_JOIN,
-    "udaf_median_price": ORACLE_UDAF_MEDIAN,
-    "sql_multi_supplier_orders": _SQL_MULTI_SUPPLIER,
-    "hash_sample_documents": ORACLE_HASH_SAMPLE,
-    "dataset_split_counts": ORACLE_SPLIT,
-    "per_source_sample": ORACLE_PER_SOURCE,
-    "simhash_fingerprints": ORACLE_SIMHASH,
-    "simhash_near_dup_pairs": ORACLE_SIMHASH_PAIRS,
-    "simhash_near_dup_pairs64": ORACLE_SIMHASH_PAIRS64,
-    "embedding_near_pairs": ORACLE_EMB_PAIRS,
-    "cosine_topk": ORACLE_COSINE,
-    "ivf_topk_search": ORACLE_IVF_TOPK,
-    "embedding_stats": ORACLE_EMB_STATS,
-    "multimodal_meta": ORACLE_MULTIMODAL,
-    "frame_sample_media": ORACLE_FRAME_SAMPLE,
-    "media_decode_features": ORACLE_DECODE,
-    "png_decode_stats": ORACLE_PNG_DECODE,
-    "jpeg_decode_stats": ORACLE_JPEG_DECODE,
-    "jpeg_resize_stats": ORACLE_JPEG_RESIZE,
-    "video_probe_report": ORACLE_VIDEO_PROBE,
-    "fmp4_probe_report": ORACLE_FMP4_PROBE,
-    "webm_probe_report": ORACLE_WEBM_PROBE,
-    "mp3_probe_report": ORACLE_MP3_PROBE,
-    "audio_probe_report": ORACLE_AUDIO_PROBE,
-    "image_probe_report": ORACLE_IMAGE_PROBE,
-    "id3_tags_report": ORACLE_ID3_TAGS,
-    "html_extract_report": ORACLE_HTML_EXTRACT,
-    "mojibake_repair_report": ORACLE_MOJIBAKE,
-    "unicode_normalize_report": ORACLE_UNICODE_NORMALIZE,
-    "sentence_split_report": ORACLE_SENTENCE_SPLIT,
-    "main_content_report": ORACLE_MAIN_CONTENT,
-    "robots_filter_report": ORACLE_ROBOTS_FILTER,
-    "sitemap_report": ORACLE_SITEMAP,
-    "warc_pipeline_report": ORACLE_WARC_PIPELINE,
-    "charset_decode_report": ORACLE_CHARSET_DECODE,
-    "pdf_extract_report": ORACLE_PDF_EXTRACT,
-    "document_extract_report": ORACLE_DOCUMENT_EXTRACT,
-    "xlsx_cells_report": ORACLE_XLSX_CELLS,
-    "png_resize_stats": ORACLE_PNG_RESIZE,
-    "wav_decode_stats": ORACLE_WAV_DECODE,
-    "gif_frames_report": ORACLE_GIF_FRAMES,
-    "pivot_status_priority": ORACLE_PIVOT,
-    "cube_lineitem": ORACLE_CUBE,
-    "grouping_sets_orders": ORACLE_GROUPING_SETS,
-    "running_monthly_revenue": ORACLE_RUNNING,
-    "month_over_month": ORACLE_MOM,
-    "ntile_price_quartiles": ORACLE_NTILE,
-    "price_percentiles": ORACLE_PERCENTILES,
-    "segment_set_ops": ORACLE_SETOPS,
-    "union_chain_parts": ORACLE_UNION_CHAIN,
-    "big_spender_customers": ORACLE_BIG_SPENDER,
-    "bpe_token_counts": ORACLE_BPE,
-    "quality_filter_report": ORACLE_QUALITY_REPORT,
-    "predicted_langs": ORACLE_PRED_LANGS,
-    "rolling_fingerprints": ORACLE_ROLLING_FP,
-    "approx_distinct_parts": ORACLE_APPROX_DISTINCT,
-    "decontaminate_train_set": ORACLE_DECONTAMINATE,
-    "cross_doc_duplication": ORACLE_CROSS_DOC_DUP,
-    "sequence_packing": ORACLE_SEQUENCE_PACKING,
-    "repetition_signals": ORACLE_REPETITION,
-    "semantic_dedup_report": ORACLE_SEMANTIC_DEDUP,
-    "semantic_dedup_report_capped": ORACLE_SEMANTIC_DEDUP_CAPPED,
-    "funnel_conversion": ORACLE_FUNNEL,
-    "streaming_hourly_counts": ORACLE_STREAM_HOURLY,
-    "pii_redaction_report": ORACLE_PII,
-    "line_cleaning_report": ORACLE_LINE_CLEANING,
-    "unigram_logprob_quality": ORACLE_UNIGRAM_LP,
-    "jsonl_roundtrip_checksum": ORACLE_JSONL_RT,
-    "latest_event_per_user": ORACLE_LATEST,
-    "range_join_value_buckets": ORACLE_RANGE_JOIN,
-    "cohort_retention": ORACLE_COHORT,
-    "events_value_histogram": ORACLE_VALUE_HIST,
-    "anomaly_zscore_events": ORACLE_ZSCORE,
-    "partitioned_pruning_revenue": ORACLE_PART_PRUNE,
-    "orc_roundtrip_checksum": ORACLE_ORC_RT,
-    "overlay_roundtrip_checksum": ORACLE_OVERLAY_RT,
-    "quality_classifier_score": ORACLE_QUALITY_CLF,
-    "domain_mixture_sample": ORACLE_MIXTURE,
-    "streaming_session_counts": ORACLE_STREAM_SESSIONS,
-    "gapfill_daily_revenue": ORACLE_GAPFILL,
-    "unpivot_flag_metrics": ORACLE_UNPIVOT,
-    "window_suite_orders": ORACLE_WINDOW_SUITE,
-    "agg_function_breadth": ORACLE_AGG_BREADTH,
-    "fuzzy_part_name_pairs": ORACLE_FUZZY,
-    "cdc_merge_orders": ORACLE_CDC_MERGE,
-    "scd2_event_type_intervals": ORACLE_SCD2,
-    "vector_arithmetic_suite": ORACLE_VECTOR_SUITE,
-    "chunk_documents": ORACLE_CHUNKS,
-    "datetime_function_sweep": ORACLE_DATETIME_SWEEP,
-    "string_function_sweep": ORACLE_STRING_SWEEP,
-    "ann_recall_report": ORACLE_ANN_RECALL,
-}
-
-# round-2 suites (sketches, graph, rollup hierarchy, variant, UDTF,
-# robust stats, skyline) live in queries2.py; merge their registries
-from .queries2 import ORACLES2 as _ORACLES2, QUERIES2 as _QUERIES2  # noqa: E402
-
-QUERIES.update(_QUERIES2)
-ORACLES.update(_ORACLES2)
-
-# round-9b suites (WebDataset shards, HTML→Markdown, MIME mail,
-# k-means training) live in queries3.py
-from .queries3 import ORACLES3 as _ORACLES3, QUERIES3 as _QUERIES3  # noqa: E402
-
-QUERIES.update(_QUERIES3)
-ORACLES.update(_ORACLES3)
-
-# round-10 suites (WebDataset sink round-trip, image near-dup pairs)
-# live in queries4.py
-from .queries4 import ORACLES4 as _ORACLES4, QUERIES4 as _QUERIES4  # noqa: E402
-
-QUERIES.update(_QUERIES4)
-ORACLES.update(_ORACLES4)
-
-# round-11 suites (one-call near-dedup composite, incremental
-# near-dedup against accumulated band-row state) live in queries5.py
-from .queries5 import ORACLES5 as _ORACLES5, QUERIES5 as _QUERIES5  # noqa: E402
-
-QUERIES.update(_QUERIES5)
-ORACLES.update(_ORACLES5)
-
-# round-12 suites (survivor keep-policy, state compaction under the
-# real stream, incremental text near-dedup, video near-dup) live in
-# queries6.py
-from .queries6 import ORACLES6 as _ORACLES6, QUERIES6 as _QUERIES6  # noqa: E402
-
-QUERIES.update(_QUERIES6)
-ORACLES.update(_ORACLES6)
+# The later suites live in queries2..6.py; importing them runs their
+# gate(...) lines.
+from . import queries2, queries3, queries4, queries5, queries6  # noqa: E402,F401

@@ -3,8 +3,9 @@ hierarchical rollups, variant JSON, UDTFs, robust stats, skyline.
 
 Same contract as queries.py: every entry pairs a Spark implementation
 with a DuckDB oracle over the identical parquet tables; aliases match on
-both sides; doubles rounded identically. Registered into
-queries.QUERIES / queries.ORACLES at the bottom of queries.py.
+both sides; doubles rounded identically. Each gate registers itself
+with one ``gate(fn, oracle)`` line (queries.gate) after its oracle;
+queries.py imports this module at its bottom so those lines run.
 
 Tolerance-gated queries (hll, approx percentile) follow the
 ann_recall_report pattern: the Spark side returns EXACT values plus a
@@ -15,22 +16,10 @@ so a drifting sketch fails the hash gate.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-# Lazy bridges to queries.py (which imports this module at its bottom
-# to merge registries — a module-level import here would be circular)
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .queries import _t as real
-    return real(spark, sf_dir, name)
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries import _events as real
-    return real(spark, sf_dir)
+from .queries import _events, _md5_xor_long, _scratch, _spread, _t, gate
 
 
 # =====================================================================
@@ -65,6 +54,7 @@ SELECT event_type, count(DISTINCT user_id) AS exact_users,
        TRUE AS hll_within_5pct
 FROM events GROUP BY event_type ORDER BY event_type
 """
+gate(hll_distinct_rollup, ORACLE_HLL_ROLLUP)
 
 
 def bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,6 +75,7 @@ ORACLE_BITMAP_DISTINCT = """
 SELECT event_type, count(DISTINCT user_id) AS distinct_users
 FROM events GROUP BY event_type ORDER BY event_type
 """
+gate(bitmap_distinct_users, ORACLE_BITMAP_DISTINCT)
 
 
 def heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,6 +104,7 @@ HAVING count(*) >= greatest(2, CAST(floor(
         / (SELECT count(DISTINCT user_id) FROM events)) AS BIGINT))
 ORDER BY user_id
 """
+gate(heavy_hitter_users, ORACLE_HEAVY_HITTERS)
 
 
 def approx_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,7 +120,6 @@ def approx_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # percentile buffering on one core. Output values unchanged (the
     # approx sketch only feeds the boolean, at accuracy=10000 its
     # <=0.01% error never moves the 1% gate).
-    from .queries import _spread
     li = _spread(_t(spark, sf_dir, "lineitem")
                  .select("l_returnflag", "l_extendedprice"))
     j = li.groupBy("l_returnflag").agg(
@@ -152,6 +143,7 @@ SELECT l_returnflag,
        TRUE AS approx_within_1pct
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
+gate(approx_quantile_gate, ORACLE_APPROX_QUANTILE)
 
 
 # =====================================================================
@@ -185,6 +177,7 @@ SELECT event_type,
        count(DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS n_days
 FROM events GROUP BY event_type ORDER BY event_type
 """
+gate(variant_props_stats, ORACLE_VARIANT_PROPS)
 
 
 # =====================================================================
@@ -235,6 +228,7 @@ ne AS (SELECT count(*) AS n_edges FROM edges)
 SELECT nn.n_nodes AS n_nodes, ne.n_edges AS n_edges, tri.n_triangles AS n_triangles
 FROM nn, ne, tri
 """
+gate(graph_triangle_count, ORACLE_TRIANGLES)
 
 
 def graph_pagerank_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,6 +272,7 @@ FROM r3 ORDER BY rank_x1e4 DESC, part LIMIT 20
 
 
 ORACLE_PAGERANK = _pagerank_oracle()
+gate(graph_pagerank_top20, ORACLE_PAGERANK)
 
 
 def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,6 +288,7 @@ sym AS (SELECT src, dst FROM edges UNION ALL SELECT dst, src FROM edges),
 deg AS (SELECT src, count(*) AS degree FROM sym GROUP BY src)
 SELECT degree, count(*) AS n_nodes FROM deg GROUP BY degree ORDER BY degree
 """
+gate(graph_degree_histogram, ORACLE_DEGREE_HIST)
 
 
 # =====================================================================
@@ -340,6 +336,7 @@ SELECT strftime(CAST(CAST(ts AS TIMESTAMP) AS DATE), '%Y-%m-%d') AS day,
        round(max(value), 4) AS max_value
 FROM events GROUP BY 1 ORDER BY 1
 """
+gate(hypertable_rollup_daily, ORACLE_HYPERTABLE)
 
 
 # =====================================================================
@@ -396,6 +393,7 @@ WITH words AS (
 SELECT doc_id, word, CAST(cnt AS INTEGER) AS cnt FROM cnts WHERE rn <= 3
 ORDER BY doc_id, cnt DESC, word
 """
+gate(udtf_word_freq, ORACLE_UDTF_WORDS)
 
 
 # =====================================================================
@@ -434,6 +432,7 @@ SELECT e.event_type, count(*) AS n,
 FROM events e JOIN cuts c USING (event_type)
 GROUP BY e.event_type ORDER BY e.event_type
 """
+gate(winsorized_event_values, ORACLE_WINSORIZE)
 
 
 def embedding_zscore_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,6 +477,7 @@ SELECT d, round(mu, 4) + 0.0 AS mu, round(sigma, 4) + 0.0 AS sigma,
        z_min, z_max
 FROM stats JOIN zr USING (d) WHERE d < 16 ORDER BY d
 """
+gate(embedding_zscore_stats, ORACLE_ZSCORE_EMB)
 
 
 # =====================================================================
@@ -509,6 +509,7 @@ WHERE NOT EXISTS (
     AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
 ORDER BY p_partkey
 """
+gate(skyline_parts, ORACLE_SKYLINE)
 
 
 # =====================================================================
@@ -521,7 +522,6 @@ def xml_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, re-read with the explicit schema (no inference drift), then
     digested with the order-independent md5-xor checksum the oracle
     computes over the parquet directly."""
-    from .queries import _scratch
 
     nation = _t(spark, sf_dir, "nation")
     path = _scratch("xml_rt") + "/x"
@@ -531,7 +531,6 @@ def xml_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             .schema(nation.schema).load(path))
     parts = [F.coalesce(F.col(c).cast("string"), F.lit("<N>"))
              for c in ["n_nationkey", "n_name", "n_regionkey"]]
-    from .queries import _md5_xor_long
     h = _md5_xor_long(*parts)
     return back.select(h.alias("h"), "n_regionkey").agg(
         F.count(F.lit(1)).alias("nations"),
@@ -548,7 +547,6 @@ def avro_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     digested with the order-independent md5-xor checksum the oracle
     computes over the parquet directly. Exercises long/double/string/
     local-timestamp round-tripping through real avro binary."""
-    from .queries import _md5_xor_long, _scratch
     from .sources.avro import avro_export, avro_import
 
     orders = _t(spark, sf_dir, "orders").filter(
@@ -589,6 +587,7 @@ SELECT count(*) AS n_orders,
 FROM orders WHERE o_orderkey % 10 = 0
 ) _bigint_cast
 """
+gate(avro_roundtrip_checksum, ORACLE_AVRO_RT)
 
 
 ORACLE_XML_RT = """
@@ -608,6 +607,7 @@ SELECT count(*) AS nations,
 FROM nation
 ) _bigint_cast
 """
+gate(xml_roundtrip_checksum, ORACLE_XML_RT)
 
 
 # =====================================================================
@@ -693,6 +693,9 @@ def recursive_copurchase_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("node"))
 
 
+gate(recursive_copurchase_reach, _RECURSIVE_REACH_SQL)
+
+
 # =====================================================================
 # Interval RANGE window frames (time-based moving aggregates)
 # =====================================================================
@@ -730,6 +733,7 @@ SELECT strftime(day, '%Y-%m-%d') AS day, round(rev, 2) AS rev,
          RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW), 2) AS sum_7d
 FROM daily ORDER BY day
 """
+gate(moving_avg_revenue_7d, ORACLE_MOVING_7D)
 
 
 # =====================================================================
@@ -742,7 +746,6 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference prints per-column min/max from metadata; we compute the
     full profile in a single agg over one scan)."""
     from .operators.profile import profile
-    from .queries import _spread
 
     # r12 (guide §2.5): the multi-countDistinct agg plans through an
     # Expand that multiplies the input x(distinct cols + 1); on the
@@ -785,6 +788,7 @@ SELECT 'o_orderpriority', count(*), count(*) - count(o_orderpriority),
 FROM orders
 ORDER BY col_name
 """
+gate(profile_orders, ORACLE_PROFILE)
 
 
 def orders_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -852,6 +856,7 @@ SELECT 'unique:o_orderkey', coalesce(sum(c - 1), 0) FROM (
 ORDER BY rule
 ) _bigint_cast
 """
+gate(orders_quality_report, ORACLE_QUALITY_CHECKS)
 
 
 def cms_frequency_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -890,6 +895,7 @@ SELECT l_suppkey, count(*) AS exact_freq, TRUE AS cms_bound_holds
 FROM lineitem WHERE l_suppkey IN (1, 2, 3, 4, 5)
 GROUP BY l_suppkey ORDER BY l_suppkey
 """
+gate(cms_frequency_gate, ORACLE_CMS_GATE)
 
 
 # =====================================================================
@@ -950,6 +956,7 @@ SELECT count(*) AS n_rows,
 FROM t
 ) _bigint_cast
 """
+gate(null_semantics_suite, ORACLE_NULL_SEMANTICS)
 
 
 # =====================================================================
@@ -968,7 +975,6 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (label = quality bucket), built from one broadcast
     crossJoin + two windows — no Python in the hot path."""
     from .operators.similarity import cosine
-    from .queries import _spread
 
     # r12 (guide §2.5): the broadcast crossJoin evaluates ~100k
     # interpreted higher-order cosine folds; spread the one-row-group
@@ -1032,6 +1038,7 @@ SELECT true_label, count(*) AS n_queries,
              / CAST(count(*) AS DOUBLE), 3) AS accuracy
 FROM pred GROUP BY true_label ORDER BY true_label
 """
+gate(knn_label_vote, ORACLE_KNN_VOTE)
 
 
 def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1096,6 +1103,7 @@ WITH cent AS (
 SELECT c_id, n_members, centroid_shift
 FROM sizes JOIN shift USING (c_id) ORDER BY c_id
 """
+gate(kmeans_lloyd_step, ORACLE_KMEANS_STEP)
 
 
 # =====================================================================
@@ -1108,7 +1116,6 @@ def schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     nulls the missing column — how a long-lived 100 TB table absorbs
     schema change without rewriting history. The oracle replays the
     generation split from the flat table."""
-    from .queries import _scratch
 
     orders = _t(spark, sf_dir, "orders")
     path = _scratch("schevo")
@@ -1133,6 +1140,7 @@ SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus
        count(*) AS n, round(sum(o_totalprice), 2) AS revenue
 FROM orders GROUP BY 1 ORDER BY status
 """
+gate(schema_evolution_union, ORACLE_SCHEMA_EVO)
 
 
 # =====================================================================
@@ -1164,6 +1172,7 @@ SELECT l_returnflag,
        regr_count(l_extendedprice, l_quantity) AS n
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
+gate(ols_regression_suite, ORACLE_OLS)
 
 
 def mad_outlier_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1218,6 +1227,7 @@ FROM dev d JOIN mad x USING (event_type)
 GROUP BY d.event_type ORDER BY d.event_type
 ) _bigint_cast
 """
+gate(mad_outlier_events, ORACLE_MAD)
 
 
 def wide_denormalize_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1246,7 +1256,6 @@ def wide_denormalize_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
              for c in ["l_orderkey", "l_linenumber", "o_orderstatus",
                        "c_mktsegment", "n_name", "r_name", "p_brand",
                        "s_name"]]
-    from .queries import _md5_xor_long
     h = _md5_xor_long(*parts)
     return wide.select(h.alias("h"), "l_extendedprice").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1274,6 +1283,7 @@ JOIN region   ON n_regionkey = r_regionkey
 JOIN part     ON l_partkey = p_partkey
 JOIN supplier ON l_suppkey = s_suppkey
 """
+gate(wide_denormalize_checksum, ORACLE_WIDE_DENORM)
 
 
 # =====================================================================
@@ -1307,6 +1317,7 @@ WITH ids AS (
 SELECT row_id, o_orderkey, round(o_totalprice, 2) AS o_totalprice
 FROM ids WHERE row_id % 500 = 0 ORDER BY row_id
 """
+gate(scalable_row_numbering, ORACLE_ROW_NUMBERING)
 
 
 # =====================================================================
@@ -1341,6 +1352,7 @@ SELECT o_orderstatus,
 FROM (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders)
 GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
+gate(string_agg_priorities, ORACLE_STRING_AGG)
 
 
 def argmax_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1374,6 +1386,7 @@ SELECT o_orderstatus,
        round(min(o_totalprice), 2) AS min_price
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
+gate(argmax_suite, ORACLE_ARGMAX)
 
 
 _GROUP_BY_ALL_SQL = """
@@ -1390,6 +1403,9 @@ def group_by_all_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     implement the clause)."""
     from .sqlapi import sql
     return sql(spark, sf_dir, _GROUP_BY_ALL_SQL)
+
+
+gate(group_by_all_sql, _GROUP_BY_ALL_SQL)
 
 
 # =====================================================================
@@ -1440,6 +1456,7 @@ WITH daily AS (
 SELECT month, n_days, round(ewma_raw, 2) AS ewma_end
 FROM folded ORDER BY month
 """
+gate(ewma_monthly_revenue, ORACLE_EWMA)
 
 
 # =====================================================================
@@ -1497,6 +1514,7 @@ SELECT user_id, count(*) AS n_types,
 FROM c GROUP BY user_id ORDER BY user_id
 ) _bigint_cast
 """
+gate(map_functions_suite, ORACLE_MAP_FUNCTIONS)
 
 
 # =====================================================================
@@ -1542,6 +1560,7 @@ SELECT media_id, n_samples, count(*) AS n_windows,
        max(start_sample) AS last_start
 FROM wins GROUP BY media_id, n_samples ORDER BY media_id
 """
+gate(audio_window_plan, ORACLE_AUDIO_WINDOWS)
 
 
 def image_tile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1590,6 +1609,7 @@ SELECT media_id, width, height, tile_x, tile_y,
        least(64, height - tile_y * 64) AS tile_h
 FROM t ORDER BY media_id, tile_x, tile_y
 """
+gate(image_tile_plan, ORACLE_IMAGE_TILES)
 
 
 # =====================================================================
@@ -1633,6 +1653,7 @@ SELECT o_orderstatus,
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 ) _bigint_cast
 """
+gate(bitwise_function_sweep, ORACLE_BITWISE)
 
 
 def array_function_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1677,6 +1698,7 @@ SELECT doc_id,
        len(head) + len(tail) AS n_flat
 FROM ht ORDER BY doc_id
 """
+gate(array_function_sweep, ORACLE_ARRAY_SWEEP)
 
 
 def regex_function_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1713,6 +1735,7 @@ SELECT p_brand,
 FROM part GROUP BY p_brand ORDER BY p_brand
 ) _bigint_cast
 """
+gate(regex_function_sweep, ORACLE_REGEX_SWEEP)
 
 
 # =====================================================================
@@ -1802,6 +1825,7 @@ FROM toks t LEFT JOIN rep r USING (doc_id)
 ORDER BY t.doc_id
 ) _bigint_cast
 """
+gate(exact_substring_report, ORACLE_EXACT_SUBSTRING)
 
 
 # =====================================================================
@@ -1881,6 +1905,9 @@ def number_boundaries_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql(spark, sf_dir, _NUMBER_BOUNDARIES_SQL)
 
 
+gate(number_boundaries_suite, _NUMBER_BOUNDARIES_SQL)
+
+
 ORACLE_TRY_ARITH = """
 SELECT o_orderstatus,
        count(*) AS n,
@@ -1893,6 +1920,7 @@ SELECT o_orderstatus,
                       THEN o_totalprice / (o_orderkey % 7) END), 2) AS avg_ratio
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
+gate(try_arithmetic_suite, ORACLE_TRY_ARITH)
 
 
 # =====================================================================
@@ -2027,6 +2055,7 @@ FROM bins, auc ORDER BY bin
 
 
 ORACLE_AUC = _auc_oracle()
+gate(classifier_auc_report, ORACLE_AUC)
 
 
 # =====================================================================
@@ -2075,6 +2104,7 @@ SELECT l_returnflag, round(f_mean, 2) AS full_mean, f_n, s_n,
        abs(s_mean - f_mean) <= 0.02 * f_mean AS sample_within_2pct
 FROM full_t JOIN samp USING (l_returnflag) ORDER BY l_returnflag
 """
+gate(sampled_mean_estimate, ORACLE_SAMPLED_MEAN)
 
 
 # =====================================================================
@@ -2144,6 +2174,7 @@ SELECT doc_id, round(sum(part), 4) AS bm25, count(*) AS n_terms_hit
 FROM scored GROUP BY doc_id
 ORDER BY bm25 DESC, doc_id LIMIT 20
 """
+gate(bm25_search, ORACLE_BM25)
 
 
 # =====================================================================
@@ -2209,6 +2240,7 @@ SELECT wa, wb, c_xy,
 FROM cpair JOIN uni ux ON ux.word = wa JOIN uni uy ON uy.word = wb, n
 ORDER BY pmi DESC, wa, wb LIMIT 20
 """
+gate(pmi_collocations, ORACLE_PMI)
 
 
 # =====================================================================
@@ -2244,6 +2276,7 @@ SELECT round(corr(l_quantity, l_extendedprice), 4) AS qty_price,
        count(*) AS n
 FROM lineitem
 """
+gate(correlation_matrix, ORACLE_CORR_MATRIX)
 
 
 def benford_digit_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2277,6 +2310,7 @@ SELECT CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1
 FROM orders WHERE o_totalprice >= 1
 GROUP BY 1 ORDER BY 1
 """
+gate(benford_digit_distribution, ORACLE_BENFORD)
 
 
 def window_ignore_nulls_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2319,6 +2353,7 @@ FROM t
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)
 ORDER BY o_custkey, o_orderkey
 """
+gate(window_ignore_nulls_suite, ORACLE_IGNORE_NULLS)
 
 
 # =====================================================================
@@ -2377,6 +2412,7 @@ FROM fact f JOIN dim d
  AND (d.valid_to IS NULL OR f.l_shipdate < d.valid_to)
 GROUP BY d.o_orderpriority ORDER BY d.o_orderpriority
 """
+gate(pit_join_revenue, ORACLE_PIT_JOIN)
 
 
 # =====================================================================
@@ -2442,6 +2478,7 @@ FROM scored GROUP BY r, f, m
 HAVING count(*) >= 5
 ORDER BY r, f, m
 """
+gate(rfm_segmentation, ORACLE_RFM)
 
 
 def association_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2495,6 +2532,7 @@ FROM pairs JOIN item ia ON ia.l_partkey = part_a
            JOIN item ib ON ib.l_partkey = part_b, nb
 ORDER BY lift DESC, part_a, part_b LIMIT 20
 """
+gate(association_rules_parts, ORACLE_ASSOC_RULES)
 
 
 # =====================================================================
@@ -2542,6 +2580,7 @@ SELECT n_days, round(slope, 4) AS slope_per_day,
        round(icept + slope * (last_d + 90), 2) AS forecast_90d
 FROM fit
 """
+gate(revenue_trend_forecast, ORACLE_TREND)
 
 
 # =====================================================================
@@ -2584,10 +2623,11 @@ SELECT event_type, count(*) AS n_gaps,
 FROM gaps WHERE gap_s IS NOT NULL
 GROUP BY event_type ORDER BY event_type
 """
+gate(inter_event_latency, ORACLE_INTER_EVENT)
 
 
 # =====================================================================
-# Registry (merged into queries.QUERIES / queries.ORACLES)
+# URL / line dedup (operators/text)
 # =====================================================================
 
 def url_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2605,7 +2645,6 @@ def url_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: synthesis + canonicalization are map-only expressions; one
     partial-agg shuffle on source."""
     from .operators.text import canonicalize_url
-    from .queries import _t
 
     d = _t(spark, sf_dir, "documents")
     k = F.col("doc_id")
@@ -2696,6 +2735,7 @@ SELECT source,
          AS canon_checksum
 FROM canon GROUP BY source ORDER BY source
 """
+gate(url_dedup_report, ORACLE_URL_DEDUP)
 
 
 def corpus_line_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2716,7 +2756,6 @@ def corpus_line_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (single-node DuckDB can afford it — the Spark side must
     not)."""
     from .operators.text import dedup_lines_corpus
-    from .queries import _t
 
     d = _t(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
@@ -2781,122 +2820,4 @@ SELECT li.source,
 FROM li LEFT JOIN re USING (doc_id)
 GROUP BY li.source ORDER BY li.source
 """
-
-
-
-
-QUERIES2: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "url_dedup_report": url_dedup_report,
-    "corpus_line_dedup_report": corpus_line_dedup_report,
-    "hll_distinct_rollup": hll_distinct_rollup,
-    "bitmap_distinct_users": bitmap_distinct_users,
-    "heavy_hitter_users": heavy_hitter_users,
-    "approx_quantile_gate": approx_quantile_gate,
-    "variant_props_stats": variant_props_stats,
-    "graph_triangle_count": graph_triangle_count,
-    "graph_pagerank_top20": graph_pagerank_top20,
-    "graph_degree_histogram": graph_degree_histogram,
-    "hypertable_rollup_daily": hypertable_rollup_daily,
-    "udtf_word_freq": udtf_word_freq,
-    "winsorized_event_values": winsorized_event_values,
-    "embedding_zscore_stats": embedding_zscore_stats,
-    "skyline_parts": skyline_parts,
-    "xml_roundtrip_checksum": xml_roundtrip_checksum,
-    "avro_roundtrip_checksum": avro_roundtrip_checksum,
-    "recursive_copurchase_reach": recursive_copurchase_reach,
-    "moving_avg_revenue_7d": moving_avg_revenue_7d,
-    "profile_orders": profile_orders,
-    "orders_quality_report": orders_quality_report,
-    "cms_frequency_gate": cms_frequency_gate,
-    "null_semantics_suite": null_semantics_suite,
-    "knn_label_vote": knn_label_vote,
-    "kmeans_lloyd_step": kmeans_lloyd_step,
-    "schema_evolution_union": schema_evolution_union,
-    "ols_regression_suite": ols_regression_suite,
-    "mad_outlier_events": mad_outlier_events,
-    "wide_denormalize_checksum": wide_denormalize_checksum,
-    "scalable_row_numbering": scalable_row_numbering,
-    "string_agg_priorities": string_agg_priorities,
-    "argmax_suite": argmax_suite,
-    "group_by_all_sql": group_by_all_sql,
-    "ewma_monthly_revenue": ewma_monthly_revenue,
-    "map_functions_suite": map_functions_suite,
-    "audio_window_plan": audio_window_plan,
-    "image_tile_plan": image_tile_plan,
-    "bitwise_function_sweep": bitwise_function_sweep,
-    "array_function_sweep": array_function_sweep,
-    "regex_function_sweep": regex_function_sweep,
-    "exact_substring_report": exact_substring_report,
-    "try_arithmetic_suite": try_arithmetic_suite,
-    "number_boundaries_suite": number_boundaries_suite,
-    "classifier_auc_report": classifier_auc_report,
-    "sampled_mean_estimate": sampled_mean_estimate,
-    "bm25_search": bm25_search,
-    "pmi_collocations": pmi_collocations,
-    "correlation_matrix": correlation_matrix,
-    "benford_digit_distribution": benford_digit_distribution,
-    "window_ignore_nulls_suite": window_ignore_nulls_suite,
-    "pit_join_revenue": pit_join_revenue,
-    "rfm_segmentation": rfm_segmentation,
-    "association_rules_parts": association_rules_parts,
-    "revenue_trend_forecast": revenue_trend_forecast,
-    "inter_event_latency": inter_event_latency,
-}
-
-ORACLES2: dict[str, str] = {
-    "url_dedup_report": ORACLE_URL_DEDUP,
-    "corpus_line_dedup_report": ORACLE_LINE_DEDUP,
-    "hll_distinct_rollup": ORACLE_HLL_ROLLUP,
-    "bitmap_distinct_users": ORACLE_BITMAP_DISTINCT,
-    "heavy_hitter_users": ORACLE_HEAVY_HITTERS,
-    "approx_quantile_gate": ORACLE_APPROX_QUANTILE,
-    "variant_props_stats": ORACLE_VARIANT_PROPS,
-    "graph_triangle_count": ORACLE_TRIANGLES,
-    "graph_pagerank_top20": ORACLE_PAGERANK,
-    "graph_degree_histogram": ORACLE_DEGREE_HIST,
-    "hypertable_rollup_daily": ORACLE_HYPERTABLE,
-    "udtf_word_freq": ORACLE_UDTF_WORDS,
-    "winsorized_event_values": ORACLE_WINSORIZE,
-    "embedding_zscore_stats": ORACLE_ZSCORE_EMB,
-    "skyline_parts": ORACLE_SKYLINE,
-    "xml_roundtrip_checksum": ORACLE_XML_RT,
-    "avro_roundtrip_checksum": ORACLE_AVRO_RT,
-    "recursive_copurchase_reach": _RECURSIVE_REACH_SQL,
-    "moving_avg_revenue_7d": ORACLE_MOVING_7D,
-    "profile_orders": ORACLE_PROFILE,
-    "orders_quality_report": ORACLE_QUALITY_CHECKS,
-    "cms_frequency_gate": ORACLE_CMS_GATE,
-    "null_semantics_suite": ORACLE_NULL_SEMANTICS,
-    "knn_label_vote": ORACLE_KNN_VOTE,
-    "kmeans_lloyd_step": ORACLE_KMEANS_STEP,
-    "schema_evolution_union": ORACLE_SCHEMA_EVO,
-    "ols_regression_suite": ORACLE_OLS,
-    "mad_outlier_events": ORACLE_MAD,
-    "wide_denormalize_checksum": ORACLE_WIDE_DENORM,
-    "scalable_row_numbering": ORACLE_ROW_NUMBERING,
-    "string_agg_priorities": ORACLE_STRING_AGG,
-    "argmax_suite": ORACLE_ARGMAX,
-    "group_by_all_sql": _GROUP_BY_ALL_SQL,
-    "ewma_monthly_revenue": ORACLE_EWMA,
-    "map_functions_suite": ORACLE_MAP_FUNCTIONS,
-    "audio_window_plan": ORACLE_AUDIO_WINDOWS,
-    "image_tile_plan": ORACLE_IMAGE_TILES,
-    "bitwise_function_sweep": ORACLE_BITWISE,
-    "array_function_sweep": ORACLE_ARRAY_SWEEP,
-    "regex_function_sweep": ORACLE_REGEX_SWEEP,
-    "exact_substring_report": ORACLE_EXACT_SUBSTRING,
-    "try_arithmetic_suite": ORACLE_TRY_ARITH,
-    "number_boundaries_suite": _NUMBER_BOUNDARIES_SQL,
-    "classifier_auc_report": ORACLE_AUC,
-    "sampled_mean_estimate": ORACLE_SAMPLED_MEAN,
-    "bm25_search": ORACLE_BM25,
-    "pmi_collocations": ORACLE_PMI,
-    "correlation_matrix": ORACLE_CORR_MATRIX,
-    "benford_digit_distribution": ORACLE_BENFORD,
-    "window_ignore_nulls_suite": ORACLE_IGNORE_NULLS,
-    "pit_join_revenue": ORACLE_PIT_JOIN,
-    "rfm_segmentation": ORACLE_RFM,
-    "association_rules_parts": ORACLE_ASSOC_RULES,
-    "revenue_trend_forecast": ORACLE_TREND,
-    "inter_event_latency": ORACLE_INTER_EVENT,
-}
+gate(corpus_line_dedup_report, ORACLE_LINE_DEDUP)

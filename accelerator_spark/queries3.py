@@ -7,8 +7,10 @@ dedup, interval overlap join, bigram LM quality.
 
 Same contract as queries.py / queries2.py: every entry pairs a Spark
 implementation with a DuckDB oracle over the identical parquet tables;
-aliases match on both sides; doubles rounded identically. Registered
-into queries.QUERIES / queries.ORACLES at the bottom of queries.py.
+aliases match on both sides; doubles rounded identically. Each gate
+registers itself with one ``gate(fn, oracle)`` line (queries.gate)
+after its oracle; queries.py imports this module at its bottom so
+those lines run.
 
 Fixture-backed gates follow the r8 media pattern (queries.py
 _doc_media_df): container bytes are authored per document from
@@ -22,15 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    from .queries import _spread as real
-    return real(df)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .queries import _t as real
-    return real(spark, sf_dir, name)
+from .queries import (
+    _doc_media_df, _events, _md5_xor_long, _scratch, _spread, _t, gate,
+)
 
 
 # =====================================================================
@@ -149,6 +145,7 @@ WITH h AS (
 )
 SELECT * FROM s0 UNION ALL SELECT * FROM s1 UNION ALL SELECT * FROM rm
 """
+gate(webdataset_report, ORACLE_WEBDATASET)
 
 
 # =====================================================================
@@ -222,6 +219,7 @@ WITH h AS (
 )
 SELECT doc_id, markdown, CAST(length(markdown) AS INT) AS n_chars FROM m
 """
+gate(html_markdown_report, ORACLE_HTML_MARKDOWN)
 
 
 # =====================================================================
@@ -361,6 +359,7 @@ SELECT doc_id,
          AS attachment_bytes
 FROM msgs
 """
+gate(mbox_extract_report, ORACLE_MBOX_EXTRACT)
 
 
 # =====================================================================
@@ -435,6 +434,7 @@ SELECT c2.c_id,
        round(sqrt(list_dot_product(c2.c, c2.c)), 4) AS norm_r4
 FROM c2 LEFT JOIN sizes USING (c_id)
 """)
+gate(kmeans_train_report, ORACLE_KMEANS_TRAIN)
 
 
 # =====================================================================
@@ -451,7 +451,6 @@ def rtf_extract_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the oracle replays the exact extracted text. One Arrow map
     stage, no shuffle."""
     from .operators.multimodal import extract_document_text
-    from .queries import _doc_media_df
 
     def build_rtf(text: str):
         import hashlib as _hashlib
@@ -487,6 +486,7 @@ SELECT doc_id, 'rtf' AS kind,
        CAST(CASE WHEN b0 & 1 = 1 THEN 3 ELSE 2 END AS INT) AS n_units
 FROM h
 """
+gate(rtf_extract_report, ORACLE_RTF_EXTRACT)
 
 
 # =====================================================================
@@ -553,6 +553,7 @@ SELECT o_orderpriority,
                 THEN 1 ELSE 0 END) AS BIGINT) AS n_false_pos
 FROM pm GROUP BY o_orderpriority
 """
+gate(bloom_prefilter_report, ORACLE_BLOOM_PREFILTER)
 
 
 # =====================================================================
@@ -620,6 +621,7 @@ SELECT doc_id,
        CAST(sum(n) AS INT) AS n_tokens
 FROM toks GROUP BY doc_id
 """
+gate(bpe_tokenize_report, ORACLE_BPE_TOKENIZE)
 
 
 # =====================================================================
@@ -636,7 +638,6 @@ def corpus_inventory_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     one tiny agg shuffle. (Builder-output sniffing — docx/tar/mbox/
     gzip-peek — is pinned in tests/test_sniff.py.)"""
     from .operators.sniff import corpus_inventory
-    from .queries import _doc_media_df
 
     heads = [b"\x89PNG\r\n\x1a\n", b"GIF89a", b"\xff\xd8\xff\xe0",
              b"%PDF-1.7\n", b"WARC/1.0\r\n", b"\x00\x00\x00\x18ftyp",
@@ -674,6 +675,7 @@ SELECT family, format, count(*) AS n_files,
        CAST(count(*) * 64 AS BIGINT) AS total_bytes
 FROM m GROUP BY family, format
 """
+gate(corpus_inventory_report, ORACLE_CORPUS_INVENTORY)
 
 
 # =====================================================================
@@ -735,6 +737,7 @@ UNION ALL
 SELECT CAST(gs AS INT) AS d, val AS weight
 FROM (SELECT generate_subscripts(w, 1) AS gs, unnest(w) AS val FROM w2)
 """)
+gate(logreg_train_report, ORACLE_LOGREG_TRAIN)
 
 
 # =====================================================================
@@ -749,7 +752,6 @@ def arrow_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     digests with the order-independent md5-xor checksum the oracle
     computes over the parquet directly — so a value corrupted
     anywhere in the export/import hop flips the hash."""
-    from .queries import _md5_xor_long, _scratch
     from .sources.arrowipc import arrow_export, arrow_import
 
     li = (_t(spark, sf_dir, "lineitem")
@@ -792,6 +794,7 @@ SELECT count(*) AS n_rows,
 FROM lineitem WHERE l_orderkey % 17 = 0
 ) _bigint_cast
 """
+gate(arrow_roundtrip_checksum, ORACLE_ARROW_RT)
 
 
 # =====================================================================
@@ -807,7 +810,6 @@ def image_dhash_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     each bit from the same md5 bytes and assembles the identical hex
     string. Map-only Arrow stage, no shuffle."""
     from .operators.multimodal import image_dhash
-    from .queries import _doc_media_df
 
     def build_png(text: str):
         import hashlib as _hashlib
@@ -861,6 +863,7 @@ FROM h
 
 
 ORACLE_IMAGE_DHASH = _dhash_oracle_sql()
+gate(image_dhash_report, ORACLE_IMAGE_DHASH)
 
 
 # =====================================================================
@@ -923,6 +926,7 @@ SELECT d.source, count(*) AS n_docs,
 FROM scored s JOIN documents d USING (doc_id)
 GROUP BY d.source ORDER BY d.source
 """
+gate(bigram_logprob_quality, ORACLE_BIGRAM_LP)
 
 
 # =====================================================================
@@ -938,7 +942,6 @@ def warc_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic <urn:md5:> record ids and its own sidecars are all
     value-checked by the production import path. The oracle replays
     every field, the record-id hash included, from DuckDB md5()."""
-    from .queries import _scratch
     from .sources.warc import warc_export, warc_import
 
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1008,6 +1011,7 @@ SELECT doc_id, target_uri,
          AS record_id
 FROM p
 """
+gate(warc_export_roundtrip, ORACLE_WARC_EXPORT)
 
 
 # =====================================================================
@@ -1072,6 +1076,7 @@ SELECT min(k.doc_id) AS doc_id, k.batch
 FROM keyed k JOIN firstb USING (fp, batch)
 GROUP BY k.fp, k.batch
 """
+gate(dedup_incremental_report, ORACLE_DEDUP_INCREMENTAL)
 
 
 # =====================================================================
@@ -1105,11 +1110,6 @@ def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.min("l_event_id").alias("first_event")))
 
 
-def _events(spark, sf_dir):
-    from .queries import _events as real
-    return real(spark, sf_dir)
-
-
 ORACLE_INTERVAL_OVERLAP = """
 WITH base AS (
   SELECT event_id, user_id % 4 AS k,
@@ -1129,6 +1129,7 @@ FROM l JOIN r ON l.k = r.k
   AND l.start < r."end" AND r.start < l."end"
 GROUP BY r.event_id
 """
+gate(interval_overlap_join, ORACLE_INTERVAL_OVERLAP)
 
 
 # =====================================================================
@@ -1192,42 +1193,4 @@ SELECT doc_id, 'emb', 'F32', 2, 3, 1, [by[4], by[5], by[6]] FROM b
 UNION ALL
 SELECT doc_id, 'ids', 'I64', 1, 2, 0, [by[7], by[8]] FROM b
 """
-
-
-QUERIES3 = {
-    "rtf_extract_report": rtf_extract_report,
-    "warc_export_roundtrip": warc_export_roundtrip,
-    "dedup_incremental_report": dedup_incremental_report,
-    "interval_overlap_join": interval_overlap_join,
-    "tensor_import_report": tensor_import_report,
-    "arrow_roundtrip_checksum": arrow_roundtrip_checksum,
-    "image_dhash_report": image_dhash_report,
-    "bigram_logprob_quality": bigram_logprob_quality,
-    "bloom_prefilter_report": bloom_prefilter_report,
-    "bpe_tokenize_report": bpe_tokenize_report,
-    "corpus_inventory_report": corpus_inventory_report,
-    "logreg_train_report": logreg_train_report,
-    "webdataset_report": webdataset_report,
-    "html_markdown_report": html_markdown_report,
-    "mbox_extract_report": mbox_extract_report,
-    "kmeans_train_report": kmeans_train_report,
-}
-
-ORACLES3 = {
-    "rtf_extract_report": ORACLE_RTF_EXTRACT,
-    "warc_export_roundtrip": ORACLE_WARC_EXPORT,
-    "dedup_incremental_report": ORACLE_DEDUP_INCREMENTAL,
-    "interval_overlap_join": ORACLE_INTERVAL_OVERLAP,
-    "tensor_import_report": ORACLE_TENSOR_IMPORT,
-    "arrow_roundtrip_checksum": ORACLE_ARROW_RT,
-    "image_dhash_report": ORACLE_IMAGE_DHASH,
-    "bigram_logprob_quality": ORACLE_BIGRAM_LP,
-    "bloom_prefilter_report": ORACLE_BLOOM_PREFILTER,
-    "bpe_tokenize_report": ORACLE_BPE_TOKENIZE,
-    "corpus_inventory_report": ORACLE_CORPUS_INVENTORY,
-    "logreg_train_report": ORACLE_LOGREG_TRAIN,
-    "webdataset_report": ORACLE_WEBDATASET,
-    "html_markdown_report": ORACLE_HTML_MARKDOWN,
-    "mbox_extract_report": ORACLE_MBOX_EXTRACT,
-    "kmeans_train_report": ORACLE_KMEANS_TRAIN,
-}
+gate(tensor_import_report, ORACLE_TENSOR_IMPORT)

@@ -4,8 +4,10 @@ dedup via the generic banded-Hamming join).
 
 Same contract as queries.py / queries2.py / queries3.py: every entry
 pairs a Spark implementation with a DuckDB oracle over the identical
-parquet tables; aliases match on both sides. Registered into
-queries.QUERIES / queries.ORACLES at the bottom of queries.py.
+parquet tables; aliases match on both sides. Each gate registers
+itself with one ``gate(fn, oracle)`` line (queries.gate) after its
+oracle; queries.py imports this module at its bottom so those lines
+run.
 
 Fixture-backed gates follow the established media pattern
 (queries.py _doc_media_df): container bytes are authored per document
@@ -21,15 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    from .queries import _spread as real
-    return real(df)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .queries import _t as real
-    return real(spark, sf_dir, name)
+from .queries import _scratch, _spread, _t, gate
 
 
 # =====================================================================
@@ -153,6 +147,7 @@ SELECT a.img_id AS id_a, b.img_id AS id_b,
 FROM fps a JOIN fps b ON a.img_id < b.img_id
 WHERE bit_count(xor(a.fp, b.fp)) <= 6
 """
+gate(image_near_dup_pairs, ORACLE_IMAGE_NEAR_DUP)
 
 
 # =====================================================================
@@ -267,6 +262,7 @@ SELECT a.clip_id AS id_a, b.clip_id AS id_b,
 FROM fps a JOIN fps b ON a.clip_id < b.clip_id
 WHERE bit_count(xor(a.fp, b.fp)) <= 6
 """
+gate(audio_near_dup_pairs, ORACLE_AUDIO_NEAR_DUP)
 
 
 # =====================================================================
@@ -286,7 +282,6 @@ def webdataset_export_roundtrip(spark: SparkSession,
     count, total member bytes, and the ext→payload map content as a
     sorted ``ext:md5`` signature. The oracle replays every value from
     DuckDB md5()."""
-    from .queries import _scratch
     from .sources.tar import tar_export, tar_import, webdataset_group
 
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -347,16 +342,4 @@ SELECT doc_id,
          AS parts_sig
 FROM h
 """
-
-
-QUERIES4 = {
-    "image_near_dup_pairs": image_near_dup_pairs,
-    "audio_near_dup_pairs": audio_near_dup_pairs,
-    "webdataset_export_roundtrip": webdataset_export_roundtrip,
-}
-
-ORACLES4 = {
-    "image_near_dup_pairs": ORACLE_IMAGE_NEAR_DUP,
-    "audio_near_dup_pairs": ORACLE_AUDIO_NEAR_DUP,
-    "webdataset_export_roundtrip": ORACLE_WDS_EXPORT,
-}
+gate(webdataset_export_roundtrip, ORACLE_WDS_EXPORT)

@@ -7,8 +7,9 @@ daily-ingestion form.
 
 Same contract as queries.py .. queries4.py: every entry pairs a Spark
 implementation with a DuckDB oracle over the identical parquet
-tables; aliases match on both sides. Registered into queries.QUERIES
-/ queries.ORACLES at the bottom of queries.py.
+tables; aliases match on both sides. Each gate registers itself with
+one ``gate(fn, oracle)`` line (queries.gate) after its oracle;
+queries.py imports this module at its bottom so those lines run.
 
 Both oracles follow the brute-force discipline: the 64-bit simhash
 fingerprints are replayed bit-exactly in SQL (queries._simhash_oracle),
@@ -23,12 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _simhash_oracle
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .queries import _t as real
-    return real(spark, sf_dir, name)
+from .queries import ORACLE_MINHASH, _scratch, _simhash_oracle, _t, gate
 
 
 # =====================================================================
@@ -94,6 +90,7 @@ FROM sh s
 LEFT JOIN lab l ON l.node = s.doc_id
 LEFT JOIN sizes z ON z.component = l.component
 """
+gate(near_dedup_report, ORACLE_NEAR_DEDUP)
 
 
 # =====================================================================
@@ -213,6 +210,7 @@ def _incr_oracle(n: int = 3,
 
 
 ORACLE_NEAR_DEDUP_INCREMENTAL = _incr_oracle()
+gate(near_dedup_incremental_report, ORACLE_NEAR_DEDUP_INCREMENTAL)
 
 
 # =====================================================================
@@ -254,8 +252,6 @@ def text_near_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_near_dedup_oracle() -> str:
-    from .queries import ORACLE_MINHASH
-
     return f"""
 WITH RECURSIVE cand AS ({ORACLE_MINHASH}),
 toks2 AS (
@@ -304,6 +300,7 @@ LEFT JOIN gsz z ON z.component = l.component
 
 
 ORACLE_TEXT_NEAR_DEDUP = _text_near_dedup_oracle()
+gate(text_near_dedup_report, ORACLE_TEXT_NEAR_DEDUP)
 
 
 # =====================================================================
@@ -329,7 +326,6 @@ def streaming_near_dedup_report(spark: SparkSession,
     import shutil
 
     from .operators.dedup import simhash
-    from .queries import _scratch
     from .streaming.structured import (
         stream_from_directory, stream_near_dedup)
 
@@ -374,16 +370,4 @@ def streaming_near_dedup_report(spark: SparkSession,
                     F.coalesce("_k", F.lit(False)).alias("kept")))
 
 
-QUERIES5 = {
-    "near_dedup_report": near_dedup_report,
-    "near_dedup_incremental_report": near_dedup_incremental_report,
-    "text_near_dedup_report": text_near_dedup_report,
-    "streaming_near_dedup_report": streaming_near_dedup_report,
-}
-
-ORACLES5 = {
-    "near_dedup_report": ORACLE_NEAR_DEDUP,
-    "near_dedup_incremental_report": ORACLE_NEAR_DEDUP_INCREMENTAL,
-    "text_near_dedup_report": ORACLE_TEXT_NEAR_DEDUP,
-    "streaming_near_dedup_report": ORACLE_NEAR_DEDUP_INCREMENTAL,
-}
+gate(streaming_near_dedup_report, ORACLE_NEAR_DEDUP_INCREMENTAL)

@@ -10,21 +10,17 @@ family), and video near-dup over the real-decode GIF frame path.
 
 Same contract as queries.py .. queries5.py: every entry pairs a Spark
 implementation with a DuckDB oracle over the identical parquet tables;
-aliases match on both sides. Registered into queries.QUERIES /
-queries.ORACLES at the bottom of queries.py."""
+aliases match on both sides. Each gate registers itself with one
+``gate(fn, oracle)`` line (queries.gate) after its oracle; queries.py
+imports this module at its bottom so those lines run."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _simhash_oracle
+from .queries import _scratch, _simhash_oracle, _t, gate
 from .queries5 import _incr_oracle
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .queries import _t as real
-    return real(spark, sf_dir, name)
 
 
 # =====================================================================
@@ -100,6 +96,7 @@ LEFT JOIN lab l ON l.node = s.doc_id
 LEFT JOIN surv sv ON sv.component = l.component
 LEFT JOIN sizes z ON z.component = l.component
 """
+gate(near_dedup_keep_longest_report, ORACLE_NEAR_DEDUP_KEEP_LONGEST)
 
 
 # =====================================================================
@@ -125,7 +122,6 @@ def streaming_near_dedup_compacted_report(spark: SparkSession,
     import shutil
 
     from .operators.dedup import simhash
-    from .queries import _scratch
     from .streaming.structured import (
         compact_batch_store, stream_from_directory, stream_near_dedup)
 
@@ -188,6 +184,8 @@ def streaming_near_dedup_compacted_report(spark: SparkSession,
 
 ORACLE_STREAMING_NEAR_DEDUP_COMPACTED = _incr_oracle(
     4, "(doc_id % 4 + 2) % 4")
+gate(streaming_near_dedup_compacted_report,
+     ORACLE_STREAMING_NEAR_DEDUP_COMPACTED)
 
 
 # =====================================================================
@@ -370,6 +368,7 @@ def _text_incr_oracle(n: int = 3,
 
 
 ORACLE_TEXT_NEAR_DEDUP_INCREMENTAL = _text_incr_oracle()
+gate(text_near_dedup_incremental_report, ORACLE_TEXT_NEAR_DEDUP_INCREMENTAL)
 
 
 # =====================================================================
@@ -392,7 +391,6 @@ def streaming_text_near_dedup_report(spark: SparkSession,
     import os
     import shutil
 
-    from .queries import _scratch
     from .streaming.structured import (
         stream_from_directory, stream_text_near_dedup)
 
@@ -434,6 +432,9 @@ def streaming_text_near_dedup_report(spark: SparkSession,
             .join(kept, "doc_id", "left")
             .select("doc_id", "batch_seq",
                     F.coalesce("_k", F.lit(False)).alias("kept")))
+
+
+gate(streaming_text_near_dedup_report, ORACLE_TEXT_NEAR_DEDUP_INCREMENTAL)
 
 
 # =====================================================================
@@ -581,26 +582,4 @@ WHERE bit_count(xor(a.fp, b.fp)) <= 6
 
 
 ORACLE_VIDEO_NEAR_DUP = _video_oracle()
-
-
-QUERIES6 = {
-    "near_dedup_keep_longest_report": near_dedup_keep_longest_report,
-    "streaming_near_dedup_compacted_report":
-        streaming_near_dedup_compacted_report,
-    "text_near_dedup_incremental_report":
-        text_near_dedup_incremental_report,
-    "streaming_text_near_dedup_report":
-        streaming_text_near_dedup_report,
-    "video_near_dup_pairs": video_near_dup_pairs,
-}
-
-ORACLES6 = {
-    "near_dedup_keep_longest_report": ORACLE_NEAR_DEDUP_KEEP_LONGEST,
-    "streaming_near_dedup_compacted_report":
-        ORACLE_STREAMING_NEAR_DEDUP_COMPACTED,
-    "text_near_dedup_incremental_report":
-        ORACLE_TEXT_NEAR_DEDUP_INCREMENTAL,
-    "streaming_text_near_dedup_report":
-        ORACLE_TEXT_NEAR_DEDUP_INCREMENTAL,
-    "video_near_dup_pairs": ORACLE_VIDEO_NEAR_DUP,
-}
+gate(video_near_dup_pairs, ORACLE_VIDEO_NEAR_DUP)

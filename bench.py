@@ -1,4 +1,4 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 STDOUT CONTRACT (ADVICE r5, VERDICT r12 #1): stdout carries EXACTLY
@@ -25,115 +25,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from accelerator_spark import queries as Q
+import __spark_entry__
 from accelerator_spark.session import get_spark
-
-HEADLINE = [
-    # relational core
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "q18_large_orders",
-    "q7_volume_shipping",
-    "q9_product_profit",
-    "q13_order_count_distribution",
-    "q19_disjunctive_revenue",
-    "q21_lonely_late_supplier",
-    "top3_orders_per_customer",
-    "brand_part_stats",
-    "pivot_status_priority",
-    "running_monthly_revenue",
-    # events / time-series
-    "events_hourly",
-    "sessionize_events",
-    "asof_click_purchase",
-    # engine ops
-    "checksum_lineitem",
-    "dataset_type_operator",
-    # LLM-pipeline extensions
-    "dedup_exact",
-    "salted_join_agg",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_pairs",
-    "simhash_fingerprints",
-    "embedding_near_pairs",
-    "cosine_topk",
-    "ivf_centroid_assign",
-    "text_quality",
-    "decontaminate_train_set",
-    "sequence_packing",
-    "repetition_signals",
-    "pii_redaction_report",
-    "unigram_logprob_quality",
-    # round-2 additions
-    "cohort_retention",
-    "gapfill_daily_revenue",
-    "window_suite_orders",
-    "quality_classifier_score",
-    "domain_mixture_sample",
-    "fuzzy_part_name_pairs",
-    "partitioned_pruning_revenue",
-    "cdc_merge_orders",
-    "scd2_event_type_intervals",
-    "chunk_documents",
-    "vector_arithmetic_suite",
-    "ann_recall_report",
-    # round-2 suites: sketches / variant / rollup hierarchy / UDTF /
-    # robust stats / skyline (graph + hll + heavy-hitters excluded from
-    # the headline: their co-purchase graph build is several seconds at
-    # sf0.1 — measured separately, see BASELINE.md)
-    "bitmap_distinct_users",
-    "approx_quantile_gate",
-    "variant_props_stats",
-    "hypertable_rollup_daily",
-    "udtf_word_freq",
-    "winsorized_event_values",
-    "embedding_zscore_stats",
-    "skyline_parts",
-    # round-2c: SQL/agg breadth + ML steps + layout
-    "moving_avg_revenue_7d",
-    "ols_regression_suite",
-    "ewma_monthly_revenue",
-    "kmeans_lloyd_step",
-    "map_functions_suite",
-    "null_semantics_suite",
-    "xml_roundtrip_checksum",
-    "wide_denormalize_checksum",
-    "exact_substring_report",
-]
-
-# heavier queries (several-second graph builds / Python counting passes
-# at sf0.1 — see BASELINE.md). Measured BY DEFAULT since round 3 so
-# regressions in the expensive paths are catchable (VERDICT r2 #8);
-# SPARK_GRAFT_BENCH_QUICK=1 runs the headline set only.
-EXTENDED = [
-    "graph_pagerank_top20",
-    "graph_triangle_count",
-    "graph_degree_histogram",
-    "hll_distinct_rollup",
-    "heavy_hitter_users",
-    "knn_label_vote",
-    "classifier_auc_report",
-    "sampled_mean_estimate",
-    "string_agg_priorities",
-    "argmax_suite",
-    "group_by_all_sql",
-    "bitwise_function_sweep",
-    "array_function_sweep",
-    "regex_function_sweep",
-    "try_arithmetic_suite",
-    "scalable_row_numbering",
-    "audio_window_plan",
-    "image_tile_plan",
-    "mad_outlier_events",
-    "schema_evolution_union",
-    "recursive_copurchase_reach",  # iterative BFS since round 3
-    "overlay_roundtrip_checksum",
-    "number_boundaries_suite",
-    "bm25_search",
-]
 
 
 def main() -> None:
@@ -148,25 +41,13 @@ def main() -> None:
     # footer reads + plan compilation, outlier runs absorb box noise —
     # the median is robust to both; the spread makes drift visible.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    names = HEADLINE + ([] if os.environ.get("SPARK_GRAFT_BENCH_QUICK")
-                        else EXTENDED)
-    if not os.environ.get("SPARK_GRAFT_BENCH_QUICK"):
-        # round 3: the FULL gated registry is measured per round, so a
-        # perf regression in any of the 167 queries is catchable — not
-        # just the curated headline subset
-        names = names + sorted(set(Q.QUERIES) - set(names))
     times: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
     reruns: dict[str, float] = {}  # spread-triggered extra reps (r8)
-    for name in names:
-        # a stale name in the hand-maintained lists must record an
-        # error, not crash the whole benchmark before any JSON is
-        # written (review r5)
-        fn = Q.QUERIES.get(name)
-        if fn is None:
-            errors[name] = "not in registry"
-            continue
+    # the full gated registry, in the driver's order, so a perf
+    # regression in any query is catchable
+    for name, fn in __spark_entry__.queries().items():
         samples: list[float] = []
         # a single failing query must not sink the whole benchmark (and
         # with it the round's perf record) — record the error, move on.

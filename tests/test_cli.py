@@ -3,6 +3,7 @@ shell the same way: subprocess `ax` calls, SURVEY §5; in-process keeps
 the Spark session shared)."""
 
 import json
+import os
 
 import pytest
 
@@ -115,7 +116,8 @@ def test_cli_oracle_single_query(tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "accelerator_spark.cli", "oracle",
          "q4_priority_check", "--sf-dir", "/root/testdata/sf0.001"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     assert r.returncode == 0
     assert "1/1 matched" in r.stdout
 

@@ -325,12 +325,14 @@ def test_pickles_module_imports_without_session():
     """Review r4: a module-level pandas_udf resolved its type against
     the active session at import, crashing imports that ran before
     get_spark(); the UDF must be built lazily."""
+    import os
     import subprocess
     import sys
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
         [sys.executable, "-c",
-         "import sys; sys.path.insert(0, '/root/repo'); "
+         f"import sys; sys.path.insert(0, {repo!r}); "
          "import accelerator_spark.functions.pickles; print('ok')"],
         capture_output=True, text=True, timeout=120)
     assert proc.returncode == 0 and "ok" in proc.stdout, proc.stderr[-500:]

@@ -475,7 +475,7 @@ def test_text_near_dedup_incremental_first_batch_wins():
 def test_text_near_dedup_incremental_null_text_passthrough():
     """NULL text yields no shingles: the doc passes through kept
     (failed extraction is not a duplicate) and adds NO band rows to
-    the state. Whitespace-only text is NOT null — per word_shingles
+    the state. Whitespace-only text is NOT null — per _word_shingles_expr
     it carries one empty partial shingle, so it IS fingerprinted (and
     two blank docs near-dup each other, the batch semantics)."""
     from accelerator_spark.operators.dedup import (

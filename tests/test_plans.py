@@ -4,9 +4,13 @@ cartesian). These are regression tests for `.explain()` work — a change
 that silently drops a pushed filter or flips a broadcast to SMJ fails
 here, not in production."""
 
+import os
 import re
+import sys
 
 from accelerator_spark import queries as Q
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _plan(spark, name, sf_dir):
@@ -248,8 +252,7 @@ def test_auc_report_no_global_row_window(spark, sf_dir):
     """VERDICT r2 #4: AUC ranks come from per-score aggregates; the only
     row-level window must be partitioned by score. No-partition sum
     windows are allowed only over the tiny distinct-score aggregate."""
-    from accelerator_spark import queries2 as Q2
-    s = (Q2.QUERIES2["classifier_auc_report"](spark, sf_dir)
+    s = (Q.QUERIES["classifier_auc_report"](spark, sf_dir)
          ._jdf.queryExecution().executedPlan().toString())
     assert "ntile(" not in s
     for line in s.splitlines():
@@ -263,8 +266,7 @@ def test_rfm_no_global_ntile(spark, sf_dir):
     """Full-plan audit r3: the per-customer frame grows with the data;
     its quintiles must come from exact_ntile, never a no-partition
     ntile window."""
-    from accelerator_spark import queries2 as Q2
-    s = (Q2.QUERIES2["rfm_segmentation"](spark, sf_dir)
+    s = (Q.QUERIES["rfm_segmentation"](spark, sf_dir)
          ._jdf.queryExecution().executedPlan().toString())
     assert "ntile(" not in s
     for line in s.splitlines():
@@ -274,35 +276,33 @@ def test_rfm_no_global_ntile(spark, sf_dir):
                 "unpartitioned row_number window: " + line.strip()[:160])
 
 
-def test_bench_lists_are_registry_members():
-    """Review r5: nothing guarded bench.py's hand-maintained HEADLINE/
-    EXTENDED lists against registry renames — a stale name used to
-    crash the whole benchmark (now recorded as an error, but it should
-    never get that far)."""
-    import importlib.util
-    import os
+def test_gate_registry_declares_each_name_once():
+    """Every gate is registered by one gate(fn, oracle) line: a second
+    registration of a name raises and leaves the registry untouched,
+    and the driver contract exposes the same 226 names with non-empty
+    oracle SQL."""
+    import pytest
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    from accelerator_spark import queries as Q
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as e
 
-    stale = [n for n in bench.HEADLINE + bench.EXTENDED
-             if n not in Q.QUERIES]
-    assert stale == []
-    dups = [n for n in set(bench.HEADLINE) & set(bench.EXTENDED)]
-    assert dups == []
+    fn = Q.QUERIES["q1_pricing_summary"]
+    oracle = Q.ORACLES["q1_pricing_summary"]
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+        Q.gate(fn, "SELECT 1")
+    assert Q.ORACLES["q1_pricing_summary"] is oracle
+    qs, osql = e.queries(), e.oracle_sql()
+    assert len(qs) == 226
+    assert list(qs) == list(osql)
+    assert all(isinstance(v, str) and v.strip() for v in osql.values())
+    assert all(f.__name__ == n for n, f in qs.items())
 
 
 def test_entry_graded_subset_is_representative_and_valid():
     """The driver grades queries()[:50]; that prefix must stay exactly
     the curated cross-section and every name must resolve (a rename in
     queries.py would otherwise KeyError at driver time)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as e
     qs = e.queries()
     names = list(qs)
@@ -452,3 +452,18 @@ def test_table_schema_cache_reads_identically(spark, tmp_path):
     b = Q._read_table(spark, p)
     assert a.schema == b.schema
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_table_schema_cache_sees_rewritten_file(spark, tmp_path):
+    """A table rewritten in place with an extra column must come back
+    with that column's values on the next read, not as the cached old
+    schema (which dropped the column or read it as NULL)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), p)
+    assert Q._t(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), p)
+    rows = Q._t(spark, str(tmp_path), "t").orderBy("a").collect()
+    assert [r["b"] for r in rows] == ["x", "y", "z"]

@@ -13,7 +13,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from accelerator_spark import queries as Q
 from accelerator_spark.session import get_spark
@@ -23,9 +24,8 @@ def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans",
-        os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r13"))
+    out_dir = os.path.join(
+        REPO, "plans", os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r13"))
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="capture_plan")
     for name in names:

@@ -5,9 +5,11 @@ values. Usage: python tools/check_oracle.py [sf_dir] [query ...]"""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 
@@ -141,7 +143,6 @@ def main():
         # driver's CORRECTNESS_r{N}.json (same per-query record shape),
         # so every round ships a committed 168-query result
         import json
-        import os
         import time
         out = {"_meta": {"sf_dir": sf_dir, "queries": len(todo),
                          "matched": len(todo) - len(failures),
@@ -153,11 +154,9 @@ def main():
                          "generated_at": time.strftime(
                              "%Y-%m-%dT%H:%M:%SZ", time.gmtime())}}
         out.update(results)
-        # repo root derived from this script's location (matches where
-        # tests/test_oracle.py reads it back); never let an unwritable
-        # checkout eat the summary line or the exit code
-        dest = os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "CORRECTNESS_HEAD.json")
+        # REPO matches where tests/test_oracle.py reads it back; never
+        # let an unwritable checkout eat the summary line or exit code
+        dest = os.path.join(REPO, "CORRECTNESS_HEAD.json")
         try:
             with open(dest, "w") as f:
                 json.dump(out, f, indent=1)

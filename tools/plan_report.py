@@ -1,5 +1,5 @@
-"""Generate PLANS.md: a compact physical-plan audit of every bench
-headline query — exchanges, join strategies, pushed filters, codegen
+"""Generate PLANS.md: a compact physical-plan audit of every gated
+query — exchanges, join strategies, pushed filters, codegen
 spans — so the scale posture in SCALE.md is verifiable per query
 without re-running anything.
 
@@ -12,17 +12,15 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from accelerator_spark import queries as Q
+import __spark_entry__
 from accelerator_spark.session import get_spark
-from bench import EXTENDED, HEADLINE
 
-# benched queries first (stable diff order), then every remaining gated
-# query — the full 167-query surface gets a plan audit, not just the
-# bench subset (round-2's scale-weak plans hid in the unaudited tail)
-ALL = HEADLINE + EXTENDED + sorted(
-    set(Q.QUERIES) - set(HEADLINE) - set(EXTENDED))
+# the full gated registry in the driver's order — every query gets a
+# plan audit (round-2's scale-weak plans hid in an unaudited tail)
+ALL = __spark_entry__.queries()
 
 
 def audit(plan: str) -> dict:
@@ -81,9 +79,9 @@ def main() -> None:
         "|---|---|---|---|---|---|",
     ]
     n_errors = 0
-    for name in ALL:
+    for name, fn in ALL.items():
         try:
-            df = Q.QUERIES[name](spark, sf_dir)
+            df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
             a = audit(plan)
             lines.append(
@@ -93,9 +91,10 @@ def main() -> None:
             n_errors += 1
             lines.append(f"| {name} | ERROR: {str(e)[:60]} | | | | |")
         print(lines[-1], file=sys.stderr)
-    with open("/root/repo/PLANS.md", "w") as f:
+    out = os.path.join(REPO, "PLANS.md")
+    with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print("wrote /root/repo/PLANS.md")
+    print(f"wrote {out}")
     if n_errors:
         # verify_all's 'exit 0 iff green' contract: a broken plan audit
         # must not ship as ALL GREEN (review r5)

@@ -17,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -85,8 +86,7 @@ def main() -> None:
         "time": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
     print(json.dumps(entry, indent=1))
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "SCALECHECK.json")
+    path = os.path.join(REPO, "SCALECHECK.json")
     rec = json.load(open(path)) if os.path.exists(path) else {}
     rec["spill_audit_r13"] = entry
     with open(path, "w") as f:

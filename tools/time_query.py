@@ -15,7 +15,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from accelerator_spark import queries as Q
 from accelerator_spark.session import get_spark

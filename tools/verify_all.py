@@ -17,6 +17,8 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 STEPS = [
     ("pytest", [sys.executable, "-m", "pytest", "tests/", "-x", "-q"]),
     ("oracle", [sys.executable, "tools/check_oracle.py"]),
@@ -29,7 +31,7 @@ def run_scale() -> int:
     cmd = [sys.executable, "-m", "pytest", "tests/test_scale.py", "-q"]
     env = dict(os.environ, SPARK_GRAFT_SCALE="1")
     t0 = time.time()
-    proc = subprocess.run(cmd, cwd="/root/repo", env=env,
+    proc = subprocess.run(cmd, cwd=REPO, env=env,
                           capture_output=True, text=True)
     tail = (proc.stdout or "").strip().splitlines()[-3:]
     rec = {
@@ -41,7 +43,7 @@ def run_scale() -> int:
         "head": _git_head(),
         "time": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    with open("/root/repo/SCALECHECK.json", "w") as f:
+    with open(os.path.join(REPO, "SCALECHECK.json"), "w") as f:
         json.dump(rec, f, indent=1)
     print("\n".join(tail))
     return proc.returncode
@@ -50,7 +52,7 @@ def run_scale() -> int:
 def _git_head() -> str:
     try:
         return subprocess.run(
-            ["git", "rev-parse", "HEAD"], cwd="/root/repo",
+            ["git", "rev-parse", "HEAD"], cwd=REPO,
             capture_output=True, text=True).stdout.strip()
     except OSError:
         return ""
@@ -64,7 +66,7 @@ def main() -> int:
         if quick and name in ("bench", "plans"):
             continue
         print(f"=== {name}: {' '.join(cmd)}", flush=True)
-        rc = subprocess.call(cmd, cwd="/root/repo")
+        rc = subprocess.call(cmd, cwd=REPO)
         print(f"=== {name}: {'OK' if rc == 0 else f'FAILED rc={rc}'}", flush=True)
         if rc:
             failed.append(name)
