@@ -208,8 +208,9 @@ class BuildContext:
         # layout / chain link), so they are part of the job identity —
         # omitting them returned cached datasets with the wrong chain
         # link or partitioning (review r4). Dataset identity falls back
-        # to path for legacy manifests without an id (two distinct
-        # legacy inputs must not share a key).
+        # to path for a manifest without an id (two distinct id-less
+        # inputs must not share a key). Keys persist in every jobdb:
+        # any change to this recipe makes every cached job rebuild.
         parts = {
             "method": fn.__name__,
             "source": src_hash or source_hash(fn),
@@ -222,70 +223,17 @@ class BuildContext:
         }
         return hashlib.sha1(_stable_json(parts).encode()).hexdigest()
 
-    def _legacy_job_key(self, fn, options, datasets,
-                        src_hash=None) -> str:
-        # pre-r4 key format: no hashlabel/previous fields and id-only
-        # dataset identity. Looked up (read-only) so jobdb records
-        # written before the key upgrade still match instead of every
-        # cached job silently rebuilding once (ADVICE r4).
-        parts = {
-            "method": fn.__name__,
-            "source": src_hash or source_hash(fn),
-            "options": options,
-            "datasets": {k: ds.manifest.get("id")
-                         for k, ds in datasets.items()},
-        }
-        return hashlib.sha1(_stable_json(parts).encode()).hexdigest()
+    def _memo_keys(self, fn, options, datasets, hashlabel,
+                   previous) -> list[str]:
+        """The job key, then one per ``fn.equivalent`` source hash
+        (reference: runner.py:270-295): a record under any of them is
+        a memo hit."""
+        return [self._job_key(fn, options, datasets, src_hash=h,
+                              hashlabel=hashlabel, previous=previous)
+                for h in (None, *getattr(fn, "equivalent", ()))]
 
-    def _match(self, fn, options, datasets, hashlabel=None,
-               previous=None) -> JobRecord | None:
-        key = self._job_key(fn, options, datasets,
-                            hashlabel=hashlabel, previous=previous)
-        if key in self._db:
-            return self._db[key]
-        # legacy-key fallback: only valid when the new fields carry their
-        # pre-upgrade implicit values (hashlabel=None, previous=None) and
-        # every input dataset HAS an id (the legacy key conflated id-less
-        # datasets, which is the bug the upgrade fixed — never match
-        # those).
-        legacy_ok = (hashlabel is None and previous is None and all(
-            ds.manifest.get("id") for ds in datasets.values()))
-        if legacy_ok:
-            k_old = self._legacy_job_key(fn, options, datasets)
-            rec_old = self._db.get(k_old)
-            if rec_old is not None and self._legacy_outputs_default(rec_old):
-                return rec_old
-        # equivalent_hashes escape hatch (reference: runner.py:270-295)
-        for old in getattr(fn, "equivalent", ()):
-            k2 = self._job_key(fn, options, datasets, src_hash=old,
-                               hashlabel=hashlabel, previous=previous)
-            if k2 in self._db:
-                return self._db[k2]
-            if legacy_ok:
-                k2_old = self._legacy_job_key(fn, options, datasets,
-                                              src_hash=old)
-                rec2_old = self._db.get(k2_old)
-                if rec2_old is not None and self._legacy_outputs_default(
-                        rec2_old):
-                    return rec2_old
-        return None
-
-    def _legacy_outputs_default(self, rec: JobRecord) -> bool:
-        # the pre-upgrade key conflated records whose REQUEST carried a
-        # hashlabel/previous (build() accepted them; _job_key ignored
-        # them), so matching the request side alone could hand back a
-        # hash-partitioned or chained dataset for a default build. The
-        # written outputs prove which kind the record is: only trust it
-        # when every output manifest shows no hashlabel and no chain
-        # link. A method that sets those internally loses the memo once
-        # (safe direction: rebuild).
-        for p in rec.outputs.values():
-            if not Dataset.exists(p):
-                return False
-            m = Dataset.load(p).manifest
-            if m.get("hashlabel") or m.get("previous"):
-                return False
-        return True
+    def _match(self, keys: list[str]) -> JobRecord | None:
+        return next((self._db[k] for k in keys if k in self._db), None)
 
     # -- cross-process claims (VERDICT r5 #2) ---------------------------
     # The reference serializes submissions through its server process
@@ -447,8 +395,9 @@ class BuildContext:
     ) -> "Job":
         options = resolve_options(fn, options or {})
         datasets = datasets or {}
-        rec = self._match(fn, options, datasets,
-                          hashlabel=hashlabel, previous=previous)
+        keys = self._memo_keys(fn, options, datasets, hashlabel, previous)
+        key = keys[0]
+        rec = self._match(keys)
         # "cached" means a real build would skip: record found AND its
         # outputs still on disk — why_build must apply the same disk
         # check or it answers wrong after outputs were GC'd (review r4)
@@ -477,16 +426,13 @@ class BuildContext:
         # miss (or forced): exactly one process may run the step. Claim
         # the memo key atomically; losers wait for the winner's record
         # (or take over if the winner died) — VERDICT r5 #2.
-        key = self._job_key(fn, options, datasets,
-                            hashlabel=hashlabel, previous=previous)
         while True:
             if self._try_claim(key):
                 try:
                     # a concurrent builder may have finished between our
                     # match and the claim — re-check under the claim
                     self._refresh()
-                    rec = self._match(fn, options, datasets,
-                                      hashlabel=hashlabel, previous=previous)
+                    rec = self._match(keys)
                     if (not force_build and rec is not None and all(
                             Dataset.exists(p) for p in rec.outputs.values())):
                         return Job(self, rec, cached=True)
@@ -667,33 +613,28 @@ class Urd:
             f.write(_stable_json({"list": listname, "ts": timestamp,
                                   "payload": payload, "added": time.time()}) + "\n")
 
-    def _entries(self, listname: str) -> list[dict]:
+    def entries(self, listname: str) -> list[dict]:
+        """All entries of a list in timestamp order (reference `urd
+        peek-all` idiom)."""
         return sorted((e for e in self._read() if e["list"] == listname),
                       key=lambda e: e["ts"])
 
-    def entries(self, listname: str) -> list[dict]:
-        """All entries of a list in timestamp order — the public form
-        (reference `urd peek-all` idiom). ChainRunner and other
-        consumers use THIS, not _entries (review r5: private-API
-        coupling)."""
-        return self._entries(listname)
-
     def latest(self, listname: str) -> dict | None:
-        es = self._entries(listname)
+        es = self.entries(listname)
         return es[-1] if es else None
 
     def first(self, listname: str) -> dict | None:
-        es = self._entries(listname)
+        es = self.entries(listname)
         return es[0] if es else None
 
     def peek(self, listname: str, timestamp: str) -> dict | None:
-        for e in self._entries(listname):
+        for e in self.entries(listname):
             if e["ts"] == timestamp:
                 return e
         return None
 
     def since(self, listname: str, timestamp: str) -> list[dict]:
-        return [e for e in self._entries(listname) if e["ts"] > timestamp]
+        return [e for e in self.entries(listname) if e["ts"] > timestamp]
 
     def lists(self) -> list[str]:
         return sorted({e["list"] for e in self._read()})

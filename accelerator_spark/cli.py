@@ -324,7 +324,7 @@ def _board_html(workdir: str) -> str:
     sections.append("</table><h2>Urd registry</h2>")
     for lname in u.lists():
         sections.append(f"<h3>{html.escape(lname)}</h3><ul>")
-        for e in u._entries(lname):
+        for e in u.entries(lname):
             sections.append(f"<li><code>{html.escape(str(e['ts']))}</code> "
                             f"{html.escape(json.dumps(e['payload']))}</li>")
         sections.append("</ul>")
@@ -398,7 +398,7 @@ def make_board_server(workdir: str, port: int = 0):
                     self._send(200, json.dumps(u.lists()))
                 else:
                     self._send(200, json.dumps(
-                        u._entries(parts[1]), default=str))
+                        u.entries(parts[1]), default=str))
             else:
                 self._send(404, json.dumps({"error": "unknown endpoint"}))
 
@@ -436,7 +436,7 @@ def cmd_urd(args) -> int:
         for name in u.lists():
             print(name)
         return 0
-    for e in u._entries(args.list):
+    for e in u.entries(args.list):
         print(f"{e['ts']}  {json.dumps(e['payload'])}")
     return 0
 

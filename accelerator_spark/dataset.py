@@ -40,7 +40,7 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .identifiers import qcol as _qcol
+from .identifiers import qcol as _qcol, quote_ident
 
 MANIFEST_NAME = "dataset.json"
 LINENO = "lineno"  # conventional ingest-order column (SURVEY §7.4)
@@ -74,9 +74,9 @@ def _json_safe(v: Any) -> Any:
 # chain (a full list in every manifest would be O(N^2) — review r4).
 # Resolution consumes the tip's suffix, then hops checkpoint to
 # checkpoint: O(1 + depth/_CHAIN_CACHE_MAX) manifest reads. Appending
-# is O(1) at write time except at checkpoints and at the legacy
-# boundary (a previous written before the cache existed), which resolve
-# the full ancestry once so depth and cache stay exact.
+# is O(1) at write time except at checkpoints. Every manifest with a
+# ``previous`` carries ``chain_depth`` and a non-empty ``chain_cache``;
+# ``Dataset.load`` refuses one that does not.
 #
 # IMMUTABILITY: cached entries snapshot the ancestor's manifest at
 # write time (the reference's datasets are immutable job outputs).
@@ -117,18 +117,10 @@ def _chain_meta(previous: "Dataset | str | None") -> dict:
         return {"chain_depth": 0}
     prev = previous if isinstance(previous, Dataset) else Dataset.load(previous)
     pm = prev.manifest
-    if "chain_depth" in pm:
-        depth = pm["chain_depth"] + 1
-        # suffix of the NEW dataset's ancestry we have in hand for free
-        known = list(pm.get("chain_cache") or [])
-        known.append(_chain_entry(prev.path, pm))
-    else:
-        # legacy boundary: a pre-cache previous may have arbitrary
-        # ancestry — resolve it fully ONCE (walks uncached links) so
-        # depth is exact; a wrong depth here silently truncated chains
-        # at the old/new boundary (review r4)
-        known = prev.chain_entries()
-        depth = len(known)
+    # a chain root has depth 0 whether or not its manifest says so
+    depth = pm.get("chain_depth", 0) + 1
+    # suffix of the NEW dataset's ancestry we have in hand for free
+    known = [*pm.get("chain_cache", []), _chain_entry(prev.path, pm)]
     if depth % _CHAIN_CHECKPOINT_EVERY == 0:
         need = min(depth, _CHAIN_CACHE_MAX)
         if len(known) < need:
@@ -143,18 +135,46 @@ def _chain_meta(previous: "Dataset | str | None") -> dict:
     return {"chain_depth": depth, "chain_cache": cache}
 
 
-def _dump_manifest(path: str, manifest: dict) -> None:
-    """Write dataset.json atomically: tmp file + os.rename, so a crash
-    mid-dump never leaves a half-written manifest for a concurrent
-    reader, and a reader always sees either the old or the new complete
-    manifest (review r4). One writer shared by all three write paths so
-    the durability behavior can't diverge."""
-    os.makedirs(path, exist_ok=True)
-    dest = os.path.join(path, MANIFEST_NAME)
-    tmp = dest + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, default=_json_safe)
-    os.rename(tmp, dest)
+def _schema_meta(schema) -> dict:
+    """The manifest's ``columns`` and ``nullable`` maps of a schema."""
+    return {"columns": {f_.name: f_.dataType.simpleString() for f_ in schema.fields},
+            "nullable": {f_.name: f_.nullable for f_ in schema.fields}}
+
+
+def _write_observed(df: DataFrame, path: str, mm_cols: list[str],
+                    write) -> tuple[int, dict]:
+    """Run ``write(observed_df)`` and return the manifest stats — line
+    count and per-column [min, max] of ``mm_cols`` — observed in the
+    write job itself: ONE scan, not write-then-rescan (at 100 TB a
+    read-back agg pass doubled every write's IO).
+
+    The existing manifest is removed BEFORE the data is replaced: a
+    crash between the data overwrite and the manifest dump used to leave
+    the OLD manifest describing the NEW files, whose stale zone maps
+    silently skipped matching rows (review r4/r5). A missing manifest is
+    a loud, recoverable state. Every writer goes through here, so the
+    rule cannot drift between them."""
+    from pyspark.sql import Observation
+
+    aggs = [F.count(F.lit(1)).alias("__lines__")]
+    for c in mm_cols:
+        aggs += [F.min(_qcol(c)).alias(f"__min_{c}"),
+                 F.max(_qcol(c)).alias(f"__max_{c}")]
+    obs = Observation()
+    observed = df.observe(obs, *aggs)
+    old_manifest = os.path.join(path, MANIFEST_NAME)
+    if os.path.exists(old_manifest):
+        os.remove(old_manifest)
+    write(observed)
+    row = obs.get
+    return row["__lines__"], {
+        c: [_json_safe(row[f"__min_{c}"]), _json_safe(row[f"__max_{c}"])]
+        for c in mm_cols}
+
+
+def _minmax_cols(df: DataFrame, skip: str | None = None) -> list[str]:
+    return [f_.name for f_ in df.schema.fields
+            if f_.name != skip and f_.dataType.simpleString() in _MINMAX_TYPES]
 
 
 def _valid_table_name(table: str) -> None:
@@ -198,6 +218,19 @@ def _entry_range_skips(minmax: dict,
     return False
 
 
+def _range_filtered(df: DataFrame,
+                    range_filter: dict[str, tuple[Any, Any]] | None
+                    ) -> DataFrame:
+    """Keep rows with lo <= col < hi for each ``{col: (lo, hi)}``; a
+    None bound is open."""
+    for c, (lo, hi) in (range_filter or {}).items():
+        if lo is not None:
+            df = df.filter(F.col(c) >= F.lit(lo))
+        if hi is not None:
+            df = df.filter(F.col(c) < F.lit(hi))
+    return df
+
+
 @dataclass
 class Dataset:
     """Handle to a written dataset. Cheap; holds no data."""
@@ -209,13 +242,45 @@ class Dataset:
     @classmethod
     def load(cls, path: str) -> "Dataset":
         with open(os.path.join(path, MANIFEST_NAME)) as f:
-            return cls(path=path, manifest=json.load(f))
+            manifest = json.load(f)
+        # chain_entries trusts the chain cache; a linked manifest
+        # without one would silently end its chain at this link
+        if manifest.get("previous") and not (
+                manifest.get("chain_depth") and manifest.get("chain_cache")):
+            raise ValueError(
+                f"dataset manifest {os.path.join(path, MANIFEST_NAME)} has "
+                "previous= but no chain_depth/chain_cache; rewrite the "
+                "dataset to link it")
+        return cls(path=path, manifest=manifest)
 
     @classmethod
     def exists(cls, path: str) -> bool:
         return os.path.exists(os.path.join(path, MANIFEST_NAME))
 
     # -- writing ---------------------------------------------------------
+    @classmethod
+    def _commit(cls, path: str, caption: str,
+                previous: "Dataset | str | None", fields: dict) -> "Dataset":
+        """Fill the keys every manifest carries around the writer's own
+        ``fields``, dump it and return the handle. The dump is atomic
+        (tmp file + os.rename): a concurrent reader sees either the old
+        or the new complete manifest, never half of one (review r4)."""
+        manifest = {
+            "version": 1,
+            "id": uuid.uuid4().hex,
+            "created": time.time(),
+            "caption": caption,
+            "previous": previous.path if isinstance(previous, Dataset) else previous,
+            **fields,
+            **_chain_meta(previous),
+        }
+        os.makedirs(path, exist_ok=True)
+        dest = os.path.join(path, MANIFEST_NAME)
+        with open(dest + ".tmp", "w") as f:
+            json.dump(manifest, f, indent=1, default=_json_safe)
+        os.rename(dest + ".tmp", dest)
+        return cls(path=path, manifest=manifest)
+
     @classmethod
     def write(
         cls,
@@ -244,56 +309,18 @@ class Dataset:
         elif partitions:
             df = df.repartition(partitions)
 
-        # manifest stats (lines, min/max zone maps) ride the write itself
-        # via Observation — ONE scan, not write-then-rescan. At 100 TB the
-        # old read-back agg pass doubled every write's IO.
-        from pyspark.sql import Observation
-
-        aggs = [F.count(F.lit(1)).alias("__lines__")]
-        mm_cols = []
-        if collect_minmax:
-            for f_ in df.schema.fields:
-                if f_.dataType.simpleString() in _MINMAX_TYPES:
-                    mm_cols.append(f_.name)
-                    aggs.append(F.min(_qcol(f_.name)).alias(f"__min_{f_.name}"))
-                    aggs.append(F.max(_qcol(f_.name)).alias(f"__max_{f_.name}"))
-        obs = Observation()
-        df = df.observe(obs, *aggs)
-
         data_dir = os.path.join(path, "data")
-        # invalidate a pre-existing manifest BEFORE replacing the data:
-        # a crash between the data overwrite and the manifest dump used
-        # to leave the OLD manifest describing the NEW files, whose
-        # stale minmax zone-maps silently skipped matching rows (review
-        # r4). A missing manifest is a loud, recoverable state.
-        old_manifest = os.path.join(path, MANIFEST_NAME)
-        if os.path.exists(old_manifest):
-            os.remove(old_manifest)
-        df.write.mode("overwrite").parquet(data_dir)
-
-        spark = df.sparkSession
-        written = spark.read.parquet(data_dir)
-        row = obs.get
-
-        manifest = {
-            "version": 1,
-            "id": uuid.uuid4().hex,
-            "created": time.time(),
-            "caption": caption,
+        lines, minmax = _write_observed(
+            df, path, _minmax_cols(df) if collect_minmax else [],
+            lambda d: d.write.mode("overwrite").parquet(data_dir))
+        written = df.sparkSession.read.parquet(data_dir)
+        return cls._commit(path, caption, previous, {
             "filename": filename,
             "hashlabel": hashlabel,
-            "previous": previous.path if isinstance(previous, Dataset) else previous,
-            "columns": {f_.name: f_.dataType.simpleString() for f_ in written.schema.fields},
-            "nullable": {f_.name: f_.nullable for f_ in written.schema.fields},
-            "lines": row["__lines__"],
-            "minmax": {
-                c: [_json_safe(row[f"__min_{c}"]), _json_safe(row[f"__max_{c}"])]
-                for c in mm_cols
-            },
-        }
-        manifest.update(_chain_meta(previous))
-        _dump_manifest(path, manifest)
-        return cls(path=path, manifest=manifest)
+            **_schema_meta(written.schema),
+            "lines": lines,
+            "minmax": minmax,
+        })
 
     @classmethod
     def write_bucketed(
@@ -322,12 +349,6 @@ class Dataset:
         re-creates the table entry in a fresh session from the manifest
         alone.
         """
-        from pyspark.sql import Observation
-
-        spark = df.sparkSession
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("__lines__"))
-        data_dir = os.path.join(path, "data")
         # Spark's catalog only accepts [A-Za-z0-9_] table names — a
         # backtick fails identifier analysis even correctly escaped and
         # a dot fails INVALID_SCHEMA_OR_RELATION_NAME even inside a
@@ -335,35 +356,22 @@ class Dataset:
         # form is still used below so the name is always parsed as ONE
         # identifier, never database.table.
         _valid_table_name(table)
-        quoted = f"`{table}`"
-        # same crash-window rule as write() (review r5: this path and
-        # write_overlay missed the r4 fix): invalidate the old manifest
-        # BEFORE replacing the data so a crash can't leave stale
-        # lines/bucketing metadata describing the new files
-        old_manifest = os.path.join(path, MANIFEST_NAME)
-        if os.path.exists(old_manifest):
-            os.remove(old_manifest)
-        (df.write.mode("overwrite").format("parquet")
-         .bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
-         .option("path", data_dir).saveAsTable(quoted))
-        written = spark.table(quoted)
-        manifest = {
-            "version": 1,
-            "id": uuid.uuid4().hex,
-            "created": time.time(),
-            "caption": caption,
+        quoted = quote_ident(table)
+        data_dir = os.path.join(path, "data")
+        lines, _ = _write_observed(
+            df, path, [],
+            lambda d: (d.write.mode("overwrite").format("parquet")
+                       .bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
+                       .option("path", data_dir).saveAsTable(quoted)))
+        written = df.sparkSession.table(quoted)
+        return cls._commit(path, caption, previous, {
             "filename": None,
             "hashlabel": bucket_col,
             "bucketing": {"table": table, "col": bucket_col, "n": n_buckets},
-            "previous": previous.path if isinstance(previous, Dataset) else previous,
-            "columns": {f_.name: f_.dataType.simpleString() for f_ in written.schema.fields},
-            "nullable": {f_.name: f_.nullable for f_ in written.schema.fields},
-            "lines": obs.get["__lines__"],
+            **_schema_meta(written.schema),
+            "lines": lines,
             "minmax": {},
-        }
-        manifest.update(_chain_meta(previous))
-        _dump_manifest(path, manifest)
-        return cls(path=path, manifest=manifest)
+        })
 
     @classmethod
     def write_overlay(
@@ -400,7 +408,6 @@ class Dataset:
         overlay_meta: dict[str, Any] = {}
         new_col_types: dict[str, str] = {}
         mm = {}
-        lines = parent_ds.lines
         if new_cols is not None:
             if not key:
                 raise ValueError("write_overlay with new_cols requires key=")
@@ -418,29 +425,14 @@ class Dataset:
                 raise ValueError(
                     f"overlay key {key!r} cannot be in exclude= — the "
                     "read-time join needs it")
-            from pyspark.sql import Observation
-
-            aggs = [F.count(F.lit(1)).alias("__lines__")]
-            mm_cols = []
-            for f_ in new_cols.schema.fields:
-                if f_.name != key and f_.dataType.simpleString() in _MINMAX_TYPES:
-                    mm_cols.append(f_.name)
-                    aggs.append(F.min(_qcol(f_.name)).alias(f"__min_{f_.name}"))
-                    aggs.append(F.max(_qcol(f_.name)).alias(f"__max_{f_.name}"))
-            obs = Observation()
-            observed = new_cols.observe(obs, *aggs)
             data_dir = os.path.join(path, "data")
-            # see write()/write_bucketed: stale-manifest crash window
-            old_manifest = os.path.join(path, MANIFEST_NAME)
-            if os.path.exists(old_manifest):
-                os.remove(old_manifest)
-            observed.write.mode("overwrite").parquet(data_dir)
-            row = obs.get
+            _, mm = _write_observed(
+                new_cols, path, _minmax_cols(new_cols, skip=key),
+                lambda d: d.write.mode("overwrite").parquet(data_dir))
             # duplicate overlay keys would multiply rows at read time
             # while the manifest claims the parent's line count — refuse
             # (tiny agg over the just-written overlay columns only)
-            spark = new_cols.sparkSession
-            chk = spark.read.parquet(data_dir).agg(
+            chk = new_cols.sparkSession.read.parquet(data_dir).agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count_distinct(F.col(key)).alias("nd"),
                 F.count(F.when(F.col(key).isNull(), 1)).alias("nnull"),
@@ -451,8 +443,6 @@ class Dataset:
                     f"({chk['n']} rows, {chk['nd']} distinct non-null + "
                     f"{chk['nnull']} null) — a read-time join would "
                     "multiply rows")
-            mm = {c: [_json_safe(row[f"__min_{c}"]), _json_safe(row[f"__max_{c}"])]
-                  for c in mm_cols}
             new_col_types = {
                 f_.name: f_.dataType.simpleString()
                 for f_ in new_cols.schema.fields if f_.name != key}
@@ -463,11 +453,7 @@ class Dataset:
         resolved.update(new_col_types)
         for name in (virtual or {}):
             resolved[name] = "expr"
-        manifest = {
-            "version": 1,
-            "id": uuid.uuid4().hex,
-            "created": time.time(),
-            "caption": caption,
+        return cls._commit(path, caption, previous, {
             "filename": None,
             # an overlay that SHADOWS or excludes the hashlabel column
             # invalidates the parent's co-partitioning claim (the values
@@ -478,14 +464,10 @@ class Dataset:
             "overlay": overlay_meta,
             "virtual": virtual or {},
             "exclude": list(exclude),
-            "previous": previous.path if isinstance(previous, Dataset) else previous,
             "columns": resolved,
-            "lines": lines,
+            "lines": parent_ds.lines,
             "minmax": mm,
-        }
-        manifest.update(_chain_meta(previous))
-        _dump_manifest(path, manifest)
-        return cls(path=path, manifest=manifest)
+        })
 
     def register_bucketed(self, spark: SparkSession) -> DataFrame:
         """Re-create the bucketed table entry from the manifest (needed
@@ -508,7 +490,7 @@ class Dataset:
         # tableExists/spark.table PARSE their argument as a (possibly
         # multipart) identifier — quoting keeps the name one identifier,
         # never database.table
-        quoted = f"`{b['table']}`"
+        quoted = quote_ident(b["table"])
         if spark.catalog.tableExists(quoted):
             rows = spark.sql(
                 f"DESCRIBE FORMATTED {quoted}").collect()
@@ -527,13 +509,13 @@ class Dataset:
                     "table name")
         else:
             cols = ", ".join(
-                f"`{c.replace('`', '``')}` {t}"
+                f"{quote_ident(c)} {t}"
                 for c, t in self.manifest["columns"].items()
             )
-            bcol = b["col"].replace("`", "``")
+            bcol = quote_ident(b["col"])
             spark.sql(
                 f"CREATE TABLE {quoted} ({cols}) USING parquet "
-                f"CLUSTERED BY (`{bcol}`) SORTED BY (`{bcol}`) "
+                f"CLUSTERED BY ({bcol}) SORTED BY ({bcol}) "
                 f"INTO {b['n']} BUCKETS "
                 f"LOCATION '{data_dir.replace(chr(39), chr(39) * 2)}'"
             )
@@ -605,28 +587,18 @@ class Dataset:
         checkpoint to checkpoint — O(1 + depth/_CHAIN_CACHE_MAX)
         manifest reads instead of one per link (reference checkpoints
         the same metadata every 64 links —
-        accelerator/dataset.py:955-961). Manifests written before the
-        cache existed fall back to the link-by-link walk for the
-        uncached stretch. Entries snapshot each ancestor's manifest at
-        write time — see the immutability note on the cache constants;
-        ``chain()`` re-verifies against live manifests."""
+        accelerator/dataset.py:955-961). Entries snapshot each
+        ancestor's manifest at write time — see the immutability note
+        on the cache constants; ``chain()`` re-verifies against live
+        manifests."""
         stop = stop_ds.path if isinstance(stop_ds, Dataset) else stop_ds
         if (stop and _same_path(self.path, stop)) or length == 0:
             return []
         rev: list[dict] = [_chain_entry(self.path, self.manifest)]
-        cur: Dataset | None = self
-        while cur is not None and (length < 0 or len(rev) < length):
-            if not cur.manifest.get("previous"):
-                break
-            cache = cur.manifest.get("chain_cache")
-            if not cache:
-                # pre-cache manifest: walk one link
-                cur = cur.previous
-                if (stop and _same_path(cur.path, stop)) or \
-                        (length >= 0 and len(rev) >= length):
-                    break
-                rev.append(_chain_entry(cur.path, cur.manifest))
-                continue
+        cur = self
+        while (length < 0 or len(rev) < length) and \
+                cur.manifest.get("previous"):
+            cache = cur.manifest["chain_cache"]
             done = False
             for e in reversed(cache):
                 if (length >= 0 and len(rev) >= length) or \
@@ -634,7 +606,7 @@ class Dataset:
                     done = True
                     break
                 rev.append(dict(e))
-            if done or cur.manifest.get("chain_depth") == len(cache):
+            if done or cur.manifest["chain_depth"] == len(cache):
                 break  # limit hit, or cache covered the whole ancestry
             # ancestry extends beyond cache[0] (suffix segment or capped
             # checkpoint): hop to the oldest cached dataset — its entry
@@ -717,20 +689,7 @@ class Dataset:
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=allow_missing_columns)
-        if range_filter:
-            for c, (lo, hi) in range_filter.items():
-                if lo is not None:
-                    out = out.filter(F.col(c) >= F.lit(lo))
-                if hi is not None:
-                    out = out.filter(F.col(c) < F.lit(hi))
-        return out
-
-    def _range_skips(self, range_filter: dict[str, tuple[Any, Any]]) -> bool:
-        """True if manifest min/max proves no row can match (one
-        predicate, shared with the cached-entry path so the skip
-        semantics can't diverge)."""
-        return _entry_range_skips(self.manifest.get("minmax", {}),
-                                  range_filter)
+        return _range_filtered(out, range_filter)
 
     def iterate(
         self,
@@ -742,13 +701,7 @@ class Dataset:
         """The single-dataset ``iterate`` surface (SURVEY §2.2) as a
         DataFrame recipe: projection + filter + range, all pushed to the
         scan by Catalyst."""
-        df = self.df(spark)
-        if range_filter:
-            for c, (lo, hi) in range_filter.items():
-                if lo is not None:
-                    df = df.filter(F.col(c) >= F.lit(lo))
-                if hi is not None:
-                    df = df.filter(F.col(c) < F.lit(hi))
+        df = _range_filtered(self.df(spark), range_filter)
         if filters is not None:
             df = df.filter(filters)
         if columns:

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..identifiers import qcol as _qcol, quote_ident
+
 
 def norm_text(col: Column) -> Column:
     """Canonical text form: lowercase, whitespace-collapsed."""
@@ -83,7 +85,7 @@ def _word_shingles_expr(text_col: str, n: int = 3) -> Column:
     Py4J call (~16 ms vs ~55 ms of per-node Column chatter — driver
     economy, guide §5). SQL arrays_zip names its fields by position,
     hence ``s['i']``."""
-    toks = f"split(trim(`{text_col}`), '\\\\s+')"
+    toks = f"split(trim({quote_ident(text_col)}), '\\\\s+')"
     ln = f"greatest(size({toks}) - {n - 1}, 1)"
     zipped = ("arrays_zip("
               + ",".join(f"slice({toks}, {i + 1}, {ln})" for i in range(n))
@@ -288,7 +290,7 @@ def _hamming_band_array_expr(fp_col: str, bits: int,
     is rebuilt by every fp gate and every micro-batch)."""
     n_bands = max_hamming + 1
     base_w, extra = divmod(bits, n_bands)
-    fp = f"CAST(`{fp_col}` AS BIGINT)"
+    fp = f"CAST({quote_ident(fp_col)} AS BIGINT)"
     parts, off = [], 0
     for i in range(n_bands):
         w = base_w + (1 if i < extra else 0)
@@ -328,7 +330,7 @@ def fp_near_pairs(df: DataFrame, fp_col: str = "fp",
             f"fp_near_pairs: max_hamming {max_hamming} >= bits "
             f"{bits} voids the pigeonhole recall guarantee — raise bits "
             "or lower max_hamming")
-    fp = F.col(fp_col).cast("long")
+    fp = _qcol(fp_col).cast("long")
     band_arr = _hamming_band_array_expr(fp_col, bits, max_hamming)
     # r12 (guide §2.4/§8): the band-row frame feeds BOTH self-join
     # sides and the bucket_cap size agg, and Catalyst/AQE do NOT reuse
@@ -942,12 +944,10 @@ def jaccard_verify(pairs: DataFrame, df: DataFrame,
     # reference would otherwise re-run the (expensive: LSH or
     # state-probe) candidate DAG; lazy localCheckpoint computes it once
     # and shares it (the graph.py edge-list discipline). The frame is
-    # small — bucket/candidate bounded upstream. PRECONDITION: the
-    # pair list is distinct (every in-repo caller's is — LSH/probe
-    # candidate generation ends distinct); a duplicated pair row would
-    # surface twice here where the pre-r13 per-(pair,gram) roll-up
-    # collapsed it.
+    # small — bucket/candidate bounded upstream. A duplicated pair row
+    # is scored once.
     pairs = (pairs.select("doc_a", "doc_b")
+             .dropDuplicates(["doc_a", "doc_b"])
              .localCheckpoint(eager=False))
     # candidate docs' gram SETS feed both sides of the pair attach:
     # share ONE materialization

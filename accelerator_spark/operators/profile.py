@@ -19,12 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _bq(name: str) -> str:
-    """Backtick-escape a column reference so dotted names ('a.b') are
-    not parsed as struct access (review r4 — check_constraints escaped,
-    profile didn't)."""
-    return "`" + name.replace("`", "``") + "`"
+from ..identifiers import qcol
 
 
 def profile(df: DataFrame, columns: list[str] | None = None,
@@ -40,20 +35,20 @@ def profile(df: DataFrame, columns: list[str] | None = None,
     aggs = [F.count(F.lit(1)).alias("_n")]
     for c in cols:
         aggs += [
-            F.count(F.col(_bq(c))).alias(f"_nn_{c}"),
-            distinct_fn(F.col(_bq(c))).alias(f"_nd_{c}"),
-            F.min(F.col(_bq(c))).cast("string").alias(f"_min_{c}"),
-            F.max(F.col(_bq(c))).cast("string").alias(f"_max_{c}"),
+            F.count(qcol(c)).alias(f"_nn_{c}"),
+            distinct_fn(qcol(c)).alias(f"_nd_{c}"),
+            F.min(qcol(c)).cast("string").alias(f"_min_{c}"),
+            F.max(qcol(c)).cast("string").alias(f"_max_{c}"),
         ]
     one = df.agg(*aggs)
     per_col = F.array(*[
         F.struct(
             F.lit(c).alias("column"),
             F.col("_n").alias("n_rows"),
-            (F.col("_n") - F.col(_bq(f"_nn_{c}"))).alias("n_nulls"),
-            F.col(_bq(f"_nd_{c}")).alias("n_distinct"),
-            F.col(_bq(f"_min_{c}")).alias("min_value"),
-            F.col(_bq(f"_max_{c}")).alias("max_value"),
+            (F.col("_n") - qcol(f"_nn_{c}")).alias("n_nulls"),
+            qcol(f"_nd_{c}").alias("n_distinct"),
+            qcol(f"_min_{c}").alias("min_value"),
+            qcol(f"_max_{c}").alias("max_value"),
         ) for c in cols
     ])
     return one.select(F.explode(per_col).alias("p")).select("p.*")
@@ -99,14 +94,14 @@ def check_constraints(df: DataFrame,
         one = df.agg(*row_aggs)
         arr = F.array(*[
             F.struct(F.lit(a).alias("rule"),
-                     F.col(f"`{a}`").cast("long").alias("n_violations"))
+                     qcol(a).cast("long").alias("n_violations"))
             for a in [field.name for field in one.schema.fields]
         ])
         parts.append(one.select(F.explode(arr).alias("v")).select("v.*"))
     for c in unique:
         # dbt/SQL UNIQUE semantics: NULLs are not violations (the FK
         # rule below already filters them; review r4)
-        dup = (df.filter(F.col(f"`{c}`").isNotNull())
+        dup = (df.filter(qcol(c).isNotNull())
                .groupBy(c).agg(F.count(F.lit(1)).alias("_c"))
                .agg(F.coalesce(
                    F.sum(F.when(F.col("_c") > 1, F.col("_c") - 1)),

@@ -20,6 +20,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..identifiers import quote_ident
 from . import lit_double_array
 
 
@@ -90,7 +91,7 @@ def sign_lsh_signature(df: DataFrame, dim: int, bits: int = 16,
         return "array(" + ",".join(repr(float(x)) + "D" for x in p) + ")"
 
     terms = " + ".join(
-        f"(CASE WHEN aggregate(zip_with(`{vec_col}`, {plane_sql(p)},"
+        f"(CASE WHEN aggregate(zip_with({quote_ident(vec_col)}, {plane_sql(p)},"
         " (x, y) -> x * y), 0.0D, (acc, v) -> acc + v) >= 0"
         f" THEN {1 << j}L ELSE 0L END)"
         for j, p in enumerate(planes))

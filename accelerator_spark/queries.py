@@ -1506,6 +1506,80 @@ SELECT doc_id, {total} AS simhash FROM v
 """
 
 
+def _fp_sql_from_bits(bit) -> str:
+    """A MSB-first 64-bit fingerprint as a SIGNED BIGINT expression
+    (two's complement: bit 0 — the MSB — contributes -(2^63), exactly
+    operators/multimodal.dhash_hex_to_long's mapping) from a
+    ``bit(b) -> SQL 0/1 expression`` generator — shared by the image
+    (dHash gradient), audio (energy envelope) and video (temporal)
+    near-dup oracles."""
+    terms = [f"(CASE WHEN {bit(0)} = 1 THEN -9223372036854775808 "
+             "ELSE 0 END)"]
+    terms += [f"CAST({bit(b)} AS BIGINT) * {1 << (63 - b)}"
+              for b in range(1, 64)]
+    return "(" + " + ".join(terms) + ")"
+
+
+def _incr_oracle(n: int = 3,
+                 seq_sql: str = "(doc_id % 3 + 2) % 3") -> str:
+    """The n-batch greedy replay: batch i's pass set filters on a
+    brute-force NOT EXISTS against every earlier batch's kept
+    fingerprints, then components + min-id survivors via a recursive
+    CTE per batch (DuckDB allows several recursive CTEs in one WITH
+    RECURSIVE list). Parameterized over the batch count and the
+    batch-assignment expression (r12: the compacted-stream gate
+    replays FOUR micro-batches with a compaction between #3 and #4 —
+    compaction must be answer-invariant, so the same replay covers
+    it)."""
+    # non-recursive CTEs are MATERIALIZED: DuckDB inlines plain CTEs
+    # at every reference, and the per-batch chain references each
+    # earlier batch's kept set — without the hint the expansion is
+    # exponential in n (n=3 took 26 s, n=4 did not finish; with it
+    # both run in <1 s). Recursive cc{i} CTEs cannot take the hint
+    # and are referenced once each anyway.
+    ctes = [f"sh AS MATERIALIZED ({_simhash_oracle(64)})",
+            f"b AS MATERIALIZED (SELECT doc_id, simhash,"
+            f" CAST({seq_sql} AS INT) AS batch_seq FROM sh)"]
+    for i in range(n):
+        if i == 0:
+            ctes.append(
+                f"p{i} AS MATERIALIZED (SELECT doc_id, simhash FROM b"
+                f" WHERE batch_seq = {i})")
+        else:
+            prev = " UNION ALL ".join(
+                f"SELECT doc_id FROM kept{j}" for j in range(i))
+            ctes.append(
+                f"kf{i} AS MATERIALIZED (SELECT s.doc_id, s.simhash FROM ({prev}) kk"
+                f" JOIN sh s ON s.doc_id = kk.doc_id)")
+            ctes.append(
+                f"p{i} AS MATERIALIZED (SELECT x.doc_id, x.simhash FROM b x"
+                f" WHERE x.batch_seq = {i} AND NOT EXISTS ("
+                f"SELECT 1 FROM kf{i} k"
+                f" WHERE bit_count(xor(k.simhash, x.simhash)) <= 3))")
+        ctes.append(
+            f"e{i} AS (SELECT a.doc_id AS u, b2.doc_id AS v"
+            f" FROM p{i} a JOIN p{i} b2 ON a.doc_id <> b2.doc_id"
+            f" WHERE bit_count(xor(a.simhash, b2.simhash)) <= 3)")
+        ctes.append(
+            f"cc{i} AS (SELECT u AS node, u AS component FROM e{i}"
+            f" UNION SELECT e.u AS node, cc{i}.component"
+            f" FROM cc{i} JOIN e{i} e ON e.v = cc{i}.node)")
+        ctes.append(
+            f"lab{i} AS MATERIALIZED (SELECT node, min(component) AS c FROM cc{i}"
+            f" GROUP BY node)")
+        ctes.append(
+            f"kept{i} AS MATERIALIZED (SELECT p.doc_id FROM p{i} p"
+            f" LEFT JOIN lab{i} l ON l.node = p.doc_id"
+            f" WHERE l.c IS NULL OR l.c = p.doc_id)")
+    ctes.append(
+        "keptall AS MATERIALIZED (" + " UNION ALL ".join(
+            f"SELECT doc_id FROM kept{j}" for j in range(n)) + ")")
+    return ("WITH RECURSIVE " + ",\n".join(ctes) + "\n"
+            "SELECT b.doc_id, b.batch_seq,"
+            " (k.doc_id IS NOT NULL) AS kept\n"
+            "FROM b LEFT JOIN keptall k ON k.doc_id = b.doc_id")
+
+
 ORACLE_SIMHASH = _simhash_oracle()
 gate(simhash_fingerprints, ORACLE_SIMHASH)
 

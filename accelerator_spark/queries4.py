@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _scratch, _spread, _t, gate
+from .queries import _fp_sql_from_bits, _scratch, _spread, _t, gate
 
 
 # =====================================================================
@@ -90,19 +90,6 @@ def image_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_a").alias("id_a"),
         F.col("doc_b").alias("id_b"),
         F.col("hamming").cast("int").alias("hamming"))
-
-
-def _fp_sql_from_bits(bit) -> str:
-    """A MSB-first 64-bit fingerprint as a SIGNED BIGINT expression
-    (two's complement: bit 0 — the MSB — contributes -(2^63), exactly
-    operators/multimodal.dhash_hex_to_long's mapping) from a
-    ``bit(b) -> SQL 0/1 expression`` generator — shared by the image
-    (dHash gradient) and audio (energy envelope) near-dup oracles."""
-    terms = [f"(CASE WHEN {bit(0)} = 1 THEN -9223372036854775808 "
-             "ELSE 0 END)"]
-    terms += [f"CAST({bit(b)} AS BIGINT) * {1 << (63 - b)}"
-              for b in range(1, 64)]
-    return "(" + " + ".join(terms) + ")"
 
 
 def _dhash_fp_sql(col: str) -> str:

@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import ORACLE_MINHASH, _scratch, _simhash_oracle, _t, gate
+from .queries import (ORACLE_MINHASH, _incr_oracle, _scratch,
+                      _simhash_oracle, _t, gate)
 
 
 # =====================================================================
@@ -147,66 +148,6 @@ def near_dedup_incremental_report(spark: SparkSession,
             .join(keptall, "doc_id", "left")
             .select("doc_id", "batch_seq",
                     F.coalesce("_k", F.lit(False)).alias("kept")))
-
-
-def _incr_oracle(n: int = 3,
-                 seq_sql: str = "(doc_id % 3 + 2) % 3") -> str:
-    """The n-batch greedy replay: batch i's pass set filters on a
-    brute-force NOT EXISTS against every earlier batch's kept
-    fingerprints, then components + min-id survivors via a recursive
-    CTE per batch (DuckDB allows several recursive CTEs in one WITH
-    RECURSIVE list). Parameterized over the batch count and the
-    batch-assignment expression (r12: the compacted-stream gate
-    replays FOUR micro-batches with a compaction between #3 and #4 —
-    compaction must be answer-invariant, so the same replay covers
-    it)."""
-    # non-recursive CTEs are MATERIALIZED: DuckDB inlines plain CTEs
-    # at every reference, and the per-batch chain references each
-    # earlier batch's kept set — without the hint the expansion is
-    # exponential in n (n=3 took 26 s, n=4 did not finish; with it
-    # both run in <1 s). Recursive cc{i} CTEs cannot take the hint
-    # and are referenced once each anyway.
-    ctes = [f"sh AS MATERIALIZED ({_simhash_oracle(64)})",
-            f"b AS MATERIALIZED (SELECT doc_id, simhash,"
-            f" CAST({seq_sql} AS INT) AS batch_seq FROM sh)"]
-    for i in range(n):
-        if i == 0:
-            ctes.append(
-                f"p{i} AS MATERIALIZED (SELECT doc_id, simhash FROM b"
-                f" WHERE batch_seq = {i})")
-        else:
-            prev = " UNION ALL ".join(
-                f"SELECT doc_id FROM kept{j}" for j in range(i))
-            ctes.append(
-                f"kf{i} AS MATERIALIZED (SELECT s.doc_id, s.simhash FROM ({prev}) kk"
-                f" JOIN sh s ON s.doc_id = kk.doc_id)")
-            ctes.append(
-                f"p{i} AS MATERIALIZED (SELECT x.doc_id, x.simhash FROM b x"
-                f" WHERE x.batch_seq = {i} AND NOT EXISTS ("
-                f"SELECT 1 FROM kf{i} k"
-                f" WHERE bit_count(xor(k.simhash, x.simhash)) <= 3))")
-        ctes.append(
-            f"e{i} AS (SELECT a.doc_id AS u, b2.doc_id AS v"
-            f" FROM p{i} a JOIN p{i} b2 ON a.doc_id <> b2.doc_id"
-            f" WHERE bit_count(xor(a.simhash, b2.simhash)) <= 3)")
-        ctes.append(
-            f"cc{i} AS (SELECT u AS node, u AS component FROM e{i}"
-            f" UNION SELECT e.u AS node, cc{i}.component"
-            f" FROM cc{i} JOIN e{i} e ON e.v = cc{i}.node)")
-        ctes.append(
-            f"lab{i} AS MATERIALIZED (SELECT node, min(component) AS c FROM cc{i}"
-            f" GROUP BY node)")
-        ctes.append(
-            f"kept{i} AS MATERIALIZED (SELECT p.doc_id FROM p{i} p"
-            f" LEFT JOIN lab{i} l ON l.node = p.doc_id"
-            f" WHERE l.c IS NULL OR l.c = p.doc_id)")
-    ctes.append(
-        "keptall AS MATERIALIZED (" + " UNION ALL ".join(
-            f"SELECT doc_id FROM kept{j}" for j in range(n)) + ")")
-    return ("WITH RECURSIVE " + ",\n".join(ctes) + "\n"
-            "SELECT b.doc_id, b.batch_seq,"
-            " (k.doc_id IS NOT NULL) AS kept\n"
-            "FROM b LEFT JOIN keptall k ON k.doc_id = b.doc_id")
 
 
 ORACLE_NEAR_DEDUP_INCREMENTAL = _incr_oracle()

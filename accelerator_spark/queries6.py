@@ -19,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _scratch, _simhash_oracle, _t, gate
-from .queries5 import _incr_oracle
+from .queries import (_fp_sql_from_bits, _incr_oracle, _scratch,
+                      _simhash_oracle, _t, gate)
 
 
 # =====================================================================
@@ -517,8 +517,6 @@ def _vfp_sql(c0: str, c2: str, c4: str) -> str:
     bits 0..20 = frame c0's gradient bits 0..20, 21..41 = c2's 0..20,
     42..63 = c4's 0..21 — exactly video_fingerprint's
     shiftrightunsigned/shiftleft fold."""
-    from .queries4 import _fp_sql_from_bits
-
     def gbit(col: str, g: int) -> str:
         y, x = divmod(g, 8)
         i = y * 9 + x

@@ -42,9 +42,9 @@ def test_chain_and_range_skip(spark, sf_dir, tmp_path):
     full = d3.chain_df(spark)
     assert full.count() == src.count()
     # zone-map skip: range entirely inside d1 must prune d2/d3 by manifest
-    kept = [ds for ds in d3.chain() if not ds._range_skips({"o_orderkey": (0, 50)})]
-    assert [x.path for x in kept] == [d1.path]
     sub = d3.chain_df(spark, range_filter={"o_orderkey": (0, 50)})
+    files = sub.inputFiles()
+    assert files and all("/d1/data/" in f for f in files), files
     assert sub.count() == src.filter("o_orderkey >= 0 and o_orderkey < 50").count()
 
 
@@ -375,43 +375,32 @@ def test_chain_df_uses_cache_without_manifest_walk(spark, sf_dir, tmp_path,
             == src.agg(F.sum("o_orderkey")).collect()[0][0])
 
 
-def test_chain_cache_legacy_boundary_not_truncated(tmp_path):
-    """Review r4 (confirmed bug): datasets written BEFORE the chain
-    cache existed have no chain_depth; a new write on top of them must
-    resolve the legacy ancestry fully — the first implementation
-    trusted prev depth 0 and silently dropped the old links from every
-    descendant's chain."""
+def test_linked_manifest_without_chain_cache_is_refused(tmp_path):
+    """A manifest that links ``previous`` but carries no
+    chain_depth/chain_cache cannot be resolved from the cache; loading
+    it raises a ValueError naming the manifest instead of silently
+    ending the chain at that link."""
     import json
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    import pytest
 
     from accelerator_spark import dataset as dsmod
     from accelerator_spark.dataset import Dataset
 
-    def legacy_link(i, prev_path):
-        path = os.path.join(str(tmp_path), f"old{i}")
-        os.makedirs(os.path.join(path, "data"), exist_ok=True)
-        pq.write_table(pa.table({"k": [i]}),
-                       os.path.join(path, "data", "p.parquet"))
-        with open(os.path.join(path, dsmod.MANIFEST_NAME), "w") as f:
-            json.dump({"version": 1, "id": f"old{i}", "lines": 1,
-                       "minmax": {"k": [i, i]}, "previous": prev_path,
-                       "columns": {"k": "bigint"}}, f)
-        return path
-
-    prev = None
-    for i in range(3):  # pre-cache manifests: no chain_depth/chain_cache
-        prev = legacy_link(i, prev)
-    new = _fake_link(str(tmp_path), 3, prev, dsmod._chain_meta)
-    tip = Dataset.load(new)
-    got = [e["path"].rsplit("/", 1)[1] for e in tip.chain_entries()]
-    assert got == ["old0", "old1", "old2", "link0003"]
-    # and a further descendant inherits the exact depth
-    newer = _fake_link(str(tmp_path), 4, new, dsmod._chain_meta)
-    tip2 = Dataset.load(newer)
-    assert tip2.manifest["chain_depth"] == 4
-    assert len(tip2.chain_entries()) == 5
+    root = _fake_link(str(tmp_path), 0, None, dsmod._chain_meta)
+    path = os.path.join(str(tmp_path), "uncached")
+    os.makedirs(path)
+    with open(os.path.join(path, dsmod.MANIFEST_NAME), "w") as f:
+        json.dump({"version": 1, "id": "u", "lines": 1,
+                   "minmax": {"k": [1, 1]}, "previous": root,
+                   "columns": {"k": "bigint"}}, f)
+    with pytest.raises(ValueError, match="uncached"):
+        Dataset.load(path)
+    # so is writing on top of it
+    with pytest.raises(ValueError, match="chain_cache"):
+        _fake_link(str(tmp_path), 1, path, dsmod._chain_meta)
+    # a chain root needs no cache
+    assert Dataset.load(root).chain_entries()[0]["path"] == root
 
 
 def test_chain_self_heals_after_ancestor_rewrite(spark, sf_dir, tmp_path):
@@ -456,33 +445,89 @@ def test_build_memo_key_includes_previous_and_hashlabel(spark, sf_dir,
                      previous=j1.dataset()).cached
 
 
-def test_build_legacy_job_key_still_matches(spark, sf_dir, tmp_path):
-    """ADVICE r4: the hashlabel/previous key upgrade must not strand
-    pre-upgrade jobdb records — a legacy-format record (no
-    hashlabel/previous fields, id-only dataset identity) still memo-hits
-    when the new fields carry their implicit pre-upgrade values."""
-    wd = str(tmp_path / "wd")
-    ctx = BuildContext(spark, wd)
-    src = Dataset.write(load(spark, sf_dir, "region"), str(tmp_path / "s"))
+def _pin_step(spark, datasets, options):
+    return datasets["source"].df(spark)
 
-    def step(spark, datasets, options):
-        return datasets["source"].df(spark)
 
-    j1 = ctx.build(step, datasets={"source": src})
-    # rewrite the record under the legacy key, as a pre-upgrade jobdb
-    # would have stored it
-    rec = ctx._db[ctx._job_key(step, {}, {"source": src})]
-    old_key = ctx._legacy_job_key(step, {}, {"source": src})
-    import json as _json
-    with open(os.path.join(wd, "jobdb.jsonl"), "w") as f:
-        f.write(_json.dumps({**rec.__dict__, "key": old_key}) + "\n")
-    ctx2 = BuildContext(spark, wd)
-    j2 = ctx2.build(step, datasets={"source": src})
-    assert j2.cached and j2.jobid == j1.jobid
-    # but a build with hashlabel/previous set must NOT match the legacy
-    # record (those change the output)
-    j3 = ctx2.build(step, datasets={"source": src}, hashlabel="r_regionkey")
-    assert not j3.cached
+def test_job_key_is_pinned(tmp_path):
+    """Memo keys persist in every workdir's jobdb, so the key recipe
+    must never drift: these literals were computed by an earlier
+    release, and an existing workdir memo-hits only while they hold."""
+    ctx = BuildContext(None, str(tmp_path))
+    src = Dataset("/data/src", {"id": "5f0c" * 8})
+    prev = Dataset("/data/prev", {"id": "9a1e" * 8})
+    assert ctx._job_key(_pin_step, {"n": 3}, {"source": src}) == \
+        "5832107d4cc3d989a42055ad57936f6a371d4531"
+    assert ctx._job_key(_pin_step, {"n": 3}, {"source": src},
+                        hashlabel="k", previous=prev) == \
+        "8c4c37c0a262ca7e3f74d6f247bb6cc05aae998d"
+    # an input without an id is identified by its path
+    assert ctx._job_key(_pin_step, {}, {"source": Dataset("/data/noid", {})},
+                        src_hash="0" * 40) == \
+        "05bfc07e7c533b1ae8dd066e8cd72abc7c2111e8"
+
+
+def test_writer_manifests_are_pinned(spark, tmp_path):
+    """The manifest is the on-disk format: each writer's keys and
+    values (all but the random ``id`` and the ``created`` stamp) are
+    pinned to what an earlier release wrote for the same input."""
+    import json
+
+    root = str(tmp_path)
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string")
+    base = Dataset.write(df, f"{root}/base", caption="c0", filename="f.csv")
+    nxt = Dataset.write(df, f"{root}/next", hashlabel="k", previous=base,
+                        partitions=2)
+    try:
+        bk = Dataset.write_bucketed(df, f"{root}/bk", "t_pin_manifest", "k",
+                                    4, previous=nxt, caption="c1")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_pin_manifest")
+    ov = Dataset.write_overlay(
+        f"{root}/ov", base,
+        new_cols=spark.createDataFrame([(1, 2.5)], "k long, x double"),
+        key="k", virtual={"z": "k + 1"}, exclude=["s"], caption="c2",
+        previous=bk)
+    names = {"base": base, "next": nxt, "bk": bk, "ov": ov}
+
+    def pinned(ds):
+        text = json.dumps(Dataset.load(ds.path).manifest)
+        for n, d in names.items():
+            text = text.replace(d.manifest["id"], f"<{n}>")
+        m = json.loads(text.replace(root, "<root>"))
+        del m["id"], m["created"]
+        return m
+
+    schema = {"columns": {"k": "bigint", "s": "string"},
+              "nullable": {"k": True, "s": True}}
+    mm = {"k": [1, 2], "s": ["a", "b"]}
+
+    def entry(n, plain=True, minmax=mm):
+        return {"path": f"<root>/{n}", "id": f"<{n}>", "lines": 2,
+                "minmax": minmax, "plain": plain}
+
+    assert pinned(base) == {
+        "version": 1, "caption": "c0", "filename": "f.csv",
+        "hashlabel": None, "previous": None, **schema, "lines": 2,
+        "minmax": mm, "chain_depth": 0}
+    assert pinned(nxt) == {
+        "version": 1, "caption": "", "filename": None, "hashlabel": "k",
+        "previous": "<root>/base", **schema, "lines": 2, "minmax": mm,
+        "chain_depth": 1, "chain_cache": [entry("base")]}
+    assert pinned(bk) == {
+        "version": 1, "caption": "c1", "filename": None, "hashlabel": "k",
+        "bucketing": {"table": "t_pin_manifest", "col": "k", "n": 4},
+        "previous": "<root>/next", **schema, "lines": 2, "minmax": {},
+        "chain_depth": 2, "chain_cache": [entry("base"), entry("next")]}
+    assert pinned(ov) == {
+        "version": 1, "caption": "c2", "filename": None, "hashlabel": None,
+        "parent": "<root>/base", "overlay": {"key": "k", "cols": ["x"]},
+        "virtual": {"z": "k + 1"}, "exclude": ["s"],
+        "previous": "<root>/bk",
+        "columns": {"k": "bigint", "x": "double", "z": "expr"},
+        "lines": 2, "minmax": {"x": [2.5, 2.5]}, "chain_depth": 3,
+        "chain_cache": [entry("base"), entry("next"),
+                        entry("bk", plain=False, minmax={})]}
 
 
 def test_jobdb_and_urd_tolerate_truncated_lines(spark, sf_dir, tmp_path):
@@ -519,7 +564,7 @@ def test_urd_rejects_conflicting_timestamp(tmp_path):
     u = Urd(str(tmp_path))
     u.add("daily", "2024-01-01", {"job": "a-0"})
     u.add("daily", "2024-01-01", {"job": "a-0"})  # idempotent no-op
-    assert len(u._entries("daily")) == 1
+    assert len(u.entries("daily")) == 1
     with pytest.raises(ValueError, match="immutable"):
         u.add("daily", "2024-01-01", {"job": "a-1"})
 
@@ -628,35 +673,6 @@ def test_bucketed_table_name_edge_cases(spark, sf_dir, tmp_path):
             d.register_bucketed(spark)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_rb_ok")
-
-
-def test_build_legacy_fallback_rejects_nondefault_outputs(spark, sf_dir,
-                                                          tmp_path):
-    """Review r5: the pre-upgrade key conflated records whose REQUEST
-    carried a hashlabel/previous (build() accepted both; the old
-    _job_key ignored them), so the legacy fallback must inspect the
-    record's written outputs and reject any with a hashlabel or chain
-    link — otherwise a default build gets a hash-partitioned cached
-    dataset."""
-    wd = str(tmp_path / "wd")
-    ctx = BuildContext(spark, wd)
-    src = Dataset.write(load(spark, sf_dir, "region"), str(tmp_path / "s"))
-
-    def step(spark, datasets, options):
-        return datasets["source"].df(spark)
-
-    ctx.build(step, datasets={"source": src}, hashlabel="r_regionkey")
-    rec = ctx._db[ctx._job_key(step, {}, {"source": src},
-                               hashlabel="r_regionkey")]
-    # store it under the legacy key, as a pre-upgrade jobdb would have
-    # for the SAME hashlabel-carrying request
-    old_key = ctx._legacy_job_key(step, {}, {"source": src})
-    import json as _json
-    with open(os.path.join(wd, "jobdb.jsonl"), "w") as f:
-        f.write(_json.dumps({**rec.__dict__, "key": old_key}) + "\n")
-    ctx2 = BuildContext(spark, wd)
-    j2 = ctx2.build(step, datasets={"source": src})
-    assert not j2.cached
 
 
 def test_write_invalidates_stale_manifest_first(spark, sf_dir, tmp_path,

@@ -8,6 +8,8 @@ check-the-store-then-dedup-the-batch order)."""
 
 import random
 
+import pytest
+
 from accelerator_spark.operators.dedup import (
     near_dedup,
     near_dedup_incremental,
@@ -290,6 +292,50 @@ def test_jaccard_verify_duplicate_ids_and_one_sided_pairs():
     assert got == [(1, 2, 1.0), (1, 3, 0.0)]
     assert jaccard_verify(pairs, df, threshold=0.5).collect() == [
         (1, 2, 1.0)]
+
+
+def test_jaccard_verify_scores_a_duplicated_pair_once():
+    """A pair listed twice in the candidate frame comes out once."""
+    from accelerator_spark.operators.dedup import jaccard_verify
+
+    spark = _spark()
+    df = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
+        "doc_id long, text string")
+    pairs = spark.createDataFrame([(1, 2), (1, 2)], "doc_a long, doc_b long")
+    assert jaccard_verify(pairs, df, threshold=0.0).collect() == [
+        (1, 2, 1.0)]
+
+
+def _minhash(d, c):
+    from accelerator_spark.operators.dedup import minhash_signature
+    return minhash_signature(d, text_col=c)
+
+
+def _fp_pairs(d, c):
+    from accelerator_spark.operators.dedup import fp_near_pairs
+    return fp_near_pairs(d, fp_col=c)
+
+
+def _sign_lsh(d, c):
+    from accelerator_spark.operators.similarity import sign_lsh_signature
+    return sign_lsh_signature(d, dim=3, bits=8, vec_col=c).drop(c)
+
+
+@pytest.mark.parametrize("run, rows, schema", [
+    (_minhash, [(1, "the quick brown fox"), (2, "a b")],
+     "doc_id long, t string"),
+    (_fp_pairs, [(1, 0), (2, 3), (3, 1 << 40)], "doc_id long, t long"),
+    (_sign_lsh, [(1, [1.0, -2.0, 0.5]), (2, [-1.0, 0.0, 3.0])],
+     "vec_id long, t array<double>"),
+], ids=["minhash_signature", "fp_near_pairs", "sign_lsh_signature"])
+def test_builders_take_a_backtick_column_name(run, rows, schema):
+    """A caller column named a`b is one identifier to the SQL-string
+    builders: the result equals the same call on a plain name."""
+    df = _spark().createDataFrame(rows, schema)
+    want = sorted(run(df.withColumnRenamed("t", "plain"), "plain").collect())
+    got = sorted(run(df.withColumnRenamed("t", "a`b"), "a`b").collect())
+    assert want and got == want
 
 
 def test_text_near_dedup_end_to_end():

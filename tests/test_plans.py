@@ -8,6 +8,8 @@ import os
 import re
 import sys
 
+import pytest
+
 from accelerator_spark import queries as Q
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -296,6 +298,21 @@ def test_gate_registry_declares_each_name_once():
     assert list(qs) == list(osql)
     assert all(isinstance(v, str) and v.strip() for v in osql.values())
     assert all(f.__name__ == n for n, f in qs.items())
+
+
+@pytest.mark.parametrize("suite", [f"queries{i}" for i in range(2, 7)])
+def test_suite_module_imports_on_its_own(suite):
+    """Importing any suite module first (not through
+    accelerator_spark.queries) loads the whole registry without a
+    circular-import failure."""
+    import subprocess
+
+    code = (f"import accelerator_spark.{suite}\n"
+            "from accelerator_spark import queries as Q\n"
+            "assert len(Q.QUERIES) == len(Q.ORACLES) == 226\n")
+    r = subprocess.run([sys.executable, "-c", code], cwd=REPO,
+                       capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-2000:]
 
 
 def test_entry_graded_subset_is_representative_and_valid():

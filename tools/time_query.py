@@ -1,11 +1,17 @@
-"""Isolated per-query timing — the guide §1 measurement loop without
-the full bench: run only the named queries (median of N noop-sink
-runs, same methodology as bench.py), and report the Spark JOB COUNT
-per run via the status tracker so job-count reductions (guide §2.4 —
-each extra action/shuffle round is fixed latency at any scale) are
-directly visible.
+"""Per-query timing: each run of a query is split into BUILD (the
+``fn(spark, sf_dir)`` DataFrame construction — driver-side Py4J
+chatter, analysis, parquet footer/schema reads) and EXEC (the noop-sink
+write), and its Spark JOB COUNT is read from the status tracker. A
+build-heavy query is pure driver latency that no cluster size fixes
+(guide §4/§5), and job counts are the contention-free signal for
+job-count reductions (guide §2.4 — each extra action/shuffle round is
+fixed latency at any scale).
 
-Usage: python tools/time_query.py [-n reps] query [query ...]
+Usage: python tools/time_query.py [-n reps] [query ...]
+
+Prints the median build/exec seconds and the per-run job counts of each
+query. With no names, times the whole registry and ends with the table
+sorted by build time.
 """
 
 from __future__ import annotations
@@ -22,6 +28,10 @@ from accelerator_spark import queries as Q
 from accelerator_spark.session import get_spark
 
 
+def _line(build: float, exec_: float, jobs: list[int], name: str) -> str:
+    return f"{build:7.3f} build {exec_:7.3f} exec  jobs/run={jobs}  {name}"
+
+
 def main() -> None:
     args = sys.argv[1:]
     reps = 3
@@ -33,26 +43,44 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()  # warm JVM
     tracker = spark.sparkContext.statusTracker()
 
-    for name in args:
+    rows = []
+    for name in args or sorted(Q.QUERIES):
         fn = Q.QUERIES.get(name)
         if fn is None:
-            print(f"{name}: NOT IN REGISTRY", file=sys.stderr)
+            print(f"# {name}: not in registry", file=sys.stderr)
             continue
-        samples, jobs = [], []
+        builds, execs, jobs = [], [], []
         for _ in range(reps):
             j0 = len(tracker.getJobIdsForGroup(None) or [])
-            t0 = time.perf_counter()
             spark.sparkContext.setJobDescription(name)
-            df = fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            samples.append(time.perf_counter() - t0)
-            j1 = len(tracker.getJobIdsForGroup(None) or [])
-            jobs.append(j1 - j0)
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(None)
-        med = statistics.median(samples)
-        print(f"{name}: {med:.3f}s  [{min(samples):.3f}-{max(samples):.3f}]"
-              f"  jobs/run={jobs}")
+            try:
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                t1 = time.perf_counter()
+                df.write.mode("overwrite").format("noop").save()
+                t2 = time.perf_counter()
+            except Exception as e:  # noqa: BLE001
+                print(f"# {name}: ERROR {str(e).splitlines()[0][:160]}",
+                      file=sys.stderr)
+                break
+            finally:
+                spark.catalog.clearCache()
+                spark.sparkContext.setJobDescription(None)
+            builds.append(t1 - t0)
+            execs.append(t2 - t1)
+            jobs.append(len(tracker.getJobIdsForGroup(None) or []) - j0)
+        if builds:
+            rows.append((statistics.median(builds),
+                         statistics.median(execs), jobs, name))
+            print(_line(*rows[-1]), flush=True)
+
+    if not args:
+        rows.sort(reverse=True)
+        print("\n== sorted by build time ==")
+        for row in rows:
+            print(_line(*row))
+        print(f"\nTOTAL build {sum(r[0] for r in rows):.1f}s "
+              f"exec {sum(r[1] for r in rows):.1f}s over {len(rows)} queries")
 
 
 if __name__ == "__main__":
