@@ -5,6 +5,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def md5_long(col: Column) -> Column:
+    """md5 of a string column as a signed 60-bit long: the first 15 hex
+    digits of the digest. md5-derived (not xxhash64) so DuckDB replays
+    it bit-for-bit as CAST(('0x'||substring(md5(x),1,15)) AS BIGINT);
+    NULL in, NULL out. The one definition of this encoding: every
+    60-bit md5 hash, bucket and digest in the library and the gates
+    calls it."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def lit_double_array(vals) -> Column:
     """Array<double> literal built in ONE Py4J round-trip.
 

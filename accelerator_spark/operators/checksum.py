@@ -29,46 +29,34 @@ def _cols(df: DataFrame, columns: list[str] | None) -> list[str]:
     return cols
 
 
-def checksum(df: DataFrame, columns: list[str] | None = None) -> dict:
-    """Order/partitioning-insensitive digest of selected columns.
-
-    Returns {"lines": n, "xor": int, "sum": int}.
-    """
+def checksum_df(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+    """Order/partitioning-insensitive digest of selected columns as a
+    1-row DataFrame (lines, checksum_xor, checksum_sum). Carries BOTH
+    folds — xor alone is blind to rows duplicated an even number of
+    times (review r5: two such datasets looked equal)."""
     cols = _cols(df, columns)
     # Null-safe canonical text form per row; the \x1f separator prevents
-    # ("ab","c") colliding with ("a","bc"). Known ambiguity (accepted,
-    # shared bit-for-bit with the DuckDB oracles that replicate this
-    # encoding): a VALUE containing \x1f, or equal to the "\x00NULL"
-    # sentinel, can collide with a differently-split row — impossible
-    # for the numeric/clean-text columns this digests, and the encoding
-    # cannot change without breaking recorded oracle parity.
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL")) for c in cols]
-    h = F.xxhash64(F.concat_ws("\x1f", *parts))
-    row = (
-        df.select(h.alias("h"))
-        .agg(
-            F.count(F.lit(1)).alias("lines"),
-            F.bit_xor("h").alias("xor"),
-            # sum as decimal: exact and overflow-free under ANSI mode
-            F.sum(F.col("h").cast("decimal(38,0)")).alias("sum"),
-        )
-        .collect()[0]
-    )
-    return {"lines": row["lines"], "xor": row["xor"] or 0, "sum": int(row["sum"] or 0)}
-
-
-def checksum_df(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Same digest but returned as a 1-row DataFrame. Carries BOTH folds
-    like checksum() — xor alone is blind to rows duplicated an even
-    number of times (review r5: two such datasets looked equal)."""
-    cols = _cols(df, columns)
+    # ("ab","c") colliding with ("a","bc"). Known ambiguity (accepted):
+    # a VALUE containing \x1f, or equal to the "\x00NULL" sentinel, can
+    # collide with a differently-split row — impossible for the
+    # numeric/clean-text columns this digests. This in-engine digest is
+    # not replayed by any oracle; the DuckDB-replayable one is the md5
+    # digest of the gates (queries._md5_xor_long).
     parts = [F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL")) for c in cols]
     h = F.xxhash64(F.concat_ws("\x1f", *parts))
     return df.select(h.alias("h")).agg(
         F.count(F.lit(1)).alias("lines"),
         F.bit_xor("h").alias("checksum_xor"),
+        # sum as decimal: exact and overflow-free under ANSI mode
         F.sum(F.col("h").cast("decimal(38,0)")).alias("checksum_sum"),
     )
+
+
+def checksum(df: DataFrame, columns: list[str] | None = None) -> dict:
+    """checksum_df collected: {"lines": n, "xor": int, "sum": int}."""
+    row = checksum_df(df, columns).collect()[0]
+    return {"lines": row["lines"], "xor": row["checksum_xor"] or 0,
+            "sum": int(row["checksum_sum"] or 0)}
 
 
 def checksum_chain(dataset, spark, columns: list[str] | None = None,

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..identifiers import qcol as _qcol, quote_ident
+from . import md5_long
 
 
 def norm_text(col: Column) -> Column:
@@ -41,11 +42,8 @@ def fingerprint(col: Column) -> Column:
 
 
 def _h(col: Column, seed: int) -> Column:
-    """Deterministic 60-bit hash #seed, reproducible in DuckDB as
-    CAST(('0x' || substring(md5(x || ':seed'), 1, 15)) AS BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(col, F.lit(f":{seed}"))), 1, 15), 16, 10
-    ).cast("long")
+    """Deterministic 60-bit hash #seed: md5_long of ``x || ':seed'``."""
+    return md5_long(F.concat(col, F.lit(f":{seed}")))
 
 
 def _md5_window(digest: Column, j: int) -> Column:

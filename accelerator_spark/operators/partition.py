@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..dataset import LINENO
+from . import md5_long
 
 
 def hashpart(df: DataFrame, hashlabel: str, partitions: int | None = None) -> DataFrame:
@@ -154,11 +155,10 @@ def salted_join(big: DataFrame, small: DataFrame, on: str,
 
 
 def _md5_bucket(col, buckets: int = 10_000):
-    """Deterministic uniform bucket in [0, buckets) from a column value.
-    md5-derived (not xxhash64) so DuckDB replicates it bit-for-bit:
-    CAST(('0x'||substring(md5(CAST(x AS VARCHAR)),1,15)) AS BIGINT) % buckets."""
-    h = F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10)
-    return h.cast("long") % buckets
+    """Deterministic uniform bucket in [0, buckets) from a column value:
+    md5_long of its string form, mod ``buckets`` (DuckDB: the md5_long
+    twin over CAST(x AS VARCHAR), % buckets)."""
+    return md5_long(F.col(col).cast("string")) % buckets
 
 
 def hash_sample(df: DataFrame, col: str, rate: float) -> DataFrame:

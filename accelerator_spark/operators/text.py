@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import md5_long
 from .dedup import fingerprint, norm_text
 
 STOPWORDS = {
@@ -114,21 +115,14 @@ def quality_score(df: DataFrame, text_col: str = "text",
 
 
 def rolling_fingerprint(col: Column, window: int = 8) -> Column:
-    # NOTE: the md5 -> conv(substring, 16, 10) -> long recipe below must
-    # stay bit-identical to dedup._h and partition._md5_bucket — it is
-    # the documented DuckDB-replication contract the oracle gate rests on
-    """Winnowing-style document fingerprint: min over rolling-window
-    hashes of the token stream (deterministic, md5-derived)."""
+    """Winnowing-style document fingerprint: min over the md5_long
+    hashes of the token stream's rolling windows (deterministic)."""
     toks = tokens(norm_text(col))
     windows = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - window, F.lit(0))),
         lambda i: F.concat_ws(" ", F.slice(toks, i + 1, window)),
     )
-    hashes = F.transform(
-        windows,
-        lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long"),
-    )
-    return F.array_min(hashes)
+    return F.array_min(F.transform(windows, md5_long))
 
 
 def pack_sequences(df: DataFrame, id_col: str = "doc_id",

@@ -1,11 +1,14 @@
 """Query/operator inventory — the graded surface.
 
-Each entry pairs a Spark implementation (DataFrame/SQL API, Catalyst-
-optimized) with an ANSI-SQL oracle DuckDB runs on the same parquet, and
-is registered by one ``gate(fn, oracle)`` line after the oracle. Names
-map to SURVEY.md §2 rows or north-star extensions (dedup / similarity /
-text analysis / multimodal). Import the registry through this module:
-its bottom imports queries2..6.py, whose gates register the same way.
+The gate contract, for this module and queries2..6.py alike: each entry
+pairs a Spark implementation (DataFrame/SQL API, Catalyst-optimized)
+with an ANSI-SQL oracle DuckDB runs on the same parquet tables, and is
+registered by one ``gate(fn, oracle)`` line after the oracle. A gate
+calls the library operator it checks, never a private copy of it; the
+oracle stays hand-written SQL, the independent reference. Names map to
+SURVEY.md §2 rows or north-star extensions (dedup / similarity / text
+analysis / multimodal). Import the registry through this module: its
+bottom imports queries2..6.py so their ``gate`` lines run.
 
 Determinism rules (the driver hash-compares values):
 - every computed column is aliased identically on both sides;
@@ -26,6 +29,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from .operators import md5_long
 
 
 # The registry: gate name -> Spark implementation, and gate name ->
@@ -81,15 +86,16 @@ def _scratch(name: str) -> str:
     return d
 
 
-def _md5_xor_long(*parts):
-    """The cross-engine checksum recipe, pinned in ONE place (review
-    r4 — five copies risked silent drift): fields joined with \\x1f,
-    md5, first 15 hex chars to a signed long. DuckDB replays it as
-    CAST(('0x'||substring(md5(concat_ws(chr(31), ...)),1,15)) AS
-    BIGINT); aggregate with bit_xor for the order-independent digest.
-    Must stay bit-identical to dedup._h / partition._md5_bucket."""
-    return F.conv(F.substring(F.md5(F.concat_ws("\x1f", *parts)), 1, 15),
-                  16, 10).cast("long")
+def _md5_xor_long(*cols):
+    """The cross-engine row hash of the md5 digest gates: each column
+    (a name or a Column) cast to string with NULL as '<N>', joined with
+    \\x1f, then md5_long. DuckDB replays it as md5_long's twin over
+    concat_ws(chr(31), coalesce(CAST(c AS VARCHAR), '<N>'), ...);
+    aggregate with bit_xor for the order-independent digest."""
+    return md5_long(F.concat_ws("\x1f", *[
+        F.coalesce((F.col(c) if isinstance(c, str) else c).cast("string"),
+                   F.lit("<N>"))
+        for c in cols]))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -676,9 +682,8 @@ def hashpart_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.partition import hashpart
 
     orders = hashpart(_t(spark, sf_dir, "orders"), "o_custkey", partitions=16)
-    cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit("<N>")) for c in cols]
-    h = _md5_xor_long(*parts)
+    h = _md5_xor_long("o_orderkey", "o_custkey", "o_orderstatus",
+                      "o_orderpriority")
     return orders.select(h.alias("h")).agg(
         F.count(F.lit(1)).alias("lines"), F.bit_xor("h").alias("checksum_xor"))
 
@@ -1077,9 +1082,8 @@ def checksum_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver. (Avoids double columns: float->string differs across
     engines.)"""
     li = _t(spark, sf_dir, "lineitem")
-    cols = ["l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus", "l_shipdate"]
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit("<N>")) for c in cols]
-    h = _md5_xor_long(*parts)
+    h = _md5_xor_long("l_orderkey", "l_linenumber", "l_returnflag",
+                      "l_linestatus", "l_shipdate")
     return li.select(h.alias("h")).agg(
         F.count(F.lit(1)).alias("lines"),
         F.bit_xor("h").alias("checksum_xor"),
@@ -1242,11 +1246,13 @@ gate(lang_id, ORACLE_LANG)
 
 
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprinting: md5 of normalized text (lowercase,
-    whitespace-collapsed) — the exact-dedup key."""
+    """Document fingerprinting (operators/dedup.py fingerprint): md5 of
+    normalized text (lowercase, whitespace-collapsed) — the exact-dedup
+    key."""
+    from .operators.dedup import fingerprint
+
     docs = _t(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
+    return docs.select("doc_id", fingerprint(F.col("text")).alias("fingerprint"))
 
 
 ORACLE_FP = """
@@ -1257,25 +1263,22 @@ gate(doc_fingerprints, ORACLE_FP)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: group by normalized-text fingerprint, keep min doc_id
-    (deterministic winner), report group size. At 100 TB this is one
+    """Exact dedup (operators/dedup.py exact_dedup): group by normalized-
+    text fingerprint, keep min doc_id (deterministic winner), report
+    group size; NULL texts are excluded. At 100 TB this is one
     hash-shuffle on the fingerprint — the standard exact-dedup plan."""
+    from .operators.dedup import exact_dedup
+
     docs = _t(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    return (
-        docs.select("doc_id", F.md5(norm).alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("n_copies"))
-        .select("keep_doc_id", "n_copies")
-    )
+    return exact_dedup(docs).select("keep_doc_id", "n_copies")
 
 
 ORACLE_DEDUP_EXACT = """
 SELECT min(doc_id) AS keep_doc_id, count(*) AS n_copies
 FROM (SELECT doc_id,
              md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-      FROM documents)
+      FROM documents WHERE text IS NOT NULL)
 GROUP BY fp
 """
 gate(dedup_exact, ORACLE_DEDUP_EXACT)
@@ -1673,31 +1676,16 @@ gate(embedding_near_pairs, ORACLE_EMB_PAIRS)
 # Similarity search (north-star: embeddings table)
 # =====================================================================
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for query vectors (vec_id < 10).
     The query side is tiny -> broadcast; the corpus scan is one pass
     (this is the exact-baseline ANN; the LSH-bucketed scale path lives in
     operators/similarity.py). Rank on ROUNDED cosine with vec_id tiebreak
     so both engines order identically."""
+    from .operators.similarity import brute_force_topk
+
     emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    cand = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
-    dot = _dot(F.col("q_emb"), F.col("c_emb"))
-    nq = F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")))
-    nc = F.sqrt(_dot(F.col("c_emb"), F.col("c_emb")))
-    scored = (
-        cand.crossJoin(F.broadcast(qs))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", F.round(dot / (nq * nc), 4).alias("cosine"))
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
+    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
 ORACLE_COSINE = """
@@ -1779,15 +1767,17 @@ gate(ivf_topk_search, ORACLE_IVF_TOPK)
 
 
 def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector-column plumbing check: norms and dimension stats per label —
-    array<float> handled natively by Spark higher-order functions."""
+    """Vector-column plumbing check: norms (operators/similarity.py
+    norm) and dimension stats per label — array<float> handled natively
+    by Spark higher-order functions."""
+    from .operators.similarity import norm
+
     emb = _t(spark, sf_dir, "embeddings")
-    norm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
     return (
         emb.groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(norm), 4).alias("avg_norm"),
+            F.round(F.avg(norm(F.col("embedding"))), 4).alias("avg_norm"),
             F.min(F.size("embedding")).alias("dim"),
         )
         .orderBy("label")
@@ -4848,70 +4838,33 @@ gate(q20_dominant_supplier, ORACLE_Q20)
 def decontaminate_train_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (operators/dedup.py decontaminate):
     a deterministic 5% of the corpus plays the held-out eval set; every
-    remaining train doc sharing ANY word 8-gram with it is dropped (the
-    standard test-set-leakage guard for training corpora). Reported
-    per-source so the gate checks WHICH docs were dropped, not just how
-    many.
+    remaining train doc sharing ANY word 8-gram with it, or containing a
+    held-out item shorter than 8 tokens, is dropped (the standard
+    test-set-leakage guard for training corpora). Reported per-source
+    so the gate checks WHICH docs were dropped, not just how many:
+    n_contaminated = n_train - n_kept.
 
-    Scale shape: inverted-index membership probe — explode held-out
-    grams, distinct, semi-join train grams against them; contaminated
-    ids distinct'd before the anti-join. No all-pairs comparison
-    anywhere; the only shuffles are the gram semi-join and the final
-    per-source agg. The held-out split is md5(doc_id)-derived, so the
-    same docs are held out at every scale and on both engines."""
-    from .operators.dedup import _word_shingles_expr
+    Scale shape: inverted-index membership probe inside the operator;
+    the per-source counts are one union of the train and kept rows and
+    one partial-agg shuffle. The held-out split is md5(doc_id)-derived, so the same docs
+    are held out at every scale and on both engines."""
+    from .operators.dedup import decontaminate
     from .operators.partition import _md5_bucket
 
     docs = _t(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     bucket = _md5_bucket("doc_id")
-    held = docs.filter(bucket < 500)
     train = docs.filter(bucket >= 500)
-    tg = train.select(
-        "doc_id", F.explode(_word_shingles_expr("text", 8)).alias("g")
-    )
-    # empty-gram guard mirrors operators/dedup.decontaminate (an empty
-    # held-out doc must not contaminate empty train docs — review r5)
-    hg = held.select(
-        F.explode(_word_shingles_expr("text", 8)).alias("g")
-    ).filter(F.col("g") != "").distinct()
-    bad_gram = tg.join(hg, "g", "left_semi").select("doc_id").distinct()
-
-    # short held-out items (< 8 tokens shingle to a PARTIAL gram that
-    # can never equal a full train 8-gram): whitespace-collapsed,
-    # token-boundary-anchored containment probe — mirrors operators/
-    # dedup.decontaminate's short branch. This existed in the ORACLE
-    # (review r4) but not here: a 7-token eval answer quoted verbatim
-    # in a train doc was flagged by DuckDB and missed by Spark
-    # (review r5)
-    def ws_norm(c):
-        return F.regexp_replace(F.trim(c), r"\s+", " ")
-
-    shorts = (held
-              .filter(F.size(F.split(ws_norm(F.col("text")), " ")) < 8)
-              .select(ws_norm(F.col("text")).alias("_short"))
-              .filter(F.col("_short") != "")
-              .distinct())
-    padded = F.concat(F.lit(" "), ws_norm(F.col("text")), F.lit(" "))
-    bad_short = (train
-                 .join(F.broadcast(shorts),
-                       padded.contains(F.concat(F.lit(" "),
-                                                F.col("_short"),
-                                                F.lit(" "))))
-                 .select("doc_id").distinct())
-    bad = (bad_gram.unionByName(bad_short).distinct()
-           .withColumn("contaminated", F.lit(1)))
-    return (
-        train.join(bad, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_train"),
-            F.sum(F.coalesce(F.col("contaminated"), F.lit(0))).alias("n_contaminated"),
-            (F.count(F.lit(1))
-             - F.sum(F.coalesce(F.col("contaminated"), F.lit(0)))).alias("n_kept"),
-        )
-        .orderBy("source")
-    )
+    kept = decontaminate(train, docs.filter(bucket < 500), n=8)
+    counts = (train.select("source", F.lit(1).alias("t"), F.lit(0).alias("k"))
+              .unionByName(kept.select("source", F.lit(0).alias("t"),
+                                       F.lit(1).alias("k")))
+              .groupBy("source")
+              .agg(F.sum("t").alias("n_train"), F.sum("k").alias("n_kept")))
+    return counts.select(
+        "source", "n_train",
+        (F.col("n_train") - F.col("n_kept")).alias("n_contaminated"),
+        "n_kept").orderBy("source")
 
 
 ORACLE_DECONTAMINATE = """
@@ -5280,9 +5233,7 @@ def semantic_dedup_report_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _spread(_t(spark, sf_dir, "embeddings"))
     cents = emb.filter(F.col("vec_id") < 8)
     kept = semantic_dedup(emb, cents, threshold=0.35, cell_cap=25)
-    h = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15),
-               16, 10).cast("long")
-    return (kept.withColumn("_h", h)
+    return (kept.withColumn("_h", md5_long(F.col("vec_id").cast("string")))
             .groupBy("centroid_id")
             .agg(F.count(F.lit(1)).alias("n_kept"),
                  F.min("vec_id").alias("min_kept"),
@@ -5740,11 +5691,7 @@ def jsonl_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path,
         "doc_id bigint, text string, lang string, source string, n_chars bigint",
     ).default
-    parts = [
-        F.coalesce(F.col(c).cast("string"), F.lit("<N>"))
-        for c in ["doc_id", "text", "lang", "source", "n_chars"]
-    ]
-    h = _md5_xor_long(*parts)
+    h = _md5_xor_long("doc_id", "text", "lang", "source", "n_chars")
     return back.select(h.alias("h"), F.col("n_chars")).agg(
         F.count(F.lit(1)).alias("docs"),
         F.bit_xor("h").alias("checksum_xor"),
@@ -5775,17 +5722,17 @@ gate(jsonl_roundtrip_checksum, ORACLE_JSONL_RT)
 
 
 def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keep-latest-per-key dedup — the CDC/upsert compaction idiom
-    (reference analogue: chains carry updates append-only and the
-    consumer picks the newest row per key, SURVEY §1.1 chains). One
-    window over user_id; ties broken on event_id so both engines pick
-    the same row. At 100 TB this is one hash exchange on the key; AQE
-    splits skewed users."""
+    """Keep-latest-per-key dedup (operators/merge.py compact_latest) —
+    the CDC/upsert compaction idiom (reference analogue: chains carry
+    updates append-only and the consumer picks the newest row per key,
+    SURVEY §1.1 chains). One window over user_id; ties broken on
+    event_id so both engines pick the same row. At 100 TB this is one
+    hash exchange on the key; AQE splits skewed users."""
+    from .operators.merge import compact_latest
+
     ev = _events(spark, sf_dir)
-    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        compact_latest(ev, ["user_id"], "ts", ["event_id"])
         .select(
             "user_id",
             F.col("event_id").alias("last_event_id"),
@@ -6026,11 +5973,7 @@ def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch("orc_rt")
     docs.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
-    parts = [
-        F.coalesce(F.col(c).cast("string"), F.lit("<N>"))
-        for c in ["doc_id", "text", "lang", "source", "n_chars"]
-    ]
-    h = _md5_xor_long(*parts)
+    h = _md5_xor_long("doc_id", "text", "lang", "source", "n_chars")
     return back.select(h.alias("h"), F.col("n_chars")).agg(
         F.count(F.lit(1)).alias("docs"),
         F.bit_xor("h").alias("checksum_xor"),
@@ -6059,12 +6002,8 @@ def overlay_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{root}/ov", base, new_cols=new, key="n_nationkey",
         virtual={"key_x2": "n_nationkey * 2"})
     back = ov.df(spark)
-    parts = [
-        F.coalesce(F.col(c).cast("string"), F.lit("<N>"))
-        for c in ["n_nationkey", "n_name", "n_regionkey",
-                  "name_len", "key_x2"]
-    ]
-    h = _md5_xor_long(*parts)
+    h = _md5_xor_long("n_nationkey", "n_name", "n_regionkey", "name_len",
+                      "key_x2")
     return back.select(h.alias("h"), "name_len").agg(
         F.count(F.lit(1)).alias("nations"),
         F.bit_xor("h").alias("checksum_xor"),

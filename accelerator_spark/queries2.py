@@ -1,11 +1,5 @@
-"""Round-2 query/operator additions — sketches, graph analytics,
-hierarchical rollups, variant JSON, UDTFs, robust stats, skyline.
-
-Same contract as queries.py: every entry pairs a Spark implementation
-with a DuckDB oracle over the identical parquet tables; aliases match on
-both sides; doubles rounded identically. Each gate registers itself
-with one ``gate(fn, oracle)`` line (queries.gate) after its oracle;
-queries.py imports this module at its bottom so those lines run.
+"""Gates for sketches, graph analytics, hierarchical rollups, variant
+JSON, UDTFs, robust stats and skyline (contract: queries.py).
 
 Tolerance-gated queries (hll, approx percentile) follow the
 ann_recall_report pattern: the Spark side returns EXACT values plus a
@@ -19,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .operators import md5_long
 from .queries import _events, _md5_xor_long, _scratch, _spread, _t, gate
 
 
@@ -529,9 +524,7 @@ def xml_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
      .option("rootTag", "nations").option("rowTag", "nation").save(path))
     back = (spark.read.format("xml").option("rowTag", "nation")
             .schema(nation.schema).load(path))
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit("<N>"))
-             for c in ["n_nationkey", "n_name", "n_regionkey"]]
-    h = _md5_xor_long(*parts)
+    h = _md5_xor_long("n_nationkey", "n_name", "n_regionkey")
     return back.select(h.alias("h"), "n_regionkey").agg(
         F.count(F.lit(1)).alias("nations"),
         F.bit_xor("h").alias("checksum_xor"),
@@ -557,11 +550,8 @@ def avro_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cents as LONG, not double->string: the two engines format doubles
     # differently, integers identically
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit("<N>"))
-             for c in ["o_orderkey", "o_orderstatus"]] + [
-        F.coalesce(cents.cast("string"), F.lit("<N>")),
-        F.coalesce(F.col("o_orderpriority"), F.lit("<N>"))]
-    h = _md5_xor_long(*parts)
+    h = _md5_xor_long("o_orderkey", "o_orderstatus", cents,
+                      "o_orderpriority")
     return back.select(h.alias("h"), "o_custkey", "o_orderdate").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.bit_xor("h").alias("checksum_xor"),
@@ -1047,24 +1037,21 @@ def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-dimension means (posexplode -> per-(cluster, dim) agg), report
     cluster size and centroid L2 shift. The oracle replays assignment +
     unnest means in SQL — the iterative-refinement building block
-    (ivf/kmeans training) checked exactly."""
-    from .operators.similarity import cosine
+    (ivf/kmeans training) checked exactly. The assignment is
+    operators/similarity.py ivf_assign."""
+    from .operators.similarity import ivf_assign
 
     emb = _t(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "embedding", "c_id",
-        F.round(cosine(F.col("embedding"), F.col("c_emb")), 4).alias("cos"))
-    w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("c_id").asc())
-    assigned = (scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1).select("vec_id", "embedding", "c_id"))
+    cents = emb.filter(F.col("vec_id") < 4)
+    assigned = ivf_assign(emb, cents).select(
+        "vec_id", "embedding", F.col("centroid_id").alias("c_id"))
     dims = assigned.select(
         "c_id", F.posexplode("embedding").alias("d", "x")) \
         .withColumn("x", F.col("x").cast("double"))
     newc = dims.groupBy("c_id", "d").agg(F.avg("x").alias("nx"))
     oldc = cents.select(
-        "c_id", F.posexplode("c_emb").alias("d", "ox")) \
+        F.col("vec_id").alias("c_id"),
+        F.posexplode("embedding").alias("d", "ox")) \
         .withColumn("ox", F.col("ox").cast("double"))
     shift = (newc.join(oldc, ["c_id", "d"])
              .groupBy("c_id")
@@ -1252,11 +1239,9 @@ def wide_denormalize_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(region, nation.n_regionkey == region.r_regionkey)
             .join(part, li.l_partkey == part.p_partkey)
             .join(supp, li.l_suppkey == supp.s_suppkey))
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit("<N>"))
-             for c in ["l_orderkey", "l_linenumber", "o_orderstatus",
-                       "c_mktsegment", "n_name", "r_name", "p_brand",
-                       "s_name"]]
-    h = _md5_xor_long(*parts)
+    h = _md5_xor_long("l_orderkey", "l_linenumber", "o_orderstatus",
+                      "c_mktsegment", "n_name", "r_name", "p_brand",
+                      "s_name")
     return wide.select(h.alias("h"), "l_extendedprice").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.bit_xor("h").alias("checksum_xor"),
@@ -2659,9 +2644,8 @@ def url_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(k % 7 == 0, F.lit("#frag")).otherwise(F.lit("")),
     )
     canon = canonicalize_url(url)
-    h = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("long")
     return (
-        d.select("source", canon.alias("canon"), h.alias("_h"))
+        d.select("source", canon.alias("canon"), md5_long(canon).alias("_h"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -2767,9 +2751,8 @@ def corpus_line_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = dedup_lines_corpus(d.withColumn("text", multiline))
     j = out.join(d.select("doc_id", "source"), "doc_id")
-    h = F.conv(F.substring(F.md5(F.concat_ws(
-        "\u001f", F.col("doc_id").cast("string"),
-        F.col("text_dedup"))), 1, 15), 16, 10).cast("long")
+    h = md5_long(F.concat_ws("\x1f", F.col("doc_id").cast("string"),
+                             F.col("text_dedup")))
     return (j.withColumn("_h", h)
             .groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),

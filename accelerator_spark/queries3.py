@@ -1,16 +1,9 @@
-"""Round-9b query/operator additions — WebDataset/tar shards,
-HTML→Markdown, mbox/MIME mail, RTF extraction, multi-iteration k-means,
-logistic-regression training, deterministic Bloom pre-filtering, BPE
-tokenization, format sniffing / corpus inventory, Arrow IPC round-trip,
-perceptual image hashing (dHash), the WARC sink, incremental batch
-dedup, interval overlap join, bigram LM quality.
-
-Same contract as queries.py / queries2.py: every entry pairs a Spark
-implementation with a DuckDB oracle over the identical parquet tables;
-aliases match on both sides; doubles rounded identically. Each gate
-registers itself with one ``gate(fn, oracle)`` line (queries.gate)
-after its oracle; queries.py imports this module at its bottom so
-those lines run.
+"""Gates for WebDataset/tar shards, HTML→Markdown, mbox/MIME mail, RTF
+extraction, multi-iteration k-means, logistic-regression training,
+deterministic Bloom pre-filtering, BPE tokenization, format sniffing /
+corpus inventory, Arrow IPC round-trip, perceptual image hashing
+(dHash), the WARC sink, incremental batch dedup, interval overlap join
+and bigram LM quality (contract: queries.py).
 
 Fixture-backed gates follow the r8 media pattern (queries.py
 _doc_media_df): container bytes are authored per document from
@@ -762,11 +755,7 @@ def arrow_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrow_export(li.repartition(4), path)
     back = arrow_import(spark, path)
     cents = F.round(F.col("l_quantity") * 100).cast("long")
-    parts = [F.coalesce(F.col("l_orderkey").cast("string"), F.lit("<N>")),
-             F.coalesce(F.col("l_linenumber").cast("string"), F.lit("<N>")),
-             F.coalesce(cents.cast("string"), F.lit("<N>")),
-             F.coalesce(F.col("l_returnflag"), F.lit("<N>"))]
-    h = _md5_xor_long(*parts)
+    h = _md5_xor_long("l_orderkey", "l_linenumber", cents, "l_returnflag")
     return back.select(h.alias("h"), "l_orderkey", "l_shipdate").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.bit_xor("h").alias("checksum_xor"),

@@ -1,13 +1,6 @@
-"""Round-10 query/operator additions — the WebDataset sink round-trip
-and image near-duplicate pairing (the dHash front wired into actual
-dedup via the generic banded-Hamming join).
-
-Same contract as queries.py / queries2.py / queries3.py: every entry
-pairs a Spark implementation with a DuckDB oracle over the identical
-parquet tables; aliases match on both sides. Each gate registers
-itself with one ``gate(fn, oracle)`` line (queries.gate) after its
-oracle; queries.py imports this module at its bottom so those lines
-run.
+"""Gates for the WebDataset sink round-trip and image near-duplicate
+pairing (the dHash front wired into actual dedup via the generic
+banded-Hamming join; contract: queries.py).
 
 Fixture-backed gates follow the established media pattern
 (queries.py _doc_media_df): container bytes are authored per document

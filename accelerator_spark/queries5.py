@@ -1,15 +1,8 @@
-"""Round-11 query/operator additions — the one-call near-dedup
-composite and its incremental (rolling-batch) extension, the two
-operations VERDICT r10 ranked #1/#2: turning the near-dup primitives
-(fp_near_pairs, connected_components) into the corpus-SHRINKING
-operator every curation pipeline actually runs, and its O(batch)
-daily-ingestion form.
-
-Same contract as queries.py .. queries4.py: every entry pairs a Spark
-implementation with a DuckDB oracle over the identical parquet
-tables; aliases match on both sides. Each gate registers itself with
-one ``gate(fn, oracle)`` line (queries.gate) after its oracle;
-queries.py imports this module at its bottom so those lines run.
+"""Gates for the one-call near-dedup composite and its incremental
+(rolling-batch) extension: the near-dup primitives (fp_near_pairs,
+connected_components) turned into the corpus-SHRINKING operator every
+curation pipeline actually runs, and its O(batch) daily-ingestion form
+(contract: queries.py).
 
 Both oracles follow the brute-force discipline: the 64-bit simhash
 fingerprints are replayed bit-exactly in SQL (queries._simhash_oracle),

@@ -1,18 +1,12 @@
-"""Round-12 query/operator additions — the near-dedup LIFECYCLE and
-POLICY surface VERDICT r11 asked for: the survivor keep-policy gate
-(real curation keeps the longest member, not the smallest id), the
-band-row state compaction gate (a rolling crawl's store maintenance
-must be answer-invariant, proven through the real stream), the
-incremental MinHash/Jaccard text near-dedup (the O(batch) rolling form
-of the classic pipeline) with its STREAMING twin (the text pipeline
-now has batch/incremental/streaming symmetry like the fingerprint
-family), and video near-dup over the real-decode GIF frame path.
-
-Same contract as queries.py .. queries5.py: every entry pairs a Spark
-implementation with a DuckDB oracle over the identical parquet tables;
-aliases match on both sides. Each gate registers itself with one
-``gate(fn, oracle)`` line (queries.gate) after its oracle; queries.py
-imports this module at its bottom so those lines run."""
+"""Gates for the near-dedup LIFECYCLE and POLICY surface: the survivor
+keep-policy gate (real curation keeps the longest member, not the
+smallest id), the band-row state compaction gate (a rolling crawl's
+store maintenance must be answer-invariant, proven through the real
+stream), the incremental MinHash/Jaccard text near-dedup (the O(batch)
+rolling form of the classic pipeline) with its STREAMING twin (the
+text pipeline now has batch/incremental/streaming symmetry like the
+fingerprint family), and video near-dup over the real-decode GIF frame
+path (contract: queries.py)."""
 
 from __future__ import annotations
 

@@ -30,13 +30,13 @@ def test_no_hugeint_oracle_output_columns():
 
     sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
+    from accelerator_spark.sqlapi import TABLES
 
     oracles = entrymod.oracle_sql()
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")  # match the pinned Spark session TZ
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     offenders = []
@@ -143,3 +143,30 @@ def test_decontaminate_short_heldout_branch_matches_oracle(spark, tmp_path):
     assert spark_rows == ora
     # and the planted quote IS caught
     assert spark_rows["src1"] == (2, 1)
+
+
+def test_md5_long_matches_its_duckdb_twin(spark):
+    """md5_long is the Spark half of a cross-engine contract: the
+    DuckDB oracles replay it as CAST(('0x'||substring(md5(x),1,15)) AS
+    BIGINT). Both sides (and Python's hashlib) must agree on edge
+    inputs, and NULL must stay NULL."""
+    import hashlib
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from accelerator_spark.operators import md5_long
+
+    vals = ["", "naïve café 日本語 ✓", "a\x1fb", "0123456789" * 20, None]
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, s string")
+    got = {r["i"]: r["h"]
+           for r in df.select("i", md5_long(F.col("s")).alias("h")).collect()}
+    con = duckdb.connect()
+    twin = {i: con.execute(
+        "SELECT CAST(('0x'||substring(md5(CAST(? AS VARCHAR)),1,15)) "
+        "AS BIGINT)", [v]).fetchone()[0] for i, v in enumerate(vals)}
+    py = {i: None if v is None else
+          int(hashlib.md5(v.encode("utf-8")).hexdigest()[:15], 16)
+          for i, v in enumerate(vals)}
+    assert got == twin == py
+    assert all(0 <= got[i] < 1 << 60 for i in range(4))

@@ -300,6 +300,36 @@ def test_gate_registry_declares_each_name_once():
     assert all(f.__name__ == n for n, f in qs.items())
 
 
+class _OperatorCalled(Exception):
+    pass
+
+
+@pytest.mark.parametrize("name,module,operator", [
+    ("dedup_exact", "dedup", "exact_dedup"),
+    ("doc_fingerprints", "dedup", "fingerprint"),
+    ("decontaminate_train_set", "dedup", "decontaminate"),
+    ("cosine_topk", "similarity", "brute_force_topk"),
+    ("embedding_stats", "similarity", "norm"),
+    ("latest_event_per_user", "merge", "compact_latest"),
+    ("kmeans_lloyd_step", "similarity", "ivf_assign"),
+])
+def test_gate_runs_the_shipped_operator(spark, sf_dir, monkeypatch, name,
+                                        module, operator):
+    """The gate checks the library operator itself, not a private copy
+    of its recipe: with the operator replaced by one that raises,
+    building the gate's DataFrame raises too."""
+    import importlib
+
+    def called(*args, **kwargs):
+        raise _OperatorCalled(operator)
+
+    monkeypatch.setattr(
+        importlib.import_module(f"accelerator_spark.operators.{module}"),
+        operator, called)
+    with pytest.raises(_OperatorCalled):
+        Q.QUERIES[name](spark, sf_dir)
+
+
 @pytest.mark.parametrize("suite", [f"queries{i}" for i in range(2, 7)])
 def test_suite_module_imports_on_its_own(suite):
     """Importing any suite module first (not through

@@ -41,7 +41,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="time_query")
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()  # warm JVM
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
 
     rows = []
     for name in args or sorted(Q.QUERIES):
@@ -50,9 +51,12 @@ def main() -> None:
             print(f"# {name}: not in registry", file=sys.stderr)
             continue
         builds, execs, jobs = [], [], []
-        for _ in range(reps):
-            j0 = len(tracker.getJobIdsForGroup(None) or [])
-            spark.sparkContext.setJobDescription(name)
+        for rep in range(reps):
+            # one job group per run: the ungrouped job list is capped by
+            # spark.ui.retainedJobs, so a before/after difference of it
+            # goes negative once a long sweep fills the cap
+            gid = f"time_query-{name}-{rep}"
+            sc.setJobGroup(gid, name)
             try:
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
@@ -65,10 +69,11 @@ def main() -> None:
                 break
             finally:
                 spark.catalog.clearCache()
-                spark.sparkContext.setJobDescription(None)
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
             builds.append(t1 - t0)
             execs.append(t2 - t1)
-            jobs.append(len(tracker.getJobIdsForGroup(None) or []) - j0)
+            jobs.append(len(tracker.getJobIdsForGroup(gid) or []))
         if builds:
             rows.append((statistics.median(builds),
                          statistics.median(execs), jobs, name))
