@@ -35,6 +35,7 @@ import re
 import time
 import uuid
 from dataclasses import dataclass, field
+from datetime import date, datetime
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -201,19 +202,34 @@ def _same_path(a: str | None, b: str | None) -> bool:
             == os.path.normpath(os.path.abspath(b)))
 
 
-def _entry_range_skips(minmax: dict,
-                       range_filter: dict[str, tuple[Any, Any]]) -> bool:
-    """True if cached [min,max] proves no row of the dataset matches."""
+# manifest column type -> the class whose fromisoformat reads back the
+# isoformat min/max that _json_safe stored for it
+_TEMPORAL_TYPES = {"date": date, "timestamp": datetime}
+
+
+def _entry_range_skips(minmax: dict, range_filter: dict[str, tuple[Any, Any]],
+                       types: dict[str, str]) -> bool:
+    """True if cached [min,max] proves no row of the dataset matches.
+
+    ``types`` is the manifest's ``columns`` map. Date and timestamp
+    bounds compare as parsed values, not strings: a bound written
+    '2024-01-01 12:00:00' (a form Spark casts) sorts below the stored
+    '2024-01-01T06:00:00'. A pair that cannot be parsed or compared
+    never skips."""
     for c, (lo, hi) in range_filter.items():
         mn, mx = (minmax.get(c) or [None, None])[:2]
         if mn is None and mx is None:
             continue
         try:
+            if types.get(c) in _TEMPORAL_TYPES:
+                parse = _TEMPORAL_TYPES[types[c]].fromisoformat
+                mn, mx, lo, hi = (parse(v) if isinstance(v, str) else v
+                                  for v in (mn, mx, lo, hi))
             if hi is not None and mn is not None and mn >= hi:
                 return True
             if lo is not None and mx is not None and mx < lo:
                 return True
-        except TypeError:
+        except (TypeError, ValueError):
             continue
     return False
 
@@ -673,7 +689,8 @@ class Dataset:
         entries = self.chain_entries(length=length, stop_ds=stop_ds)
         if range_filter:
             entries = [e for e in entries
-                       if not _entry_range_skips(e["minmax"], range_filter)]
+                       if not _entry_range_skips(e["minmax"], range_filter,
+                                                 self.columns)]
         if not entries:
             return self.df(spark).limit(0)
         # plain datasets (no overlay/bucketing) read straight from their

@@ -22,47 +22,40 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the runtime-settable SQL confs: set on the sessions get_spark creates
+# and on a session handed in from outside (tune_for_session)
+_RUNTIME_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+)
 
 
-def get_spark(
-    app_name: str = "accelerator_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "accelerator_spark") -> SparkSession:
     """Create (or get) the session with the engine's standard configs.
 
     If a session already exists (e.g. the driver passed one in), its
     configs win; we only apply runtime-settable SQL confs on top.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
     builder = (
         SparkSession.builder.appName(app_name)
         # local mode: driver memory is the ONLY heap knob (executors live
         # in the driver JVM); the 1g default OOMs at ~5M-row shuffles
         .config("spark.driver.memory", driver_mem)
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
     )
+    for k, v in _RUNTIME_CONFS:
+        builder = builder.config(k, v)
     # master only applies when we are the ones creating the session
-    active = SparkSession.getActiveSession()
-    if active is None:
-        builder = builder.master(master)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    if SparkSession.getActiveSession() is None:
+        builder = builder.master(f"local[{cpus}]")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -71,13 +64,7 @@ def get_spark(
 def tune_for_session(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable confs to an externally created
     session (the driver hands us one in ``__spark_entry__.entry``)."""
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ):
+    for k, v in _RUNTIME_CONFS:
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -48,6 +48,28 @@ def test_chain_and_range_skip(spark, sf_dir, tmp_path):
     assert sub.count() == src.filter("o_orderkey >= 0 and o_orderkey < 50").count()
 
 
+def test_chain_range_skip_parses_timestamp_bounds(spark, tmp_path):
+    from datetime import datetime
+
+    def link(ts, name, previous=None):
+        return Dataset.write(
+            spark.createDataFrame([(ts, 1)], "ts timestamp, v int"),
+            str(tmp_path / name), previous=previous)
+
+    d1 = link(datetime(2024, 1, 1, 6), "d1")
+    d2 = link(datetime(2024, 1, 2, 6), "d2", previous=d1)
+    # a space, a 'T' and a datetime spell the same bound; the zone-map
+    # skip must agree with the plain filter for each of them
+    for hi in ("2024-01-01 12:00:00", "2024-01-01T12:00:00",
+               datetime(2024, 1, 1, 12)):
+        unskipped = d2.chain_df(spark).filter(F.col("ts") < F.lit(hi))
+        skipped = d2.chain_df(spark, range_filter={"ts": (None, hi)})
+        assert skipped.count() == unskipped.count() == 1, hi
+    files = d2.chain_df(spark, range_filter={
+        "ts": (None, datetime(2024, 1, 1, 12))}).inputFiles()
+    assert files and all("/d1/data/" in f for f in files), files
+
+
 def test_checksum_order_insensitive(spark, sf_dir):
     src = load(spark, sf_dir, "customer")
     shuffled = src.orderBy(F.rand(seed=1))
