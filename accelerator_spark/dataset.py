@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .identifiers import qcol as _qcol, quote_ident
+from .operators.observe import observed
 
 MANIFEST_NAME = "dataset.json"
 LINENO = "lineno"  # conventional ingest-order column (SURVEY §7.4)
@@ -155,18 +156,15 @@ def _write_observed(df: DataFrame, path: str, mm_cols: list[str],
     silently skipped matching rows (review r4/r5). A missing manifest is
     a loud, recoverable state. Every writer goes through here, so the
     rule cannot drift between them."""
-    from pyspark.sql import Observation
-
-    aggs = [F.count(F.lit(1)).alias("__lines__")]
+    metrics = {"__lines__": F.count(F.lit(1))}
     for c in mm_cols:
-        aggs += [F.min(_qcol(c)).alias(f"__min_{c}"),
-                 F.max(_qcol(c)).alias(f"__max_{c}")]
-    obs = Observation()
-    observed = df.observe(obs, *aggs)
+        metrics[f"__min_{c}"] = F.min(_qcol(c))
+        metrics[f"__max_{c}"] = F.max(_qcol(c))
+    tallied, obs = observed(df, "write", **metrics)
     old_manifest = os.path.join(path, MANIFEST_NAME)
     if os.path.exists(old_manifest):
         os.remove(old_manifest)
-    write(observed)
+    write(tallied)
     row = obs.get
     return row["__lines__"], {
         c: [_json_safe(row[f"__min_{c}"]), _json_safe(row[f"__max_{c}"])]

@@ -25,7 +25,7 @@ malformed markup cannot raise), entity-exact via convert_charrefs.
 
 One Arrow map stage per call — no shuffle, scales with the scan
 (same contract as operators/html.html_extract). Oracle gate:
-queries3.html_markdown_report replays the exact converted string.
+queries.crawl.html_markdown_report replays the exact converted string.
 
 Reference scope note: the reference engine has no HTML surface; this
 is LLM-pipeline extension surface beside operators/html.py (brief

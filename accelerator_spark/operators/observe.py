@@ -13,7 +13,6 @@ doubles the job; observed metrics make telemetry free.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
 
 
 def observed(df: DataFrame, name: str = "metrics",
@@ -38,13 +37,3 @@ def observed(df: DataFrame, name: str = "metrics",
     cols = [c.alias(n) for n, c in metrics.items()]
     return df.observe(obs, *cols), obs
 
-
-def standard_write_metrics(df: DataFrame, key_col: str | None = None):
-    """The reference's writer tallies as observe expressions: row count
-    plus (when a key column is named) its null count and min/max."""
-    m = {"rows": F.count(F.lit(1))}
-    if key_col:
-        m["null_keys"] = F.count_if(F.col(key_col).isNull())
-        m["key_min"] = F.min(key_col).cast("string")
-        m["key_max"] = F.max(key_col).cast("string")
-    return observed(df, "write_metrics", **m)

@@ -10,6 +10,7 @@ broadcast, AQE) applies unchanged.
 
 from __future__ import annotations
 
+import os
 import re
 import weakref
 
@@ -19,13 +20,42 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 # session -> {table: sf_dir it is registered against}; avoids re-reading
-# 9 parquet footers on every sql() call (queries2 calls it ~15x per run)
+# 9 parquet footers on every sql() call (the gates call it ~15x per run)
 # while staying correct when one session alternates sf_dirs (the view is
 # re-created whenever the dir differs). Keyed by WEAK reference, not
 # id(): a dead session's id can be recycled by a new session, which
 # would then inherit stale 'already registered' state (ADVICE r3).
 _registered: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
     weakref.WeakKeyDictionary())
+
+# Inferred input-table schemas, keyed by path. Schema INFERENCE (the
+# driver-side directory listing + footer read spark.read.parquet does
+# on every call) costs ~65 ms per call vs ~13 ms with an
+# explicit schema — a fixed driver latency no cluster size amortizes
+# (guide §5: the driver should do almost no data work; a production
+# catalog serves the schema without touching footers). Metadata only:
+# every byte of table DATA is still read from parquet at execution.
+# Each entry carries the path's os.stat (mtime_ns, size) stamp: a path
+# rewritten since it was cached re-infers instead of reading its new
+# columns as NULL under the old schema, and a path os.stat cannot see
+# (a remote URI) always infers.
+_TABLE_SCHEMAS: dict = {}  # path -> ((st_mtime_ns, st_size), StructType)
+
+
+def _read_table(spark: SparkSession, path: str) -> DataFrame:
+    """One standard table as a DataFrame, with its schema served from
+    _TABLE_SCHEMAS after the first read of an unchanged file."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _TABLE_SCHEMAS.get(path)
+    if hit is None or hit[0] != stamp:
+        df = spark.read.parquet(path)
+        _TABLE_SCHEMAS[path] = (stamp, df.schema)
+        return df
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str,
@@ -37,8 +67,6 @@ def register_views(spark: SparkSession, sf_dir: str,
     externally dropped temp view is re-created, not trusted).
     ``skip_missing`` tolerates absent parquet files (sql()'s word-scan
     over-approximates the referenced tables — see sql())."""
-    import os
-
     try:
         done = _registered.setdefault(spark, {})
     except TypeError:  # session type not weakref-able: no memo, stay correct
@@ -59,7 +87,7 @@ def register_views(spark: SparkSession, sf_dir: str,
             if done.pop(t, None) is not None:
                 spark.catalog.dropTempView(t)
             continue
-        spark.read.parquet(p).createOrReplaceTempView(t)
+        _read_table(spark, p).createOrReplaceTempView(t)
         done[t] = sf_dir
 
 

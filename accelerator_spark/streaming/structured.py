@@ -16,6 +16,9 @@ Patterns packaged:
 from __future__ import annotations
 
 import datetime as _dt
+import os
+import re
+import shutil
 from typing import Iterator
 
 import pandas as pd
@@ -186,14 +189,26 @@ def near_dedup_micro_batch(batch_df: DataFrame, batch_id: int,
     # construction), so the separate eager localCheckpoint job is
     # gone. Explicit schema on the read-back: a zero-kept batch
     # leaves a partition dir with no schema-bearing part file.
-    import os as _os
-    kdir = _os.path.join(kept_path, f"batch_id={int(batch_id)}")
+    kdir = os.path.join(kept_path, f"batch_id={int(batch_id)}")
     kept.write.mode("overwrite").parquet(kdir)
     kept_back = spark.read.schema(batch_df.schema).parquet(kdir)
     fp_band_rows(kept_back.filter(F.col(fp_col).isNotNull()),
                  fp_col, id_col, bits, max_hamming) \
         .write.mode("overwrite").parquet(
-            _os.path.join(state_path, f"batch_id={int(batch_id)}"))
+            os.path.join(state_path, f"batch_id={int(batch_id)}"))
+
+
+def _drain(stream_df: DataFrame, handle, checkpoint: str,
+           available_now: bool):
+    """Run ``handle`` per micro-batch through ``foreachBatch``. With
+    ``available_now`` drain what is there and return None; otherwise
+    return the running query (the caller owns awaitTermination/stop)."""
+    writer = (stream_df.writeStream.foreachBatch(handle)
+              .option("checkpointLocation", checkpoint))
+    if available_now:
+        writer.trigger(availableNow=True).start().awaitTermination()
+        return None
+    return writer.start()
 
 
 def stream_near_dedup(stream_df: DataFrame, kept_path: str,
@@ -242,13 +257,7 @@ def stream_near_dedup(stream_df: DataFrame, kept_path: str,
                                state_path, fp_col, id_col, bits,
                                max_hamming, bucket_cap, broadcast_batch)
 
-    writer = (stream_df.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()  # caller owns awaitTermination/stop
+    return _drain(stream_df, handle, checkpoint, available_now)
 
 
 def compact_batch_store(spark: SparkSession, path: str,
@@ -291,10 +300,6 @@ def compact_batch_store(spark: SparkSession, path: str,
     per kept doc). ``schema`` guards the read the same way the
     micro-batch read is guarded (required if EVERY generation may be
     empty). Returns the number of generations folded (0 = no-op)."""
-    import os
-    import re
-    import shutil
-
     back = path.rstrip("/") + ".__compact_old__"
     tmp = path.rstrip("/") + ".__compact_tmp__"
     if os.path.exists(back):  # crash recovery, compact_files protocol
@@ -427,15 +432,14 @@ def text_near_dedup_micro_batch(batch_df: DataFrame, batch_id: int,
     # (bit-identical rows by construction), so the separate eager
     # localCheckpoint job is gone. Explicit schema on the read-back:
     # a zero-kept batch leaves no schema-bearing part file.
-    import os as _os
-    kdir = _os.path.join(kept_path, f"batch_id={int(batch_id)}")
+    kdir = os.path.join(kept_path, f"batch_id={int(batch_id)}")
     kept.write.mode("overwrite").parquet(kdir)
     kept_ids = (spark.read.schema(batch_df.schema).parquet(kdir)
                 .select(id_col))
     (batch_bands.join(kept_ids, id_col, "left_semi")
      .select("band", "key", id_col)
      .write.mode("overwrite").parquet(
-         _os.path.join(state_path, f"batch_id={int(batch_id)}")))
+         os.path.join(state_path, f"batch_id={int(batch_id)}")))
 
 
 def stream_text_near_dedup(stream_df: DataFrame, kept_path: str,
@@ -474,13 +478,7 @@ def stream_text_near_dedup(stream_df: DataFrame, kept_path: str,
             id_col, num_hashes, bands, shingle_n, threshold,
             bucket_cap, hash_family, broadcast_batch)
 
-    writer = (stream_df.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()  # caller owns awaitTermination/stop
+    return _drain(stream_df, handle, checkpoint, available_now)
 
 
 _SESSION_SCHEMA = T.StructType([

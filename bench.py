@@ -14,7 +14,9 @@ own job group (``perfbench.harness.JobCounter``) after the build
 (``build_jobs``) and after the write (``jobs``). Per query the record
 keeps the median of $SPARK_GRAFT_BENCH_RUNS runs (default 3) of
 build + exec, of build and of exec, the [min, max] spread and the
-per-run job counts. Timing excludes SparkSession startup.
+per-run job counts; ``families`` rolls the medians up per operator
+family (a gate's registry module, also ending each query's stderr
+line as ``family=<name>``). Timing excludes SparkSession startup.
 
 STDOUT CONTRACT: stdout carries exactly one JSON line — metric, value,
 unit, total and the per-query median map under ``queries``. Callers
@@ -63,6 +65,11 @@ def _run(spark, counter: JobCounter, name: str, fn, sf_dir: str):
 
 def _total(run) -> float:
     return run[0] + run[1]
+
+
+def _family(fn) -> str:
+    # a gate's operator family is the name of its registry module
+    return fn.__module__.rsplit(".", 1)[-1]
 
 
 def _parse_sf(v):
@@ -154,8 +161,8 @@ def main() -> None:
             print(f"# {name}: {times[name]:.3f}s "
                   f"[{spread[name][0]:.3f}-{spread[name][1]:.3f}] "
                   f"build {build[name]:.3f}s exec {exec_[name]:.3f}s "
-                  f"jobs/run={jobs[name]} build_jobs/run={build_jobs[name]}",
-                  file=sys.stderr)
+                  f"jobs/run={jobs[name]} build_jobs/run={build_jobs[name]} "
+                  f"family={_family(fn)}", file=sys.stderr)
 
     total = round(sum(times.values()), 3)
     basis = f"median_of_{n_runs}"
@@ -164,10 +171,15 @@ def main() -> None:
                "basis": basis, "queries": times, "sf": sf}
     if not names:
         summary["per_query_record"] = "bench_latest.json"
+        families: dict[str, dict] = {}
+        for name, t in times.items():
+            fam = families.setdefault(_family(todo[name]), {"n": 0, "s": 0.0})
+            fam["n"] += 1
+            fam["s"] = round(fam["s"] + t, 3)
         out = {"metric": "headline_queries_total", "value": total,
                "unit": "sec", "basis": basis, "queries": times,
                "spread": spread, "sf": sf, "build": build, "exec": exec_,
-               "jobs": jobs, "build_jobs": build_jobs,
+               "jobs": jobs, "build_jobs": build_jobs, "families": families,
                "stamp": {"nproc": len(os.sched_getaffinity(0)),
                          "spark_graft_cpus": os.environ.get(
                              "SPARK_GRAFT_CPUS"),

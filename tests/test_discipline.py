@@ -6,15 +6,15 @@ a driver-side materialization or a Python-UDF hot path.
 from __future__ import annotations
 
 import ast
+import glob
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-QUERY_MODULES = ("accelerator_spark/queries.py",
-                 "accelerator_spark/queries2.py",
-                 "accelerator_spark/queries3.py",
-                 "accelerator_spark/queries4.py",
-                 "accelerator_spark/queries5.py",
-                 "accelerator_spark/queries6.py")
+# every module of the registry package, so a new family module cannot
+# escape the scans below
+QUERY_MODULES = tuple(sorted(
+    os.path.relpath(p, REPO) for p in
+    glob.glob(os.path.join(REPO, "accelerator_spark", "queries", "*.py"))))
 
 # Functions allowed to .collect(): each pulls a provably tiny,
 # size-bounded result to the driver (a sketch, k centroid dims, two

@@ -74,9 +74,7 @@ def test_cms_decode_bounds_and_merge_semantics(spark):
 
 
 def test_observed_metrics_free_pass(spark, tmp_path):
-    from accelerator_spark.operators.observe import (
-        observed, standard_write_metrics,
-    )
+    from accelerator_spark.operators.observe import observed
     from pyspark.sql import Row
 
     df = spark.createDataFrame(
@@ -85,12 +83,6 @@ def test_observed_metrics_free_pass(spark, tmp_path):
                         nulls=F.count_if(F.col("k").isNull()))
     out.write.mode("overwrite").parquet(str(tmp_path / "obs"))
     assert obs.get == {"rows": 3, "nulls": 1}
-
-    out2, obs2 = standard_write_metrics(df, key_col="k")
-    assert out2.count() == 3
-    got = obs2.get
-    assert got["rows"] == 3 and got["null_keys"] == 1
-    assert got["key_min"] == "1" and got["key_max"] == "5"
 
 
 def test_check_constraints_no_rules_empty_report(spark, sf_dir):
@@ -173,11 +165,11 @@ def test_skyline_rejects_empty_dimensions(spark, sf_dir):
 def test_observed_frames_compose_in_one_query(spark):
     """Review r4: two instrumented frames meeting in a join must not
     collide on the Observation name."""
-    from accelerator_spark.operators.observe import standard_write_metrics
+    from accelerator_spark.operators.observe import observed
 
     a = spark.range(10).withColumnRenamed("id", "k")
     b = spark.range(5).withColumnRenamed("id", "k")
-    da, oa = standard_write_metrics(a, "k")
-    db, ob = standard_write_metrics(b, "k")
+    da, oa = observed(a, rows=F.count(F.lit(1)))
+    db, ob = observed(b, rows=F.count(F.lit(1)))
     assert da.join(db, "k").count() == 5
     assert oa.get["rows"] == 10 and ob.get["rows"] == 5

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from accelerator_spark import queries as Q
+from accelerator_spark.queries._common import _events
 from accelerator_spark.operators.partition import compact_files
 from tests.conftest import load
 
@@ -56,8 +57,8 @@ def test_partitioned_write_prunes(spark, sf_dir):
 
 
 def test_mixture_sample_deterministic(spark, sf_dir):
-    a = Q.domain_mixture_sample(spark, sf_dir).collect()
-    b = Q.domain_mixture_sample(spark, sf_dir).collect()
+    a = Q.QUERIES["domain_mixture_sample"](spark, sf_dir).collect()
+    b = Q.QUERIES["domain_mixture_sample"](spark, sf_dir).collect()
     assert a == b
     for row in a:
         assert 0 <= row.kept <= row.n_docs
@@ -69,7 +70,7 @@ def test_mixture_sample_deterministic(spark, sf_dir):
 
 
 def test_quality_classifier_bounded(spark, sf_dir):
-    rows = Q.quality_classifier_score(spark, sf_dir).collect()
+    rows = Q.QUERIES["quality_classifier_score"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert -1.0 <= r.avg_score <= 1.0
@@ -77,7 +78,7 @@ def test_quality_classifier_bounded(spark, sf_dir):
 
 
 def test_cohort_retention_offsets(spark, sf_dir):
-    rows = Q.cohort_retention(spark, sf_dir).collect()
+    rows = Q.QUERIES["cohort_retention"](spark, sf_dir).collect()
     assert rows
     # offset 0 of a cohort counts every member: it must be the max
     by_cohort = {}
@@ -90,14 +91,14 @@ def test_cohort_retention_offsets(spark, sf_dir):
 
 
 def test_value_histogram_total(spark, sf_dir):
-    rows = Q.events_value_histogram(spark, sf_dir).collect()
-    ev = Q._events(spark, sf_dir)
+    rows = Q.QUERIES["events_value_histogram"](spark, sf_dir).collect()
+    ev = _events(spark, sf_dir)
     assert sum(r.n for r in rows) == ev.count()
     assert all(0 <= r.bucket <= 9 for r in rows)
 
 
 def test_orc_roundtrip_matches_parquet_digest(spark, sf_dir):
-    got = Q.orc_roundtrip_checksum(spark, sf_dir).first()
+    got = Q.QUERIES["orc_roundtrip_checksum"](spark, sf_dir).first()
     docs = load(spark, sf_dir, "documents")
     assert got.docs == docs.count()
 
@@ -106,10 +107,10 @@ def test_orc_roundtrip_matches_parquet_digest(spark, sf_dir):
 def test_streaming_sessions_vs_batch(spark, sf_dir):
     """Streaming session_window must agree with the batch lag/cumsum
     sessionization on total session count."""
-    got = Q.streaming_session_counts(spark, sf_dir).first()
-    batch = Q.sessionize_events(spark, sf_dir)
+    got = Q.QUERIES["streaming_session_counts"](spark, sf_dir).first()
+    batch = Q.QUERIES["sessionize_events"](spark, sf_dir)
     assert got.n_sessions == batch.count()
-    assert got.n_events == Q._events(spark, sf_dir).count()
+    assert got.n_events == _events(spark, sf_dir).count()
 
 
 def test_apply_changes_semantics(spark):

@@ -315,7 +315,7 @@ def test_bitmap_distinct_at_16x_invariant(spark):
     """Replication must not change distinct counts (bitmaps OR away the
     copies) — and the op must run on a 1.6M-row event stream."""
     from accelerator_spark.operators.sketches import bitmap_distinct
-    from accelerator_spark.queries import _events
+    from accelerator_spark.queries._common import _events
 
     ev = _events(spark, SF_DIR).select("event_type", "user_id")
     e16 = ev

@@ -67,7 +67,7 @@ def test_windowed_counts_watermark_plan(spark, sf_dir, tmp_path):
     a streaming plan; values checked via the batch twin (events_hourly
     oracle covers numeric parity)."""
     src_dir = str(tmp_path / "ev")
-    from accelerator_spark.queries import _events
+    from accelerator_spark.queries._common import _events
     ev = _events(spark, sf_dir)
     ev.write.parquet(src_dir)
     schema = spark.read.parquet(src_dir).schema
@@ -93,7 +93,7 @@ def test_stream_dedup_drops_planted_duplicates(spark, sf_dir, tmp_path):
     """Streaming dropDuplicatesWithinWatermark (JVM stateful): a source
     directory holding the same rows twice drains to exactly one copy
     per event_id."""
-    from accelerator_spark.queries import _events
+    from accelerator_spark.queries._common import _events
     from accelerator_spark.streaming import stream_dedup
 
     src_dir = str(tmp_path / "dup_src")
@@ -163,7 +163,7 @@ def test_stream_stream_interval_join(spark, sf_dir, tmp_path):
     streams. Drained result must equal the identical batch join."""
     import os
 
-    from accelerator_spark.queries import _events
+    from accelerator_spark.queries._common import _events
 
     ev = _events(spark, sf_dir)
     src = str(tmp_path / "ss_src")
@@ -216,7 +216,7 @@ def test_incremental_hll_sketch_chain(spark, sf_dir, tmp_path):
     sketch datasets — no raw-event rescan. The mergeable-state story
     (operators/sketches) composed with reference-parity chains
     (ChainRunner, memoized per batch)."""
-    from accelerator_spark.queries import _events
+    from accelerator_spark.queries._common import _events
 
     ctx = BuildContext(spark, str(tmp_path / "wd"))
     urd = Urd(str(tmp_path / "wd"))

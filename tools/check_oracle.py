@@ -62,7 +62,7 @@ def main():
     names = sys.argv[2:]
 
     # go through the driver's actual artifact, not the library module —
-    # catches wiring drift between queries.py and __spark_entry__
+    # catches wiring drift between the registry and __spark_entry__
     import __spark_entry__ as entrymod
     QUERIES = entrymod.queries()
     ORACLES = entrymod.oracle_sql()
