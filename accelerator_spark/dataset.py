@@ -29,6 +29,7 @@ ever collects data to the driver (min/max is a 1-row agg).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -40,6 +41,7 @@ from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from .identifiers import qcol as _qcol, quote_ident
 from .operators.observe import observed
@@ -51,7 +53,7 @@ LINENO = "lineno"  # conventional ingest-order column (SURVEY §7.4)
 # orderable — accelerator/dataset.py:875-897)
 _MINMAX_TYPES = {
     "tinyint", "smallint", "int", "bigint", "float", "double",
-    "date", "timestamp", "string", "boolean",
+    "date", "timestamp", "timestamp_ntz", "string", "boolean",
 }
 
 
@@ -69,7 +71,8 @@ def _json_safe(v: Any) -> Any:
 # links — accelerator/dataset.py:955-961 — so resolving a years-long
 # chain is O(1)-ish). ``chain_cache`` holds entries for the most recent
 # len(cache) ancestors (path + the metadata chain_df needs: lines,
-# minmax zone maps, and whether df() is a plain parquet read). Every
+# minmax zone maps, whether df() is a plain parquet read, and the
+# ``schema_id`` that groups plain links into one scan). Every
 # _CHAIN_CHECKPOINT_EVERY-th link is a CHECKPOINT holding its full
 # ancestry (capped at _CHAIN_CACHE_MAX); links in between hold only the
 # suffix back to the last checkpoint, so total metadata stays O(N) per
@@ -104,13 +107,16 @@ def _chain_entry(path: str, manifest: dict) -> dict:
         if isinstance(mx, str) and len(mx) > 64:
             mx = None
         mm[c] = [mn, mx]
-    return {
+    entry = {
         "path": path,
         "id": manifest.get("id"),
         "lines": manifest.get("lines", 0),
         "minmax": mm,
         "plain": not (manifest.get("parent") or manifest.get("bucketing")),
     }
+    if manifest.get("schema"):
+        entry["schema_id"] = _schema_id(manifest["schema"])
+    return entry
 
 
 def _chain_meta(previous: "Dataset | str | None") -> dict:
@@ -141,6 +147,34 @@ def _schema_meta(schema) -> dict:
     """The manifest's ``columns`` and ``nullable`` maps of a schema."""
     return {"columns": {f_.name: f_.dataType.simpleString() for f_ in schema.fields},
             "nullable": {f_.name: f_.nullable for f_ in schema.fields}}
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` as Spark reads it back from parquet: every struct field,
+    array element and map value nullable, at every depth."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f_.name, _as_nullable(f_.dataType),
+                                       True, f_.metadata) for f_ in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def _schema_id(schema_json: str) -> str:
+    """Short id of a manifest ``schema``: equal ids, one scan."""
+    return hashlib.sha1(schema_json.encode()).hexdigest()[:12]
+
+
+def _scan(spark: SparkSession, schema_json: str | None,
+          *data_dirs: str) -> DataFrame:
+    """Read parquet dirs with the manifest's schema; without one (a
+    manifest written before it was kept) Spark infers it, one job."""
+    reader = spark.read
+    if schema_json:
+        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+    return reader.parquet(*data_dirs)
 
 
 def _write_observed(df: DataFrame, path: str, mm_cols: list[str],
@@ -202,7 +236,8 @@ def _same_path(a: str | None, b: str | None) -> bool:
 
 # manifest column type -> the class whose fromisoformat reads back the
 # isoformat min/max that _json_safe stored for it
-_TEMPORAL_TYPES = {"date": date, "timestamp": datetime}
+_TEMPORAL_TYPES = {"date": date, "timestamp": datetime,
+                   "timestamp_ntz": datetime}
 
 
 def _entry_range_skips(minmax: dict, range_filter: dict[str, tuple[Any, Any]],
@@ -314,6 +349,9 @@ class Dataset:
         The co-partitioning *contract* (same hashlabel => no shuffle for a
         per-key op) is honored by Spark when the downstream op keys on the
         same column: the exchange is reused or AQE elides it.
+
+        The manifest's ``schema`` is ``df.schema`` as parquet reads it
+        back (all nullable), so reads never re-infer it.
         """
         if hashlabel:
             if hashlabel not in df.columns:
@@ -327,11 +365,12 @@ class Dataset:
         lines, minmax = _write_observed(
             df, path, _minmax_cols(df) if collect_minmax else [],
             lambda d: d.write.mode("overwrite").parquet(data_dir))
-        written = df.sparkSession.read.parquet(data_dir)
+        schema = _as_nullable(df.schema)
         return cls._commit(path, caption, previous, {
             "filename": filename,
             "hashlabel": hashlabel,
-            **_schema_meta(written.schema),
+            **_schema_meta(schema),
+            "schema": schema.json(),
             "lines": lines,
             "minmax": minmax,
         })
@@ -446,7 +485,8 @@ class Dataset:
             # duplicate overlay keys would multiply rows at read time
             # while the manifest claims the parent's line count — refuse
             # (tiny agg over the just-written overlay columns only)
-            chk = new_cols.sparkSession.read.parquet(data_dir).agg(
+            chk = new_cols.sparkSession.read.schema(
+                _as_nullable(new_cols.schema)).parquet(data_dir).agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count_distinct(F.col(key)).alias("nd"),
                 F.count(F.when(F.col(key).isNull(), 1)).alias("nnull"),
@@ -543,7 +583,8 @@ class Dataset:
         b = self.manifest.get("bucketing")
         if b:
             return self.register_bucketed(spark)
-        return spark.read.parquet(os.path.join(self.path, "data"))
+        return _scan(spark, self.manifest.get("schema"),
+                     os.path.join(self.path, "data"))
 
     def _overlay_df(self, spark: SparkSession, parent: str) -> DataFrame:
         """Resolve a write_overlay dataset: parent scan + (optional)
@@ -672,7 +713,17 @@ class Dataset:
         allow_missing_columns: bool = False,
     ) -> DataFrame:
         """Union-of-chain read (the reference's ``iterate_chain``,
-        accelerator/dataset.py:443-446).
+        accelerator/dataset.py:443-446): one parquet scan per schema.
+
+        Plain links (no overlay/bucketing) that share a manifest
+        ``schema`` are read together by one multi-path scan with that
+        schema, so building the frame runs no Spark job whatever the
+        chain length. Each other link (overlay, bucketed, or a manifest
+        without ``schema``) is read on its own. The parts are combined
+        by ``unionByName`` in the order of each part's oldest link, so
+        column order and type widening follow the oldest link first.
+        Row order across links is unspecified; sort by ``lineno``
+        (``with_lineno``) for ingest order.
 
         ``range_filter={col: (lo, hi)}`` keeps lo <= col < hi AND skips
         whole datasets whose manifest [min,max] misses the range — the
@@ -691,16 +742,29 @@ class Dataset:
                                                  self.columns)]
         if not entries:
             return self.df(spark).limit(0)
-        # plain datasets (no overlay/bucketing) read straight from their
-        # data dir — no manifest load; only non-plain survivors and self
-        # cost a manifest read
-        dfs = [
-            self.df(spark) if e["path"] == self.path
-            else spark.read.parquet(os.path.join(e["path"], "data"))
-            if e["plain"]
-            else Dataset.load(e["path"]).df(spark)
-            for e in entries
-        ]
+        # group plain links by schema_id (keys keep oldest-link order);
+        # any other link is a part of its own, keyed by its position
+        parts: dict[Any, list[dict]] = {}
+        for i, e in enumerate(entries):
+            key = e.get("schema_id") if e["plain"] else None
+            parts.setdefault(key or i, []).append(e)
+        tip_schema = self.manifest.get("schema")
+        tip_id = tip_schema and _schema_id(tip_schema)
+
+        def read(part: list[dict]) -> DataFrame:
+            e = part[-1]
+            if not e["plain"]:
+                return (self if e["path"] == self.path
+                        else Dataset.load(e["path"])).df(spark)
+            # the tip's schema, else one manifest load per other schema
+            schema = None
+            if e.get("schema_id"):
+                schema = (tip_schema if e["schema_id"] == tip_id
+                          else Dataset.load(e["path"]).manifest.get("schema"))
+            return _scan(spark, schema,
+                         *(os.path.join(x["path"], "data") for x in part))
+
+        dfs = [read(part) for part in parts.values()]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=allow_missing_columns)

@@ -3,6 +3,7 @@ memoized build, urd-lite."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from accelerator_spark.dataset import Dataset, with_lineno
@@ -48,12 +49,13 @@ def test_chain_and_range_skip(spark, sf_dir, tmp_path):
     assert sub.count() == src.filter("o_orderkey >= 0 and o_orderkey < 50").count()
 
 
-def test_chain_range_skip_parses_timestamp_bounds(spark, tmp_path):
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_chain_range_skip_parses_timestamp_bounds(spark, tmp_path, ts_type):
     from datetime import datetime
 
     def link(ts, name, previous=None):
         return Dataset.write(
-            spark.createDataFrame([(ts, 1)], "ts timestamp, v int"),
+            spark.createDataFrame([(ts, 1)], f"ts {ts_type}, v int"),
             str(tmp_path / name), previous=previous)
 
     d1 = link(datetime(2024, 1, 1, 6), "d1")
@@ -397,6 +399,171 @@ def test_chain_df_uses_cache_without_manifest_walk(spark, sf_dir, tmp_path,
             == src.agg(F.sum("o_orderkey")).collect()[0][0])
 
 
+def test_write_schema_equals_read_back(spark, tmp_path):
+    """Dataset.write takes the manifest schema from the frame instead of
+    reading its output back; for awkward types it must still equal what
+    Spark reads back from the written parquet."""
+    import json
+
+    from accelerator_spark import dataset as dsmod
+
+    frames = {
+        # nested field names with a space and a colon, non-null inside
+        "nested": spark.range(3).select(
+            F.struct(F.lit(1).alias("a b"), F.col("id").alias("c:d"))
+            .alias("st")),
+        "types": spark.sql(
+            "SELECT CAST(1.5 AS DECIMAL(10, 2)) AS d, "
+            "TIMESTAMP_NTZ'2024-01-01 06:00:00' AS tn, X'0102' AS b, "
+            "parse_json('{\"a\": 1}') AS v, map('k', 1) AS m, "
+            "array(named_struct('x', 1, 'y', 'z')) AS arr"),
+        "range": spark.range(3),  # non-null id
+    }
+    spark.sql("DROP TABLE IF EXISTS t_char_varchar")
+    try:
+        spark.sql(
+            "CREATE TABLE t_char_varchar (c CHAR(3), v VARCHAR(5), i INT) "
+            f"USING parquet LOCATION '{tmp_path / 'cv_table'}'")
+        spark.sql("INSERT INTO t_char_varchar VALUES ('a', 'bb', 1)")
+        frames["char_varchar"] = spark.table("t_char_varchar")
+        for name, df in frames.items():
+            ds = Dataset.write(df, str(tmp_path / name))
+            back = spark.read.parquet(str(tmp_path / name / "data")).schema
+            want = {**dsmod._schema_meta(back), "schema": back.json()}
+            got = {k: ds.manifest[k] for k in want}
+            assert got == want, name
+            # and it survives the manifest's JSON round-trip
+            assert Dataset.load(ds.path).df(spark).schema == back, name
+        assert json.loads(Dataset.load(str(tmp_path / "char_varchar"))
+                          .manifest["schema"])["fields"][0]["metadata"] == \
+            {"__CHAR_VARCHAR_TYPE_STRING": "char(3)"}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_char_varchar")
+
+
+def _per_link_union(spark, tip, allow_missing_columns=False):
+    """chain_df as it was: one read per link (plain links inferring
+    their schema), combined by a left-deep unionByName."""
+    dfs = [spark.read.parquet(os.path.join(ds.path, "data"))
+           if not ds.manifest.get("parent") else ds.df(spark)
+           for ds in tip.chain()]
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d, allowMissingColumns=allow_missing_columns)
+    return out
+
+
+def _assert_same_frame(got, want):
+    assert got.columns == want.columns
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def _chain(spark, root, frames):
+    prev = None
+    for i, (rows, ddl) in enumerate(frames):
+        prev = Dataset.write(spark.createDataFrame(rows, ddl),
+                             str(root / f"l{i}"), previous=prev)
+    return prev
+
+
+def test_chain_df_equals_per_link_union(spark, tmp_path):
+    """One scan per schema gives the columns, column order, types and
+    rows of the per-link union it replaced, and fails where it failed."""
+    added = _chain(spark, tmp_path / "added", [
+        ([(1, "a")], "k int, s string"),
+        ([(2, "b", 2.5)], "k int, s string, extra double"),
+        ([(3, "c")], "k int, s string"),
+        ([(4, "d", 4.5)], "k int, s string, extra double")])
+    _assert_same_frame(added.chain_df(spark, allow_missing_columns=True),
+                       _per_link_union(spark, added, True))
+    with pytest.raises(Exception):
+        added.chain_df(spark).collect()
+    with pytest.raises(Exception):
+        _per_link_union(spark, added).collect()
+
+    widened = _chain(spark, tmp_path / "widened", [
+        ([(1, "a")], "k int, s string"),
+        ([(2**40, "b")], "k bigint, s string"),
+        ([(3, "c")], "k int, s string")])
+    _assert_same_frame(widened.chain_df(spark),
+                       _per_link_union(spark, widened))
+    assert dict(widened.chain_df(spark).dtypes)["k"] == "bigint"
+
+    reordered = _chain(spark, tmp_path / "reordered", [
+        ([(1, "a")], "k int, s string"),
+        ([("b", 2)], "s string, k int"),
+        ([(3, "c")], "k int, s string")])
+    _assert_same_frame(reordered.chain_df(spark),
+                       _per_link_union(spark, reordered))
+
+    base = Dataset.write(spark.createDataFrame([(5, "e")], "k int, s string"),
+                         str(tmp_path / "ov_base"))
+    l0 = Dataset.write(spark.createDataFrame([(1, "a")], "k int, s string"),
+                       str(tmp_path / "ov_l0"))
+    ov = Dataset.write_overlay(
+        str(tmp_path / "ov_l1"), base, key="k", previous=l0,
+        new_cols=spark.createDataFrame([(5, "E")], "k int, s string"))
+    l2 = Dataset.write(spark.createDataFrame([(3, "c")], "k int, s string"),
+                       str(tmp_path / "ov_l2"), previous=ov)
+    _assert_same_frame(l2.chain_df(spark), _per_link_union(spark, l2))
+    assert sorted(r.s for r in l2.chain_df(spark).collect()) == ["E", "a", "c"]
+
+
+def test_chain_df_reads_links_without_manifest_schema(spark, tmp_path):
+    """A link whose manifest has no ``schema`` (and whose cache entries
+    have no ``schema_id``) — the form written before both were kept — is
+    read on its own, inferring its schema as before."""
+    import json
+
+    from accelerator_spark import dataset as dsmod
+
+    tip = _chain(spark, tmp_path, [
+        ([(1, "a")], "k int, s string"),
+        ([(2, "b")], "k int, s string"),
+        ([(3, "c")], "k int, s string")])
+    old = tmp_path / "l1" / dsmod.MANIFEST_NAME
+    m = json.loads(old.read_text())
+    del m["schema"]
+    old.write_text(json.dumps(m))
+    m = json.loads((tmp_path / "l2" / dsmod.MANIFEST_NAME).read_text())
+    del m["chain_cache"][1]["schema_id"]
+    (tmp_path / "l2" / dsmod.MANIFEST_NAME).write_text(json.dumps(m))
+    tip = Dataset.load(tip.path)
+    assert [e.get("schema_id") is None for e in tip.chain_entries()] == \
+        [False, True, False]
+    _assert_same_frame(tip.chain_df(spark), _per_link_union(spark, tip))
+    # the rewritten link alone, through df(), still reads
+    _assert_same_frame(Dataset.load(str(tmp_path / "l1")).chain_df(spark),
+                       _per_link_union(spark, Dataset.load(str(tmp_path / "l1"))))
+
+
+def test_chain_df_job_count_is_constant_in_chain_length(spark, tmp_path):
+    """Building chain_df runs no Spark job, and reading it runs as many
+    jobs for 16 links as for 4: no per-link schema inference."""
+    from perfbench.harness import JobCounter
+
+    links = []
+    for i in range(16):
+        links.append(Dataset.write(
+            spark.createDataFrame([(i, str(i))], "k bigint, s string"),
+            str(tmp_path / f"l{i}"), previous=links[-1] if links else None))
+    counter = JobCounter(spark)
+    jobs = {}
+    try:
+        for n in (4, 16):
+            tip = links[n - 1]
+            gid = counter.group(f"build-{n}")
+            df = tip.chain_df(spark)
+            assert counter.jobs(gid) == [], n
+            gid = counter.group(f"count-{n}")
+            assert df.count() == n
+            jobs[n] = len(counter.jobs(gid))
+    finally:
+        counter.clear()
+    assert jobs[4] == jobs[16], jobs
+
+
 def test_linked_manifest_without_chain_cache_is_refused(tmp_path):
     """A manifest that links ``previous`` but carries no
     chain_depth/chain_cache cannot be resolved from the cache; loading
@@ -522,19 +689,27 @@ def test_writer_manifests_are_pinned(spark, tmp_path):
 
     schema = {"columns": {"k": "bigint", "s": "string"},
               "nullable": {"k": True, "s": True}}
+    # Dataset.write also keeps the exact schema JSON; cache entries of
+    # its datasets carry that JSON's id
+    schema_json = (
+        '{"fields":[{"metadata":{},"name":"k","nullable":true,"type":"long"},'
+        '{"metadata":{},"name":"s","nullable":true,"type":"string"}],'
+        '"type":"struct"}')
     mm = {"k": [1, 2], "s": ["a", "b"]}
 
-    def entry(n, plain=True, minmax=mm):
-        return {"path": f"<root>/{n}", "id": f"<{n}>", "lines": 2,
-                "minmax": minmax, "plain": plain}
+    def entry(n, plain=True, minmax=mm, schema_id="732ec8437825"):
+        e = {"path": f"<root>/{n}", "id": f"<{n}>", "lines": 2,
+             "minmax": minmax, "plain": plain}
+        return {**e, "schema_id": schema_id} if schema_id else e
 
     assert pinned(base) == {
         "version": 1, "caption": "c0", "filename": "f.csv",
-        "hashlabel": None, "previous": None, **schema, "lines": 2,
-        "minmax": mm, "chain_depth": 0}
+        "hashlabel": None, "previous": None, **schema,
+        "schema": schema_json, "lines": 2, "minmax": mm, "chain_depth": 0}
     assert pinned(nxt) == {
         "version": 1, "caption": "", "filename": None, "hashlabel": "k",
-        "previous": "<root>/base", **schema, "lines": 2, "minmax": mm,
+        "previous": "<root>/base", **schema, "schema": schema_json,
+        "lines": 2, "minmax": mm,
         "chain_depth": 1, "chain_cache": [entry("base")]}
     assert pinned(bk) == {
         "version": 1, "caption": "c1", "filename": None, "hashlabel": "k",
@@ -549,7 +724,7 @@ def test_writer_manifests_are_pinned(spark, tmp_path):
         "columns": {"k": "bigint", "x": "double", "z": "expr"},
         "lines": 2, "minmax": {"x": [2.5, 2.5]}, "chain_depth": 3,
         "chain_cache": [entry("base"), entry("next"),
-                        entry("bk", plain=False, minmax={})]}
+                        entry("bk", plain=False, minmax={}, schema_id=None)]}
 
 
 def test_jobdb_and_urd_tolerate_truncated_lines(spark, sf_dir, tmp_path):
