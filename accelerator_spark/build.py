@@ -164,6 +164,13 @@ class JobRecord:
     time_built: float = 0.0
 
 
+def _on_disk(rec: JobRecord | None) -> bool:
+    """A memo hit needs the record AND its outputs still on disk: a
+    record whose outputs were GC'd must rebuild."""
+    return rec is not None and all(
+        Dataset.exists(p) for p in rec.outputs.values())
+
+
 class BuildContext:
     """Workdir-scoped memo index + builder."""
 
@@ -398,11 +405,9 @@ class BuildContext:
         keys = self._memo_keys(fn, options, datasets, hashlabel, previous)
         key = keys[0]
         rec = self._match(keys)
-        # "cached" means a real build would skip: record found AND its
-        # outputs still on disk — why_build must apply the same disk
-        # check or it answers wrong after outputs were GC'd (review r4)
-        on_disk = rec is not None and all(
-            Dataset.exists(p) for p in rec.outputs.values())
+        # why_build applies the same disk check as a real build, or it
+        # answers wrong after outputs were GC'd (review r4)
+        on_disk = _on_disk(rec)
         if why_build:
             reason = (
                 "cached" if on_disk and not force_build
@@ -433,8 +438,7 @@ class BuildContext:
                     # match and the claim — re-check under the claim
                     self._refresh()
                     rec = self._match(keys)
-                    if (not force_build and rec is not None and all(
-                            Dataset.exists(p) for p in rec.outputs.values())):
+                    if not force_build and _on_disk(rec):
                         return Job(self, rec, cached=True)
                     stop_beat = self._claim_heartbeat(key)
                     try:
@@ -450,8 +454,7 @@ class BuildContext:
             while True:
                 self._refresh()
                 rec2 = self._db.get(key)
-                if (not force_build and rec2 is not None and all(
-                        Dataset.exists(p) for p in rec2.outputs.values())):
+                if not force_build and _on_disk(rec2):
                     return Job(self, rec2, cached=True)
                 if not os.path.exists(self._claim_path(key)):
                     break

@@ -144,9 +144,8 @@ def _chain_meta(previous: "Dataset | str | None") -> dict:
 
 
 def _schema_meta(schema) -> dict:
-    """The manifest's ``columns`` and ``nullable`` maps of a schema."""
-    return {"columns": {f_.name: f_.dataType.simpleString() for f_ in schema.fields},
-            "nullable": {f_.name: f_.nullable for f_ in schema.fields}}
+    """The manifest's ``columns`` map of a schema."""
+    return {"columns": {f_.name: f_.dataType.simpleString() for f_ in schema.fields}}
 
 
 def _as_nullable(t: DataType) -> DataType:
@@ -339,7 +338,6 @@ class Dataset:
         previous: "Dataset | str | None" = None,
         caption: str = "",
         partitions: int | None = None,
-        collect_minmax: bool = True,
         filename: str | None = None,
     ) -> "Dataset":
         """Write ``df`` as a dataset.
@@ -363,7 +361,7 @@ class Dataset:
 
         data_dir = os.path.join(path, "data")
         lines, minmax = _write_observed(
-            df, path, _minmax_cols(df) if collect_minmax else [],
+            df, path, _minmax_cols(df),
             lambda d: d.write.mode("overwrite").parquet(data_dir))
         schema = _as_nullable(df.schema)
         return cls._commit(path, caption, previous, {
@@ -482,11 +480,12 @@ class Dataset:
             _, mm = _write_observed(
                 new_cols, path, _minmax_cols(new_cols, skip=key),
                 lambda d: d.write.mode("overwrite").parquet(data_dir))
+            # the schema of data/, kept so df() reads it without inference
+            schema = _as_nullable(new_cols.schema).json()
             # duplicate overlay keys would multiply rows at read time
             # while the manifest claims the parent's line count — refuse
             # (tiny agg over the just-written overlay columns only)
-            chk = new_cols.sparkSession.read.schema(
-                _as_nullable(new_cols.schema)).parquet(data_dir).agg(
+            chk = _scan(new_cols.sparkSession, schema, data_dir).agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count_distinct(F.col(key)).alias("nd"),
                 F.count(F.when(F.col(key).isNull(), 1)).alias("nnull"),
@@ -500,7 +499,8 @@ class Dataset:
             new_col_types = {
                 f_.name: f_.dataType.simpleString()
                 for f_ in new_cols.schema.fields if f_.name != key}
-            overlay_meta = {"key": key, "cols": list(new_col_types)}
+            overlay_meta = {"key": key, "cols": list(new_col_types),
+                            "schema": schema}
         shadowed = set(new_col_types) | set(exclude)
         resolved = {c: t for c, t in parent_ds.columns.items()
                     if c not in shadowed}
@@ -596,7 +596,8 @@ class Dataset:
         cols = [c for c in base.columns if c not in exclude]
         if ov.get("cols"):
             key = ov["key"]
-            o = spark.read.parquet(os.path.join(self.path, "data"))
+            o = _scan(spark, ov.get("schema"),
+                      os.path.join(self.path, "data"))
             shadowed = set(ov["cols"])
             cols = [c for c in cols if c not in shadowed]
             if key not in cols:

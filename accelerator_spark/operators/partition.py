@@ -19,6 +19,9 @@ contract in the manifest so later steps know the data is co-partitioned.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -570,6 +573,42 @@ def exact_ntile(df, order_col: str, n_tiles: int, tiebreak_col: str,
                     f"{sid}_tot", f"{sid}_rn")
 
 
+def rebuild_dir(path: str, build):
+    """Replace the directory ``path`` crash-safely: ``build(tmp)``
+    writes the new content into the temp sibling ``tmp``, then two
+    renames swap it in (``path`` -> ``.__compact_old__``, ``tmp`` ->
+    ``path``) and the old content is deleted. Data is never deleted
+    until the swap completes: a crash between the renames leaves the
+    original at the ``.__compact_old__`` sibling, and the next call
+    rolls it back before building (review r4). A ``build`` that raises
+    leaves ``path`` untouched and its temp dir removed; one that writes
+    nothing to ``tmp`` swaps nothing. Returns what ``build`` returns.
+    Local filesystem paths only (os.rename) — object stores need their
+    own atomic-swap primitive."""
+    back = path.rstrip("/") + ".__compact_old__"
+    tmp = path.rstrip("/") + ".__compact_tmp__"
+    # either the original still sits at `back` (crash between the
+    # renames — finish the rollback) or the rebuilt dir reached `path`
+    # and `back` is a stale backup
+    if os.path.exists(back):
+        if os.path.exists(path):
+            shutil.rmtree(back)
+        else:
+            os.rename(back, path)
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)  # incomplete previous attempt
+    try:
+        out = build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if os.path.exists(tmp):
+        os.rename(path, back)
+        os.rename(tmp, path)
+        shutil.rmtree(back)
+    return out
+
+
 def compact_files(spark, path: str, target_files: int,
                   fmt: str = "parquet") -> int:
     """Small-file compaction: rewrite a table directory into
@@ -580,36 +619,14 @@ def compact_files(spark, path: str, target_files: int,
     checksum test asserts equality).
 
     Uses coalesce (no shuffle) when shrinking file count — each output
-    task concatenates whole input splits. The rewrite lands in a temp
-    sibling directory first; data is never deleted until the swap
-    completes, and a crash between the two renames is rolled back
-    automatically on the next invocation (the original sits intact at
-    the .__compact_old__ sibling until then). Local filesystem paths
-    only (os.rename) — object stores need their own atomic-swap
-    primitive.
+    task concatenates whole input splits. The rewrite is swapped in by
+    ``rebuild_dir`` (crash-safe, local paths only).
 
     Returns the number of data files after compaction."""
-    import os
-    import shutil
-
-    back = path.rstrip("/") + ".__compact_old__"
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    # recover from a prior crash (review r4): data is never deleted
-    # until the swap completes, so either the original still sits at
-    # `back` (crash between the renames — finish the rollback) or the
-    # compacted table reached `path` and `back` is a stale backup
-    if os.path.exists(back):
-        if os.path.exists(path):
-            shutil.rmtree(back)
-        else:
-            os.rename(back, path)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # incomplete previous attempt
-    df = spark.read.format(fmt).load(path)
-    df.coalesce(target_files).write.mode("overwrite").format(fmt).save(tmp)
-    os.rename(path, back)
-    os.rename(tmp, path)
-    shutil.rmtree(back)
+    # the read is part of the build: it must see the recovered `path`
+    rebuild_dir(path, lambda tmp: spark.read.format(fmt).load(path)
+                .coalesce(target_files).write.mode("overwrite")
+                .format(fmt).save(tmp))
     # count by excluding Spark's metadata names, not by whitelisting
     # data extensions — 'avro'/'text'/zstd-compressed outputs matched
     # nothing and a successful compaction reported 0 files (review r5)

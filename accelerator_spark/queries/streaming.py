@@ -45,6 +45,55 @@ def _stream_events(spark: SparkSession, sf_dir: str,
     return _normalize_ts(stream_from_directory(spark, stream_dir, schema))
 
 
+def _drain_to_memory(frame: DataFrame, name: str,
+                     checkpoint: str) -> DataFrame:
+    """Drain a streaming aggregate to the memory sink ``name`` under
+    Trigger.AvailableNow (complete mode) and return the sink's table.
+    A drain that outlasts 180 s stops the query and raises instead of
+    returning a partial memory sink (review r4)."""
+    q = (
+        frame.writeStream.format("memory").queryName(name)
+        .outputMode("complete")
+        .option("checkpointLocation", _scratch(checkpoint))
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(180):
+        q.stop()
+        raise TimeoutError(
+            f"{name} drain exceeded 180s — refusing to return a partial "
+            "memory sink (review r4)")
+    return frame.sparkSession.table(name)
+
+
+def _land(frame: DataFrame, seq: int, cols: list[str], src: str,
+          stage: str) -> None:
+    """Land the ``batch_seq == seq`` rows of ``frame`` (columns
+    ``cols``) as ONE parquet file in the stream source dir ``src``,
+    staged through ``stage``. The file's mtime grows with ``seq``: the
+    file source admits new files in modification-time order, so the
+    batches drain in sequence."""
+    d = os.path.join(stage, f"b{seq}")
+    (frame.filter(F.col("batch_seq") == seq).select(*cols)
+     .coalesce(1).write.parquet(d))
+    part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
+    dst = os.path.join(src, f"batch{seq}.parquet")
+    shutil.copyfile(os.path.join(d, part), dst)
+    t = 1_700_000_000 + 1000 * seq
+    os.utime(dst, (t, t))
+
+
+def _kept_flags(frame: DataFrame, kept_path: str) -> DataFrame:
+    """(doc_id, batch_seq, kept) for every row of ``frame``: kept is
+    whether the doc reached the kept store at ``kept_path``."""
+    kept = (frame.sparkSession.read.parquet(kept_path).select("doc_id")
+            .withColumn("_k", F.lit(True)))
+    return (frame.select("doc_id", "batch_seq")
+            .join(kept, "doc_id", "left")
+            .select("doc_id", "batch_seq",
+                    F.coalesce("_k", F.lit(False)).alias("kept")))
+
+
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING path through the full correctness gate: events read
     with readStream, watermarked tumbling-window aggregation
@@ -62,20 +111,8 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg is a standard partial/final hash agg per microbatch."""
     ev = _stream_events(spark, sf_dir, "stream_src")
     agg = windowed_counts(ev, "ts", "1 hour", "2 hours", ["event_type"])
-    q = (
-        agg.writeStream.format("memory").queryName("stream_hourly")
-        .outputMode("complete")
-        .option("checkpointLocation", _scratch("stream_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError(
-            "stream_hourly drain exceeded 180s — refusing to return a "
-            "partial memory sink (review r4)")
     return (
-        spark.table("stream_hourly")
+        _drain_to_memory(agg, "stream_hourly", "stream_ck")
         .select(
             F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
             "event_type",
@@ -112,20 +149,7 @@ def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = "stream_sessions"
-    q = (
-        sess.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", _scratch("stream_sck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError(
-            "session stream drain exceeded 180s — refusing to return a "
-            "partial memory sink (review r4)")
-    return spark.table(name).agg(
+    return _drain_to_memory(sess, "stream_sessions", "stream_sck").agg(
         F.count(F.lit(1)).alias("n_sessions"),
         F.sum("n_events").alias("n_events"),
         F.max("n_events").alias("max_session_events"),
@@ -198,17 +222,8 @@ def streaming_near_dedup_report(spark: SparkSession,
     state_p = _scratch("snd_state")
     ckpt = _scratch("snd_ckpt")
     stage = _scratch("snd_stage")
-    t0 = 1_700_000_000
     for seq in range(3):
-        d = os.path.join(stage, f"b{seq}")
-        (sh.filter(F.col("batch_seq") == seq)
-         .select("doc_id", "simhash")
-         .coalesce(1).write.parquet(d))
-        part = next(f for f in os.listdir(d)
-                    if f.endswith(".parquet"))
-        dst = os.path.join(src, f"batch{seq}.parquet")
-        shutil.copyfile(os.path.join(d, part), dst)
-        os.utime(dst, (t0 + 1000 * seq, t0 + 1000 * seq))
+        _land(sh, seq, ["doc_id", "simhash"], src, stage)
 
     schema = T.StructType([T.StructField("doc_id", T.LongType()),
                            T.StructField("simhash", T.LongType())])
@@ -217,12 +232,7 @@ def streaming_near_dedup_report(spark: SparkSession,
     stream_near_dedup(stream, kept_p, state_p, ckpt,
                       fp_col="simhash", id_col="doc_id",
                       bits=64, max_hamming=3, bucket_cap=5000)
-    kept = (spark.read.parquet(kept_p).select("doc_id")
-            .withColumn("_k", F.lit(True)))
-    return (sh.select("doc_id", "batch_seq")
-            .join(kept, "doc_id", "left")
-            .select("doc_id", "batch_seq",
-                    F.coalesce("_k", F.lit(False)).alias("kept")))
+    return _kept_flags(sh, kept_p)
 
 
 gate(streaming_near_dedup_report, ORACLE_NEAR_DEDUP_INCREMENTAL)
@@ -255,19 +265,6 @@ def streaming_near_dedup_compacted_report(spark: SparkSession,
     state_p = _scratch("sndc_state")
     ckpt = _scratch("sndc_ckpt")
     stage = _scratch("sndc_stage")
-    t0 = 1_700_000_000
-
-    def land(seq: int) -> None:
-        d = os.path.join(stage, f"b{seq}")
-        (sh.filter(F.col("batch_seq") == seq)
-         .select("doc_id", "simhash")
-         .coalesce(1).write.parquet(d))
-        part = next(f for f in os.listdir(d)
-                    if f.endswith(".parquet"))
-        dst = os.path.join(src, f"batch{seq}.parquet")
-        shutil.copyfile(os.path.join(d, part), dst)
-        os.utime(dst, (t0 + 1000 * seq, t0 + 1000 * seq))
-
     schema = T.StructType([T.StructField("doc_id", T.LongType()),
                            T.StructField("simhash", T.LongType())])
 
@@ -279,7 +276,7 @@ def streaming_near_dedup_compacted_report(spark: SparkSession,
             bits=64, max_hamming=3, bucket_cap=5000)
 
     for seq in range(3):
-        land(seq)
+        _land(sh, seq, ["doc_id", "simhash"], src, stage)
     drain()
     folded = compact_batch_store(spark, state_p,
                                  rows_per_key=("doc_id", 4))
@@ -288,14 +285,9 @@ def streaming_near_dedup_compacted_report(spark: SparkSession,
             f"compacted-stream gate: expected to fold 2 state "
             f"generations, folded {folded}")
     compact_batch_store(spark, kept_p)
-    land(3)
+    _land(sh, 3, ["doc_id", "simhash"], src, stage)
     drain()  # micro-batch 3 probes the compacted store
-    kept = (spark.read.parquet(kept_p).select("doc_id")
-            .withColumn("_k", F.lit(True)))
-    return (sh.select("doc_id", "batch_seq")
-            .join(kept, "doc_id", "left")
-            .select("doc_id", "batch_seq",
-                    F.coalesce("_k", F.lit(False)).alias("kept")))
+    return _kept_flags(sh, kept_p)
 
 
 ORACLE_STREAMING_NEAR_DEDUP_COMPACTED = _incr_oracle(
@@ -329,17 +321,8 @@ def streaming_text_near_dedup_report(spark: SparkSession,
     state_p = _scratch("stnd_state")
     ckpt = _scratch("stnd_ckpt")
     stage = _scratch("stnd_stage")
-    t0 = 1_700_000_000
     for seq in range(3):
-        d = os.path.join(stage, f"b{seq}")
-        (slim.filter(F.col("batch_seq") == seq)
-         .select("doc_id", "text")
-         .coalesce(1).write.parquet(d))
-        part = next(f for f in os.listdir(d)
-                    if f.endswith(".parquet"))
-        dst = os.path.join(src, f"batch{seq}.parquet")
-        shutil.copyfile(os.path.join(d, part), dst)
-        os.utime(dst, (t0 + 1000 * seq, t0 + 1000 * seq))
+        _land(slim, seq, ["doc_id", "text"], src, stage)
 
     schema = T.StructType([T.StructField("doc_id", T.LongType()),
                            T.StructField("text", T.StringType())])
@@ -347,12 +330,7 @@ def streaming_text_near_dedup_report(spark: SparkSession,
         stream_from_directory(spark, src, schema,
                               max_files_per_trigger=1),
         kept_p, state_p, ckpt)
-    kept = (spark.read.parquet(kept_p).select("doc_id")
-            .withColumn("_k", F.lit(True)))
-    return (slim.select("doc_id", "batch_seq")
-            .join(kept, "doc_id", "left")
-            .select("doc_id", "batch_seq",
-                    F.coalesce("_k", F.lit(False)).alias("kept")))
+    return _kept_flags(slim, kept_p)
 
 
 gate(streaming_text_near_dedup_report, ORACLE_TEXT_NEAR_DEDUP_INCREMENTAL)

@@ -18,7 +18,6 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import re
-import shutil
 from typing import Iterator
 
 import pandas as pd
@@ -117,131 +116,126 @@ def run_available_now(stream_df: DataFrame, sink_path: str, checkpoint: str,
     q.awaitTermination()
 
 
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API, not
-    os.path.isdir (ADVICE r11): the state store can live on HDFS/S3/
-    any Hadoop-supported filesystem, where a driver-local isdir is
-    always False — state would silently be treated as absent every
-    micro-batch and cross-batch near-dedup would degrade to per-batch
-    dedup with no error, the opposite of the fail-loudly intent."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(hpath)
+def _commit_micro_batch(batch_df: DataFrame, batch_id: int,
+                        kept_path: str, state_path: str, step) -> None:
+    """The commit both near-dedup foreachBatch bodies share.
+    ``step(committed)`` runs the body's operator on ``batch_df`` and
+    returns ``(kept, delta)``: ``committed(path, fields)`` reads the
+    generations of a store committed before this batch (``fields`` plus
+    the batch_id partition column; None while no state exists), and
+    ``delta(kept_back)`` maps the kept rows read back from disk to the
+    batch's state rows.
 
+    Store layout: survivors land under ``kept_path/batch_id=N/`` and
+    their state rows under ``state_path/batch_id=N/``, each written
+    ``mode("overwrite")`` into ITS OWN partition directory, so a
+    foreachBatch retry (at-least-once delivery) overwrites the same
+    subdirs instead of duplicating rows. The state is written strictly
+    AFTER the kept rows: ``state_path`` existing implies every
+    generation it references has its kept rows on disk, and a crash
+    between the two writes is healed by the retry's overwrite. The pair
+    is idempotent per batch id even though it is not atomic.
 
-def _band_state_schema(batch_df: DataFrame, id_col: str) -> T.StructType:
-    """Explicit read schema for the band-row state store — (blk, fp,
-    id, batch_id), the fp_band_rows shape plus the batch_id partition
-    column. Explicit rather than inferred (ADVICE r11): a micro-batch
-    that kept zero rows leaves a batch_id=N dir with no schema-bearing
-    part file, and an inference-based read of a store whose every
-    generation is empty fails with 'unable to infer schema'."""
-    return T.StructType([
-        T.StructField("blk", T.StringType()),
-        T.StructField("fp", T.LongType()),
-        T.StructField(id_col, batch_df.schema[id_col].dataType),
-        T.StructField("batch_id", T.LongType()),
-    ])
+    Retry window (ADVICE r11, the high-severity one): the store reads
+    filter ``batch_id < current``. Without the filter, a retry of batch
+    N that crashed after the state write but before the checkpoint
+    commit re-reads ITS OWN rows as state; every kept row is a
+    near-duplicate of itself, so the probe drops all of them and the
+    retry overwrites both partitions with empty data — silent loss of
+    the batch's survivors. foreachBatch ids increase monotonically
+    (checkpoint-backed), so ``batch_id < current`` is exactly
+    "everything committed before me".
+
+    State existence is checked through the Hadoop FileSystem API, not
+    os.path.isdir or a broad except (ADVICE r11): on HDFS/S3 a
+    driver-local isdir is always False, which would silently degrade
+    cross-batch dedup to per-batch dedup, and a CORRUPT store must fail
+    the query loudly at the read instead of re-admitting every
+    near-duplicate as a "first batch". Both stores are read with
+    explicit schemas: a micro-batch that kept zero rows leaves a
+    batch_id=N dir with no schema-bearing part file, which inference
+    cannot read.
+
+    The kept write is the batch's one materialization (r13, guide §2.4
+    job economy): ``delta`` reads the just-written kept partition back
+    (bit-identical rows by construction) instead of an eager
+    checkpoint job."""
+    spark = batch_df.sparkSession
+    hstate = spark._jvm.org.apache.hadoop.fs.Path(state_path)
+    has_state = hstate.getFileSystem(
+        spark._jsc.hadoopConfiguration()).exists(hstate)
+
+    def committed(path: str, fields: list) -> DataFrame | None:
+        if not has_state:
+            return None
+        schema = T.StructType(
+            list(fields) + [T.StructField("batch_id", T.LongType())])
+        return (spark.read.schema(schema).parquet(path)
+                .filter(F.col("batch_id") < F.lit(int(batch_id)))
+                .drop("batch_id"))
+
+    kept, delta = step(committed)
+    kdir = os.path.join(kept_path, f"batch_id={int(batch_id)}")
+    kept.write.mode("overwrite").parquet(kdir)
+    delta(spark.read.schema(batch_df.schema).parquet(kdir)) \
+        .write.mode("overwrite").parquet(
+            os.path.join(state_path, f"batch_id={int(batch_id)}"))
 
 
 def near_dedup_micro_batch(batch_df: DataFrame, batch_id: int,
                            kept_path: str, state_path: str,
                            fp_col: str = "fp", id_col: str = "doc_id",
                            bits: int = 64, max_hamming: int = 3,
-                           bucket_cap: int | None = None,
-                           broadcast_batch: bool = True) -> None:
+                           bucket_cap: int | None = None) -> None:
     """One micro-batch of the rolling near-dedup — the foreachBatch
     body of ``stream_near_dedup``, module-level so the at-least-once
-    RETRY window is directly testable (call it twice with the same
-    batch_id and assert the survivor set is unchanged).
-
-    Retry correctness (ADVICE r11, the high-severity window): the
-    state read keeps the ``batch_id`` partition column and filters
-    ``batch_id < current`` before probing. Without the filter, a retry
-    of batch N that crashed after the state write but before the
-    checkpoint commit re-reads ITS OWN band rows as state — every
-    previously-kept row is Hamming-0 from its own fingerprint, so the
-    probe drops all of them and the retry overwrites both partitions
-    with empty data: silent loss of the batch's survivors. foreachBatch
-    ids are monotonically increasing (checkpoint-backed), so
-    ``batch_id < current`` is exactly "everything committed before me"."""
+    retry window is directly testable (call it twice with the same
+    batch_id and assert the survivor set is unchanged). The state
+    store holds the fp_band_rows of every kept doc: (blk, fp, id).
+    Store layout and retry contract: ``_commit_micro_batch``."""
     from ..operators.dedup import fp_band_rows, near_dedup_incremental
 
-    spark = batch_df.sparkSession
-    # existence check through Hadoop FS, not a broad except: a CORRUPT
-    # state store must fail the query loudly at the read — silently
-    # treating it as "first batch" would re-admit every near-duplicate
-    if _hadoop_path_exists(spark, state_path):
-        state = (spark.read
-                 .schema(_band_state_schema(batch_df, id_col))
-                 .parquet(state_path)
-                 .filter(F.col("batch_id") < F.lit(int(batch_id)))
-                 .drop("batch_id"))
-    else:
-        state = None  # first batch: no state written yet
-    kept, _ = near_dedup_incremental(
-        batch_df, state, fp_col, id_col, bits, max_hamming,
-        bucket_cap, broadcast_batch)
-    # r13 (guide §2.4 job economy): the kept write IS the shared
-    # materialization — the state delta derives from reading the
-    # just-written kept partition back (bit-identical rows by
-    # construction), so the separate eager localCheckpoint job is
-    # gone. Explicit schema on the read-back: a zero-kept batch
-    # leaves a partition dir with no schema-bearing part file.
-    kdir = os.path.join(kept_path, f"batch_id={int(batch_id)}")
-    kept.write.mode("overwrite").parquet(kdir)
-    kept_back = spark.read.schema(batch_df.schema).parquet(kdir)
-    fp_band_rows(kept_back.filter(F.col(fp_col).isNotNull()),
-                 fp_col, id_col, bits, max_hamming) \
-        .write.mode("overwrite").parquet(
-            os.path.join(state_path, f"batch_id={int(batch_id)}"))
+    def step(committed):
+        state = committed(state_path, [
+            T.StructField("blk", T.StringType()),
+            T.StructField("fp", T.LongType()),
+            T.StructField(id_col, batch_df.schema[id_col].dataType)])
+        kept, _ = near_dedup_incremental(
+            batch_df, state, fp_col, id_col, bits, max_hamming, bucket_cap)
+        return kept, lambda back: fp_band_rows(
+            back.filter(F.col(fp_col).isNotNull()),
+            fp_col, id_col, bits, max_hamming)
+
+    _commit_micro_batch(batch_df, batch_id, kept_path, state_path, step)
 
 
-def _drain(stream_df: DataFrame, handle, checkpoint: str,
-           available_now: bool):
-    """Run ``handle`` per micro-batch through ``foreachBatch``. With
-    ``available_now`` drain what is there and return None; otherwise
-    return the running query (the caller owns awaitTermination/stop)."""
-    writer = (stream_df.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer.trigger(availableNow=True).start().awaitTermination()
-        return None
-    return writer.start()
+def _drain(stream_df: DataFrame, handle, checkpoint: str) -> None:
+    """Run ``handle`` per micro-batch through ``foreachBatch`` under
+    Trigger.AvailableNow: drain what is there, then return."""
+    (stream_df.writeStream.foreachBatch(handle)
+     .option("checkpointLocation", checkpoint)
+     .trigger(availableNow=True).start().awaitTermination())
 
 
 def stream_near_dedup(stream_df: DataFrame, kept_path: str,
                       state_path: str, checkpoint: str,
                       fp_col: str = "fp", id_col: str = "doc_id",
                       bits: int = 64, max_hamming: int = 3,
-                      bucket_cap: int | None = None,
-                      broadcast_batch: bool = True,
-                      available_now: bool = True):
+                      bucket_cap: int | None = None) -> None:
     """Rolling NEAR-dedup over a stream of fingerprinted documents —
     ``near_dedup_incremental`` wired into Structured Streaming via
     ``foreachBatch`` (the standard pattern for batch-incremental
     operators that manage their own state store): per micro-batch,
     probe the parquet-persisted band-row state, keep the survivors,
     append their band rows to the state. The per-batch body is
-    ``near_dedup_micro_batch`` (see there for the retry-window and
-    state-schema contracts).
-
-    Layout: survivors land under ``kept_path/batch_id=N/`` and their
-    band rows under ``state_path/batch_id=N/`` — each batch's write is
-    ``mode("overwrite")`` of ITS OWN partition directory, so a
-    foreachBatch retry (at-least-once delivery) overwrites the same
-    subdir instead of duplicating rows, and the state probe filters
-    ``batch_id < current`` so the retry never sees its own previous
-    write: the two-directory commit is idempotent per batch id even
-    though it is not atomic across the pair. Readers take
+    ``near_dedup_micro_batch``; its store layout and retry contract are
+    ``_commit_micro_batch``'s. Readers take
     ``spark.read.parquet(kept_path)`` (batch_id becomes a partition
     column — the arrival provenance).
 
-    ``available_now=True`` drains everything currently available and
-    stops (the ChainRunner-style daily semantics; the checkpoint makes
-    re-runs pick up only new files); False leaves a continuous query —
-    the caller owns awaitTermination then.
+    The drain runs under Trigger.AvailableNow: it processes everything
+    currently available and stops (the ChainRunner-style daily
+    semantics; the checkpoint makes re-runs pick up only new files).
 
     Scale: each micro-batch pays O(batch) work (see
     near_dedup_incremental — the state is probed via a broadcast of
@@ -255,9 +249,9 @@ def stream_near_dedup(stream_df: DataFrame, kept_path: str,
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         near_dedup_micro_batch(batch_df, batch_id, kept_path,
                                state_path, fp_col, id_col, bits,
-                               max_hamming, bucket_cap, broadcast_batch)
+                               max_hamming, bucket_cap)
 
-    return _drain(stream_df, handle, checkpoint, available_now)
+    _drain(stream_df, handle, checkpoint)
 
 
 def compact_batch_store(spark: SparkSession, path: str,
@@ -287,84 +281,56 @@ def compact_batch_store(spark: SparkSession, path: str,
     collapses to "compacted generation" — archive the column first if
     provenance must survive maintenance.
 
-    Swap protocol (the compact_files discipline,
-    operators/partition.py): the new layout is built in a temp sibling,
-    validated, then swapped in with two renames; data is never deleted
-    until the swap completes and a crash between the renames rolls back
-    on the next invocation. Local filesystem paths only (os.rename) —
-    object stores need their own atomic-swap primitive.
+    The new layout is built and validated in a temp sibling, then
+    swapped in by ``operators.partition.rebuild_dir`` (crash-safe,
+    local filesystem paths only). Validation before the swap: total
+    row count is preserved, and with ``rows_per_key=(col, n)`` every
+    key in the compacted store has exactly n rows (the band-row store
+    invariant: max_hamming+1 rows per kept doc). ``schema`` guards the
+    read the same way the micro-batch read is guarded (required if
+    EVERY generation may be empty). Returns the number of generations
+    folded (0 = no-op)."""
+    from ..operators.partition import rebuild_dir
 
-    Validation before the swap: total row count is preserved, and with
-    ``rows_per_key=(col, n)`` every key in the compacted store has
-    exactly n rows (the band-row store invariant: max_hamming+1 rows
-    per kept doc). ``schema`` guards the read the same way the
-    micro-batch read is guarded (required if EVERY generation may be
-    empty). Returns the number of generations folded (0 = no-op)."""
-    back = path.rstrip("/") + ".__compact_old__"
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    if os.path.exists(back):  # crash recovery, compact_files protocol
-        if os.path.exists(path):
-            shutil.rmtree(back)
-        else:
-            os.rename(back, path)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-
-    gens = sorted(int(m.group(1)) for e in os.listdir(path)
-                  if (m := re.fullmatch(r"batch_id=(\d+)", e)))
-    if len(gens) < 3:
-        return 0  # nothing worth folding (newest stays as-is anyway)
-    newest, fold_to = gens[-1], gens[0]
-
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    df = r.parquet(path)
-    if "batch_id" not in df.columns:
-        raise ValueError(
-            f"compact_batch_store: {path} is not a batch_id-partitioned "
-            "store")
-    before = df.count()
-    folded = (df.withColumn(
-        "batch_id",
-        F.when(F.col("batch_id") < newest, F.lit(fold_to))
-        .otherwise(F.col("batch_id"))))
-    (folded.repartition(target_files)
-     .write.partitionBy("batch_id").parquet(tmp))
-    check = spark.read.parquet(tmp)
-    after = check.count()
-    if after != before:
-        shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"compact_batch_store: rewrite lost rows ({before} -> "
-            f"{after}); original store untouched")
-    if rows_per_key is not None:
-        key, n = rows_per_key
-        bad = (check.groupBy(key).count()
-               .filter(F.col("count") != n).count())
-        if bad:
-            shutil.rmtree(tmp)
+    def build(tmp: str) -> int:
+        gens = sorted(int(m.group(1)) for e in os.listdir(path)
+                      if (m := re.fullmatch(r"batch_id=(\d+)", e)))
+        if len(gens) < 3:
+            return 0  # nothing worth folding (newest stays as-is anyway)
+        newest, fold_to = gens[-1], gens[0]
+        r = spark.read
+        if schema is not None:
+            r = r.schema(schema)
+        df = r.parquet(path)
+        if "batch_id" not in df.columns:
+            raise ValueError(
+                f"compact_batch_store: {path} is not a batch_id-partitioned "
+                "store")
+        before = df.count()
+        folded = (df.withColumn(
+            "batch_id",
+            F.when(F.col("batch_id") < newest, F.lit(fold_to))
+            .otherwise(F.col("batch_id"))))
+        (folded.repartition(target_files)
+         .write.partitionBy("batch_id").parquet(tmp))
+        check = spark.read.parquet(tmp)
+        after = check.count()
+        if after != before:
             raise RuntimeError(
-                f"compact_batch_store: {bad} keys violate the "
-                f"{n}-rows-per-{key} invariant; original store untouched")
-    os.rename(path, back)
-    os.rename(tmp, path)
-    shutil.rmtree(back)
-    return len(gens) - 1
+                f"compact_batch_store: rewrite lost rows ({before} -> "
+                f"{after}); original store untouched")
+        if rows_per_key is not None:
+            key, n = rows_per_key
+            bad = (check.groupBy(key).count()
+                   .filter(F.col("count") != n).count())
+            if bad:
+                raise RuntimeError(
+                    f"compact_batch_store: {bad} keys violate the "
+                    f"{n}-rows-per-{key} invariant; original store "
+                    "untouched")
+        return len(gens) - 1
 
-
-def _text_state_schema(batch_df: DataFrame,
-                       id_col: str) -> T.StructType:
-    """Explicit read schema for the LSH band-bucket state store —
-    (band, key, id, batch_id), the text_band_rows shape plus the
-    batch_id partition column (the _band_state_schema rationale: a
-    zero-kept generation has no schema-bearing part file)."""
-    return T.StructType([
-        T.StructField("band", T.IntegerType()),
-        T.StructField("key", T.StringType()),
-        T.StructField(id_col, batch_df.schema[id_col].dataType),
-        T.StructField("batch_id", T.LongType()),
-    ])
+    return rebuild_dir(path, build)
 
 
 def text_near_dedup_micro_batch(batch_df: DataFrame, batch_id: int,
@@ -375,71 +341,44 @@ def text_near_dedup_micro_batch(batch_df: DataFrame, batch_id: int,
                                 shingle_n: int = 3,
                                 threshold: float = 0.5,
                                 bucket_cap: int = 50,
-                                hash_family: str = "md5",
-                                broadcast_batch: bool = True) -> None:
+                                hash_family: str = "md5") -> None:
     """One micro-batch of the rolling TEXT near-dedup — the
     foreachBatch body of ``stream_text_near_dedup``, module-level so
-    the at-least-once retry window is directly testable. Same
-    contracts as ``near_dedup_micro_batch``: Hadoop-FS existence
-    check (corrupt state fails loudly; HDFS/S3 paths are seen),
-    explicit read schemas (a zero-kept generation cannot break
-    inference), and the ``batch_id < current`` probe filter so a
-    retry never reads its own previous write as state (every doc is
-    Jaccard-1.0 with itself — an unfiltered retry would drop the
-    whole batch and overwrite its partitions empty).
-
-    Store layout: survivors (the batch's FULL rows — this store IS
-    the kept corpus the Jaccard verify stage joins back to) land
-    under ``kept_path/batch_id=N/``; their LSH band-bucket rows under
-    ``state_path/batch_id=N/``. The state is written strictly AFTER
-    the kept rows, so state_path existing implies every generation it
-    references has its kept text on disk — a crash between the two
-    writes is healed by the retry's overwrite."""
+    the at-least-once retry window is directly testable (every doc is
+    Jaccard-1.0 with itself, so the retry window loses the whole batch
+    here too). The state store holds the LSH band-bucket rows of every
+    kept doc: (band, key, id); the kept store holds the batch's FULL
+    rows and doubles as the corpus the Jaccard verify stage joins back
+    to. Store layout and retry contract: ``_commit_micro_batch``."""
     from ..operators.dedup import (
         text_band_rows, text_near_dedup_incremental)
 
-    spark = batch_df.sparkSession
-    if _hadoop_path_exists(spark, state_path):
-        cur = F.col("batch_id") < F.lit(int(batch_id))
-        state = (spark.read
-                 .schema(_text_state_schema(batch_df, id_col))
-                 .parquet(state_path).filter(cur).drop("batch_id"))
-        corpus = (spark.read
-                  .schema(T.StructType(
-                      list(batch_df.schema.fields)
-                      + [T.StructField("batch_id", T.LongType())]))
-                  .parquet(kept_path).filter(cur).drop("batch_id"))
-    else:
-        state = corpus = None  # first batch (kept-only on disk can
-        # only mean batch 0 crashed mid-pair; its retry rewrites it)
     # ONE MinHash pass per micro-batch (r12, guide §2.4): the band rows
     # are computed here, injected into the operator (which otherwise
-    # derives its own), and the state delta below is the semi-join of
-    # this SAME checkpointed frame against the kept ids — signatures
-    # are per-doc deterministic, so the delta rows are bit-identical to
-    # the old text_band_rows(kept) recompute that re-shingled and
-    # re-hashed every kept document a second time.
+    # derives its own), and the state delta is the semi-join of this
+    # SAME checkpointed frame against the kept ids — signatures are
+    # per-doc deterministic, so the delta rows are bit-identical to a
+    # text_band_rows(kept) recompute that would re-shingle and re-hash
+    # every kept document a second time.
     batch_bands = text_band_rows(
         batch_df, text_col, id_col, num_hashes, bands, shingle_n,
         hash_family).localCheckpoint(eager=False)
-    kept, _ = text_near_dedup_incremental(
-        batch_df, state, corpus, text_col, id_col, num_hashes, bands,
-        shingle_n, threshold, bucket_cap, hash_family,
-        broadcast_batch, batch_bands=batch_bands)
-    # r13 (guide §2.4 job economy): the kept write IS the shared
-    # materialization — the state delta semi-joins the checkpointed
-    # batch_bands against the just-written kept partition's ids
-    # (bit-identical rows by construction), so the separate eager
-    # localCheckpoint job is gone. Explicit schema on the read-back:
-    # a zero-kept batch leaves no schema-bearing part file.
-    kdir = os.path.join(kept_path, f"batch_id={int(batch_id)}")
-    kept.write.mode("overwrite").parquet(kdir)
-    kept_ids = (spark.read.schema(batch_df.schema).parquet(kdir)
-                .select(id_col))
-    (batch_bands.join(kept_ids, id_col, "left_semi")
-     .select("band", "key", id_col)
-     .write.mode("overwrite").parquet(
-         os.path.join(state_path, f"batch_id={int(batch_id)}")))
+
+    def step(committed):
+        state = committed(state_path, [
+            T.StructField("band", T.IntegerType()),
+            T.StructField("key", T.StringType()),
+            T.StructField(id_col, batch_df.schema[id_col].dataType)])
+        corpus = committed(kept_path, batch_df.schema.fields)
+        kept, _ = text_near_dedup_incremental(
+            batch_df, state, corpus, text_col, id_col, num_hashes, bands,
+            shingle_n, threshold, bucket_cap, hash_family,
+            batch_bands=batch_bands)
+        return kept, lambda back: (
+            batch_bands.join(back.select(id_col), id_col, "left_semi")
+            .select("band", "key", id_col))
+
+    _commit_micro_batch(batch_df, batch_id, kept_path, state_path, step)
 
 
 def stream_text_near_dedup(stream_df: DataFrame, kept_path: str,
@@ -450,9 +389,7 @@ def stream_text_near_dedup(stream_df: DataFrame, kept_path: str,
                            shingle_n: int = 3,
                            threshold: float = 0.5,
                            bucket_cap: int = 50,
-                           hash_family: str = "md5",
-                           broadcast_batch: bool = True,
-                           available_now: bool = True):
+                           hash_family: str = "md5") -> None:
     """Rolling TEXT near-dedup over a document stream —
     ``text_near_dedup_incremental`` wired into Structured Streaming
     via ``foreachBatch``, completing the symmetry: the classic
@@ -460,8 +397,8 @@ def stream_text_near_dedup(stream_df: DataFrame, kept_path: str,
     incremental (text_near_dedup_incremental) and streaming form,
     exactly like the fingerprint family (near_dedup /
     near_dedup_incremental / stream_near_dedup). Per micro-batch the
-    body is ``text_near_dedup_micro_batch`` (see there for the
-    retry-window, schema and store-layout contracts). Readers take
+    body is ``text_near_dedup_micro_batch``; the drain is
+    ``stream_near_dedup``'s (AvailableNow, checkpointed). Readers take
     ``spark.read.parquet(kept_path)`` — the shrunk corpus with
     batch_id arrival provenance. Maintenance: ``compact_batch_store``
     folds both stores' generations between drains (both are
@@ -476,9 +413,9 @@ def stream_text_near_dedup(stream_df: DataFrame, kept_path: str,
         text_near_dedup_micro_batch(
             batch_df, batch_id, kept_path, state_path, text_col,
             id_col, num_hashes, bands, shingle_n, threshold,
-            bucket_cap, hash_family, broadcast_batch)
+            bucket_cap, hash_family)
 
-    return _drain(stream_df, handle, checkpoint, available_now)
+    _drain(stream_df, handle, checkpoint)
 
 
 _SESSION_SCHEMA = T.StructType([

@@ -564,6 +564,29 @@ def test_chain_df_job_count_is_constant_in_chain_length(spark, tmp_path):
     assert jobs[4] == jobs[16], jobs
 
 
+def test_overlay_reads_run_no_job(spark, tmp_path):
+    """An overlay's data/ schema is in its manifest: building its df(),
+    and a chain_df with an overlay link, runs no Spark job."""
+    from perfbench.harness import JobCounter
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, s string")
+    base = Dataset.write(df, str(tmp_path / "base"))
+    ov = Dataset.write_overlay(
+        str(tmp_path / "ov"), base,
+        new_cols=spark.createDataFrame([(1, 2.5)], "k bigint, x double"),
+        key="k", previous=base)
+    counter = JobCounter(spark)
+    try:
+        gid = counter.group("overlay-df")
+        ov_df = ov.df(spark)
+        chained = ov.chain_df(spark, allow_missing_columns=True)
+        assert counter.jobs(gid) == []
+    finally:
+        counter.clear()
+    assert sorted(ov_df.collect()) == [(1, "a", 2.5), (2, "b", None)]
+    assert chained.count() == 4
+
+
 def test_linked_manifest_without_chain_cache_is_refused(tmp_path):
     """A manifest that links ``previous`` but carries no
     chain_depth/chain_cache cannot be resolved from the cache; loading
@@ -687,8 +710,7 @@ def test_writer_manifests_are_pinned(spark, tmp_path):
         del m["id"], m["created"]
         return m
 
-    schema = {"columns": {"k": "bigint", "s": "string"},
-              "nullable": {"k": True, "s": True}}
+    schema = {"columns": {"k": "bigint", "s": "string"}}
     # Dataset.write also keeps the exact schema JSON; cache entries of
     # its datasets carry that JSON's id
     schema_json = (
@@ -718,7 +740,11 @@ def test_writer_manifests_are_pinned(spark, tmp_path):
         "chain_depth": 2, "chain_cache": [entry("base"), entry("next")]}
     assert pinned(ov) == {
         "version": 1, "caption": "c2", "filename": None, "hashlabel": None,
-        "parent": "<root>/base", "overlay": {"key": "k", "cols": ["x"]},
+        "parent": "<root>/base",
+        "overlay": {"key": "k", "cols": ["x"], "schema": (
+            '{"fields":[{"metadata":{},"name":"k","nullable":true,'
+            '"type":"long"},{"metadata":{},"name":"x","nullable":true,'
+            '"type":"double"}],"type":"struct"}')},
         "virtual": {"z": "k + 1"}, "exclude": ["s"],
         "previous": "<root>/bk",
         "columns": {"k": "bigint", "x": "double", "z": "expr"},

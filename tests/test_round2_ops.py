@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from accelerator_spark import queries as Q
 from accelerator_spark.queries._common import _events
-from accelerator_spark.operators.partition import compact_files
+from accelerator_spark.operators.partition import compact_files, rebuild_dir
 from tests.conftest import load
 
 
@@ -40,6 +40,39 @@ def test_compact_files_preserves_content(spark, sf_dir):
     back = spark.read.parquet(path)
     assert back.count() == docs.count()
     assert back.select(F.bit_xor(F.xxhash64("doc_id", "text"))).first()[0] == before
+
+
+def test_rebuild_dir_swap_recovery_and_failed_build(tmp_path):
+    """rebuild_dir's crash-safe swap: a failed build leaves the dir
+    untouched and no temp sibling behind; a crash between the renames
+    (original parked at .__compact_old__, dir missing) is rolled back
+    before the next build; a build that writes nothing swaps nothing."""
+    path = str(tmp_path / "store")
+    os.makedirs(path)
+    (tmp_path / "store" / "a").write_text("old")
+
+    def failing(tmp):
+        os.makedirs(tmp)
+        raise RuntimeError("validation failed")
+
+    with pytest.raises(RuntimeError, match="validation failed"):
+        rebuild_dir(path, failing)
+    assert os.listdir(path) == ["a"]
+    assert sorted(os.listdir(tmp_path)) == ["store"]
+
+    os.rename(path, path + ".__compact_old__")  # crash between renames
+
+    def build(tmp):
+        assert os.listdir(path) == ["a"]  # rolled back before building
+        os.makedirs(tmp)
+        open(os.path.join(tmp, "b"), "w").close()
+        return 7
+
+    assert rebuild_dir(path, build) == 7
+    assert os.listdir(path) == ["b"]
+    assert rebuild_dir(path, lambda tmp: 0) == 0
+    assert os.listdir(path) == ["b"]
+    assert sorted(os.listdir(tmp_path)) == ["store"]
 
 
 def test_partitioned_write_prunes(spark, sf_dir):

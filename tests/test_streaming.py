@@ -644,6 +644,31 @@ def test_text_near_dedup_micro_batch_retry_window(spark, tmp_path):
     assert st.count() == 4 * len(first)  # 4 bands per kept doc
 
 
+def test_text_near_dedup_micro_batch_empty_batch_then_data(spark,
+                                                          tmp_path):
+    """A TEXT micro-batch that keeps ZERO rows leaves schema-less
+    batch_id=N dirs in both stores; the next batch's state and corpus
+    reads must still work (explicit schemas) and dedup against the
+    earlier generations."""
+    from accelerator_spark.streaming.structured import (
+        text_near_dedup_micro_batch)
+
+    schema = "doc_id long, text string"
+    kept_p, state_p = str(tmp_path / "kept"), str(tmp_path / "state")
+    b0 = spark.createDataFrame([(1, _T1), (2, _T2)], schema)
+    text_near_dedup_micro_batch(b0, 0, kept_p, state_p)
+    # every doc of batch 1 is an exact duplicate of a kept doc
+    b1 = spark.createDataFrame([(3, _T1), (4, _T2)], schema)
+    text_near_dedup_micro_batch(b1, 1, kept_p, state_p)
+    kept = spark.read.parquet(kept_p)
+    assert kept.filter("batch_id = 1").count() == 0
+    b2 = spark.createDataFrame([(5, _T2), (7, _T7)], schema)
+    text_near_dedup_micro_batch(b2, 2, kept_p, state_p)
+    got = {r.doc_id for r in spark.read.parquet(kept_p).collect()}
+    assert got == {1, 2, 7}  # 5 dropped against generation-0 state
+    assert spark.read.parquet(state_p).count() == 4 * len(got)
+
+
 def test_stream_text_near_dedup_matches_direct(spark, tmp_path):
     """Three document files drained as three micro-batches
     (AvailableNow + maxFilesPerTrigger=1), with compact_batch_store
