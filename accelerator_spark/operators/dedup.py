@@ -158,6 +158,9 @@ def _lsh_band_rows(sig: DataFrame, id_col: str,
     persisted state rows (the ``_hamming_band_array_expr`` no-drift
     discipline: a key-scheme drift between the batch and the
     accumulated state would silently void recall)."""
+    if num_hashes % bands != 0:  # not assert: survives python -O
+        raise ValueError(
+            f"num_hashes {num_hashes} must divide into bands {bands}")
     r = num_hashes // bands
     # ONE parsed expression for the whole band array (driver economy,
     # see minhash_signature above); sig[i] is 0-based in Spark SQL
@@ -184,9 +187,6 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text", id_col: str = 
     bands -> groupBy (band, key) (shuffle 2) -> in-bucket pair expansion
     capped at ``bucket_cap`` (skew guard) -> distinct pairs (shuffle 3).
     """
-    if num_hashes % bands != 0:  # not assert: survives python -O
-        raise ValueError(
-            f"num_hashes {num_hashes} must divide into bands {bands}")
     sig = minhash_signature(df, text_col, id_col, num_hashes, shingle_n,
                             hash_family=hash_family)
     exploded = _lsh_band_rows(sig, id_col, num_hashes, bands)
@@ -275,8 +275,9 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 def _hamming_band_array_expr(fp_col: str, bits: int,
                              max_hamming: int) -> Column:
     """The ``max_hamming + 1`` pigeonhole band keys of the signed
-    fingerprint column named ``fp_col``, as one array — shared by
-    ``fp_near_pairs`` and the incremental/streaming paths so the
+    fingerprint column named ``fp_col``, as one array — exploded only
+    by ``fp_band_rows``, which ``fp_near_pairs`` and the
+    incremental/streaming paths share, so the
     persisted state rows carry IDENTICAL keys (a key-scheme drift
     between the batch and the accumulated state would silently void
     recall). Bits distribute EVENLY over the bands (ceil-width slicing
@@ -316,34 +317,18 @@ def fp_near_pairs(df: DataFrame, fp_col: str = "fp",
     (doc_a, doc_b, hamming) with doc_a < doc_b. Scale: the block key
     bounds the join fanout; ``bucket_cap`` drops degenerate blocks
     (the minhash bucket_cap contract)."""
-    if bits > 64:
-        raise ValueError(f"fp_near_pairs: bits={bits} exceeds the "
-                         "64-bit fingerprint word")
-    if max_hamming >= bits:
-        # pigeonhole needs max_hamming+1 bands over `bits` bits; at
-        # max_hamming >= bits a pair differing in EVERY bit is still
-        # within distance yet shares no band — silently under-recalling
-        # instead of honoring the documented 100% guarantee (review r4)
-        raise ValueError(
-            f"fp_near_pairs: max_hamming {max_hamming} >= bits "
-            f"{bits} voids the pigeonhole recall guarantee — raise bits "
-            "or lower max_hamming")
-    fp = _qcol(fp_col).cast("long")
-    band_arr = _hamming_band_array_expr(fp_col, bits, max_hamming)
     # r12 (guide §2.4/§8): the band-row frame feeds BOTH self-join
     # sides and the bucket_cap size agg, and Catalyst/AQE do NOT reuse
     # the three copies of its subtree — so the whole upstream
     # fingerprint DAG (often a full tokenize+hash pass) executed up to
     # three times per call. One lazy localCheckpoint shares the single
-    # materialization; the frame is (id, fp, blk) only — max_hamming+1
+    # materialization; the frame is (blk, fp, id) only — max_hamming+1
     # small rows per doc, the same proxy-sized unit the incremental
     # state store persists, so it is cheap at any scale. Measured
     # 3.6 s -> 2.4 s warm (15.9 -> 4.3 cold) on simhash_near_dup_pairs64
     # at sf0.1, outputs identical.
-    blocks = df.select(
-        id_col, fp.alias("_fp"),
-        F.explode(band_arr).alias("blk"),
-    ).localCheckpoint(eager=False)
+    blocks = fp_band_rows(df, fp_col, id_col, bits,
+                          max_hamming).localCheckpoint(eager=False)
     if bucket_cap is not None:
         # skew guard (same contract as minhash bucket_cap): drop blocks
         # whose membership exceeds the cap — at 16 bits the fingerprint
@@ -360,7 +345,7 @@ def fp_near_pairs(df: DataFrame, fp_col: str = "fp",
                   .filter(F.col("_bn") <= bucket_cap).drop("_bn")
                   .localCheckpoint(eager=False))
     a, b = blocks.alias("a"), blocks.alias("b")
-    ham = F.bit_count(F.col("a._fp").bitwiseXOR(F.col("b._fp")))
+    ham = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
     return (
         a.join(b, (F.col("a.blk") == F.col("b.blk"))
                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
@@ -379,11 +364,6 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc
     fingerprints then the generic banded-Hamming join
     (``fp_near_pairs`` — pigeonhole banding, exact bit_count(xor)
     filter; see there for the recall and bucket_cap contracts)."""
-    if max_hamming >= bits:
-        raise ValueError(
-            f"simhash_near_pairs: max_hamming {max_hamming} >= bits "
-            f"{bits} voids the pigeonhole recall guarantee — raise bits "
-            "or lower max_hamming")
     sh = simhash(df, text_col, id_col, bits)
     return fp_near_pairs(sh, "simhash", id_col, bits, max_hamming,
                          bucket_cap)
@@ -1021,10 +1001,25 @@ def fp_band_rows(df: DataFrame, fp_col: str = "fp",
     (max_hamming + 1 rows per doc, keys from ``_hamming_band_array_expr``
     so they always match what fp_near_pairs blocks on). Exposed so
     sinks can append ONLY a batch's kept band rows (a delta) instead
-    of rewriting the whole accumulated state."""
-    fp = F.col(fp_col).cast("long")
+    of rewriting the whole accumulated state.
+
+    Every fingerprint band row in this module comes from here, so the
+    pigeonhole checks live here too: ``max_hamming + 1`` bands over
+    ``bits`` bits of one 64-bit word."""
+    if bits > 64:
+        raise ValueError(f"bits={bits} exceeds the 64-bit fingerprint "
+                         "word")
+    if max_hamming >= bits:
+        # pigeonhole needs max_hamming+1 bands over `bits` bits; at
+        # max_hamming >= bits a pair differing in EVERY bit is still
+        # within distance yet shares no band — silently under-recalling
+        # instead of honoring the documented 100% guarantee (review r4)
+        raise ValueError(
+            f"max_hamming {max_hamming} >= bits {bits} voids the "
+            "pigeonhole recall guarantee — raise bits or lower "
+            "max_hamming")
     return df.select(
-        F.col(id_col), fp.alias("fp"),
+        F.col(id_col), _qcol(fp_col).cast("long").alias("fp"),
         F.explode(
             _hamming_band_array_expr(fp_col, bits, max_hamming)
         ).alias("blk"),
@@ -1055,12 +1050,8 @@ def state_near_ids(new_batch: DataFrame, state: DataFrame,
     strain the driver as a broadcast build side): the probe becomes a
     shuffled hash join on the band key — both sides exchange once,
     candidates stay band-bounded."""
-    fp = F.col(fp_col).cast("long")
-    bb = new_batch.select(
-        F.col(id_col).alias("_bid"), fp.alias("_bfp"),
-        F.explode(
-            _hamming_band_array_expr(fp_col, bits, max_hamming)
-        ).alias("blk"))
+    bb = fp_band_rows(new_batch, fp_col, id_col, bits, max_hamming).select(
+        F.col(id_col).alias("_bid"), F.col("fp").alias("_bfp"), "blk")
     if broadcast_batch:
         bb = F.broadcast(bb)
     near = (state.join(bb, "blk")
@@ -1116,14 +1107,6 @@ def near_dedup_incremental(new_batch: DataFrame,
     batches that rival the corpus), the in-batch step is O(batch)
     fp_near_pairs work, and the state grows by max_hamming+1 rows per
     kept doc — fingerprints and ids only, never text."""
-    if bits > 64:
-        raise ValueError(
-            f"near_dedup_incremental: bits={bits} exceeds the 64-bit "
-            "fingerprint word")
-    if max_hamming >= bits:
-        raise ValueError(
-            f"near_dedup_incremental: max_hamming {max_hamming} >= "
-            f"bits {bits} voids the pigeonhole recall guarantee")
     if state is not None:
         near = state_near_ids(new_batch, state, fp_col, id_col, bits,
                               max_hamming, broadcast_batch)
@@ -1170,9 +1153,6 @@ def text_band_rows(df: DataFrame, text_col: str = "text",
     state. (Whitespace-only text is NOT null: per _word_shingles_expr it
     yields one empty partial shingle, so blank docs near-dup each
     other — the batch pipeline's semantics, unchanged.)"""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes {num_hashes} must divide into bands {bands}")
     sig = minhash_signature(df, text_col, id_col, num_hashes, shingle_n,
                             hash_family=hash_family)
     return (_lsh_band_rows(sig, id_col, num_hashes, bands)

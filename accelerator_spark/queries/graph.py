@@ -153,29 +153,23 @@ def recursive_copurchase_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     same recursive CTE on Spark re-executed the edge build every
     iteration (~17 s at sf0.1; VERDICT r2 #6). The Spark side is now an
     iterative DataFrame BFS in the connected_components shape
-    (operators/dedup.py:218): the expensive co-purchase edge aggregate
-    runs ONCE, is localCheckpoint-truncated, and the 3 walk expansions
+    (operators/dedup.py:218): the co-purchase edge aggregate
+    (``cooccurrence_edges``, then ``symmetrize``) runs ONCE, is
+    localCheckpoint-truncated, and the 3 walk expansions
     are broadcast joins over a ≤400-row symmetric edge list carrying a
     walk-multiplicity counter (UNION ALL walk counts = sum of counts
     along in-edges). min-distance and walk counts match the recursive
     working-table semantics exactly."""
-    li = _t(spark, sf_dir, "lineitem")
-    po = (li.filter(F.col("l_partkey") < 500)
-          .select("l_orderkey", "l_partkey").distinct())
-    a, b = po.alias("a"), po.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-         .groupBy(F.col("a.l_partkey").alias("src"),
-                  F.col("b.l_partkey").alias("dst"))
-         .agg(F.count(F.lit(1)).alias("w"))
-         .filter(F.col("w") >= 2))
-    top = (e.orderBy(F.col("w").desc(), "src", "dst").limit(200)
-           .select("src", "dst"))
-    sym = top.union(
-        top.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)  # edge build computed once, lineage
-    # cut — LAZY (r13 §2.4): the final walk action materializes it and
-    # every level's cache in ONE action instead of one job per level
+    from ..operators.graph import cooccurrence_edges, symmetrize
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_partkey") < 500)
+    e = cooccurrence_edges(li, group_col="l_orderkey",
+                           item_col="l_partkey", min_weight=2)
+    top = e.orderBy(F.col("weight").desc(), "src", "dst").limit(200)
+    # edge build computed once, lineage cut — LAZY (r13 §2.4): the
+    # final walk action materializes it and every level's cache in ONE
+    # action instead of one job per level
+    sym = symmetrize(top).localCheckpoint(eager=False)
     seed = (sym.agg(F.min("src").alias("node"))
             .withColumn("cnt", F.lit(1).cast("long")))
     frontier = seed

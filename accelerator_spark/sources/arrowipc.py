@@ -35,6 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import shards
+
 
 class ArrowIpcError(ValueError):
     """Not Arrow IPC, or a type outside the supported mapping."""
@@ -179,9 +181,12 @@ def arrow_export(df: DataFrame, path: str, layout: str = "file",
     (``part-<hex>.arrow`` / ``.arrows`` by layout); empty partitions
     write nothing. Returns the row count written. Repartition first to
     control file count — the single knob that matters for the
-    downstream single-node reader."""
+    downstream single-node reader. Task commit: each file is a
+    ``shards.Shard``; raises ArrowIpcError at entry when
+    spark.speculation=true."""
     import pyarrow as pa
 
+    shards.require_no_speculation(df, ArrowIpcError, "arrow_export")
     if layout not in ("file", "stream"):
         raise ArrowIpcError(f"layout must be file/stream, not {layout!r}")
     os.makedirs(path, exist_ok=True)
@@ -190,20 +195,15 @@ def arrow_export(df: DataFrame, path: str, layout: str = "file",
     ext = ".arrow" if layout == "file" else ".arrows"
 
     def write(batches):
-        import pandas as pd
         import pyarrow.ipc as ipc
 
         n = 0
-        writer = None
-        sink = None
-        fname = None
+        shard = writer = None
         for pdf in batches:
             if writer is None:
-                fname = os.path.join(
-                    path, "part-" + os.urandom(8).hex() + ext)
-                sink = pa.OSFile(fname, "wb")
+                shard = shards.Shard(path, shards.part_name(ext))
                 writer = (ipc.new_file if layout == "file"
-                          else ipc.new_stream)(sink, pa_schema)
+                          else ipc.new_stream)(shard.fh, pa_schema)
             for lo in range(0, len(pdf), rows_per_batch):
                 chunk = pdf.iloc[lo:lo + rows_per_batch]
                 tbl = pa.Table.from_pandas(
@@ -212,8 +212,7 @@ def arrow_export(df: DataFrame, path: str, layout: str = "file",
                 n += len(chunk)
         if writer is not None:
             writer.close()
-            sink.close()
-        yield pd.DataFrame({"n": [n]})
+            shard.commit()
+        return n
 
-    counts = df.mapInPandas(write, schema="n long").collect()
-    return sum(r["n"] for r in counts)
+    return shards.write_partitions(df, write)

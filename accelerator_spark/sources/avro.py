@@ -55,6 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import shards
+
 _MAGIC = b"Obj\x01"
 
 
@@ -1025,7 +1027,12 @@ def avro_export(df: DataFrame, path: str, codec: str = "deflate",
     the Python hop delivers session-local naive datetimes, and
     encoding those as spec-UTC timestamp-micros under any other zone
     would shift every instant. TimestampNTZType is zone-free and
-    always safe."""
+    always safe.
+
+    Task commit: each ``part-<pid>.avro`` is a ``shards.Shard``;
+    raises AvroError at entry when spark.speculation=true (two twins
+    of one partition would share one temp name)."""
+    shards.require_no_speculation(df, AvroError, "avro_export")
     if codec not in ("null", "deflate", "bzip2", "xz"):
         # validate BEFORE mode='overwrite' deletes anything: executors
         # would reject the codec anyway, but only after the previous
@@ -1094,11 +1101,9 @@ def avro_export(df: DataFrame, path: str, codec: str = "deflate",
                     else:
                         rec[c] = v
                 records.append(rec)
-        blob = avro_encode_file(schema_json, records, codec=codec)
-        out = os.path.join(path, f"part-{part_id:05d}.avro")
-        with open(out, "wb") as f:
-            f.write(blob)
-        yield pd.DataFrame({"file": [out], "n": [len(records)]})
+        shard = shards.Shard(path, f"part-{part_id:05d}.avro")
+        shard.fh.write(avro_encode_file(schema_json, records, codec=codec))
+        shard.commit()
+        return 1
 
-    counts = df.mapInPandas(write_part, schema="file string, n long").collect()
-    return len(counts)
+    return shards.write_partitions(df, write_part)

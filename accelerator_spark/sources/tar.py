@@ -41,26 +41,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import shards
+from .shards import ZSTD_MAGIC  # noqa: F401  (re-exported)
+
 
 class TarError(ValueError):
     """Malformed or unsupported-by-scope tar input."""
-
-
-def require_no_speculation(df: DataFrame, err_cls: type, opname: str) -> None:
-    """Guard for randomly-named rename-on-close shard sinks (tar_export /
-    warc_export / tensor_export): a speculative task twin that runs to
-    completion would commit a DUPLICATE shard under a fresh random name —
-    rename-on-close makes each commit atomic, not exclusive. The
-    docstrings said "speculation must stay off"; this makes the contract
-    executable (ADVICE r11): fail at export entry instead of silently
-    duplicating data on a cluster with spark.speculation=true."""
-    spec = df.sparkSession.conf.get("spark.speculation", "false")
-    if str(spec).strip().lower() == "true":
-        raise err_cls(
-            f"{opname}: spark.speculation=true would commit duplicate "
-            "randomly-named shards (a completed speculative task twin "
-            "renames its own copy into the output directory) — disable "
-            "speculative execution for rename-on-close sinks")
 
 
 TAR_SCHEMA = T.StructType([
@@ -91,41 +77,6 @@ def wds_key_ext(name: str) -> tuple[str, str]:
     return name[:slash + 1] + base[:dot], base[dot + 1:]
 
 
-ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"  # zstd frame magic, little-endian
-
-
-def _maybe_zstd(data: bytes, codec_hook):
-    """Route a zstd-compressed shard through the injectable codec hook
-    (the warc.py/_maybe_zstd twin): modern WebDataset shards ship as
-    .tar.zst, stdlib tarfile's ``r|*`` sniffs only gz/bz2/xz, and
-    stdlib gains ``compression.zstd`` in 3.14 — the hook makes the
-    source zstd-ready the day the environment has a codec.
-
-    Hook contract: the hook receives the whole compressed shard —
-    possibly a CONCATENATION of frames (``tar_export``'s codec path
-    writes one frame per member) — and must return the decompressed
-    stream of ALL of them: Python 3.14
-    ``compression.zstd.decompress`` handles concatenated frames;
-    one-shot ``zstandard.decompress`` stops at the first frame — use
-    a frame-looping wrapper (see sources/warc.py _maybe_zstd for a
-    stream_reader(read_across_frames=True) example). Memory caveat:
-    the hook path materializes the DECOMPRESSED shard before
-    iteration — unlike the gz/bz2/xz stream mode, peak heap for a
-    .tar.zst shard is the raw tar, not one member; size zstd shards
-    accordingly. None -> a clear unsupported error naming the hook."""
-    if data[:4] != ZSTD_MAGIC:
-        return data
-    if codec_hook is None:
-        raise TarError(
-            "zstd-compressed tar shard and no codec available: pass "
-            "codec_hook=<bytes->bytes zstd decompressor that handles "
-            "CONCATENATED frames> (e.g. Python 3.14 "
-            "compression.zstd.decompress, or python-zstandard's "
-            "stream_reader(read_across_frames=True) in a loop — "
-            "one-shot zstandard.decompress stops at the first frame)")
-    return codec_hook(data)
-
-
 def tar_iter_members(data: bytes, codec_hook=None):
     """Yield ``(idx, name, payload, size, mtime)`` for each REGULAR
     file member of a (possibly gzip/bzip2/xz-compressed, or zstd via
@@ -133,13 +84,13 @@ def tar_iter_members(data: bytes, codec_hook=None):
     (``r|*``) decompresses incrementally, so peak heap is one member,
     never the decompressed shard — EXCEPT on the zstd hook path,
     where the hook returns the decompressed shard whole before
-    iteration (see _maybe_zstd's memory caveat). Directories, sym/hard links, devices
-    and FIFOs carry no sample payload and are skipped (links
-    deliberately — following them would need random access and can
-    alias data outside the sample; WebDataset writers emit regular
-    files only). idx counts regular files, matching the row numbering
-    the schema promises."""
-    data = _maybe_zstd(data, codec_hook)
+    iteration (see shards.maybe_zstd's memory caveat). Directories,
+    sym/hard links, devices and FIFOs carry no sample payload and are
+    skipped (links deliberately — following them would need random
+    access and can alias data outside the sample; WebDataset writers
+    emit regular files only). idx counts regular files, matching the
+    row numbering the schema promises."""
+    data = shards.maybe_zstd(data, codec_hook, TarError, "tar shard")
     try:
         tf = tarfile.open(fileobj=io.BytesIO(data), mode="r|*")
     except tarfile.TarError as e:
@@ -192,7 +143,7 @@ def tar_import(spark: SparkSession, path: str,
     per shard (binaryFile — shards are sized for this, typically
     100 MB-1 GB), rows leave in bounded Arrow batches. ``codec_hook``
     (a picklable bytes->bytes decompressor) enables .tar.zst shards —
-    see _maybe_zstd. Feed the result to ``webdataset_group`` for
+    see shards.maybe_zstd. Feed the result to ``webdataset_group`` for
     sample rows, or filter ``ext`` and route payloads to the
     multimodal probes/decoders directly."""
     files = (spark.read.format("binaryFile")
@@ -370,25 +321,19 @@ def tar_export(df: DataFrame, path: str,
     ``part-<hex>.tar<codec_ext>`` shards instead of gzip — the write
     half of the zstd readiness story, closing the last read/write
     codec asymmetry (the read half is tar_import's decompressor hook,
-    ``_maybe_zstd``). One frame per MEMBER (header blocks + payload +
-    padding) plus a final end-of-archive frame, so task heap stays
-    O(member); the frames CONCATENATE to the raw tar, which a
+    ``shards.maybe_zstd``). One frame per MEMBER (header blocks +
+    payload + padding) plus a final end-of-archive frame, so task heap
+    stays O(member); the frames CONCATENATE to the raw tar, which a
     frame-looping decompressor (or Python 3.14
     ``compression.zstd.decompress``) restores whole. Overrides
     ``gzip_compress`` when set.
 
-    Task-commit protocol (ADVICE r10): each shard streams into a
-    hidden ``.part-<hex>...inprogress`` temp in the output directory
-    and is renamed to its final name only in close_shard —
-    ``os.replace`` is atomic on one filesystem, and readers
-    (tar_import's binaryFile listing skips dot-prefixed files) never
-    see a truncated shard from a failed or killed task. Speculative
-    execution must stay off (Spark's default) for any
-    randomly-named-shard sink: a speculative twin that runs to
-    completion would commit a duplicate shard."""
+    Task commit: each shard is a ``shards.Shard`` (hidden temp,
+    renamed into place when the shard closes); raises TarError at
+    entry when spark.speculation=true."""
     import gzip as _gzip
 
-    require_no_speculation(df, TarError, "tar_export")
+    shards.require_no_speculation(df, TarError, "tar_export")
     if n_shards is not None and not arrange:
         # silently ignoring the shard count would be a trap: without
         # the arrange repartition there is nothing to apply it to
@@ -409,30 +354,23 @@ def tar_export(df: DataFrame, path: str,
         suffix = ".tar.gz" if gzip_compress else ".tar"
 
     def write(batches):
-        import pandas as pd
-
-        fh = gz = None
-        tmp = final = None
+        shard = gz = None
         n_members = 0
         n_samples = 0
         prev_key = None
 
         def close_shard():
-            nonlocal fh, gz, tmp, final
-            if fh is not None:
+            nonlocal shard, gz
+            if shard is not None:
                 if codec_hook is not None:
                     # end-of-archive as its own frame
-                    fh.write(codec_hook(b"\0" * 1024))
+                    shard.fh.write(codec_hook(b"\0" * 1024))
                 else:
                     gz.write(b"\0" * 1024)
-                    if gz is not fh:
+                    if gz is not shard.fh:
                         gz.close()
-                fh.close()
-                # rename-on-close (ADVICE r10): atomic on one
-                # filesystem — a failed/retried task never leaves a
-                # truncated shard under the final name
-                os.replace(tmp, final)
-                fh = gz = tmp = final = None
+                shard.commit()
+                shard = gz = None
 
         for pdf in batches:
             for key, ext, payload in zip(pdf["_k"], pdf["_e"],
@@ -450,22 +388,19 @@ def tar_export(df: DataFrame, path: str,
                         n_samples = 0
                     n_samples += 1
                     prev_key = key
-                if fh is None:
-                    fname = "part-" + os.urandom(8).hex() + suffix
-                    final = os.path.join(path, fname)
-                    tmp = os.path.join(
-                        path, "." + fname + ".inprogress")
-                    fh = open(tmp, "wb")
+                if shard is None:
+                    shard = shards.Shard(path, shards.part_name(suffix))
                     # filename="" keeps the fresh part name out of
                     # the gzip FNAME header — shard CONTENT must be
                     # deterministic across re-exports; level 6 (zlib
                     # default) over GzipFile's 9: ~2x faster writes
                     # for ~1% size on already-encoded media payloads
                     if codec_hook is None:
-                        gz = (_gzip.GzipFile(filename="", fileobj=fh,
+                        gz = (_gzip.GzipFile(filename="",
+                                             fileobj=shard.fh,
                                              mode="wb", mtime=0,
                                              compresslevel=6)
-                              if gzip_compress else fh)
+                              if gzip_compress else shard.fh)
                 payload = bytes(payload)
                 name = f"{key}.{ext}" if ext else str(key)
                 blocks = _member_blocks(name, len(payload), mtime)
@@ -473,13 +408,12 @@ def tar_export(df: DataFrame, path: str,
                 blocks.append(b"\0" * (-len(payload) % 512))
                 if codec_hook is not None:
                     # one compressed frame per member — heap O(member)
-                    fh.write(codec_hook(b"".join(blocks)))
+                    shard.fh.write(codec_hook(b"".join(blocks)))
                 else:
                     for block in blocks:
                         gz.write(block)
                 n_members += 1
         close_shard()
-        yield pd.DataFrame({"n": [n_members]})
+        return n_members
 
-    counts = slim.mapInPandas(write, schema="n long").collect()
-    return sum(r["n"] for r in counts)
+    return shards.write_partitions(slim, write)

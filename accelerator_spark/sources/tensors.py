@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import shards
+
 
 class TensorFormatError(ValueError):
     """Malformed or unsupported-by-scope tensor container."""
@@ -315,10 +317,9 @@ def tensor_export(df: DataFrame, path: str, vec_col: str = "embedding",
     is the price of the single-pass write; ``rows_per_shard`` is the
     knob. Returns rows written; empty partitions write nothing; rows
     with NULL vector are skipped; ragged dims raise (a tensor is
-    rectangular)."""
-    from .tar import require_no_speculation
-
-    require_no_speculation(df, TensorFormatError, "tensor_export")
+    rectangular). Task commit: each shard is a ``shards.Shard``;
+    raises TensorFormatError at entry when spark.speculation=true."""
+    shards.require_no_speculation(df, TensorFormatError, "tensor_export")
     if dtype not in ("F32", "F64"):
         raise TensorFormatError("tensor_export dtype must be F32/F64")
     if rows_per_shard < 1:
@@ -329,8 +330,6 @@ def tensor_export(df: DataFrame, path: str, vec_col: str = "embedding",
     fmtch = "f" if dtype == "F32" else "d"
 
     def write(batches):
-        import pandas as pd
-
         emb, ids = bytearray(), bytearray()
         n, dim, total = 0, None, 0
 
@@ -347,17 +346,12 @@ def tensor_export(df: DataFrame, path: str, vec_col: str = "embedding",
             }
             hjson = json.dumps(header,
                                separators=(",", ":")).encode("utf-8")
-            fname = "part-" + os.urandom(8).hex() + ".safetensors"
-            # rename-on-close task commit (ADVICE r10): write to a
-            # hidden temp, os.replace atomically — a failed/retried
-            # task never leaves a truncated shard under a final name
-            tmp = os.path.join(path, "." + fname + ".inprogress")
-            with open(tmp, "wb") as fh:
-                fh.write(struct.pack("<Q", len(hjson)))
-                fh.write(hjson)
-                fh.write(emb)
-                fh.write(ids)
-            os.replace(tmp, os.path.join(path, fname))
+            shard = shards.Shard(path, shards.part_name(".safetensors"))
+            shard.fh.write(struct.pack("<Q", len(hjson)))
+            shard.fh.write(hjson)
+            shard.fh.write(emb)
+            shard.fh.write(ids)
+            shard.commit()
             total += n
             emb, ids, n = bytearray(), bytearray(), 0
 
@@ -377,8 +371,7 @@ def tensor_export(df: DataFrame, path: str, vec_col: str = "embedding",
                 if n >= rows_per_shard:
                     flush()
         flush()
-        yield pd.DataFrame({"n": [total]})
+        return total
 
-    counts = slim.mapInPandas(write, schema="n long").collect()
-    return sum(r["n"] for r in counts)
+    return shards.write_partitions(slim, write)
 

@@ -51,55 +51,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import shards
+from .shards import ZSTD_MAGIC  # noqa: F401  (re-exported)
+
 
 class WarcError(ValueError):
     """Malformed or unsupported-by-scope WARC input."""
-
-
-ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"  # zstd frame magic, little-endian
-
-
-def _maybe_zstd(data: bytes, codec_hook):
-    """Route zstd-compressed bytes through the injectable codec hook
-    (the image-decoder-hook pattern, operators/multimodal.py):
-    CommonCrawl is migrating to .warc.zst and stdlib gains
-    ``compression.zstd`` only in 3.14, so the hook is how the source
-    becomes zstd-ready the day the environment has a codec.
-
-    Hook contract: the hook receives the compressed bytes — possibly
-    a CONCATENATION of frames (record-at-time compression, like the
-    gzip-member layout; a CDX range spanning several records hands
-    the hook several back-to-back frames) — and must return the
-    decompressed stream of ALL of them. Python 3.14's
-    ``compression.zstd.decompress`` handles concatenated frames;
-    python-zstandard's one-shot ``zstandard.decompress`` does NOT (it
-    stops at the first frame or errors on trailing data) — wrap it in
-    a frame loop, e.g.::
-
-        def hook(data):
-            out, d = [], zstandard.ZstdDecompressor()
-            with d.stream_reader(io.BytesIO(data),
-                                 read_across_frames=True) as r:
-                while chunk := r.read(1 << 20):
-                    out.append(chunk)
-            return b"".join(out)
-
-    Memory caveat: the hook path decompresses the given bytes WHOLE —
-    on a full .warc.zst shard (no CDX ranges) peak task heap is the
-    decompressed shard, unlike the gzip-member path which streams
-    member-at-a-time; record-granular CDX splits restore the bounded
-    behavior. None -> a clear unsupported error naming the hook."""
-    if data[:4] != ZSTD_MAGIC:
-        return data
-    if codec_hook is None:
-        raise WarcError(
-            "zstd-compressed WARC input and no codec available: pass "
-            "codec_hook=<bytes->bytes zstd decompressor that handles "
-            "CONCATENATED frames> (e.g. Python 3.14 "
-            "compression.zstd.decompress, or python-zstandard's "
-            "stream_reader(read_across_frames) in a loop — one-shot "
-            "zstandard.decompress stops at the first frame)")
-    return codec_hook(data)
 
 
 def surt(uri: str) -> str:
@@ -287,7 +244,7 @@ def warc_iter_file(data: bytes, base_idx: int = 0, codec_hook=None):
     members decompress lazily, so a caller that drains in chunks holds
     one record plus its chunk in memory, never the decompressed file
     (VERDICT r8 #2). ``base_idx`` seeds record_idx for range reads."""
-    data = _maybe_zstd(data, codec_hook)
+    data = shards.maybe_zstd(data, codec_hook, WarcError, "WARC input")
     if data[:2] == b"\x1f\x8b":
         streams = _gzip_members(data)
     else:
@@ -439,7 +396,7 @@ def warc_import(spark: SparkSession, path: str,
     paths stream: rows leave in Arrow batches of ``chunk_records`` /
     ``chunk_bytes``, so task heap is bounded by the chunk.
     ``codec_hook`` (a picklable bytes->bytes decompressor) enables
-    .warc.zst input — see _maybe_zstd; for the split path the hook
+    .warc.zst input — see shards.maybe_zstd; for the split path the hook
     must accept a concatenation of record-at-time frames. Filter
     ``warc_type == 'response'`` and feed ``payload`` through
     operators/charset.decode_payload to operators/html.html_extract
@@ -642,17 +599,10 @@ def warc_export(df: DataFrame, path: str,
     pass the crawl's real dates via date_col). Returns rows written.
     NULL payloads are skipped (a failed fetch has no record).
 
-    Task-commit protocol (ADVICE r10): shard and sidecar stream into
-    hidden ``.…inprogress`` temps and are atomically renamed on close
-    (sidecar first, so a visible .warc always has its .cdx) — a
-    failed or killed task never leaves a truncated shard under a
-    final name. Speculative execution must stay off (Spark's
-    default): a completed speculative twin would commit a duplicate
-    randomly-named shard — enforced at entry (raises WarcError when
-    spark.speculation=true; ADVICE r11)."""
-    from .tar import require_no_speculation
-
-    require_no_speculation(df, WarcError, "warc_export")
+    Task commit: shard and sidecar are ``shards.Shard`` files,
+    committed sidecar first, so a visible .warc always has its .cdx;
+    raises WarcError at entry when spark.speculation=true."""
+    shards.require_no_speculation(df, WarcError, "warc_export")
     os.makedirs(path, exist_ok=True)
     cols = [uri_col, payload_col]
     opt = {}
@@ -666,14 +616,12 @@ def warc_export(df: DataFrame, path: str,
     def write(batches):
         import hashlib as _hashlib
 
-        import pandas as pd
-
         # STREAMED writes (VERDICT r9 #1): each record goes straight
         # to the open shard handle (fh.tell() is the CDX offset) and
         # each sidecar line straight to the .cdx handle — task heap is
         # one record, never the whole compressed shard
         n = 0
-        fh = cfh = None
+        shard = cdx = None
         for pdf in batches:
             for row in pdf.itertuples(index=False):
                 d = dict(zip(pdf.columns, row))
@@ -706,38 +654,27 @@ def warc_export(df: DataFrame, path: str,
                         b"Content-Length: %d" % len(http)]
                 rec = (b"\r\n".join(hdrs) + b"\r\n\r\n" + http
                        + b"\r\n\r\n")
-                if fh is None:
+                if shard is None:
                     if codec_hook is not None:
                         suffix = ".warc" + codec_ext
                     elif gzip_members:
                         suffix = ".warc.gz"
                     else:
                         suffix = ".warc"
-                    fname = "part-" + os.urandom(8).hex() + suffix
-                    final = os.path.join(path, fname)
-                    # rename-on-close task commit (ADVICE r10): stream
-                    # into a hidden .inprogress temp; os.replace is
-                    # atomic on one filesystem, so a failed/retried
-                    # task never leaves a truncated shard visible to
-                    # readers (Spark's file listing skips dot-prefixed
-                    # names). Speculation must stay off (the Spark
-                    # default) — a completed speculative twin would
-                    # commit a duplicate randomly-named shard.
-                    fh = open(os.path.join(
-                        path, "." + fname + ".inprogress"), "wb")
+                    fname = shards.part_name(suffix)
+                    shard = shards.Shard(path, fname)
+                    fh = shard.fh
                     if with_cdx:
                         # sidecar named <stem>.cdx with the bare .warc
                         # stem — exactly what _find_cdx tries first
-                        # after stripping the compression extension
-                        cdx_final = final[:-len(suffix)] + ".cdx"
+                        # after stripping the compression extension;
                         # explicit utf-8: surt() leaves non-ASCII URI
                         # bytes in the urlkey, and a C-locale executor
                         # would raise UnicodeEncodeError on the write
                         # (ADVICE r10)
-                        cfh = open(os.path.join(
-                            path,
-                            "." + os.path.basename(cdx_final)
-                            + ".inprogress"), "w", encoding="utf-8")
+                        cdx = shards.Shard(
+                            path, fname[:-len(suffix)] + ".cdx", "w",
+                            encoding="utf-8")
                 at = fh.tell()
                 if codec_hook is not None:
                     fh.write(codec_hook(rec))
@@ -746,21 +683,17 @@ def warc_export(df: DataFrame, path: str,
                     fh.write(c.compress(rec) + c.flush())
                 else:
                     fh.write(rec)
-                if cfh is not None:
-                    cfh.write(_cdxj_line(uri, _cdx_timestamp(date),
-                                         at, fh.tell() - at) + "\n")
+                if cdx is not None:
+                    cdx.fh.write(_cdxj_line(uri, _cdx_timestamp(date),
+                                            at, fh.tell() - at) + "\n")
                 n += 1
         # commit order: sidecar first, shard second — whenever the
         # .warc is visible its .cdx is too, so the split reader never
         # races a half-committed pair (an orphan .cdx is inert)
-        if cfh is not None:
-            cfh.close()
-            os.replace(cfh.name, cdx_final)
-        if fh is not None:
-            fh.close()
-            os.replace(fh.name, final)
-        yield pd.DataFrame({"n": [n]})
+        if cdx is not None:
+            cdx.commit()
+        if shard is not None:
+            shard.commit()
+        return n
 
-    import pandas as pd  # noqa: F401  (schema hint for linters)
-    counts = slim.mapInPandas(write, schema="n long").collect()
-    return sum(r["n"] for r in counts)
+    return shards.write_partitions(slim, write)

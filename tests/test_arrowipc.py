@@ -104,3 +104,28 @@ def test_import_binds_columns_by_name(spark, tmp_path):
         arrow_import(spark, str(d)).collect()
     assert "ArrowIpcError" in str(ei.value) or isinstance(
         ei.value, ArrowIpcError)
+
+
+def test_failed_task_leaves_no_visible_file(spark, tmp_path):
+    """A task that fails mid-partition leaves at most its hidden temp:
+    no file a reader lists, and a later export into the same directory
+    reads back only its own committed rows."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 20000, numPartitions=1).select(
+        F.when(F.col("id") == 19000, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("k"))
+    out = tmp_path / "failed"
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        with pytest.raises(Exception, match="boom"):
+            arrow_export(df, str(out), rows_per_batch=1)
+    finally:
+        spark.conf.set(key, old)
+    assert [p.name for p in out.iterdir()
+            if not p.name.startswith(".")] == []
+    arrow_export(spark.createDataFrame([(1,), (2,)], "k long"), str(out))
+    assert sorted(r.k for r in arrow_import(spark, str(out)).collect()) \
+        == [1, 2]

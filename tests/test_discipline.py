@@ -80,3 +80,18 @@ def test_no_row_at_a_time_python_udf():
                         and node.value.id == "F"):
                     offenders.append(p)
     assert not offenders
+
+
+def test_file_sinks_commit_through_one_module():
+    """Only sources/shards.py renames a task's hidden temp into place:
+    a sink that opens its final name, or hand-writes its own temp and
+    rename, would bring back the truncated-file-on-failure edge."""
+    owner = os.path.join("accelerator_spark", "sources", "shards.py")
+    offenders = []
+    for p in sorted(glob.glob(os.path.join(REPO, "accelerator_spark", "**",
+                                           "*.py"), recursive=True)):
+        rel = os.path.relpath(p, REPO)
+        src = open(p).read()
+        if rel != owner and ("os.replace" in src or ".inprogress" in src):
+            offenders.append(rel)
+    assert not offenders

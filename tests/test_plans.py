@@ -313,6 +313,8 @@ class _OperatorCalled(Exception):
     ("embedding_stats", "similarity", "norm"),
     ("latest_event_per_user", "merge", "compact_latest"),
     ("kmeans_lloyd_step", "similarity", "ivf_assign"),
+    ("recursive_copurchase_reach", "graph", "cooccurrence_edges"),
+    ("recursive_copurchase_reach", "graph", "symmetrize"),
 ])
 def test_gate_runs_the_shipped_operator(spark, sf_dir, monkeypatch, name,
                                         module, operator):

@@ -402,17 +402,20 @@ def test_tar_export_commits_shards_atomically(spark, tmp_path):
 
 def test_rename_on_close_sinks_refuse_speculation(spark, tmp_path,
                                                   monkeypatch):
-    """All three randomly-named rename-on-close shard sinks must FAIL
-    AT ENTRY when spark.speculation=true (ADVICE r11): a completed
-    speculative task twin would rename its own duplicate shard into
-    the output directory — rename-on-close is atomic, not exclusive.
+    """All five file sinks commit through sources/shards.py and must
+    FAIL AT ENTRY when spark.speculation=true (ADVICE r11): a completed
+    speculative task twin would rename its own duplicate file into the
+    output directory — rename-on-close is atomic, not exclusive.
     spark.speculation is a core (launch-time) config, so the guard is
     checked against a stubbed session and the wiring against a spy."""
     import pytest
 
-    import accelerator_spark.sources.tar as tarmod
-    from accelerator_spark.sources.tar import (
-        TarError, require_no_speculation, tar_export)
+    import accelerator_spark.sources.shards as shardmod
+    from accelerator_spark.sources.arrowipc import (
+        ArrowIpcError, arrow_export)
+    from accelerator_spark.sources.avro import AvroError, avro_export
+    from accelerator_spark.sources.shards import require_no_speculation
+    from accelerator_spark.sources.tar import TarError, tar_export
     from accelerator_spark.sources.tensors import (
         TensorFormatError, tensor_export)
     from accelerator_spark.sources.warc import WarcError, warc_export
@@ -435,15 +438,15 @@ def test_rename_on_close_sinks_refuse_speculation(spark, tmp_path,
     require_no_speculation(_Df("false"), TarError, "tar_export")
     require_no_speculation(_Df(None), TarError, "tar_export")
 
-    # wiring: every sink consults the guard at entry (warc/tensors
-    # import it from tar at call time, so one spy covers all three)
+    # wiring: every sink consults the shared guard at entry, so one
+    # spy on the shards module covers all five
     calls = []
 
     def spy(df, err_cls, opname):
         calls.append(opname)
         raise err_cls(opname + ": speculation on")
 
-    monkeypatch.setattr(tarmod, "require_no_speculation", spy)
+    monkeypatch.setattr(shardmod, "require_no_speculation", spy)
     members = spark.createDataFrame(
         [("k1", "txt", b"x")],
         "sample_key string, ext string, payload binary")
@@ -459,4 +462,11 @@ def test_rename_on_close_sinks_refuse_speculation(spark, tmp_path,
         warc_export(pages, str(tmp_path / "w"))
     with pytest.raises(TensorFormatError, match="speculation"):
         tensor_export(vecs, str(tmp_path / "v"))
-    assert calls == ["tar_export", "warc_export", "tensor_export"]
+    with pytest.raises(ArrowIpcError, match="speculation"):
+        arrow_export(vecs, str(tmp_path / "a"))
+    with pytest.raises(AvroError, match="speculation"):
+        avro_export(vecs, str(tmp_path / "r"))
+    assert calls == ["tar_export", "warc_export", "tensor_export",
+                     "arrow_export", "avro_export"]
+    # refused before any file or directory is made
+    assert not list(tmp_path.iterdir())

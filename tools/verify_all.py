@@ -3,6 +3,8 @@ DuckDB oracle gate + bench + plan audit. Exit 0 iff everything is green.
 
 Usage: python tools/verify_all.py [--quick] [--scale]
   --quick: skip bench and plan report (tests + oracle only)
+  The plans step lists the queries whose PLANS.md row differs from
+  git HEAD — each one is a plan diff to explain.
   --scale: also run the 16x scale-bound suite (SPARK_GRAFT_SCALE=1
            tests) and record the result in SCALECHECK.json — VERDICT
            r5 #5: the scale suite runs once per round, committed next
@@ -55,6 +57,23 @@ def run_scale() -> int:
     return proc.returncode
 
 
+def _plan_rows(text: str) -> dict:
+    """query name -> its PLANS.md table row."""
+    return {line.split("|")[1].strip(): line for line in text.splitlines()
+            if line.startswith("| ") and not line.startswith("| query ")}
+
+
+def changed_plans() -> list:
+    """Queries whose PLANS.md row was added, removed or changed
+    against git HEAD."""
+    old = subprocess.run(["git", "show", "HEAD:PLANS.md"], cwd=REPO,
+                         capture_output=True, text=True).stdout
+    with open(os.path.join(REPO, "PLANS.md")) as f:
+        new = f.read()
+    a, b = _plan_rows(old), _plan_rows(new)
+    return sorted(q for q in a.keys() | b.keys() if a.get(q) != b.get(q))
+
+
 def _git_head() -> str:
     try:
         return subprocess.run(
@@ -76,6 +95,10 @@ def main() -> int:
         print(f"=== {name}: {'OK' if rc == 0 else f'FAILED rc={rc}'}", flush=True)
         if rc:
             failed.append(name)
+        elif name == "plans":
+            diff = changed_plans()
+            print(f"=== plans: {len(diff)} rows differ from HEAD"
+                  + (": " + ", ".join(diff) if diff else ""), flush=True)
     if scale:
         print("=== scale: SPARK_GRAFT_SCALE=1 pytest tests/test_scale.py",
               flush=True)
