@@ -64,6 +64,17 @@ def read_jsonl(path: str) -> list[dict]:
     return out
 
 
+def _jobdb_path(workdir: str) -> str:
+    return os.path.join(workdir, "jobdb.jsonl")
+
+
+def read_jobdb(workdir: str) -> list[dict]:
+    """A workdir's job records, oldest first: the one reader behind
+    BuildContext, ``resolve_spec`` and the CLI's board, board server
+    and ``asx workdir``."""
+    return read_jsonl(_jobdb_path(workdir))
+
+
 def _stable_json(obj: Any) -> str:
     return json.dumps(obj, sort_keys=True, default=str)
 
@@ -178,14 +189,14 @@ class BuildContext:
         self.spark = spark
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
-        self._dbpath = os.path.join(workdir, "jobdb.jsonl")
+        self._dbpath = _jobdb_path(workdir)
         self._db: dict[str, JobRecord] = {}
         self._seq: dict[str, int] = {}
         self._claim_nonces: dict[str, str] = {}
         self._load()
 
     def _load(self) -> None:
-        for d in read_jsonl(self._dbpath):
+        for d in read_jobdb(self.workdir):
             try:
                 rec = JobRecord(**d)
             except TypeError:
@@ -655,9 +666,7 @@ def resolve_spec(workdir: str, spec: str) -> dict | None:
     - ``:list/ts``     the job recorded at an exact urd timestamp
 
     Returns the job-database record dict, or None."""
-    import os as _os
-
-    recs = read_jsonl(_os.path.join(workdir, "jobdb.jsonl"))
+    recs = read_jobdb(workdir)
     by_id = {r["jobid"]: r for r in recs}
 
     if spec.startswith(":"):

@@ -18,7 +18,7 @@ import argparse
 import json
 import sys
 
-from .build import Urd
+from .build import Urd, read_jobdb
 from .dataset import Dataset
 
 
@@ -33,16 +33,6 @@ def _load_df(spark, path: str):
     if Dataset.exists(path):
         return Dataset.load(path).df(spark)
     return spark.read.parquet(path)
-
-
-def _read_jobdb(workdir: str) -> list[dict]:
-    """Job records from jobdb.jsonl; tolerates blank/partial trailing
-    lines (a crashed writer must not take down the board/CLI). One
-    shared reader with the build layer so the tolerance can't diverge."""
-    import os
-
-    from .build import read_jsonl
-    return read_jsonl(os.path.join(workdir, "jobdb.jsonl"))
 
 
 def _emit_csv(columns, rows) -> None:
@@ -294,7 +284,7 @@ def _board_html(workdir: str) -> str:
     import html
     import os
 
-    jobs = _read_jobdb(workdir)
+    jobs = read_jobdb(workdir)
     u = Urd(workdir)
     sections = ["<h1>accelerator_spark board</h1>",
                 f"<p>workdir: <code>{html.escape(workdir)}</code> — "
@@ -365,7 +355,7 @@ def make_board_server(workdir: str, port: int = 0):
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
     def jobs():
-        return _read_jobdb(workdir)
+        return read_jobdb(workdir)
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
@@ -418,7 +408,7 @@ def cmd_serve(args) -> int:
 
 def cmd_workdir(args) -> int:
     """List jobs in a workdir (the reference's ``ax workdir``)."""
-    recs = _read_jobdb(args.workdir)
+    recs = read_jobdb(args.workdir)
     if not recs:
         print(f"no job database in {args.workdir}", file=sys.stderr)
         return 1

@@ -1,10 +1,12 @@
-"""Shared Arrow-batched text-map scaffold.
+"""The one Arrow-batched map stage behind every per-row Python operator.
 
-The string twin of multimodal._map_media_rows (which exists because
-its two hand-rolled copies 'had already diverged once' — review r6):
-one place for the id-type-preserving mapInPandas plumbing the per-row
-text operators (html_extract, fix_mojibake, ...) share, so the copies
-can't drift (review r8)."""
+``map_rows`` owns how a per-row operator crosses into Python: the slim
+projection, the ``on_error`` containment rule and the output frame.
+``keyed_schema`` builds the usual output schema, whose id column keeps
+the input id's own type (a hardcoded LongType failed mid-job on string
+ids — review r3). The text and media operators reach it through
+``map_text_rows`` and ``multimodal._map_media_rows``, thin adapters
+that build their schema and wrap their ``per_row``."""
 
 from __future__ import annotations
 
@@ -14,6 +16,67 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..identifiers import qcol
+
+
+def keyed_schema(df: DataFrame, id_col: str, fields: list,
+                 name: str | None = None,
+                 nullable: bool = False) -> T.StructType:
+    """(``name``-or-``id_col`` with the id's OWN type, *fields)."""
+    return T.StructType(
+        [T.StructField(name or id_col, df.schema[id_col].dataType,
+                       nullable)] + list(fields))
+
+
+def map_rows(
+    df: DataFrame,
+    cols: list,
+    schema: T.StructType,
+    per_row: Callable,          # (*values of cols) -> iterable of rows
+    on_error: str = "raise",
+    error_row: Callable | None = None,
+    batch_partitions: int | None = None,
+) -> DataFrame:
+    """One Arrow map stage over ``df.select(*cols)``: each input row's
+    values go to ``per_row``, which returns that row's output rows
+    (one, none or many) as tuples in ``schema`` order. Rows iterate by
+    zip over the column arrays, not iterrows (a per-row Series is the
+    slowest pandas access path in exactly the hot loop).
+
+    ``on_error``: "raise" (default) fails the job on the first row
+    whose ``per_row`` raises; "null" keeps the job alive, and that
+    input row contributes exactly one row, ``error_row(*values)`` —
+    by default the first input value followed by NULLs. A row's output
+    is built in full before any of it is kept, so a row that fails
+    part-way never leaks part of its output (all or nothing)."""
+    if on_error not in ("raise", "null"):
+        raise ValueError(
+            f"on_error must be 'raise' or 'null', got {on_error!r}")
+    slim = df.select(*(qcol(c) for c in cols))
+    if batch_partitions:
+        slim = slim.repartition(batch_partitions)
+    names = [f.name for f in schema.fields]
+    if error_row is None:
+        n_null = len(names) - 1
+
+        def error_row(first, *_):
+            return (first,) + (None,) * n_null
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for vals in zip(*(pdf[c] for c in cols)):
+                try:
+                    rows = list(per_row(*vals))
+                except Exception:
+                    if on_error == "raise":
+                        raise
+                    rows = [error_row(*vals)]
+                out.extend(rows)
+            yield pd.DataFrame(out, columns=names)
+
+    return slim.mapInPandas(run, schema=schema)
 
 
 def map_text_rows(
@@ -25,23 +88,12 @@ def map_text_rows(
     id_out_name: str | None = None,
     batch_partitions: int | None = None,
 ) -> DataFrame:
-    """One Arrow map stage over (id, text): output schema is
-    (id_out_name-or-id_col with the id's OWN type, *out_fields). The
-    per-row callable owns None handling — text operators have
-    per-format ideas of what a NULL document means."""
-    slim = df.select(id_col, text_col)
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [T.StructField(id_out_name or id_col, id_type, False)]
-        + list(out_fields))
-    if batch_partitions:
-        slim = slim.repartition(batch_partitions)
-    cols = [f.name for f in schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [(did,) + tuple(per_row(text))
-                   for did, text in zip(pdf[id_col], pdf[text_col])]
-            yield pd.DataFrame(out, columns=cols)
-
-    return slim.mapInPandas(run, schema=schema)
+    """``map_rows`` over (id, text): output schema is
+    (id_out_name-or-id_col with the id's OWN type, *out_fields), one
+    row per document. The per-row callable owns None handling — text
+    operators have per-format ideas of what a NULL document means."""
+    return map_rows(
+        df, [id_col, text_col],
+        keyed_schema(df, id_col, out_fields, id_out_name),
+        lambda did, text: [(did,) + tuple(per_row(text))],
+        batch_partitions=batch_partitions)

@@ -40,6 +40,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .arrowmap import keyed_schema, map_rows
+
 # WHATWG Encoding Standard promotions (the ones that change results on
 # real crawls): the latin-1/ascii family of LABELS means the cp1252
 # SUPERSET on the web, and gb2312 labels gbk. Keys are the normalized
@@ -174,22 +176,7 @@ def decode_payload(
     is_valid). Map-only over the source partitioning — the stage
     between warc_import's BinaryType payload and html_extract's string
     column."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    slim = df.select(id_col, payload_col, content_type_col)
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [T.StructField(id_col, id_type, True)] + DECODE_FIELDS)
-    cols = [f.name for f in schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [(rid,) + decode_bytes(payload, ctype)
-                   for rid, payload, ctype in zip(
-                       pdf[id_col], pdf[payload_col],
-                       pdf[content_type_col])]
-            yield pd.DataFrame(out, columns=cols)
-
-    return slim.mapInPandas(run, schema=schema)
+    return map_rows(
+        df, [id_col, payload_col, content_type_col],
+        keyed_schema(df, id_col, DECODE_FIELDS, nullable=True),
+        lambda rid, payload, ctype: [(rid,) + decode_bytes(payload, ctype)])

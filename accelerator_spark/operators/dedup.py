@@ -1028,8 +1028,7 @@ def fp_band_rows(df: DataFrame, fp_col: str = "fp",
 
 def state_near_ids(new_batch: DataFrame, state: DataFrame,
                    fp_col: str = "fp", id_col: str = "doc_id",
-                   bits: int = 64, max_hamming: int = 3,
-                   broadcast_batch: bool = True) -> DataFrame:
+                   bits: int = 64, max_hamming: int = 3) -> DataFrame:
     """Batch ids whose fingerprint is within ``max_hamming`` of ANY
     fingerprint in the accumulated state (the probe step of
     ``near_dedup_incremental``, exposed so its plan shape is
@@ -1043,17 +1042,10 @@ def state_near_ids(new_batch: DataFrame, state: DataFrame,
     only exchange in the plan is the O(batch) distinct on the matched
     ids. Banding bounds candidates exactly as in fp_near_pairs: only
     state rows sharing a band key with a batch row reach the
-    bit_count filter.
-
-    ``broadcast_batch=False`` drops the hint for BOOTSTRAP-scale
-    batches (a backfill that rivals the accumulated corpus would
-    strain the driver as a broadcast build side): the probe becomes a
-    shuffled hash join on the band key — both sides exchange once,
-    candidates stay band-bounded."""
-    bb = fp_band_rows(new_batch, fp_col, id_col, bits, max_hamming).select(
-        F.col(id_col).alias("_bid"), F.col("fp").alias("_bfp"), "blk")
-    if broadcast_batch:
-        bb = F.broadcast(bb)
+    bit_count filter."""
+    bb = F.broadcast(
+        fp_band_rows(new_batch, fp_col, id_col, bits, max_hamming).select(
+            F.col(id_col).alias("_bid"), F.col("fp").alias("_bfp"), "blk"))
     near = (state.join(bb, "blk")
             .filter(F.bit_count(F.col("fp").bitwiseXOR(F.col("_bfp")))
                     <= max_hamming)
@@ -1067,7 +1059,6 @@ def near_dedup_incremental(new_batch: DataFrame,
                            id_col: str = "doc_id",
                            bits: int = 64, max_hamming: int = 3,
                            bucket_cap: int | None = None,
-                           broadcast_batch: bool = True,
                            keep: str | tuple = "min_id"):
     """NEAR-dedup of an ARRIVING batch against everything already kept
     — the banded-Hamming extension of ``dedup_incremental`` (VERDICT
@@ -1103,13 +1094,12 @@ def near_dedup_incremental(new_batch: DataFrame,
 
     Scale: the state probe broadcasts the BATCH side (see
     state_near_ids — the state is never shuffled, candidates are
-    O(batch); pass ``broadcast_batch=False`` for bootstrap-scale
-    batches that rival the corpus), the in-batch step is O(batch)
+    O(batch)), the in-batch step is O(batch)
     fp_near_pairs work, and the state grows by max_hamming+1 rows per
     kept doc — fingerprints and ids only, never text."""
     if state is not None:
         near = state_near_ids(new_batch, state, fp_col, id_col, bits,
-                              max_hamming, broadcast_batch)
+                              max_hamming)
         # pass_a feeds the in-batch pair blocking, the survivor
         # anti-join AND the kept band rows — without a lazy checkpoint
         # each consumer re-runs the state probe (the
@@ -1160,8 +1150,7 @@ def text_band_rows(df: DataFrame, text_col: str = "text",
 
 
 def text_state_candidates(batch_bands: DataFrame, state: DataFrame,
-                          id_col: str = "doc_id",
-                          broadcast_batch: bool = True) -> DataFrame:
+                          id_col: str = "doc_id") -> DataFrame:
     """Candidate (doc_a = batch id, doc_b = kept id) pairs: batch docs
     sharing ANY LSH band bucket with a kept doc — the probe step of
     ``text_near_dedup_incremental``, exposed so its plan shape is
@@ -1169,14 +1158,9 @@ def text_state_candidates(batch_bands: DataFrame, state: DataFrame,
 
     Plan shape — the O(batch) contract: the batch's band rows are
     BROADCAST, so the accumulated state streams through the join with
-    NO shuffle; the only exchange is the O(candidates) distinct.
-    ``broadcast_batch=False`` drops the hint for bootstrap-scale
-    batches (shuffled hash join on (band, key) — both sides exchange
-    once, candidates stay bucket-bounded)."""
-    bb = batch_bands.select("band", "key",
-                            F.col(id_col).alias("_bid"))
-    if broadcast_batch:
-        bb = F.broadcast(bb)
+    NO shuffle; the only exchange is the O(candidates) distinct."""
+    bb = F.broadcast(batch_bands.select("band", "key",
+                                        F.col(id_col).alias("_bid")))
     return (state.join(bb, ["band", "key"])
             .select(F.col("_bid").alias("doc_a"),
                     F.col(id_col).alias("doc_b"))
@@ -1193,7 +1177,6 @@ def text_near_dedup_incremental(new_batch: DataFrame,
                                 threshold: float = 0.5,
                                 bucket_cap: int = 50,
                                 hash_family: str = "md5",
-                                broadcast_batch: bool = True,
                                 keep: str | tuple = "min_id",
                                 batch_bands: DataFrame | None = None):
     """The ROLLING form of the classic MinHash/Jaccard text pipeline
@@ -1266,8 +1249,7 @@ def text_near_dedup_incremental(new_batch: DataFrame,
             f"{batch_bands.columns} != ['band', 'key', {id_col!r}] — "
             "pass text_band_rows(new_batch, ...) with matching params")
     if state is not None:
-        cand = text_state_candidates(batch_bands, state, id_col,
-                                     broadcast_batch)
+        cand = text_state_candidates(batch_bands, state, id_col)
         corpus = (new_batch.select(id_col, text_col)
                   .unionByName(kept_corpus.select(id_col, text_col)))
         verified = jaccard_verify(cand, corpus, text_col, id_col,

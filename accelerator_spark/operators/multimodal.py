@@ -20,13 +20,13 @@ those formats end-to-end.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
-
-import pandas as pd
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .arrowmap import keyed_schema, map_rows
 
 # schema convention: payload + typed metadata travel together
 MEDIA_SCHEMA = T.StructType([
@@ -142,51 +142,37 @@ def _map_media_rows(
     on_error: str,
     error_vals: Callable | None = None,
 ) -> DataFrame:
-    """Shared Arrow-batched mapInPandas scaffolding for binary-media
-    transforms (decode_features / resize_media — review r6: the two
-    copies had already diverged once). Output schema is
-    (media_id <id's own type>, mime, *out_fields); rows iterate via
-    zip over the column arrays, not iterrows (a per-row Series is the
-    slowest pandas access path in exactly the hot loop).
+    """``arrowmap.map_rows`` over (id, payload, mime) for the binary-
+    media transforms, one row per blob: output schema is
+    (media_id <id's own type>, mime, *out_fields), and a NULL payload
+    reaches ``per_row`` as b"".
 
-    ``on_error``: "raise" (default) fails the job on the first bad
-    payload; "null" emits NULLs for the per_row outputs instead — the
-    containment mode for dirty corpora where one corrupt blob must not
-    abort a 100 TB decode job. ``error_vals(raw, mime)``, when given,
-    supplies the error row's output tuple so pre-decode facts (e.g.
-    n_bytes = len(raw)) survive containment for triage — size-0 vs
-    truncated vs garbage blobs are distinguishable downstream
-    (ADVICE r6)."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    slim = df.select(id_col, payload_col, mime_col)
-    # the id rides through as 'media_id' but keeps ITS OWN type — a
-    # hardcoded LongType failed mid-job on string ids (review r3)
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [T.StructField("media_id", id_type, False),
-         T.StructField("mime", T.StringType(), True)] + list(out_fields))
+    ``on_error="null"`` emits NULLs for the per_row outputs of a blob
+    that fails — the containment mode for dirty corpora where one
+    corrupt blob must not abort a 100 TB decode job.
+    ``error_vals(raw, mime)``, when given, supplies the error row's
+    output tuple so pre-decode facts (e.g. n_bytes = len(raw)) survive
+    containment for triage — size-0 vs truncated vs garbage blobs are
+    distinguishable downstream (ADVICE r6)."""
     n_out = len(out_fields)
-    if batch_partitions:
-        slim = slim.repartition(batch_partitions)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload, mime in zip(
-                    pdf[id_col], pdf[payload_col], pdf[mime_col]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    vals = per_row(raw, mime)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    vals = (error_vals(raw, mime) if error_vals
-                            else (None,) * n_out)
-                out.append((mid, mime) + tuple(vals))
-            yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
+    def raw_of(payload):
+        return bytes(payload) if payload is not None else b""
 
-    return slim.mapInPandas(run, schema=schema)
+    def ok_rows(mid, payload, mime):
+        return [(mid, mime) + tuple(per_row(raw_of(payload), mime))]
+
+    def error_row(mid, payload, mime):
+        vals = (error_vals(raw_of(payload), mime) if error_vals
+                else (None,) * n_out)
+        return (mid, mime) + tuple(vals)
+
+    return map_rows(
+        df, [id_col, payload_col, mime_col],
+        keyed_schema(df, id_col,
+                     [T.StructField("mime", T.StringType(), True)]
+                     + list(out_fields), "media_id"),
+        ok_rows, on_error, error_row, batch_partitions)
 
 
 def decode_features(
@@ -644,42 +630,28 @@ def extract_frames(
     16384x16384 GIF would otherwise pin an executor core for minutes
     per frame on dirty corpora (ADVICE r6). Raise it explicitly for
     trusted large media."""
+    from ..functions.gif import compose_frames, gif_decode
+    from ..functions.png import png_encode
+
     if every_n <= 0:
         raise ValueError(f"extract_frames: every_n {every_n} must be >= 1")
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    slim = df.select(id_col, payload_col, mime_col)
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [T.StructField("media_id", id_type, False)]
-        + [f for f in FRAME_SCHEMA.fields if f.name != "media_id"])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.gif import compose_frames, gif_decode
-        from ..functions.png import png_encode
+    def per_row(mid, payload, mime):
+        raw = bytes(payload) if payload is not None else b""
+        g = gif_decode(raw, max_pixels=max_pixels)
+        n = len(g.frames)
+        for i, f, canvas in compose_frames(g):
+            if i % every_n == 0:
+                blob = png_encode(list(canvas), g.width, g.height,
+                                  color_type=2)
+                yield (mid, "image/png", i, n, f.delay_cs,
+                       g.width, g.height, blob)
 
-        for pdf in batches:
-            out = []
-            for mid, payload, mime in zip(
-                    pdf[id_col], pdf[payload_col], pdf[mime_col]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    g = gif_decode(raw, max_pixels=max_pixels)
-                    n = len(g.frames)
-                    for i, f, canvas in compose_frames(g):
-                        if i % every_n:
-                            continue
-                        blob = png_encode(list(canvas), g.width, g.height,
-                                          color_type=2)
-                        out.append((mid, "image/png", i, n, f.delay_cs,
-                                    g.width, g.height, blob))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    out.append((mid, mime) + (None,) * 6)
-            yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
-
-    return slim.mapInPandas(run, schema=schema)
+    return map_rows(
+        df, [id_col, payload_col, mime_col],
+        keyed_schema(df, id_col, FRAME_SCHEMA.fields[1:], "media_id"),
+        per_row, on_error,
+        lambda mid, payload, mime: (mid, mime) + (None,) * 6)
 
 
 VIDEO_META_SCHEMA = T.StructType([
@@ -978,39 +950,17 @@ def extract_table_cells(
     groupBy(sheet, row).pivot(col)). ``on_error="null"`` turns a NULL
     or malformed workbook into one all-NULL row. Map-only, no
     shuffle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from ..functions.docx import xlsx_cells
 
-    if on_error not in ("raise", "null"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'null', got {on_error!r}")
-    slim = df.select(id_col, payload_col)
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [T.StructField("media_id", id_type, False)]
-        + list(TABLE_CELLS_SCHEMA.fields[1:]))
-    cols = [f.name for f in schema.fields]
+    def per_row(mid, payload):
+        raw = bytes(payload) if payload is not None else b""
+        return [(mid,) + cell for cell in xlsx_cells(raw)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    raw = bytes(payload) if payload is not None else b""
-                    cells = list(xlsx_cells(raw))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    out.append((mid,) + (None,) * 5)
-                    continue
-                for sheet, row, col, value, kind in cells:
-                    out.append((mid, sheet, row, col, value, kind))
-            yield pd.DataFrame(out, columns=cols)
-
-    return slim.mapInPandas(run, schema=schema)
+    return map_rows(
+        df, [id_col, payload_col],
+        keyed_schema(df, id_col, TABLE_CELLS_SCHEMA.fields[1:],
+                     "media_id"),
+        per_row, on_error)
 
 
 def dhash_bits(pixels, w: int, h: int, ch: int,
@@ -1270,41 +1220,23 @@ def frame_dhash(
     Upstream ``on_error="null"`` rows (NULL payload/frame_idx) pass
     through as NULL-hash rows for triage. Map-only Arrow stage, no
     shuffle."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'null', got {on_error!r}")
-    id_type = frames.schema[id_col].dataType
-    schema = T.StructType([
-        T.StructField("media_id", id_type, False),
+    schema = keyed_schema(frames, id_col, [
         T.StructField("frame_idx", T.IntegerType(), True),
         T.StructField("n_frames", T.IntegerType(), True),
         T.StructField("dhash_hex", T.StringType(), True),
-    ])
-    slim = frames.select(id_col, "frame_idx", "n_frames",
-                         payload_col, "mime")
+    ], "media_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, fi, nf, payload, mime in zip(
-                    pdf[id_col], pdf["frame_idx"], pdf["n_frames"],
-                    pdf[payload_col], pdf["mime"]):
-                if payload is None or fi is None:
-                    out.append((mid, None, None, None))
-                    continue
-                try:
-                    pixels, w, h, ch, _depth, orient = _decode_image_any(
-                        bytes(payload), mime, max_pixels)
-                    bits = dhash_bits(pixels, w, h, ch, orient)
-                    out.append((mid, int(fi), int(nf), f"{bits:016x}"))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    out.append((mid, None, None, None))
-            yield pd.DataFrame(out,
-                               columns=[f.name for f in schema.fields])
+    def per_row(mid, fi, nf, payload, mime):
+        if payload is None or fi is None:
+            return [(mid, None, None, None)]
+        pixels, w, h, ch, _depth, orient = _decode_image_any(
+            bytes(payload), mime, max_pixels)
+        bits = dhash_bits(pixels, w, h, ch, orient)
+        return [(mid, int(fi), int(nf), f"{bits:016x}")]
 
-    return slim.mapInPandas(run, schema=schema)
+    return map_rows(
+        frames, [id_col, "frame_idx", "n_frames", payload_col, "mime"],
+        schema, per_row, on_error)
 
 
 def video_fingerprint(

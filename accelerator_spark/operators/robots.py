@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .arrowmap import map_rows
+
 
 @dataclass(frozen=True)
 class RobotsRules:
@@ -178,10 +180,6 @@ def robots_check(
     ``allowed`` boolean. The robots side broadcasts (one row per
     host); evaluation is one Arrow map stage with an lru parse cache
     per task. Missing robots rows allow by default."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     slim = robots.select(
         F.col(host_col).alias("__rb_host"),
         F.col(robots_col).alias("__rb_txt"))
@@ -192,37 +190,25 @@ def robots_check(
         list(urls.schema.fields)
         + [T.StructField("allowed", T.BooleanType(), True)])
     in_cols = [f.name for f in urls.schema.fields]
-    cols = [f.name for f in out_schema.fields]
-
     url_at = in_cols.index(url_col)
+    # parse cache, bounded by the distinct robots TEXTS one task sees
+    # and evicted wholesale past the cap: each task unpickles its own
+    # copy of the closure (a module-level lru_cache would not pickle)
+    cache: dict = {}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-task parse cache (a module-level lru_cache would not
-        # pickle into the udf closure): bounded by distinct robots
-        # TEXTS seen by this task, evicted wholesale past the cap
-        cache: dict = {}
+    def per_row(*row):
+        *vals, txt = row
+        url = vals[url_at]
+        if url is None:
+            return [(*vals, None)]
+        rules = cache.get(txt)
+        if rules is None:
+            if len(cache) > 4096:
+                cache.clear()
+            rules = cache[txt] = parse_robots(txt, agent)
+        return [(*vals, robots_allowed(rules, _url_path(url)))]
 
-        def rules_for(txt):
-            r = cache.get(txt)
-            if r is None:
-                if len(cache) > 4096:
-                    cache.clear()
-                r = cache[txt] = parse_robots(txt, agent)
-            return r
-
-        for pdf in batches:
-            out = []
-            for row in zip(*(pdf[c] for c in in_cols), pdf["__rb_txt"]):
-                *vals, txt = row
-                url = vals[url_at]
-                if url is None:
-                    out.append(tuple(vals) + (None,))
-                    continue
-                allowed = robots_allowed(rules_for(txt), _url_path(url))
-                out.append(tuple(vals) + (allowed,))
-            yield pd.DataFrame(out, columns=cols)
-
-    return joined.mapInPandas(run, schema=out_schema)
+    return map_rows(joined, in_cols + ["__rb_txt"], out_schema, per_row)
 
 
 # ----------------------------------------------------------- sitemaps
@@ -310,33 +296,14 @@ def sitemap_entries(
     ONE all-NULL-fields row (kind/loc NULL, seq NULL) instead of
     failing the job — one corrupt sitemap must not abort a corpus
     sweep (review r9). Map-only over the scan, no shuffle."""
-    from collections.abc import Iterator
+    def per_row(did, payload):
+        raw = bytes(payload) if payload is not None else b""
+        kind, entries = parse_sitemap(raw)
+        return [(did, i, kind, loc, lastmod, freq, prio)
+                for i, (loc, lastmod, freq, prio) in enumerate(entries)]
 
-    import pandas as pd
-
-    if on_error not in ("raise", "null"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'null', got {on_error!r}")
-    slim = df.select(id_col, payload_col)
-    cols = [f.name for f in SITEMAP_SCHEMA.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    raw = bytes(payload) if payload is not None else b""
-                    kind, entries = parse_sitemap(raw)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    out.append((did,) + (None,) * 6)
-                    continue
-                for i, (loc, lastmod, freq, prio) in enumerate(entries):
-                    out.append((did, i, kind, loc, lastmod, freq, prio))
-            yield pd.DataFrame(out, columns=cols)
-
-    return slim.mapInPandas(run, schema=SITEMAP_SCHEMA)
+    return map_rows(df, [id_col, payload_col], SITEMAP_SCHEMA, per_row,
+                    on_error)
 
 
 def sitemap_build(entries, kind: str = "urlset",

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .arrowmap import map_rows
+
 _PEEK = 1024
 
 
@@ -140,23 +142,13 @@ def sniff_blobs(df: DataFrame, payload_col: str = "payload",
     """One (family, format, n_bytes) row per blob — the map stage
     corpus_inventory aggregates; keep it when per-file routing is the
     goal."""
-    slim = df.select(id_col, payload_col)
+    def per_row(mid, payload):
+        if payload is None:
+            return [(mid, None, None, None)]
+        raw = bytes(payload)
+        return [(mid, *sniff_format(raw), len(raw))]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    out.append((mid, None, None, None))
-                    continue
-                raw = bytes(payload)
-                fam, fmt = sniff_format(raw)
-                out.append((mid, fam, fmt, len(raw)))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in SNIFF_SCHEMA.fields])
-
-    return slim.mapInPandas(run, schema=SNIFF_SCHEMA)
+    return map_rows(df, [id_col, payload_col], SNIFF_SCHEMA, per_row)
 
 
 def corpus_inventory(df: DataFrame, payload_col: str = "payload",

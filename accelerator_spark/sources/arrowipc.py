@@ -117,6 +117,25 @@ def _open_reader(data: bytes):
         raise ArrowIpcError(f"not an arrow IPC file/stream: {e}") from e
 
 
+def _read_schema(local: str):
+    """The IPC schema of one local file, read without loading its
+    batches: the file layout's footer through a memory map, the stream
+    layout's first message through an open file."""
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
+
+    with open(local, "rb") as fh:
+        is_file = fh.read(6) == b"ARROW1"
+    try:
+        if is_file:
+            with pa.memory_map(local) as src:
+                return ipc.open_file(src).schema
+        with pa.OSFile(local) as src:
+            return ipc.open_stream(src).schema
+    except pa.ArrowInvalid as e:
+        raise ArrowIpcError(f"not an arrow IPC file/stream: {e}") from e
+
+
 def _iter_batches(data: bytes):
     import pyarrow.ipc as ipc
 
@@ -148,12 +167,9 @@ def arrow_import(spark: SparkSession, path: str,
             "schema probe needs a locally readable first file "
             f"(got {paths[0]}); copy one shard local or pass a schema-"
             "bearing local path")
-    with open(local, "rb") as fh:
-        head = fh.read()
-    pa_schema = _open_reader(head).schema
     schema = T.StructType([
         T.StructField(f.name, _pa_to_spark(f.type), f.nullable)
-        for f in pa_schema])
+        for f in _read_schema(local)])
 
     expected = [f.name for f in schema.fields]
 

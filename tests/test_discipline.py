@@ -95,3 +95,34 @@ def test_file_sinks_commit_through_one_module():
         if rel != owner and ("os.replace" in src or ".inprogress" in src):
             offenders.append(rel)
     assert not offenders
+
+
+def test_per_row_operators_map_through_one_stage():
+    """Under operators/, a per-row Python operator crosses into Python
+    only through arrowmap.map_rows: no other module but the two
+    partition-level stages (analytics.skyline, sketches.heavy_hitters)
+    calls mapInPandas, the on_error check is stated in one module, and
+    the text and media adapters hold no row loop of their own."""
+    ops = os.path.join(REPO, "accelerator_spark", "operators")
+    mappers = [os.path.basename(p)
+               for p in sorted(glob.glob(os.path.join(ops, "*.py")))
+               if ".mapInPandas(" in open(p).read()]
+    assert set(mappers) <= {"arrowmap.py", "analytics.py", "sketches.py"}
+    checkers = [
+        os.path.relpath(p, REPO)
+        for p in sorted(glob.glob(os.path.join(
+            REPO, "accelerator_spark", "**", "*.py"), recursive=True))
+        if "on_error must be 'raise' or 'null'" in open(p).read()]
+    assert checkers == [os.path.join(
+        "accelerator_spark", "operators", "arrowmap.py")]
+    adapters = {
+        "map_text_rows": os.path.join(ops, "arrowmap.py"),
+        "_map_media_rows": os.path.join(ops, "multimodal.py")}
+    for name, path in adapters.items():
+        fn, = [n for n in ast.parse(open(path).read()).body
+               if isinstance(n, ast.FunctionDef) and n.name == name]
+        loops = [n for n in ast.walk(fn)
+                 if isinstance(n, (ast.For, ast.While, ast.comprehension))
+                 or (isinstance(n, ast.Attribute)
+                     and n.attr == "mapInPandas")]
+        assert not loops, name

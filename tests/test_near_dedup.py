@@ -218,30 +218,6 @@ def test_state_near_ids_plan_keeps_state_unshuffled(tmp_path):
     assert [r.doc_id for r in near.collect()] == [99]
 
 
-def test_state_near_ids_broadcast_escape_hatch(tmp_path):
-    """broadcast_batch=False (bootstrap-scale batches): the probe
-    becomes a shuffled join on the band key — no broadcast build of
-    the batch — with identical results."""
-    spark = _spark()
-    st = spark.createDataFrame(
-        [("B0_1", 1, 10), ("B1_0", 1, 10)],
-        "blk string, fp long, doc_id long")
-    st.write.parquet(str(tmp_path / "state"))
-    state = spark.read.parquet(str(tmp_path / "state"))
-    batch = spark.createDataFrame([(99, 1), (98, -(1 << 60))],
-                                  "doc_id long, fp long")
-    near = state_near_ids(batch, state, "fp", "doc_id", 64, 3,
-                          broadcast_batch=False)
-    # the HINT is gone (AQE may still broadcast a genuinely tiny side
-    # on its own statistics — that is the point of dropping the hint)
-    op = near._jdf.queryExecution().optimizedPlan().toString()
-    assert "Hint" not in op
-    withhint = state_near_ids(batch, state, "fp", "doc_id", 64, 3)
-    assert "rightHint=(strategy=broadcast)" in \
-        withhint._jdf.queryExecution().optimizedPlan().toString()
-    assert [r.doc_id for r in near.collect()] == [99]
-
-
 def test_jaccard_verify_disposes_false_candidates():
     """The verify stage: exact shingle Jaccard on SUPPLIED candidate
     pairs — a verbatim pair scores 1.0, an unrelated pair proposed by
