@@ -11,12 +11,13 @@ Each run is split into BUILD (``fn(spark, sf_dir)``: Py4J plan
 construction plus any eager action the query runs inside it) and EXEC
 (a noop write of the result). The run's Spark jobs are counted in its
 own job group (``perfbench.harness.JobCounter``) after the build
-(``build_jobs``) and after the write (``jobs``). Per query the record
-keeps the median of $SPARK_GRAFT_BENCH_RUNS runs (default 3) of
-build + exec, of build and of exec, the [min, max] spread and the
-per-run job counts; ``families`` rolls the medians up per operator
-family (a gate's registry module, also ending each query's stderr
-line as ``family=<name>``). Timing excludes SparkSession startup.
+(``build_jobs``) and after the write (``jobs``), and the classes Janino
+compiled over the run are counted too (``compiles``). Per query the record keeps the median of
+$SPARK_GRAFT_BENCH_RUNS runs (default 3) of build + exec, of build and
+of exec, the [min, max] spread and the per-run job and compile counts;
+``families`` rolls the medians up per operator family (a gate's
+registry module, also ending each query's stderr line as
+``family=<name>``). Timing excludes SparkSession startup.
 
 STDOUT CONTRACT: stdout carries exactly one JSON line — metric, value,
 unit, total and the per-query median map under ``queries``. Callers
@@ -37,14 +38,15 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 import __spark_entry__
-from accelerator_spark.session import get_spark
+from accelerator_spark.session import codegen_compiles, get_spark
 from perfbench.harness import JobCounter
 
 
 def _run(spark, counter: JobCounter, name: str, fn, sf_dir: str):
-    """One run of ``fn``: (build_s, exec_s, build_jobs, jobs)."""
+    """One run of ``fn``: (build_s, exec_s, build_jobs, jobs, compiles)."""
     gid = counter.group(name)
     try:
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
@@ -55,7 +57,8 @@ def _run(spark, counter: JobCounter, name: str, fn, sf_dir: str):
         # plan and the result stays distributed.
         df.write.mode("overwrite").format("noop").save()
         t2 = time.perf_counter()
-        return t1 - t0, t2 - t1, build_jobs, len(counter.jobs(gid))
+        return (t1 - t0, t2 - t1, build_jobs, len(counter.jobs(gid)),
+                codegen_compiles(spark) - c0)
     finally:
         counter.clear()
         # a query's persisted intermediates must not distort the next
@@ -116,6 +119,7 @@ def main() -> None:
     spread: dict[str, list[float]] = {}
     jobs: dict[str, list[int]] = {}
     build_jobs: dict[str, list[int]] = {}
+    compiles: dict[str, list[int]] = {}
     errors: dict[str, str] = {}
     reruns: dict[str, float] = {}
     for name, fn in todo.items():
@@ -158,11 +162,13 @@ def main() -> None:
             spread[name] = [round(min(totals), 3), round(max(totals), 3)]
             build_jobs[name] = [r[2] for r in runs]
             jobs[name] = [r[3] for r in runs]
+            compiles[name] = [r[4] for r in runs]
             print(f"# {name}: {times[name]:.3f}s "
                   f"[{spread[name][0]:.3f}-{spread[name][1]:.3f}] "
                   f"build {build[name]:.3f}s exec {exec_[name]:.3f}s "
                   f"jobs/run={jobs[name]} build_jobs/run={build_jobs[name]} "
-                  f"family={_family(fn)}", file=sys.stderr)
+                  f"compiles/run={compiles[name]} family={_family(fn)}",
+                  file=sys.stderr)
 
     total = round(sum(times.values()), 3)
     basis = f"median_of_{n_runs}"
@@ -179,10 +185,14 @@ def main() -> None:
         out = {"metric": "headline_queries_total", "value": total,
                "unit": "sec", "basis": basis, "queries": times,
                "spread": spread, "sf": sf, "build": build, "exec": exec_,
-               "jobs": jobs, "build_jobs": build_jobs, "families": families,
+               "jobs": jobs, "build_jobs": build_jobs, "compiles": compiles,
+               "families": families,
                "stamp": {"nproc": len(os.sched_getaffinity(0)),
                          "spark_graft_cpus": os.environ.get(
                              "SPARK_GRAFT_CPUS"),
+                         "spark.sql.codegen.cache.maxEntries":
+                             spark.conf.get(
+                                 "spark.sql.codegen.cache.maxEntries"),
                          "loadavg_start": load_start,
                          "loadavg_end": os.getloadavg(),
                          "git_head": _git_head(), "sf": sf}}

@@ -1,6 +1,6 @@
 """bench.py over named queries: one stdout line, one stderr line per
-query with its build/exec split, job counts and operator family, and no
-record written."""
+query with its build/exec split, job and compile counts and operator
+family, and no record written."""
 
 import json
 import os
@@ -33,6 +33,11 @@ def test_bench_times_named_queries_without_writing_the_record(sf_dir):
         assert m, r.stderr[-2000:]
         jobs = [int(j) for j in m.group(3).split(",")]
         assert len(jobs) == 2 and min(jobs) >= 1, jobs
+        m = re.search(rf"^# {name}: .* compiles/run=\[([^\]]*)\]",
+                      r.stderr, re.M)
+        assert m, r.stderr[-2000:]
+        compiles = [int(c) for c in m.group(1).split(",")]
+        assert len(compiles) == 2 and min(compiles) >= 0, compiles
         assert re.search(rf"^# {name}: .* family=relational$", r.stderr,
                          re.M), r.stderr[-2000:]
     with open(record, "rb") as f:
