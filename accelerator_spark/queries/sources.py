@@ -430,8 +430,7 @@ def webdataset_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 members.append(("README", f"R-{hx[26:30]}".encode()))
                 shard = tar_build(members, mtime=1600000000,
                                   gzip_compress=True)
-                for rows in tar_decode_file(str(doc_id), shard):
-                    out.extend(rows)
+                out.extend(tar_decode_file(str(doc_id), shard))
             yield pd.DataFrame(out, columns=cols)
 
     # the authored-fixture stage parallelizes via _spread above (r12:
@@ -584,8 +583,8 @@ def mbox_extract_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                                b"--BB--\n")
                     raws.append(raw)
                 data = mbox_build(raws)
-                for rows in mbox_decode_file(str(doc_id), data):
-                    out.extend((int(r[0]),) + r[1:] for r in rows)
+                out.extend((int(r[0]),) + r[1:]
+                           for r in mbox_decode_file(str(doc_id), data))
             yield pd.DataFrame(
                 out, columns=[f.name for f in out_schema.fields])
 
@@ -880,8 +879,7 @@ def tensor_import_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "emb": ("F32", [2, 3], [float(b) for b in d[:6]]),
                     "ids": ("I64", [2], [d[6], d[7]]),
                 })
-                out.extend((str(doc_id),) + r[1:]
-                           for r in tensor_decode_file(str(doc_id), blob))
+                out.extend(tensor_decode_file(str(doc_id), blob))
             yield pd.DataFrame(out, columns=cols)
 
     rows = docs.mapInPandas(build_and_decode, schema=TENSOR_SCHEMA)

@@ -8,10 +8,11 @@ both read here: the FILE format (``ARROW1`` magic + footer with
 record-batch offsets) and the STREAM format (bare schema + batch
 messages) — sniffed per file.
 
-``arrow_import`` reads a directory one task per file, emitting each
-record batch as its own Arrow-to-Arrow pandas chunk (peak heap per
-task is one batch, not the file — the sources/warc.py contract; the
-writer's ``rows_per_batch`` controls the granularity). The Spark
+``arrow_import`` reads a directory through the shared listing of
+sources/shards.py, emitting each record batch as its own
+Arrow-to-Arrow pandas chunk (peak heap per task is one batch plus the
+file's bytes; the writer's ``rows_per_batch`` controls the
+granularity). The Spark
 schema is derived driver-side from the first file's IPC schema
 (mirrors sources/avro.py's header read). ``arrow_export`` writes one
 file per partition via mapInPandas, schema derived from the Spark
@@ -29,7 +30,6 @@ extension surface).
 
 from __future__ import annotations
 
-import io
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -149,23 +149,19 @@ def _iter_batches(data: bytes):
 
 def arrow_import(spark: SparkSession, path: str,
                  pattern: str = "*.arrow*") -> DataFrame:
-    """Read a directory of Arrow IPC files distributed: one task per
-    file, one Arrow batch out per IPC record batch. All files must
-    share the first file's schema (enforced per batch by the
-    mapInPandas coercion)."""
-    from .avro import _as_local
-
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", pattern).load(path)
-             .select("path", "content"))
-    paths = sorted(r["path"] for r in files.select("path").collect())
-    if not paths:
+    """Read a directory of Arrow IPC files distributed, one Arrow
+    batch out per IPC record batch (sources/shards.py states how files
+    pack into tasks). All files must share the schema of the first
+    file by path (enforced per batch by the mapInPandas coercion)."""
+    files = shards.list_files(spark, path, pattern)
+    first = shards.first_path(files)
+    if first is None:
         raise ArrowIpcError(f"no files match {pattern} under {path}")
-    local = _as_local(paths[0])
+    local = shards.as_local(first)
     if local is None:
         raise ArrowIpcError(
             "schema probe needs a locally readable first file "
-            f"(got {paths[0]}); copy one shard local or pass a schema-"
+            f"(got {first}); copy one shard local or pass a schema-"
             "bearing local path")
     schema = T.StructType([
         T.StructField(f.name, _pa_to_spark(f.type), f.nullable)

@@ -6,7 +6,7 @@ PNG/WAV pattern: the format's building blocks are all stdlib (zigzag
 varints + struct floats + zlib deflate), and a complete Object
 Container Format codec is a few hundred lines. ``avro_import`` reads
 a directory of .avro files distributed (binaryFile scan, one Python
-decode per file, Arrow-batched back into Spark rows); ``avro_export``
+decode per file or block range, Arrow-batched back into Spark rows); ``avro_export``
 writes one container file per partition into a shared directory — the
 same per-slice file model the reference uses for its workdirs
 (/root/reference/accelerator/dataset.py writes one file per slice).
@@ -36,9 +36,10 @@ are locally readable (local paths, NFS/fuse mounts): stage 1 walks
 each file's framing reading ~20 bytes per block plus seeks and emits
 (file, byte-range) pairs of ~target_split_bytes; stage 2 fans the
 ranges out and each task decodes only its range — one 10 GB file
-becomes ~80 tasks instead of one task holding the whole blob. Paths
-only a JVM filesystem connector can reach (hdfs://, s3a://) fall back
-to the whole-file binaryFile scan, one task per file.
+becomes ~80 tasks instead of one task holding the whole blob
+(``shards.read_ranges``). Paths only a JVM filesystem connector can
+reach (hdfs://, s3a://) fall back to whole-file decode through the
+shared read stage (``shards.read_files``).
 """
 
 from __future__ import annotations
@@ -391,22 +392,6 @@ def avro_read_header(stream):
     return schema, codec, sync
 
 
-def _as_local(spark_path: str) -> str | None:
-    """binaryFile's path column -> a locally readable filesystem path,
-    or None when the file isn't reachable through the OS (hdfs://,
-    s3a://). NO percent-decoding: binaryFile paths are not encoded
-    (verified live in media.py, review r4)."""
-    if spark_path.startswith("file:"):
-        from urllib.parse import urlparse
-
-        p = urlparse(spark_path).path
-    elif "://" in spark_path:
-        return None
-    else:
-        p = spark_path
-    return p if os.path.exists(p) else None
-
-
 def avro_block_ranges(local: str, target_bytes: int = 128 << 20) -> list:
     """Walk one container's block framing and coalesce consecutive
     blocks into byte ranges of >= target_bytes (always whole blocks;
@@ -442,41 +427,6 @@ def avro_block_ranges(local: str, target_bytes: int = 128 << 20) -> list:
         if r_blocks:
             ranges.append((r_start, pos, r_blocks))
     return ranges
-
-
-def avro_split_index(spark: SparkSession, path: str, glob: str = "*.avro",
-                     target_split_bytes: int = 128 << 20) -> DataFrame:
-    """Stage 1 of the split read: DISTRIBUTED per-file block-boundary
-    scan -> one row per byte range (media_path, local, start, end,
-    n_blocks). The listing reads paths only (binaryFile column pruning
-    never loads content); each task indexes its files via
-    avro_block_ranges. Raises in-task if a file isn't locally readable
-    — callers decide split eligibility first (avro_import does)."""
-    from .media import binary_import
-
-    paths = binary_import(spark, path, glob=glob).select("media_path")
-
-    def scan(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for sp in pdf["media_path"]:
-                local = _as_local(sp)
-                if local is None:
-                    raise AvroError(
-                        f"avro_split_index: {sp} is not locally readable "
-                        "— use avro_import(split=False) for remote "
-                        "filesystems")
-                for s, e, nb in avro_block_ranges(local, target_split_bytes):
-                    rows.append((sp, local, s, e, nb))
-            yield pd.DataFrame(
-                rows, columns=["media_path", "local", "start", "end",
-                               "n_blocks"])
-
-    return paths.mapInPandas(
-        scan, schema=("media_path string, local string, start long, "
-                      "end long, n_blocks long"))
 
 
 def _snappy_uncompress(data: bytes) -> bytes:
@@ -757,30 +707,32 @@ def spark_to_avro_schema(dt: T.DataType, name: str = "row",
 def avro_import(spark: SparkSession, path: str, glob: str = "*.avro",
                 split: bool | str = "auto",
                 target_split_bytes: int = 128 << 20) -> DataFrame:
-    """Read a directory of Avro object containers into a DataFrame.
-    Distributed two ways (module docstring): when files are locally
-    readable (default ``split="auto"``), a block-boundary index stage
-    fans each file out into ~``target_split_bytes`` ranges so one huge
-    container decodes on many tasks; otherwise a binaryFile scan (one
-    task per file). ``split=True`` forces range reads (raises on remote
-    paths), ``split=False`` forces whole files. The schema is taken
-    from the first file's header; files whose schema disagrees fail
-    their task loudly (no silent coercion)."""
+    """Read a directory of Avro object containers (recursively: the
+    listing is ``media.binary_import``'s) into a DataFrame.
+    Distributed two ways (module docstring): when the first file is
+    locally readable (default ``split="auto"``), a block-boundary
+    index stage fans each file out into ~``target_split_bytes``
+    ranges so one huge container decodes on many tasks; otherwise the
+    whole files go through the shared read stage
+    (``shards.read_files``). ``split=True`` forces range reads (raises
+    on remote paths), ``split=False`` forces whole files. The schema
+    is taken from the header of the first file by path; files whose
+    schema disagrees fail their task loudly (no silent coercion)."""
     from .media import binary_import
 
-    files = binary_import(spark, path, glob=glob)
-    head = files.select("media_path").limit(1).collect()
-    if not head:
+    files = binary_import(spark, path, glob=glob).select(
+        F.col("media_path").alias("path"), "content")
+    first_path = shards.first_path(files)
+    if first_path is None:
         raise AvroError(f"no {glob} files under {path}")
-    first_path = head[0]["media_path"]
-    local = _as_local(first_path)
+    local = shards.as_local(first_path)
     if local:
         # header-only read: a few KB off disk, never the blocks
         with open(local, "rb") as f:
             schema, _, _ = avro_read_header(f)
     else:
         # non-local filesystem: pull ONE file's bytes through Spark
-        blob = (files.filter(F.col("media_path") == first_path)
+        blob = (files.filter(F.col("path") == first_path)
                 .select("content").head()["content"])
         schema, _, _ = avro_read_header(io.BytesIO(bytes(blob)))
     if split is True and local is None:
@@ -820,7 +772,6 @@ def avro_import(spark: SparkSession, path: str, glob: str = "*.avro",
         wrap = True
     else:
         wrap = False
-    schema_json = json.dumps(schema)
     cols = [f.name for f in sdt.fields]
     # the Python->Arrow hop conflates null with NaN for float64 columns
     # (no null bitmap survives a pandas float column), so long/float/
@@ -900,65 +851,47 @@ def avro_import(spark: SparkSession, path: str, glob: str = "*.avro",
     _schema_mismatch = ("file schema differs from the directory's first "
                         "file — mixed-schema avro directories are not "
                         "merged")
+    expect = json.dumps(parse_schema(json.dumps(schema)))
 
-    def decode(batches):
-        import pandas as pd
+    def decode(p, data):
+        fschema, records = avro_decode_file(data)
+        if json.dumps(fschema) != expect:
+            raise AvroError(_schema_mismatch)
+        return _rows_from(records)
 
-        expect = json.dumps(parse_schema(schema_json))
-        for pdf in batches:
-            for content in pdf["content"]:
-                fschema, records = avro_decode_file(bytes(content))
-                if json.dumps(fschema) != expect:
-                    raise AvroError(_schema_mismatch)
-                yield pd.DataFrame(_rows_from(records), columns=cols)
+    def index(sp):
+        local = shards.as_local(sp)
+        if local is None:
+            raise AvroError(
+                f"avro_import: {sp} is not locally readable — use "
+                "avro_import(split=False) for remote filesystems")
+        for start, end, n_blocks in avro_block_ranges(
+                local, target_split_bytes):
+            yield local, start, end, n_blocks
 
-    def decode_ranges(batches):
-        import pandas as pd
-
-        expect = json.dumps(parse_schema(schema_json))
-        for pdf in batches:
-            for lp, start, end, n_blocks in zip(
-                    pdf["local"], pdf["start"], pdf["end"],
-                    pdf["n_blocks"]):
-                with open(lp, "rb") as f:
-                    fschema, codec, sync = avro_read_header(f)
-                    if json.dumps(fschema) != expect:
-                        raise AvroError(_schema_mismatch)
-                    f.seek(int(start))
-                    records = []
-                    for _ in range(int(n_blocks)):
-                        n, block = _read_block(f, sync, codec)
-                        bbuf = io.BytesIO(block)
-                        for _ in range(n):
-                            records.append(_read_datum(bbuf, fschema))
-                    if f.tell() != int(end):
-                        raise AvroError(
-                            f"range decode drift: ended at {f.tell()}, "
-                            f"index said {end} (file changed under us?)")
-                yield pd.DataFrame(_rows_from(records), columns=cols)
+    def decode_range(local, start, end, n_blocks):
+        with open(local, "rb") as f:
+            fschema, codec, sync = avro_read_header(f)
+            if json.dumps(fschema) != expect:
+                raise AvroError(_schema_mismatch)
+            f.seek(start)
+            records = []
+            for _ in range(n_blocks):
+                n, block = _read_block(f, sync, codec)
+                bbuf = io.BytesIO(block)
+                for _ in range(n):
+                    records.append(_read_datum(bbuf, fschema))
+            if f.tell() != end:
+                raise AvroError(
+                    f"range decode drift: ended at {f.tell()}, "
+                    f"index said {end} (file changed under us?)")
+        return _rows_from(records)
 
     if do_split:
-        ranges = avro_split_index(spark, path, glob=glob,
-                                  target_split_bytes=target_split_bytes)
-        # materialize the index on the DRIVER: one ~100-byte row per
-        # ~target_split_bytes of data — the same bounded class as the
-        # export-manifest collect, and where Hadoop InputFormats plan
-        # their splits too. This runs the distributed framing scan
-        # exactly once and hands each decode task exactly ONE range
-        # (review r7: the previous count()+repartition re-ran the
-        # uncached scan for the second job, and round-robin could still
-        # co-locate ranges). A column repartition would be worse again:
-        # AQE sizes by the index rows' bytes, not the decode work each
-        # row stands for, collapsing a 10 GB file back to one task.
-        idx = [tuple(r) for r in ranges.collect()]
-        if not idx:
-            # containers exist (header was read) but hold zero blocks
-            return spark.createDataFrame([], safe_sdt).select(*casts)
-        rdd = spark.sparkContext.parallelize(idx, len(idx))
-        ranges = spark.createDataFrame(rdd, schema=ranges.schema)
-        out = ranges.mapInPandas(decode_ranges, schema=safe_sdt)
+        out = shards.read_ranges(files.select("path"), index, decode_range,
+                                 safe_sdt)
     else:
-        out = files.select("content").mapInPandas(decode, schema=safe_sdt)
+        out = shards.read_files(files, safe_sdt, decode)
     return out.select(*casts)
 
 

@@ -31,9 +31,10 @@ Spark-first mapping (SURVEY §2.1):
   reference's C state machine (csvimport.py). The tokenizer runs as an
   Arrow-batched ``mapInPandas`` ONLY when quote parsing is requested —
   it is the exotic path, the hot path stays JVM-side;
-- non-UTF8 text-path files read via ``binaryFile`` + per-file line
-  split (files are the parallel unit — same as the reference, which is
-  single-node; the UTF-8 path is a fully splittable distributed scan).
+- non-UTF8 text-path files read through the shared file stage
+  (sources/shards.py) + per-file line split (a file is never split —
+  same as the reference, which is single-node; the UTF-8 path is a
+  fully splittable distributed scan).
 
 Scale: the UTF-8 text path is a distributed file scan. Line numbers are
 computed WITHOUT a global sort: ``monotonically_increasing_id`` encodes
@@ -52,8 +53,16 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..identifiers import qcol, quote_ident
+from . import shards
+
+_LINES_SCHEMA = T.StructType([
+    T.StructField("_path", T.StringType()),
+    T.StructField("value", T.StringType()),
+    T.StructField("_in_file", T.LongType()),
+])
 
 
 @dataclass
@@ -284,32 +293,22 @@ def _read_lines(spark: SparkSession, path: str, encoding: str,
         )
         return out if keep_file_info else out.drop("_path", "_fline")
 
-    def _decode(batches: Iterator) -> Iterator:
+    def _decode(path: str, data: bytes):
         import re
 
-        import pandas as pd
+        text = data.decode(encoding)
+        if newline:
+            # custom terminator: \n etc. inside values is DATA
+            lines = text.split(newline)
+        else:
+            lines = re.split("\r\n|\r|\n", text)
+        if lines and lines[-1] == "":
+            lines = lines[:-1]  # terminator after last line
+        for i, line in enumerate(lines, 1):
+            yield path, line, i
 
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                text = bytes(row["content"]).decode(encoding)
-                if newline:
-                    # custom terminator: \n etc. inside values is DATA
-                    lines = text.split(newline)
-                else:
-                    lines = re.split("\r\n|\r|\n", text)
-                if lines and lines[-1] == "":
-                    lines = lines[:-1]  # terminator after last line
-                yield pd.DataFrame({
-                    "_path": row["path"],
-                    "value": lines,
-                    "_in_file": range(1, len(lines) + 1),
-                })
-
-    per_file = (spark.read.format("binaryFile").load(path)
-                .select("path", "content")
-                .mapInPandas(_decode,
-                             schema="_path string, value string, "
-                                    "_in_file long"))
+    per_file = shards.read_files(
+        shards.list_files(spark, path, "*"), _LINES_SCHEMA, _decode)
     # globally dense linenos across files (path order), same offset
     # pattern as the UTF-8 branch — one row per FILE in the tiny frame
     counts = per_file.groupBy("_path").agg(F.count(F.lit(1)).alias("_n"))

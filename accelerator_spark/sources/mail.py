@@ -8,9 +8,9 @@ concatenated with ``From `` separator lines, bodies ``>From``-quoted
 dates, multipart walks, base64/quoted-printable transfer decoding,
 per-part charsets.
 
-``mbox_import`` reads a directory of mbox files distributed (one task
-per file via binaryFile, rows out in bounded Arrow batches — the
-sources/warc.py memory contract) and emits one row per message:
+``mbox_import`` reads a directory of mbox files distributed (the
+shared read stage of sources/shards.py, rows out in bounded Arrow
+batches) and emits one row per message:
 identity headers, epoch date, the first text/plain and text/html
 bodies (transfer-decoded, charset-decoded with a utf-8 → latin-1
 fallback), and attachment count/bytes. Route ``body_html`` through
@@ -36,6 +36,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from . import shards
 
 
 MAIL_SCHEMA = T.StructType([
@@ -177,48 +179,24 @@ def parse_email(raw: bytes) -> dict:
     }
 
 
-def mbox_decode_file(path: str, data: bytes,
-                     chunk_records: int = 512,
-                     chunk_bytes: int = 64 << 20):
-    """Generator of row-lists for one mbox file, cut every
-    ``chunk_records`` messages or ``chunk_bytes`` of raw message —
-    the Arrow-batch memory bound."""
+def mbox_decode_file(path: str, data: bytes):
+    """MAIL_SCHEMA row tuples for one mbox file, one per message."""
     cols = [f.name for f in MAIL_SCHEMA.fields]
-    out, nbytes = [], 0
     for idx, raw in enumerate(mbox_split(data)):
         d = parse_email(raw)
-        out.append((path, idx) + tuple(d[c] for c in cols[2:]))
-        nbytes += len(raw)
-        if len(out) >= chunk_records or nbytes >= chunk_bytes:
-            yield out
-            out, nbytes = [], 0
-    if out:
-        yield out
+        yield (path, idx) + tuple(d[c] for c in cols[2:])
 
 
 def mbox_import(spark: SparkSession, path: str,
-                pattern: str = "*.mbox*",
-                chunk_records: int = 512,
-                chunk_bytes: int = 64 << 20) -> DataFrame:
-    """Read a directory of mbox files distributed: one task per file,
-    one row per message, bounded Arrow batches. Large single archives
-    should be pre-split (mbox has no record index; the separator scan
-    is inherently sequential per file — file count is the parallelism
-    axis, as with WARC-without-CDX)."""
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", pattern).load(path)
-             .select("path", "content"))
-    cols = [f.name for f in MAIL_SCHEMA.fields]
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for rows in mbox_decode_file(
-                        p, bytes(content), chunk_records, chunk_bytes):
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=MAIL_SCHEMA)
+                pattern: str = "*.mbox*") -> DataFrame:
+    """Read a directory of mbox files distributed through the shared
+    read stage (sources/shards.py): one row per message, bounded Arrow
+    batches. Large single archives should be pre-split (mbox has no
+    record index; the separator scan is inherently sequential per
+    file — file count is the parallelism axis, as with
+    WARC-without-CDX)."""
+    return shards.read_files(shards.list_files(spark, path, pattern),
+                             MAIL_SCHEMA, mbox_decode_file)
 
 
 def mbox_build(messages: list[bytes]) -> bytes:

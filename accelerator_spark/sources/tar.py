@@ -5,9 +5,9 @@ Large multimodal training corpora ship as directories of ``.tar`` /
 of adjacent members sharing a basename up to the first dot
 (``dir/abc123.jpg`` + ``dir/abc123.txt`` + ``dir/abc123.json`` →
 sample ``dir/abc123`` with parts ``jpg``/``txt``/``json``). The shard
-is the unit of parallelism — exactly Spark's binaryFile granularity —
-so the source maps one task per shard and streams members out in
-bounded Arrow batches, the sources/warc.py memory contract.
+is the unit a read task decodes (sources/shards.py states how Spark
+packs files into tasks), and members stream out in bounded Arrow
+batches.
 
 ``tar_import`` emits one row per regular-file member (directories,
 links and PAX metadata entries are consumed by the stdlib reader and
@@ -113,54 +113,28 @@ def tar_iter_members(data: bytes, codec_hook=None):
         raise TarError(f"corrupt tar stream: {e}") from e
 
 
-def tar_decode_file(path: str, data: bytes,
-                    chunk_records: int = 1024,
-                    chunk_bytes: int = 64 << 20,
-                    codec_hook=None):
-    """Generator of row-lists for one shard, cut every
-    ``chunk_records`` members or ``chunk_bytes`` of payload —
-    the Arrow-batch memory bound (one oversized member still forms
-    its own batch; the bound is per-batch overhead, not a splitter)."""
-    out, nbytes = [], 0
+def tar_decode_file(path: str, data: bytes, codec_hook=None):
+    """TAR_SCHEMA row tuples for one shard's members, in archive
+    order (streaming: one member in heap at a time)."""
     for idx, name, payload, size, mtime in tar_iter_members(
             data, codec_hook):
         key, ext = wds_key_ext(name)
-        out.append((path, idx, name, key, ext, payload, size, mtime))
-        nbytes += size
-        if len(out) >= chunk_records or nbytes >= chunk_bytes:
-            yield out
-            out, nbytes = [], 0
-    if out:
-        yield out
+        yield (path, idx, name, key, ext, payload, size, mtime)
 
 
 def tar_import(spark: SparkSession, path: str,
                pattern: str = "*.tar*",
-               chunk_records: int = 1024,
-               chunk_bytes: int = 64 << 20,
                codec_hook=None) -> DataFrame:
-    """Read a directory of tar/WebDataset shards distributed: one task
-    per shard (binaryFile — shards are sized for this, typically
-    100 MB-1 GB), rows leave in bounded Arrow batches. ``codec_hook``
+    """Read a directory of tar/WebDataset shards distributed through
+    the shared read stage (sources/shards.py: files packed into
+    partitions, rows out in bounded Arrow batches). ``codec_hook``
     (a picklable bytes->bytes decompressor) enables .tar.zst shards —
     see shards.maybe_zstd. Feed the result to ``webdataset_group`` for
     sample rows, or filter ``ext`` and route payloads to the
     multimodal probes/decoders directly."""
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", pattern).load(path)
-             .select("path", "content"))
-    cols = [f.name for f in TAR_SCHEMA.fields]
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for rows in tar_decode_file(
-                        p, bytes(content), chunk_records, chunk_bytes,
-                        codec_hook):
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=TAR_SCHEMA)
+    return shards.read_files(
+        shards.list_files(spark, path, pattern), TAR_SCHEMA,
+        lambda p, data: tar_decode_file(p, data, codec_hook))
 
 
 def webdataset_group(members: DataFrame) -> DataFrame:

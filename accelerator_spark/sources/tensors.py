@@ -16,12 +16,12 @@ weight blobs, per-shard feature matrices. The two de-facto containers:
   header dict, parsed WITHOUT eval (ast.literal_eval) exactly as the
   published NEP-1 format spec lays out; NPZ is a zip of .npy members.
 
-Both sources fan out one task per file via binaryFile and emit ROW
-VECTORS: a 2-D (n, dim) tensor becomes n rows of array<double> with
-row indices — the shape every embedding operator in this package
-consumes (similarity, semantic dedup, k-means, logreg). 0-D/1-D
-tensors emit a single row. >2-D raises: flattening silently would
-corrupt semantics; reshape upstream.
+Both sources read through the shared file stage (sources/shards.py)
+and emit ROW VECTORS: a 2-D (n, dim) tensor becomes n rows of
+array<double> with row indices — the shape every embedding operator
+in this package consumes (similarity, semantic dedup, k-means,
+logreg). 0-D/1-D tensors emit a single row. >2-D raises: flattening
+silently would corrupt semantics; reshape upstream.
 
 ``safetensors_build`` authors spec bytes for gates/tests (the same
 writer/reader discipline as tar_build/warc_build); NPY fixture bytes
@@ -240,31 +240,14 @@ def tensor_decode_file(path: str, data: bytes):
 
 
 def tensor_import(spark: SparkSession, path: str,
-                  pattern: str = "*",
-                  chunk_records: int = 4096) -> DataFrame:
+                  pattern: str = "*") -> DataFrame:
     """Read a directory of safetensors / .npy / .npz files distributed
-    (one task per file, rows out in bounded Arrow batches) as ROW
-    VECTORS ready for the embedding operators: (path, tensor, dtype,
-    n_rows, dim, row_idx, vector array<double>)."""
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", pattern).load(path)
-             .select("path", "content"))
-    cols = [f.name for f in TENSOR_SCHEMA.fields]
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            for p, content in zip(pdf["path"], pdf["content"]):
-                out = []
-                for row in tensor_decode_file(p, bytes(content)):
-                    out.append(row)
-                    if len(out) >= chunk_records:
-                        yield pd.DataFrame(out, columns=cols)
-                        out = []
-                if out:
-                    yield pd.DataFrame(out, columns=cols)
-
-    return files.mapInPandas(run, schema=TENSOR_SCHEMA)
+    through the shared read stage (sources/shards.py: rows out in
+    bounded Arrow batches) as ROW VECTORS ready for the embedding
+    operators: (path, tensor, dtype, n_rows, dim, row_idx, vector
+    array<double>)."""
+    return shards.read_files(shards.list_files(spark, path, pattern),
+                             TENSOR_SCHEMA, tensor_decode_file)
 
 
 def safetensors_build(tensors: dict) -> bytes:

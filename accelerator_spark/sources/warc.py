@@ -10,19 +10,18 @@ record-at-time compression), which ``zlib`` walks member-by-member.
 
 ``warc_import`` reads a directory distributed. Two fan-out shapes:
 
-- **file-granular** (always available): binaryFile scan, one Python
-  decode per file. Peak Python heap per task is bounded by the CHUNK,
-  not the file (VERDICT r8 #2): the decode is a generator walk —
-  gzip members are decompressed one record at a time and rows leave
-  as an Arrow batch every ``chunk_records`` records or
-  ``chunk_bytes`` of payload, whichever comes first, so a ~1 GB
-  .warc.gz never materializes its 3-5x decompressed self.
+- **file-granular** (always available): the shared read stage of
+  sources/shards.py, one Python decode per file. Peak Python heap per
+  task is bounded by the CHUNK, not the file (VERDICT r8 #2): the
+  decode is a generator walk — gzip members are decompressed one
+  record at a time and rows leave in ``shards.chunked`` batches, so a
+  ~1 GB .warc.gz never materializes its 3-5x decompressed self.
 - **record-granular** (VERDICT r8 #6): when a ``.cdx``/``.cdx.gz``
   sidecar exists next to a locally-readable file (CommonCrawl ships
   them), its record offsets become SPLIT POINTS: the file fans out
   into ~``target_split_bytes`` byte ranges cut at record starts, one
-  task per range, the avro block-split pattern (sources/avro.py) —
-  removing the 1 GB task-granularity floor. Ranges partition the
+  task per range (``shards.read_ranges``, shared with sources/avro.py)
+  — removing the 1 GB task-granularity floor. Ranges partition the
   whole byte span, so a split read is byte-identical to the
   whole-file read; each task validates its decoded record count
   against the index and fails loudly on a PARTIAL sidecar (one that
@@ -348,6 +347,9 @@ def warc_cdx_ranges(offsets: list, file_size: int,
     return ranges
 
 
+_CDX_SUFFIXES = (".cdx", ".cdx.gz")
+
+
 def _find_cdx(local: str) -> str | None:
     """Sidecar next to a WARC file: <name>.cdx(.gz) tried against the
     full name, the name minus the compression extension (.gz/.zst),
@@ -357,73 +359,44 @@ def _find_cdx(local: str) -> str | None:
         if local.endswith(suffix):
             stems.append(local[:-len(suffix)])
     for stem in stems:
-        for ext in (".cdx", ".cdx.gz"):
+        for ext in _CDX_SUFFIXES:
             cand = stem + ext
             if os.path.exists(cand):
                 return cand
     return None
 
 
-def _chunked_frames(rows, cols, chunk_records: int, chunk_bytes: int):
-    """Drain a row-tuple iterator into pandas DataFrames of at most
-    chunk_records rows / chunk_bytes of payload — the per-task heap
-    bound (rows carry n_bytes last)."""
-    import pandas as pd
-
-    out, nbytes = [], 0
-    for row in rows:
-        out.append(row)
-        nbytes += row[-1] or 0
-        if len(out) >= chunk_records or nbytes >= chunk_bytes:
-            yield pd.DataFrame(out, columns=cols)
-            out, nbytes = [], 0
-    if out:
-        yield pd.DataFrame(out, columns=cols)
-
-
 def warc_import(spark: SparkSession, path: str,
                 pattern: str = "*.warc*",
                 split: bool | str = "auto",
                 target_split_bytes: int = 128 << 20,
-                chunk_records: int = 1024,
-                chunk_bytes: int = 64 << 20,
                 codec_hook=None) -> DataFrame:
     """Read a directory of WARC files distributed. Files that are
     locally readable AND have a CDX sidecar fan out into
     ~``target_split_bytes`` record-aligned byte ranges (one task per
     range; ``split=True`` demands this for every file, ``split=False``
-    disables it); the rest read file-per-task via binaryFile. Both
-    paths stream: rows leave in Arrow batches of ``chunk_records`` /
-    ``chunk_bytes``, so task heap is bounded by the chunk.
-    ``codec_hook`` (a picklable bytes->bytes decompressor) enables
-    .warc.zst input — see shards.maybe_zstd; for the split path the hook
-    must accept a concatenation of record-at-time frames. Filter
-    ``warc_type == 'response'`` and feed ``payload`` through
-    operators/charset.decode_payload to operators/html.html_extract
-    for the text pipeline."""
-    from .avro import _as_local
-
-    if pattern and pattern.endswith((".cdx", ".cdx.gz")):
+    disables it); the rest read whole through the shared file stage.
+    Both paths stream through ``shards.chunked``, so task heap is
+    bounded by the chunk. Sidecars the pattern matches are dropped
+    from the listing. ``codec_hook`` (a picklable bytes->bytes
+    decompressor) enables .warc.zst input — see shards.maybe_zstd; for
+    the split path the hook must accept a concatenation of
+    record-at-time frames. Filter ``warc_type == 'response'`` and feed
+    ``payload`` through operators/charset.decode_payload to
+    operators/html.html_extract for the text pipeline."""
+    if pattern and pattern.endswith(_CDX_SUFFIXES):
         raise WarcError("pattern matches CDX sidecars, not WARC files")
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", pattern).load(path)
-             .select("path", "content"))
-    cols = [f.name for f in WARC_SCHEMA.fields]
+    files = shards.list_files(spark, path, pattern).filter(
+        ~F.col("path").rlike(r"\.cdx(\.gz)?$"))
 
-    split_pairs = []   # (spark_path, local, cdx_local)
-    unsplit = []
+    split_paths, unsplit = [], []
     if split is True or split == "auto":
         # paths-only collect (binaryFile prunes content) — the same
         # bounded manifest-class collect the avro split planner does
-        paths = [r["path"] for r in files.select("path").collect()]
-        for sp in paths:
-            # a .cdx that the glob itself matched is a sidecar, not data
-            if sp.endswith((".cdx", ".cdx.gz")):
-                continue
-            local = _as_local(sp)
-            cdx = _find_cdx(local) if local else None
-            if cdx:
-                split_pairs.append((sp, local, cdx))
+        for (sp,) in files.select("path").collect():
+            local = shards.as_local(sp)
+            if local and _find_cdx(local):
+                split_paths.append(sp)
             else:
                 unsplit.append(sp)
         if split is True and unsplit:
@@ -431,90 +404,42 @@ def warc_import(spark: SparkSession, path: str,
                 f"warc_import(split=True): no usable CDX sidecar for "
                 f"{unsplit[0]} (and {len(unsplit) - 1} more)")
 
-    parts = []
-    if split_pairs:
-        # stage 1: DISTRIBUTED index scan — each task reads its
-        # sidecars (KBs per GB of crawl) and emits coalesced ranges
-        def scan(batches):
-            import pandas as pd
+    def index(sp):
+        # each task reads its sidecars (KBs per GB of crawl)
+        local = shards.as_local(sp)
+        with open(_find_cdx(local), "rb") as f:
+            offs = cdx_offsets(f.read())
+        for s, e, b, n in warc_cdx_ranges(
+                offs, os.path.getsize(local), target_split_bytes):
+            yield sp, local, s, e, b, n
 
-            for pdf in batches:
-                rows = []
-                for sp, local, cdx in zip(pdf["p"], pdf["l"], pdf["c"]):
-                    with open(cdx, "rb") as f:
-                        offs = cdx_offsets(f.read())
-                    size = os.path.getsize(local)
-                    for s, e, b, n in warc_cdx_ranges(
-                            offs, size, target_split_bytes):
-                        rows.append((sp, local, s, e, b, n))
-                yield pd.DataFrame(rows, columns=[
-                    "p", "l", "start", "end", "base", "n"])
+    def decode_range(sp, local, start, end, base, n):
+        with open(local, "rb") as f:
+            f.seek(start)
+            span = f.read(end - start)
+        got = 0
+        for row in warc_iter_file(span, base, codec_hook):
+            got += 1
+            yield (sp,) + row
+        if got != n:
+            raise WarcError(
+                f"range [{start},{end}) of {local} decoded {got} "
+                f"records, CDX said {n} — partial or stale sidecar")
 
-        pairs_df = spark.createDataFrame(split_pairs, "p string, "
-                                         "l string, c string")
-        ranges = pairs_df.mapInPandas(
-            scan, schema="p string, l string, start long, end long, "
-                         "base long, n long")
-        # materialize the index on the DRIVER (one ~100-byte row per
-        # target_split_bytes of crawl) and hand each decode task
-        # exactly ONE range: AQE would coalesce by the index rows'
-        # BYTES, not the decode work each stands for (avro planner
-        # note / memory r7)
-        idx = [tuple(r) for r in ranges.collect()]
+    def decode(p, data):
+        for row in warc_iter_file(data, codec_hook=codec_hook):
+            yield (p,) + row
 
-        def decode_ranges(batches):
-            for pdf in batches:
-                for sp, local, start, end, base, n in zip(
-                        pdf["p"], pdf["l"], pdf["start"], pdf["end"],
-                        pdf["base"], pdf["n"]):
-                    with open(local, "rb") as f:
-                        f.seek(int(start))
-                        span = f.read(int(end) - int(start))
-                    got = [0]
-
-                    def counted(rows_iter, _got=got):
-                        for row in rows_iter:
-                            _got[0] += 1
-                            yield (sp,) + row
-
-                    yield from _chunked_frames(
-                        counted(warc_iter_file(span, int(base),
-                                               codec_hook)),
-                        cols, chunk_records, chunk_bytes)
-                    if got[0] != int(n):
-                        raise WarcError(
-                            f"range [{start},{end}) of {local} decoded "
-                            f"{got[0]} records, CDX said {n} — partial "
-                            "or stale sidecar")
-
-        if idx:
-            rdd = spark.sparkContext.parallelize(idx, len(idx))
-            rdf = spark.createDataFrame(rdd, schema=ranges.schema)
-            parts.append(rdf.mapInPandas(decode_ranges,
-                                         schema=WARC_SCHEMA))
-
-    whole = files
-    if split_pairs:
-        done = {sp for sp, _, _ in split_pairs}
-        whole = files.filter(
-            ~F.col("path").isin(*done) if done else F.lit(True))
-    if not split_pairs or unsplit:
-        def run(batches):
-            for pdf in batches:
-                for p, content in zip(pdf["path"], pdf["content"]):
-                    if p.endswith((".cdx", ".cdx.gz")):
-                        continue  # sidecar swept up by a wide pattern
-                    yield from _chunked_frames(
-                        ((p,) + row
-                         for row in warc_iter_file(bytes(content),
-                                                   codec_hook=codec_hook)),
-                        cols, chunk_records, chunk_bytes)
-
-        parts.append(whole.mapInPandas(run, schema=WARC_SCHEMA))
-
-    out = parts[0]
-    for extra in parts[1:]:
-        out = out.unionByName(extra)
+    out = None
+    if split_paths:
+        paths = spark.createDataFrame([(sp,) for sp in split_paths],
+                                      "path string")
+        out = shards.read_ranges(paths, index, decode_range, WARC_SCHEMA)
+    if not split_paths or unsplit:
+        whole = shards.read_files(
+            files.filter(~F.col("path").isin(*split_paths)), WARC_SCHEMA,
+            decode)
+        out = whole if out is None else out.unionByName(whole)
     return out
 
 

@@ -5,7 +5,7 @@ a smaller deduplicated WebDataset out, every stage distributed.
     python examples/webdataset_image_dedup.py <shard_dir> <out_dir>
 
 Stages (all production operators):
-1. tar_import           — one task per shard, bounded Arrow batches
+1. tar_import           — shards decoded in parallel, bounded Arrow batches
 2. image_dhash          — real PNG/GIF/JPEG decode -> 64-bit dHash
 3. dhash_near_pairs     — banded-Hamming candidates (100% recall at
                           <= max_hamming, no cross join)

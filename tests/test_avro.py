@@ -171,6 +171,24 @@ def test_avro_export_import_distributed(spark, tmp_path):
         avro_import(spark, str(empty))
 
 
+def test_avro_import_reads_nested_directories(spark, tmp_path):
+    """avro_import lists recursively (its listing is
+    media.binary_import's): a container in a subdirectory is read in
+    both read modes, and the schema comes from the first file by
+    path."""
+    schema = json.dumps({"type": "record", "name": "N", "fields": [
+        {"name": "k", "type": "long"}]})
+    d = tmp_path / "nested"
+    (d / "sub" / "deeper").mkdir(parents=True)
+    (d / "a.avro").write_bytes(
+        avro_encode_file(schema, [{"k": 1}, {"k": 2}]))
+    (d / "sub" / "deeper" / "b.avro").write_bytes(
+        avro_encode_file(schema, [{"k": 3}]))
+    for split in (False, True):
+        got = avro_import(spark, str(d), split=split)
+        assert sorted(r["k"] for r in got.collect()) == [1, 2, 3]
+
+
 def test_avro_export_exactness_and_modes(spark, tmp_path):
     """Review r6 closures: int64 beyond 2^53 with nulls survives the
     pandas hop exactly (JVM string detour); NaN stays NaN and null
@@ -538,7 +556,7 @@ def test_avro_block_split_reads(spark, tmp_path):
     byte-identical rows to the whole-file read (including the exact
     int64 > 2^53 detour), and corrupt framing must fail the index."""
     from accelerator_spark.sources.avro import (
-        avro_block_ranges, avro_read_header, avro_split_index)
+        avro_block_ranges, avro_read_header)
 
     schema = {"type": "record", "name": "S", "fields": [
         {"name": "k", "type": "long"},
@@ -566,15 +584,11 @@ def test_avro_block_split_reads(spark, tmp_path):
         assert e0 == s1
     assert sum(nb for _, _, nb in ranges) == 12
 
-    # stage 1 as a DataFrame: one multi-block file -> many range rows
-    idx = avro_split_index(spark, str(d), target_split_bytes=64)
-    rows = idx.collect()
-    assert len(rows) == len(ranges) > 1
-    assert {(r["start"], r["end"], r["n_blocks"]) for r in rows} == set(ranges)
-
-    # split read == whole-file read, and it actually ran on >1 task
+    # split read == whole-file read, and it actually ran on >1 task:
+    # the index stage hands each block range to a task of its own
     whole = avro_import(spark, str(d), split=False)
     split = avro_import(spark, str(d), split=True, target_split_bytes=64)
+    assert split.rdd.getNumPartitions() == len(ranges) > 1
     key = lambda r: r["k"]  # noqa: E731
     assert sorted([tuple(r) for r in split.collect()]) == \
            sorted([tuple(r) for r in whole.collect()])

@@ -126,3 +126,32 @@ def test_per_row_operators_map_through_one_stage():
                  or (isinstance(n, ast.Attribute)
                      and n.attr == "mapInPandas")]
         assert not loops, name
+
+
+def test_file_sources_read_through_one_module():
+    """Under sources/, only shards.py lists files with ``binaryFile``
+    or hands a driver list to ``sparkContext.parallelize``: the read
+    stage (listing, decode, batching, split ranges) is stated once.
+    media.py's public listings ``binary_import`` and ``image_import``
+    are the only exceptions."""
+    src = os.path.join(REPO, "accelerator_spark", "sources")
+    allowed = {("media.py", "binary_import"), ("media.py", "image_import")}
+    offenders = []
+    for p in sorted(glob.glob(os.path.join(src, "*.py"))):
+        mod = os.path.basename(p)
+        if mod == "shards.py":
+            continue
+        for top in ast.parse(open(p).read()).body:
+            name = getattr(top, "name", None)
+            for node in ast.walk(top):
+                binary = (isinstance(node, ast.Call)
+                          and isinstance(node.func, ast.Attribute)
+                          and node.func.attr == "format"
+                          and any(isinstance(a, ast.Constant)
+                                  and a.value == "binaryFile"
+                                  for a in node.args))
+                parallel = (isinstance(node, ast.Attribute)
+                            and node.attr == "parallelize")
+                if (binary or parallel) and (mod, name) not in allowed:
+                    offenders.append(f"{mod}:{name}")
+    assert not offenders, offenders

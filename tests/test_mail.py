@@ -9,8 +9,9 @@ import base64
 
 import pytest
 
+from accelerator_spark.sources import shards
 from accelerator_spark.sources.mail import (
-    mbox_build, mbox_decode_file, mbox_import, mbox_split,
+    MAIL_SCHEMA, mbox_build, mbox_decode_file, mbox_import, mbox_split,
     parse_email)
 
 
@@ -134,11 +135,13 @@ def test_charset_fallback():
 
 def test_chunked_decode_bounds():
     data = mbox_build([_msg_plain(b"m%d" % i) for i in range(25)])
-    batches = list(mbox_decode_file("p", data, chunk_records=10))
+    cols = [f.name for f in MAIL_SCHEMA.fields]
+    batches = list(shards.chunked(mbox_decode_file("p", data), cols,
+                                  max_rows=10))
     assert [len(b) for b in batches] == [10, 10, 5]
-    flat = [r for b in batches for r in b]
-    assert [r[1] for r in flat] == list(range(25))
-    assert flat[7][7] == "m7"          # body_text column
+    flat = [r for b in batches for r in b.itertuples(index=False)]
+    assert [r.msg_idx for r in flat] == list(range(25))
+    assert flat[7].body_text == "m7"
 
 
 def test_mbox_import(spark, tmp_path):

@@ -509,6 +509,7 @@ def test_robots_check_at_16x_broadcast(spark, docs16):
 def test_tar_webdataset_at_16x_chunked(spark, docs16):
     """r9b: shard decode must stream in bounded Arrow batches and the
     sample fold must stay a plain key shuffle at 16x shards."""
+    from accelerator_spark.sources import shards
     from accelerator_spark.sources.tar import (
         TAR_SCHEMA, tar_decode_file, webdataset_group)
 
@@ -525,9 +526,10 @@ def test_tar_webdataset_at_16x_chunked(spark, docs16):
                     [(f"d/s{did}.jpg", b"I" * 64),
                      (f"d/s{did}.txt", b"c" * 16)])
                 # tiny chunk bound: forces multi-batch streaming
-                for rows in tar_decode_file(str(did), shard,
-                                            chunk_records=1):
-                    out.extend(rows)
+                for frame in shards.chunked(
+                        tar_decode_file(str(did), shard), cols,
+                        max_rows=1):
+                    out.extend(frame.itertuples(index=False, name=None))
             yield pd.DataFrame(out, columns=cols)
 
     members = docs16.select("doc_id").mapInPandas(

@@ -13,9 +13,10 @@ import tarfile
 
 import pytest
 
+from accelerator_spark.sources import shards
 from accelerator_spark.sources.tar import (
-    TarError, tar_build, tar_decode_file, tar_import, tar_iter_members,
-    wds_key_ext, webdataset_group)
+    TAR_SCHEMA, TarError, tar_build, tar_decode_file, tar_import,
+    tar_iter_members, wds_key_ext, webdataset_group)
 
 
 def _golden_header(name: bytes, size: int) -> bytes:
@@ -118,13 +119,18 @@ def test_malformed_inputs():
 def test_chunked_decode_bounds():
     members = [(f"s{i:03d}.txt", bytes([i % 251]) * 10) for i in range(57)]
     data = tar_build(members)
-    batches = list(tar_decode_file("p", data, chunk_records=10))
+    cols = [f.name for f in TAR_SCHEMA.fields]
+    batches = list(shards.chunked(tar_decode_file("p", data), cols,
+                                  max_rows=10))
     assert [len(b) for b in batches] == [10] * 5 + [7]
-    flat = [r for b in batches for r in b]
-    assert [r[2] for r in flat] == [m[0] for m in members]
-    assert [r[1] for r in flat] == list(range(57))
-    # byte-budget cut: 10-byte payloads, 25-byte budget -> 3 per batch
-    by_bytes = list(tar_decode_file("p", data, chunk_bytes=25))
+    flat = [r for b in batches for r in b.itertuples(index=False)]
+    assert [r.member for r in flat] == [m[0] for m in members]
+    assert [r.member_idx for r in flat] == list(range(57))
+    # byte-budget cut: a row counts its str/bytes cells — path "p",
+    # member "s000.txt", key "s000", ext "txt" and a 10-byte payload
+    # make 26 bytes, so an 80-byte budget holds 3 rows per batch
+    by_bytes = list(shards.chunked(tar_decode_file("p", data), cols,
+                                   max_bytes=80))
     assert [len(b) for b in by_bytes][:3] == [3, 3, 3]
 
 
